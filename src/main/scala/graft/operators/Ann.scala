@@ -1070,17 +1070,17 @@ object Ann {
   }
 
   // ---------------------------------------------------------------------
-  // Partitioned-NSW graph ANN (r13 VERDICT item 7 — the HNSW-class
-  // family). True HNSW construction is inherently sequential (insert
-  // one point, search, link); the Spark-native equivalent composes
-  // three published, set-oriented pieces:
-  //   1. cluster-LOCAL ring init — nodes ring-connect within their IVF
-  //      cell in md5-hash order (per-cluster windows, never a global
-  //      sort; every node gets degree ≥ min(kNbr, cell size − 1));
+  // Partitioned-NSW graph ANN (the HNSW-class family). True HNSW
+  // construction is inherently sequential (insert one point, search,
+  // link); the Spark-native equivalent partitions the corpus into cells
+  // — IVF cells (c = ⌈√n⌉) or sign-LSH buckets (nBits = ⌈log₂√n⌉), so a
+  // cell holds ~√n members — and composes three published pieces:
+  //   1. cell-LOCAL ring init — nodes ring-connect within their cell in
+  //      md5-hash order (every node gets degree ≥ min(kNbr, cell size −
+  //      1));
   //   2. NN-Descent refinement (Dong et al., WWW 2011): each round
-  //      proposes neighbors-of-neighbors over the SYMMETRIZED edge set
-  //      and keeps the top-kNbr per node — n·kNbr² candidate rows per
-  //      round, thin ids+sim payload;
+  //      proposes neighbours-of-neighbours over the SYMMETRIZED top-half
+  //      sample of the lists and keeps the top-kNbr per node;
   //   3. fixed-hop BEAM search from per-cluster entry points (the
   //      min-hash node of every cell, so disconnected cells are all
   //      reachable at hop 0 and no cross-cluster navigability is
@@ -1088,6 +1088,10 @@ object Ann {
   //      (bucketed by u at warehouse scale) and fetches candidate
   //      vectors through the vec_id-co-located index — nq·beam·kNbr
   //      rows per hop, independent of corpus size.
+  // Steps 1–2 run in ONE task per cell ([[nswBuild]] → the native
+  // [[graft.plans.NswCellGraph]] kernel): build edges never leave a cell,
+  // so the build ships each cell's vectors once and needs no further
+  // exchange (REPOSE's partition-local index shape).
   // Query cost: hops × (beam expansion + co-located fetch + WindowGroup-
   // Limit top-beam) — the graph-ANN promise (query cost ~ graph degree,
   // not corpus) in Spark's execution model.
@@ -1098,53 +1102,16 @@ object Ann {
     conv(substring(md5(concat(lit("nsw|"), c.cast("string"))), 1, 15), 16, 10)
       .cast("long")
 
-  /** Scopes Spark 4's `spark.sql.requireAllClusterKeysForCoPartition`
-    * OFF around `build`, so joins keyed on (cluster, ...) reuse a
-    * HashPartitioning(cluster) co-location instead of re-exchanging on
-    * the full key set (the r15 nswBuild fix).
-    *
-    * INVARIANT (do not break): every plan that must SEE the relaxed
-    * value has to EXECUTE before this returns — the conf is restored on
-    * exit, and a deferred action would plan under the restored value,
-    * silently re-introducing the full-key vector-carrying exchange.
-    * The body upholds this by localCheckpoint-ing each intermediate it
-    * reuses, and this helper localCheckpoints the RESULT too, so no
-    * caller-side deferred action can plan after the restore.
-    *
-    * Shared-session note: the toggle is visible to concurrent queries
-    * on the same session for the duration of the build. The conf is a
-    * planner PERFORMANCE knob — hash co-partitioning on a SUBSET of the
-    * join keys still co-locates equal keys, so any plan chosen under
-    * the relaxed value is semantically valid; a concurrent query can at
-    * worst pick a cheaper-but-correct exchange. (Per-plan conf scoping
-    * is not available through the public API; a cloned session would
-    * not apply to DataFrames bound to the original.)
-    */
-  private def withSubsetCoPartition(spark: org.apache.spark.sql.SparkSession)
-                                   (build: => DataFrame): DataFrame = {
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try build.localCheckpoint()
-    finally spark.conf.set(key, prev)
-  }
-
-  /** SCALE-ADAPTIVE parallelism for the graph-ANN build/walk (guide
-    * §2.2: size partitions from the data, never a constant tuned for
-    * one deployment). The build's working sets are index-row-sized (n
-    * vectors, n·kNbr pair rows) but were always exchanged into
-    * `spark.sql.shuffle.partitions` partitions — at small n that is
-    * dozens of near-empty tasks PER STAGE across ~20 chained stages,
-    * and task dispatch (not data) becomes the wall; at large n the
-    * conf value is the right ceiling. Partition count therefore
-    * derives from the row count: ceil(n / rowsPerPartition), clamped
-    * to [1, spark.sql.shuffle.partitions]. rowsPerPartition is
-    * `spark.graft.ann.rowsPerPartition` (default 4096 ≈ 2 MB of
-    * vectors, kNbr²·rows ≈ 10⁸ flop-scale NN-Descent scoring per
-    * task); the conf ceiling keeps cluster deployments at their tuned
-    * width. Callers that do not know n pass -1 and keep the conf
-    * value — partition count never changes results (AnnSpec pins
-    * layout-independence).
+  /** Partition count for the graph-ANN build and walk exchanges, sized
+    * from the index row count (guide §2.2: from the data, never a
+    * constant tuned for one deployment): ceil(n / rowsPerPartition),
+    * clamped to [1, spark.sql.shuffle.partitions]. rowsPerPartition is
+    * `spark.graft.ann.rowsPerPartition` (default 4096 ≈ 2 MB of 64-d
+    * vectors). At small n this avoids dozens of near-empty tasks per
+    * stage; at large n the conf value is the ceiling, so cluster
+    * deployments keep their tuned width. Callers that do not know n
+    * pass -1 and keep the conf value. Partition count never changes
+    * results (AnnSpec pins layout-independence).
     */
   private def annParallelism(spark: org.apache.spark.sql.SparkSession,
                              n: Long): Int = {
@@ -1157,149 +1124,41 @@ object Ann {
     }
   }
 
-  /** The neighbor table (u, v, sim): cluster-local ring init +
-    * `rounds` NN-Descent rounds over the [[ivfEncode]] index. Emitted
-    * co-located by u — each search hop's expansion join is then
-    * map-side against a bucketed table. `nRows` (index row count, -1 =
-    * unknown) sizes the build's exchanges via [[annParallelism]].
+  /** The neighbor table (u, v, sim) over a cell-labelled index
+    * (cluster, vec_id, ve): per cell, the hash ring plus `rounds`
+    * NN-Descent rounds — the top-kNbr list of each node ∪ its ring links,
+    * degree ≤ 2·kNbr. The ring stays in the graph as the long-link
+    * spine: a pure kNN graph is not navigable (greedy ascent dead-ends
+    * in local optima; measured at sf1, unreached planted twins froze at
+    * 8/10 across hops 4→8 until the spine returned), and ring links are
+    * the hash-random long links NSW gets from randomized insertion.
+    *
+    * ONE exchange: the index repartitions by cell into
+    * [[annParallelism]]`(nRows)` partitions (`nRows` = index row count,
+    * -1 = unknown), each cell's members collect into one row, and
+    * [[graft.plans.NswCellGraph]] builds that cell's edges in its task.
+    * A cell row is O(n_c·dim) bytes and a round O(n_c·(2h)²) similarity
+    * evaluations, h = max(4, kNbr/2). Cells hold ~√n members by
+    * construction, so at n = 10⁸ a cell row is ~10⁴ 64-d vectors ≈ 5 MB,
+    * and a skewed cell costs one task. Rows with a null cluster get no
+    * edges. The result is materialized (localCheckpoint) once; the
+    * caller owns its blocks.
     */
   def nswBuild(index: DataFrame, kNbr: Int = 8, rounds: Int = 2,
                nRows: Long = -1): DataFrame = {
     require(kNbr >= 1 && rounds >= 0, s"kNbr=$kNbr rounds=$rounds")
-    // CELL CO-LOCATION (r15 — the r14 PQ vec_id layout rule applied to
-    // the graph build): ONE vector-bearing repartition by cluster up
-    // front; every subsequent join/window/distinct keys on
-    // (cluster, ...) and HashPartitioning(cluster) satisfies those
-    // ClusteredDistributions (subset rule), so proposal SCORING never
-    // ships a vector again — all per-round exchanges are THIN
-    // (cluster, u, v) pair rows. Without this, the NN-Descent scoring
-    // joins broadcast the vector table while it fits and silently flip
-    // to vector-carrying SMJs when it doesn't: measured at the sf10
-    // decade as a 13.2 GB build shuffle (52.8× bytes for 10× data,
-    // bytes/row 24 → 77) before the fix. Builds are intra-cell by
-    // construction, so the co-location is exact, and at warehouse
-    // scale the rule is the same as PQ's: bucket the vector table BY
-    // CELL and the build's shuffles stay pair-thin forever.
-    //
-    // Two knobs make Spark HONOR the subset co-partitioning instead of
-    // re-exchanging on the full join keys (measured: without them,
-    // EnsureRequirements re-keys the uve-carrying intermediate on
-    // (cluster, v) — the whole 6+ GB it was built to avoid):
-    // (a) requireAllClusterKeysForCoPartition=false for the build's
-    //     actions only, via [[withSubsetCoPartition]] — the setting
-    //     exists precisely for reusing a coarser co-partitioning across
-    //     joins on (coarseKey, ...) like bucketed tables do. Every
-    //     intermediate below is eagerly materialized (localCheckpoint)
-    //     INSIDE the scope, and the helper checkpoints the result —
-    //     see the invariant on the helper;
-    // (b) explicit partition counts on every repartition, so AQE's
-    //     coalescing cannot de-align the two sides of a co-partitioned
-    //     join after the fact.
-    val spark = index.sparkSession
-    val np = annParallelism(spark, nRows)
-    // captured so their checkpoint blocks can be freed once the helper
-    // has checkpointed the RESULT (they feed the final union, so they
-    // must outlive the scope but not the call)
-    var initRef: DataFrame = null
-    var edgesRef: DataFrame = null
-    val result = withSubsetCoPartition(spark) {
-    val byCell = index.select(col("cluster"), col("vec_id"), col("ve"))
-      .repartition(np, col("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = Window.partitionBy(col("cluster"))
-      .orderBy(col("h"), col("vec_id"))
-    val ranked = byCell
-      .withColumn("h", hrank(col("vec_id")))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n_c", count(lit(1)).over(Window.partitionBy(col("cluster"))))
-    // ring edges: each node links the next min(kNbr, n_c - 1) nodes on
-    // its cluster's hash ring (modular, so the ring closes)
-    val targets = ranked
-      .select(col("vec_id").as("u"), col("ve").as("uve"), col("cluster"),
-        col("rn"), col("n_c"),
-        explode(expr(s"sequence(1, least($kNbr, n_c - 1))")).as("d"))
-      .withColumn("rn_t", (col("rn") - 1 + col("d")) % col("n_c") + 1)
-    // thin + checkpointed: the ring is reused as the final spine, and
-    // the checkpoint both cuts the replay and frees byCell at the end
-    val init = targets.join(
-        ranked.select(col("vec_id").as("v"), col("ve").as("vve"),
-          col("cluster"), col("rn").as("rn_t")),
-        Seq("cluster", "rn_t"))
-      .filter(col("u") =!= col("v"))
-      .select(col("cluster"), col("u"), col("v"),
-        graft.plans.NativeFunctions.cosineSim(col("uve"), col("vve")).as("sim"))
+    val idType = index.schema("vec_id").dataType
+    index.filter(col("cluster").isNotNull)
+      .select(col("cluster"), col("vec_id"), col("ve"))
+      .repartition(annParallelism(index.sparkSession, nRows), col("cluster"))
+      .groupBy(col("cluster"))
+      .agg(collect_list(struct(col("vec_id").cast("long").as("vec_id"),
+        hrank(col("vec_id")).as("h"), col("ve"))).as("members"))
+      .select(explode(graft.plans.NativeFunctions.nswCellGraph(
+        col("members"), kNbr, rounds)).as("e"))
+      .select(col("e.u").cast(idType).as("u"), col("e.v").cast(idType).as("v"),
+        col("e.sim").as("sim"))
       .localCheckpoint()
-    var edges = topKPerNode(init, kNbr).localCheckpoint()
-    // NN-Descent's sampling trick (Dong et al. §2.3, ρ = 1/2): propose
-    // neighbors-of-neighbors through the TOP HALF of each node's list
-    // only — 4× fewer candidate rows per round, near-identical
-    // convergence (the best neighbors are where the good proposals are)
-    val h = math.max(4, kNbr / 2)
-    for (_ <- 1 to rounds) {
-      val top = topKPerNode(edges, h)
-      val sym = top.select(col("cluster"), col("u"), col("v"))
-        .unionByName(top.select(col("cluster"), col("v").as("u"), col("u").as("v")))
-        .repartition(np, col("cluster"))
-      // neighbor-of-neighbor proposals over the symmetrized sample —
-      // cell-local by construction (u→v→w never leaves the cell)
-      val non = sym.as("a").join(sym.as("b"),
-          col("a.cluster") === col("b.cluster") && col("a.v") === col("b.u"))
-        .select(col("a.cluster").as("cluster"), col("a.u").as("u"),
-          col("b.v").as("v"))
-        .filter(col("u") =!= col("v"))
-        .unionByName(edges.select(col("cluster"), col("u"), col("v")))
-        .repartition(np, col("cluster"))
-        .dropDuplicates("cluster", "u", "v")
-      val scoredNon = non
-        .join(byCell.select(col("cluster"), col("vec_id").as("u"),
-          col("ve").as("uve")), Seq("cluster", "u"))
-        .join(byCell.select(col("cluster"), col("vec_id").as("v"),
-          col("ve").as("vve")), Seq("cluster", "v"))
-        .select(col("cluster"), col("u"), col("v"),
-          graft.plans.NativeFunctions.cosineSim(col("uve"), col("vve")).as("sim"))
-      // free the superseded round's checkpoint blocks NOW (r16): they
-      // are dead the moment the next round materializes, but without
-      // the explicit unpersist they linger until a driver GC lets
-      // ContextCleaner reclaim them — measured as the q203 second-run
-      // bench flap (run b 41.5 s vs 7.9 s with 1,316 GC events, stages
-      // 5x slower, shuffle bytes byte-identical: pure memory-store
-      // pressure), and the same blocks would squat on executor memory
-      // in a cluster build
-      val next = topKPerNode(scoredNon, kNbr).localCheckpoint()
-      edges.unpersist(blocking = false)
-      edges = next
-    }
-    byCell.unpersist(blocking = false)
-    // the RING stays in the final graph as the long-link spine: a pure
-    // kNN graph is not navigable (the HNSW/NSW insight — greedy ascent
-    // dead-ends in local optima; measured at sf1: unreached planted
-    // twins froze at 8/10 across hops 4→8 until the spine returned).
-    // Ring links are hash-RANDOM pairs — exactly the long links NSW
-    // gets from randomized insertion — and they span every cell member
-    // by construction, so the walk always has an escape from a local
-    // optimum and in-cell connectivity is guaranteed. Degree ≤ 2·kNbr.
-    initRef = init
-    edgesRef = edges
-    edges.select(col("u"), col("v"), col("sim"))
-      .unionByName(init.select(col("u"), col("v"), col("sim")))
-      .distinct().repartition(col("u"))
-    }
-    initRef.unpersist(blocking = false)
-    edgesRef.unpersist(blocking = false)
-    result
-  }
-
-  /** Per-(cell, node) top-k by (sim desc, v): u lives in exactly one
-    * cell, so the ranking equals a global per-u ranking — but keying
-    * the window on (cluster, u) lets cluster-partitioned inputs rank
-    * WITHOUT an exchange (see [[nswBuild]]'s co-location note).
-    */
-  private def topKPerNode(scored: DataFrame, kNbr: Int): DataFrame = {
-    val w = Window.partitionBy(col("cluster"), col("u"))
-      .orderBy(col("sim").desc, col("v"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= kNbr)
-      .select(col("cluster"), col("u"), col("v"), col("sim"))
   }
 
   /** A few deterministic entry points per IVF cell (the lowest-hash
@@ -1387,8 +1246,7 @@ object Ann {
     val np = annParallelism(index.sparkSession, nRows)
     val q = broadcast(queries.select(col("vec_id").as("qid"),
       asDouble("embedding").as("qe")))
-    // vector table CO-LOCATED by cid once (r15, the nswBuild rule on
-    // the query path): each hop's scoring join then exchanges only the
+    // vector table CO-LOCATED by cid once (r15): each hop's scoring join then exchanges only the
     // THIN (qid, cid) candidate rows — without this, the moment the
     // index outgrows the broadcast threshold every score() call pays a
     // full vector-table SMJ shuffle (measured at sf10: 4 × ~104 MB of

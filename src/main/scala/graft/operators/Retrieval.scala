@@ -61,7 +61,7 @@ object Retrieval {
     // materialize the match-list-sized scored table, then free the
     // corpus-wide base eagerly — the operator runs twice per session
     // (q140 + q220's hybridSearch) and dead corpus blocks would squat on
-    // executor memory exactly like the nswBuild rounds r16 fixed
+    // executor memory
     val scored = tf.join(broadcast(dfT), "term")
       .join(dl, "doc_id")
       .crossJoin(broadcast(ad))

@@ -672,6 +672,10 @@ object NativeFunctions {
   def l2Sq(a: Column, b: Column): Column =
     Bridge.column(L2Sq(col2expr(a), col2expr(b)))
 
+  /** One NSW cell's ring + NN-Descent edges — see [[NswCellGraph]]. */
+  def nswCellGraph(members: Column, kNbr: Int, rounds: Int): Column =
+    Bridge.column(NswCellGraph(col2expr(members), kNbr, rounds))
+
   def minhashSig(arr: Column, k: Int): Column =
     Bridge.column(MinHashSig(col2expr(arr), k))
 

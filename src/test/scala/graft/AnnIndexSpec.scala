@@ -21,8 +21,8 @@ class AnnIndexSpec extends SparkSpec {
     d.toString
   }
 
-  /** Count Spark jobs launched by `body` (listener bus is async — give
-    * it a beat to drain before reading).
+  /** Count Spark jobs launched by `body`. The listener bus is async:
+    * drain it (every job `body` ran has posted its start) before reading.
     */
   private def countJobs[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -34,7 +34,7 @@ class AnnIndexSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      Thread.sleep(1000)
+      org.apache.spark.sql.graft.Bridge.waitUntilEmpty(spark.sparkContext)
       (r, n.get())
     } finally spark.sparkContext.removeSparkListener(l)
   }
@@ -206,6 +206,19 @@ class AnnIndexSpec extends SparkSpec {
     // NN-Descent round loop or a fit (this run measured 34)
     assert(searchJobs <= 45, s"query path launched $searchJobs jobs " +
       "(a build loop leaked into search)")
+  }
+
+  test("NSW graph build runs in at most 4 jobs") {
+    // one exchange by cell feeding the per-cell kernel, materialized
+    // once — never a job chain per NN-Descent round
+    val index = Ann.nswLshIndex(embs, nBits = 4)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    index.count()
+    val (edges, jobs) = countJobs(Ann.nswBuild(index, kNbr = 12, rounds = 3))
+    assert(edges.count() > 0)
+    assert(jobs <= 4, s"nswBuild launched $jobs jobs, budget 4")
+    edges.unpersist(blocking = true)
+    index.unpersist(blocking = true)
   }
 
   test("contrastive mining from the persisted index: full probe == brute, " +
