@@ -99,11 +99,11 @@ object Ann {
     pqSearch(cents, index.filter(pred), queries, k, m, dim, excludeSelf)
 
   /** Filtered graph-ANN search (the [[nswKnnLsh]] deployment face
-    * under a predicate): the walk traverses the FULL graph, each
-    * visited node carries its predicate bit on the co-located vector
-    * table, and the final top-k ranks over allowed visited nodes only
-    * — filter before the k-cut, zero extra joins. Raise `beam`/`hops`
-    * for very selective predicates (the filtered-HNSW budget rule).
+    * under a predicate): the walk traverses the FULL graph, each index
+    * row carries its predicate bit into the walk, and the final top-k
+    * ranks over allowed visited nodes only — filter before the k-cut,
+    * zero extra joins. Raise `beam`/`hops` for very selective
+    * predicates (the filtered-HNSW budget rule).
     */
   def nswSearchLshFiltered(edges: DataFrame, index: DataFrame,
                            entries: DataFrame, queries: DataFrame, k: Int,
@@ -1084,17 +1084,20 @@ object Ann {
   //   3. fixed-hop BEAM search from per-cluster entry points (the
   //      min-hash node of every cell, so disconnected cells are all
   //      reachable at hop 0 and no cross-cluster navigability is
-  //      assumed): each hop joins the beam against the neighbor table
-  //      (bucketed by u at warehouse scale) and fetches candidate
-  //      vectors through the vec_id-co-located index — nq·beam·kNbr
-  //      rows per hop, independent of corpus size.
+  //      assumed): each hop expands the beam through the undirected
+  //      neighbor lists and scores only the candidates not yet
+  //      visited — nq·beam·degree similarity evaluations per hop,
+  //      independent of corpus size.
   // Steps 1–2 run in ONE task per cell ([[nswBuild]] → the native
   // [[graft.plans.NswCellGraph]] kernel): build edges never leave a cell,
   // so the build ships each cell's vectors once and needs no further
   // exchange (REPOSE's partition-local index shape).
-  // Query cost: hops × (beam expansion + co-located fetch + WindowGroup-
-  // Limit top-beam) — the graph-ANN promise (query cost ~ graph degree,
-  // not corpus) in Spark's execution model.
+  // Query cost: routing plus one collect each of the index rows, the
+  // edges, the queries and the seeds, then every query's walk runs in
+  // the driver ([[nswWalk]] → the [[graft.plans.NswWalk]] kernel, the
+  // REPOSE shape of a top-k search run to completion over a local
+  // index) — a handful of jobs whatever `hops` is, O(n·(dim + degree))
+  // driver memory, and similarity work ~ graph degree, not corpus.
   // ---------------------------------------------------------------------
 
   /** 60-bit deterministic hash rank of a vec_id (the ring/entry order). */
@@ -1102,7 +1105,7 @@ object Ann {
     conv(substring(md5(concat(lit("nsw|"), c.cast("string"))), 1, 15), 16, 10)
       .cast("long")
 
-  /** Partition count for the graph-ANN build and walk exchanges, sized
+  /** Partition count for the graph-ANN build's exchange, sized
     * from the index row count (guide §2.2: from the data, never a
     * constant tuned for one deployment): ceil(n / rowsPerPartition),
     * clamped to [1, spark.sql.shuffle.partitions]. rowsPerPartition is
@@ -1111,7 +1114,8 @@ object Ann {
     * stage; at large n the conf value is the ceiling, so cluster
     * deployments keep their tuned width. Callers that do not know n
     * pass -1 and keep the conf value. Partition count never changes
-    * results (AnnSpec pins layout-independence).
+    * results (AnnSpec pins layout-independence). The walk has no
+    * exchange and does not use it.
     */
   private def annParallelism(spark: org.apache.spark.sql.SparkSession,
                              n: Long): Int = {
@@ -1199,114 +1203,124 @@ object Ann {
     * to its `nprobe` closest cells via the broadcast centroid model
     * (exactly [[ivfSearch]]'s routing — an identical vector provably
     * routes to its own cell first), seed the beam at those cells'
-    * entry nodes, then walk: each hop expands the beam through the
-    * edge table (nq·beam·kNbr rows, bucketed by u at warehouse scale),
-    * fetches ONLY unvisited candidates through the vec_id-co-located
-    * index, scores exactly, and keeps the top `beam` per query; the
-    * final top-k ranks over everything visited. The query path touches
-    * model + entries + edges + index rows reached — never a corpus or
-    * cell scan (vs [[ivfSearch]], which scores every vector of every
-    * probed cell). Deterministic: md5 entry order, (sim desc, cid)
-    * tie-breaks everywhere.
+    * entry nodes, then walk the graph in one driver-side pass
+    * ([[nswWalk]]): each hop expands the beam through the undirected
+    * adjacency, scores the new candidates exactly, and keeps the top
+    * `beam` per query; the final top-k ranks over everything visited.
+    * Per call it reads the whole index and edge table once into driver
+    * memory, O(n·(dim + degree)). Deterministic: md5 entry order,
+    * (sim desc, cid) tie-breaks everywhere. `nRows` is accepted for
+    * signature stability and unused: the walk has no exchange to size.
     */
   def nswSearch(cents: Seq[(Int, Seq[Double])], edges: DataFrame,
                 index: DataFrame, entries: DataFrame, queries: DataFrame,
                 k: Int, beam: Int = 16, hops: Int = 4, nprobe: Int = 4,
                 excludeSelf: Boolean = true,
-                pred: Option[Column] = None, nRows: Long = -1): DataFrame = {
-    // hop 0: centroid-route to nprobe cells, seed at their entries
-    val seeds = queryProbes(cents, queries, nprobe)
+                pred: Option[Column] = None, nRows: Long = -1): DataFrame =
+    nswWalk(nswSeeds(cents, queries, entries, nprobe), edges, index, queries,
+      k, beam, hops, excludeSelf, pred)
+
+  /** Centroid routing for the graph walk: each query's `nprobe` closest
+    * cells ([[queryProbes]]) joined with the broadcast entry table →
+    * (qid, cid) seeds.
+    */
+  private[graft] def nswSeeds(cents: Seq[(Int, Seq[Double])], queries: DataFrame,
+                              entries: DataFrame, nprobe: Int): DataFrame =
+    queryProbes(cents, queries, nprobe)
       .select(col("qid"), col("cluster"))
       .join(broadcast(entries), Seq("cluster"))
-      .select(col("qid"), col("vec_id").as("cid")).distinct()
-    nswWalk(seeds, edges, index, queries, k, beam, hops, excludeSelf, pred,
-      nRows)
+      .select(col("qid"), col("vec_id").as("cid"))
+
+  /** Multi-probe LSH routing for the graph walk: each query's own
+    * bucket and every hamming-1 flip (the [[lshKnn]] probe set) joined
+    * with the broadcast entry table → (qid, cid) seeds.
+    */
+  private[graft] def nswSeedsLsh(queries: DataFrame, entries: DataFrame,
+                                 nBits: Int): DataFrame = {
+    val probes = expr(
+      s"array_union(array(bucket), transform(sequence(0, ${nBits - 1}), i -> bucket ^ shiftleft(1L, i)))")
+    queries
+      .select(col("vec_id").as("qid"), asDouble("embedding").as("qe"))
+      .withColumn("bucket",
+        Sketches.affineHyperplaneBucket("qe", nBits, 64))
+      .select(col("qid"), explode(probes).as("pb"))
+      .select(col("qid"), col("pb").cast("int").as("cluster"))
+      .join(broadcast(entries), Seq("cluster"))
+      .select(col("qid"), col("vec_id").as("cid"))
   }
 
-  /** The walk itself, routing-agnostic: score the seeds, then `hops`
-    * rounds of expand-through-adjacency / fetch-unvisited / score /
-    * top-beam; final top-k over everything visited.
+  /** The walk itself, routing-agnostic, in one pass: collect the index
+    * rows (vec_id, ve, predicate bit), the edges, the queries and the
+    * (qid, cid) seeds once, build the undirected adjacency on the
+    * driver, and walk each query with a [[graft.plans.NswWalk.Walker]] —
+    * score the seeds, then `hops` rounds of expand / score the unvisited
+    * / top-beam (hop 1 expands every seed); final top-k over everything
+    * visited. Driver memory is O(n·(dim + degree)) for an index of n
+    * rows: at 20,000 64-d vectors and ~430k edges (the seeded sf1's
+    * q203/q214) the walk held 16–18 MB of driver heap while walking
+    * and 48–49 MB at its peak, when the collected rows and the built
+    * graph coexist (heap used after GC, local[4]). Its only jobs are
+    * the collects' (the routing runs inside the seeds' collect),
+    * whatever `hops` is, and it persists nothing. The result is a local
+    * (qid, cid, sim, rn) table in the queries' and the index's id
+    * types.
+    *
+    * Index and query vec_ids must be unique (IllegalArgumentException
+    * naming the duplicate otherwise); null ids take no part.
     *
     * `pred` (filtered search, r17): a metadata predicate over the
     * INDEX's columns. The walk TRAVERSES the full graph — dropping
     * disallowed nodes from the adjacency would disconnect it exactly
-    * when the predicate is selective — but each visited node carries
-    * its predicate bit on the co-located vector table (zero extra
-    * joins, zero extra shuffle), and the FINAL top-k ranks over allowed
-    * visited nodes only. The allowed filter runs BEFORE the k-cut —
-    * never post-filtering a k-list that can go empty; for very
-    * selective predicates callers raise `beam`/`hops` (the filtered-
-    * HNSW budget rule).
+    * when the predicate is selective — but each index row carries its
+    * predicate bit (null counts as false), and the FINAL top-k ranks
+    * over allowed visited nodes only. The allowed filter runs BEFORE
+    * the k-cut — never post-filtering a k-list that can go empty; for
+    * very selective predicates callers raise `beam`/`hops` (the
+    * filtered-HNSW budget rule).
     */
   private def nswWalk(seeds: DataFrame, edges: DataFrame, index: DataFrame,
                       queries: DataFrame, k: Int, beam: Int, hops: Int,
-                      excludeSelf: Boolean,
-                      pred: Option[Column] = None,
-                      nRows: Long = -1): DataFrame = {
-    val np = annParallelism(index.sparkSession, nRows)
-    val q = broadcast(queries.select(col("vec_id").as("qid"),
-      asDouble("embedding").as("qe")))
-    // vector table CO-LOCATED by cid once (r15): each hop's scoring join then exchanges only the
-    // THIN (qid, cid) candidate rows — without this, the moment the
-    // index outgrows the broadcast threshold every score() call pays a
-    // full vector-table SMJ shuffle (measured at sf10: 4 × ~104 MB of
-    // the 578 MB search total). At warehouse scale the persisted index
-    // is bucketed by vec_id, making this exchange free forever.
-    val thin = index.select(col("vec_id").as("cid"), col("ve"),
-        pred.getOrElse(lit(true)).as("ok"))
-      .repartition(np, col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def score(cand: DataFrame): DataFrame = cand
-      .join(thin, Seq("cid"))
-      .join(q, Seq("qid"))
-      .filter(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-      .select(col("qid"), col("cid"),
-        round(graft.plans.NativeFunctions.cosineSim(col("qe"), col("ve")), 4)
-          .as("sim"), col("ok"))
-    val wb = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    def topBeam(acc: DataFrame): DataFrame = acc
-      .withColumn("rn", row_number().over(wb)).filter(col("rn") <= beam)
-      .select(col("qid"), col("cid"), col("sim"))
-    var acc = score(seeds).localCheckpoint()
-    // hop 1 expands EVERY seed (seeds are hash-random representatives,
-    // not good scorers — beam-cutting them here would silently drop
-    // whole probed cells before they are walked once; measured at sf1:
-    // recall@5 froze at ~28% across nprobe 4→32 until each probed
-    // cell's seed kept its first expansion); later hops focus on merit
-    var frontier = acc.select(col("qid"), col("cid"), col("sim"))
-    // the walk runs on the UNDIRECTED graph (HNSW/NSW convention): a
-    // directed top-kNbr list starves low-in-degree nodes — at sf1 the
-    // directed walk recovered only ~60% of the matched-cell full-scan
-    // recall until reverse edges joined the expansion
-    // adjacency CO-LOCATED by cid once, like the vector table above:
-    // the per-hop expansion join otherwise re-shuffles the whole
-    // symmetrized edge list every hop (measured at sf10: 3 × ~115 MB —
-    // the bulk of the search shuffle), while the frontier side is
-    // beam-sized. Bucket the persisted edge table by u at warehouse
-    // scale and this exchange disappears entirely.
-    val adj = edges.select(col("u").as("cid"), col("v"))
-      .unionByName(edges.select(col("v").as("cid"), col("u").as("v")))
-      .repartition(np, col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to hops) {
-      val expand = frontier
-        .join(adj, Seq("cid"))
-        .select(col("qid"), col("v").as("cid")).distinct()
-        // only NEW candidates are scored (visited set = acc)
-        .join(acc.select(col("qid"), col("cid")), Seq("qid", "cid"), "left_anti")
-      acc = acc.unionByName(score(expand)).localCheckpoint()
-      frontier = topBeam(acc)
+                      excludeSelf: Boolean, pred: Option[Column]): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val qs = queries.filter(col("vec_id").isNotNull)
+      .select(col("vec_id").cast("long"), asDouble("embedding"))
+      .as[(Long, Array[Double])].collect()
+    qs.groupBy(_._1).collectFirst { case (id, dup) if dup.length > 1 => id }
+      .foreach(id => throw new IllegalArgumentException(s"duplicate vec_id $id among the queries"))
+    val walker = new graft.plans.NswWalk.Walker(nswGraph(index, edges, pred))
+    val seedsOf = seeds.select(col("qid").cast("long"), col("cid").cast("long"))
+      .filter(col("qid").isNotNull && col("cid").isNotNull)
+      .as[(Long, Long)].collect()
+      .groupMap(_._1)(_._2)
+    val hits = qs.toSeq.flatMap { case (qid, qe) =>
+      walker.search(qid, qe,
+        seedsOf.getOrElse(qid, Array.emptyLongArray), k, beam, hops, excludeSelf)
+        .map(h => (qid, h.cid, h.sim, h.rn))
     }
-    // every score() result is checkpointed — the co-located vector and
-    // adjacency caches have no remaining consumer
-    thin.unpersist(blocking = false)
-    adj.unpersist(blocking = false)
-    // allowed-only BEFORE the k-cut: the rank window never sees
-    // disallowed nodes, so rn 1..k is dense over the allowed set
-    acc.filter(col("ok"))
-      .withColumn("rn", row_number().over(wb))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rn"))
+    hits.toDF("qid", "cid", "sim", "rn")
+      .select(col("qid").cast(queries.schema("vec_id").dataType),
+        col("cid").cast(index.schema("vec_id").dataType), col("sim"), col("rn"))
+  }
+
+  /** The walk's graph: the index rows (vec_id, ve, predicate bit with
+    * null → false) and the (u, v) edges collected to the driver. A
+    * method of its own so the collected rows are garbage once the
+    * graph holds its arrays.
+    */
+  private def nswGraph(index: DataFrame, edges: DataFrame,
+                       pred: Option[Column]): graft.plans.NswWalk.Graph = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val rows = index.filter(col("vec_id").isNotNull)
+      .select(col("vec_id").cast("long"), col("ve"),
+        coalesce(pred.getOrElse(lit(true)), lit(false)))
+      .as[(Long, Array[Double], Boolean)].collect()
+    val adjacency = edges.select(col("u").cast("long"), col("v").cast("long"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
+      .as[(Long, Long)].collect()
+    new graft.plans.NswWalk.Graph(rows.map(_._1), rows.map(_._2),
+      rows.map(_._3), adjacency)
   }
 
   /** LSH-celled NSW — the model-free deterministic graph-ANN face:
@@ -1326,23 +1340,16 @@ object Ann {
       .withColumn("cluster",
         Sketches.affineHyperplaneBucket("ve", nBits, 64).cast("int"))
 
+  /** Beam search over an LSH-celled graph: multi-probe LSH routing
+    * ([[nswSeedsLsh]]) seeds the same one-pass walk as [[nswSearch]],
+    * with the same driver memory bound.
+    */
   def nswSearchLsh(edges: DataFrame, index: DataFrame, entries: DataFrame,
                    queries: DataFrame, k: Int, nBits: Int, beam: Int = 16,
                    hops: Int = 4, excludeSelf: Boolean = true,
-                   pred: Option[Column] = None, nRows: Long = -1): DataFrame = {
-    val probes = expr(
-      s"array_union(array(bucket), transform(sequence(0, ${nBits - 1}), i -> bucket ^ shiftleft(1L, i)))")
-    val seeds = queries
-      .select(col("vec_id").as("qid"), asDouble("embedding").as("qe"))
-      .withColumn("bucket",
-        Sketches.affineHyperplaneBucket("qe", nBits, 64))
-      .select(col("qid"), explode(probes).as("pb"))
-      .select(col("qid"), col("pb").cast("int").as("cluster"))
-      .join(broadcast(entries), Seq("cluster"))
-      .select(col("qid"), col("vec_id").as("cid")).distinct()
-    nswWalk(seeds, edges, index, queries, k, beam, hops, excludeSelf, pred,
-      nRows)
-  }
+                   pred: Option[Column] = None): DataFrame =
+    nswWalk(nswSeedsLsh(queries, entries, nBits), edges, index, queries, k,
+      beam, hops, excludeSelf, pred)
 
   /** INCREMENTAL graph ingestion — the continuous-ingestion face (the
     * minhash/SemDeDup accumulated-index posture, via the DiskANN
@@ -1356,8 +1363,9 @@ object Ann {
     * arrivals), and (b) a hash-ring chain among the batch's own nodes
     * per bucket (the long-link spine keeps growing, and batch-local
     * pairs are ring-REACHABLE before any walk links them directly). Cost per
-    * batch: one walk per new node (graph-degree rows) + batch-sized
-    * appends — history is never re-scanned or re-linked wholesale.
+    * batch: one [[nswSearchLsh]] pass (the index and edges read once,
+    * one driver-side walk per new node) + batch-sized appends —
+    * history is never re-linked wholesale.
     * `StreamingGraphAnnSpec` pins that a twin of an EARLIER streamed
     * vector is found against the accumulated graph.
     */
@@ -1481,11 +1489,10 @@ object Ann {
       () => nswBuild(index, kNbr, rounds, nRows = n),
       () => nswEntriesSampled(index).localCheckpoint(true)),
       sessions = Seq(corpus.sparkSession))
-    val out = nswSearchLsh(edges, index, entries, queries, k, bits, beam, hops,
-      nRows = n)
-    val materialized = out.localCheckpoint()
+    // the walk's result is a local table, independent of `index`
+    val out = nswSearchLsh(edges, index, entries, queries, k, bits, beam, hops)
     index.unpersist(blocking = true)
-    materialized
+    out
   }
 
   /** Graph-ANN top-k — ivfFit∘ivfEncode∘nswBuild∘nswSearch composition
@@ -1515,10 +1522,9 @@ object Ann {
       () => nswEntriesSampled(index).localCheckpoint(true)),
       sessions = Seq(corpus.sparkSession))
     val out = nswSearch(cents, edges, index,
-      entries, queries, k, beam, hops, nprobe, nRows = n)
-    val materialized = out.localCheckpoint()
+      entries, queries, k, beam, hops, nprobe)
     index.unpersist(blocking = true)
-    materialized
+    out
   }
 
   /** ANN index-QUALIFICATION recall report (r15): recall@k of an

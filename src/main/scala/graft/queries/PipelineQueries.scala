@@ -2454,14 +2454,15 @@ object PipelineQueries extends QueryFamily {
   // cell-local ring init + NN-Descent refinement (Dong et al. WWW'11,
   // with the §2.3 ρ=1/2 sampling) + centroid-routed fixed-hop beam
   // search from per-cell entries (the SPANN/DiskANN posture: coarse
-  // routing, fine ranking by graph walk — the query path touches
-  // graph-degree rows, never a cell scan). Cells scale as √n so walks
-  // stay bounded as the corpus grows. This composition uses sign-LSH
-  // cells (nswKnnLsh) — the zero-model face (no fit pass; buckets
-  // assignable per-row at ingest); q214 oracles the k-means-celled
-  // face, replay-deterministic since r15's centroid quantization
-  // (Ann.centroidMean: fitted means rounded to the 1e-6 grid, so
-  // accumulation-order ulp can no longer flip a boundary cell
+  // routing, fine ranking by graph walk — each hop scores ~graph-degree
+  // candidates per beam node, never a whole cell; the walk itself runs
+  // in one driver-side pass over the collected index and edges). Cells
+  // scale as √n so walks stay bounded as the corpus grows. This
+  // composition uses sign-LSH cells (nswKnnLsh) — the zero-model face
+  // (no fit pass; buckets assignable per-row at ingest); q214 oracles
+  // the k-means-celled face, replay-deterministic since r15's centroid
+  // quantization (Ann.centroidMean: fitted means rounded to the 1e-6
+  // grid, so accumulation-order ulp can no longer flip a boundary cell
   // assignment — the r14 9/10-vs-10/10 twin flake).
   // Planted-twin oracle (q87's): an identical query lands in its
   // twin's bucket BY CONSTRUCTION and the walk must surface it top-1

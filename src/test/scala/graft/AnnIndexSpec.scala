@@ -189,10 +189,12 @@ class AnnIndexSpec extends SparkSpec {
     val index = spark.read.parquet(s"$dir/index")
     val edges = spark.read.parquet(s"$dir/edges")
     val entries = spark.read.parquet(s"$dir/entries")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val (got, searchJobs) = countJobs {
       rows(Ann.nswSearchLsh(edges, index, entries, queries, k = 5, nBits = 4,
         beam = 16, hops = 3))
     }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
     // inline recomputation: the LSH build + walk are replay-exact
     // (sign-LSH cells, fixed-order arithmetic), so the reloaded walk
     // must reproduce the inline composition row-for-row
@@ -200,12 +202,14 @@ class AnnIndexSpec extends SparkSpec {
     val want = rows(Ann.nswSearchLsh(Ann.nswBuild(index2, 6, 2), index2,
       Ann.nswEntries(index2), queries, k = 5, nBits = 4, beam = 16, hops = 3))
     assert(got == want, "reloaded walk must reproduce the inline composition")
-    // the query path is probe-rank + HOPS x (expand/anti-join/score/
-    // checkpoint) — job count proportional to hops (3 here, ~10 jobs
-    // each with AQE stages), INDEPENDENT of corpus size, and never the
-    // NN-Descent round loop or a fit (this run measured 34)
-    assert(searchJobs <= 45, s"query path launched $searchJobs jobs " +
-      "(a build loop leaked into search)")
+    // the query path is the LSH routing plus one collect each of the
+    // index, edges, queries and seeds, then a driver-side walk: a
+    // handful of jobs whatever `hops` is (the IVF search's budget), never
+    // a job chain per hop, the NN-Descent round loop or a fit
+    assert(searchJobs <= 10, s"query path launched $searchJobs jobs " +
+      "(a per-hop or build loop leaked into search)")
+    // and it owns no state: nothing persisted outlives the call
+    assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
   }
 
   test("NSW graph build runs in at most 4 jobs") {

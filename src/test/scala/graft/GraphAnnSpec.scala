@@ -85,4 +85,24 @@ class GraphAnnSpec extends SparkSpec {
       .map(r => (r.getLong(0) + 1000000L, r.getLong(0), 1.0)).toSet
     assert(got == want, s"twin walk failed: $got")
   }
+
+  test("a duplicate vec_id in the index fails the search, naming the id") {
+    val index = Ann.nswLshIndex(embs, nBits = 4)
+    val edges = Ann.nswBuild(index, kNbr = 6, rounds = 2)
+    val doubled = index.unionByName(index.filter(col("vec_id") === 17L))
+    val e = intercept[IllegalArgumentException] {
+      Ann.nswSearchLsh(edges, doubled, Ann.nswEntries(index), queries, k = 5, nBits = 4)
+    }
+    assert(e.getMessage.contains("vec_id 17 "), e.getMessage)
+  }
+
+  test("a duplicate vec_id among the queries fails the search, naming the id") {
+    val index = Ann.nswLshIndex(embs, nBits = 4)
+    val edges = Ann.nswBuild(index, kNbr = 6, rounds = 2)
+    val doubled = queries.unionByName(queries.filter(col("vec_id") === 5L))
+    val e = intercept[IllegalArgumentException] {
+      Ann.nswSearchLsh(edges, index, Ann.nswEntries(index), doubled, k = 5, nBits = 4)
+    }
+    assert(e.getMessage.contains("vec_id 5 "), e.getMessage)
+  }
 }
