@@ -75,36 +75,23 @@ object Bench {
         "q191_span_excision" -> 2.502, "q195_tokenized_packing" -> 3.766,
         "q203_graph_ann" -> 6.320, "q209_corpus_build_v3" -> 6.997,
         "q211_dedup_roi" -> 5.822, "q214_graph_ann_kmeans" -> 7.315)
-    // stage completions stream in asynchronously; the buffer is cleared
-    // per timed run and snapshotted (after a short drain) only when a
-    // floor breach makes the detail worth keeping
-    val stageBuf =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Double, Double, String)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = s.stageInfo
-        val wall = (for { c <- si.completionTime; b <- si.submissionTime }
-          yield (c - b) / 1e3).getOrElse(0.0)
-        val task = if (si.taskMetrics != null) si.taskMetrics.executorRunTime / 1e3 else 0.0
-        stageBuf.add((si.stageId, si.numTasks, wall, task, si.name.takeWhile(_ != '(')))
-      }
-    })
-    // Stride DEFAULT IS NOW 1 — a System.gc() before EVERY query's timed
-    // runs, not every 4th. The r5 driver bench showed the stride-4
-    // posture is position-dependent under machine load: the divergent
-    // queries (q62 21×, q155 8.7× driver/local) were the two biggest
-    // persist-index builders, and the queries scheduled right after
-    // q155 (q156 8.9×, q157 10.4×) inflated with them while the global
-    // median sat at 1.31× — accumulated garbage + async cache teardown
-    // from a heavy predecessor landing inside a later query's timed
-    // window. Per-query GC costs untimed wall-clock only (~0.1 s × 168)
-    // and makes every query start from the same heap state regardless
-    // of where it sits in the run order. It also lets the
-    // ContextCleaner reclaim dropped broadcast/shuffle state at a
+    // the log is drained (untimed) before each timed run and read only
+    // when a floor breach makes the run's stages worth keeping
+    val stageLog = graft.tools.StageLog.attach(spark.sparkContext)
+    // A System.gc() before EVERY query's timed runs, not every 4th: the
+    // r5 driver bench showed the stride-4 posture is position-dependent
+    // under machine load. The divergent queries (q62 21×, q155 8.7×
+    // driver/local) were the two biggest persist-index builders, and the
+    // queries scheduled right after q155 (q156 8.9×, q157 10.4×)
+    // inflated with them while the global median sat at 1.31× —
+    // accumulated garbage + async cache teardown from a heavy
+    // predecessor landing inside a later query's timed window.
+    // Per-query GC costs untimed wall-clock only (~0.1 s × 168) and
+    // makes every query start from the same heap state regardless of
+    // where it sits in the run order. It also lets the ContextCleaner
+    // reclaim dropped broadcast/shuffle state at a
     // controlled point (its own periodic GC defaults to 30 min —
     // longer than the whole run). See BENCHNOTES.md for the A/B.
-    val gcStride = sys.env.getOrElse("SPARK_GRAFT_GC_STRIDE", "1").toInt
     // Optional regex filter for local experiments on a sub-sequence of
     // the run order (positional effects need real neighbors, so this
     // selects a contiguous alphabetical range rather than reordering).
@@ -112,23 +99,21 @@ object Bench {
     val results: Seq[(String, Either[String, Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
-        .zipWithIndex.map { case ((name, fn), i) =>
-        if (i % gcStride == 0) System.gc()
-        type Stages = Seq[(Int, Int, Double, Double, String)]
+        .map { case (name, fn) =>
+        System.gc()
+        type Stages = Seq[graft.tools.StageLog.Stage]
         def once(): Either[String, (Double, Long, Stages)] = {
-          stageBuf.clear()
+          stageLog.drain()
           val g0 = gcMillis
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).count()
             val dt = (System.nanoTime() - t0) / 1e9
-            // floor breach → drain the listener bus briefly (untimed) and
-            // keep the run's heaviest stages for the record
-            val stg: Stages = if (floors.get(name).exists(f => dt > 1.5 * f)) {
-              Thread.sleep(800)
-              import scala.jdk.CollectionConverters._
-              stageBuf.iterator().asScala.toSeq.sortBy(-_._3).take(10)
-            } else Nil
+            // floor breach → keep the run's heaviest stages for the record
+            val stg: Stages =
+              if (floors.get(name).exists(f => dt > 1.5 * f))
+                stageLog.drain().sortBy(-_.wall).take(10)
+              else Nil
             Right((dt, gcMillis - g0, stg))
           } catch {
             case e: Throwable =>
@@ -136,9 +121,9 @@ object Bench {
               Left("err")
           }
         }
-        def logStages(run: String, stg: Stages): Unit = stg.foreach {
-          case (id, n, w, t, nm) => System.err.println(
-            f"[slowstage] $name run=$run id=$id%3d tasks=$n%3d wall=$w%6.2f s task=$t%7.2f s  $nm")
+        def logStages(run: String, stg: Stages): Unit = stg.foreach { s =>
+          System.err.println(f"[slowstage] $name run=$run id=${s.id}%3d tasks=${s.tasks}%3d " +
+            f"wall=${s.wall}%6.2f s task=${s.run}%7.2f s  ${s.name}")
         }
         val r = (once(), once()) match {
           case (Right((a, ga, sa)), Right((b, gb, sb))) =>
@@ -149,8 +134,8 @@ object Bench {
             // top 3 stages of the SLOWER breaching run, compact
             val breach = if (sa.nonEmpty || sb.nonEmpty) {
               val stg = if (a >= b && sa.nonEmpty || sb.isEmpty) sa else sb
-              stg.take(3).map { case (id, n, w, t, _) =>
-                f"""{"id":$id,"n":$n,"w":$w%.2f,"t":$t%.2f}""" }
+              stg.take(3).map { s =>
+                f"""{"id":${s.id},"n":${s.tasks},"w":${s.wall}%.2f,"t":${s.run}%.2f}""" }
                 .mkString(""","stg":[""", ",", "]")
             } else ""
             if (math.min(a, b) > 1.5 || breach.nonEmpty)

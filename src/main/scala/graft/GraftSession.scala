@@ -27,8 +27,9 @@ object GraftSession {
       // CPU) under the cache's per-key loading lock, so task time grows
       // with the task count: the r17 inverse-scaling signature
       // (q155/q192: 32-core sum-of-task-time ~2× the 8-core run's for
-      // identical data; CoreScaleProbe showed warm-run executorRunTime
-      // halving when the cache fits). Sized to hold a full bench
+      // identical data; a per-stage profile showed warm-run
+      // executorRunTime halving when the cache fits — OPTIMIZATION_r18.md
+      // item 1). Sized to hold a full bench
       // session's stages; executors on a real cluster run the same
       // long-lived rotation, so this is an engine default, not a
       // local-mode tune. Parameterized for deployments.

@@ -134,54 +134,16 @@ object BingTile {
   def envelopeCover(lonMin: Column, latMin: Column, lonMax: Column,
                     latMax: Column, zoom: Int,
                     maxTiles: Long = 1000000L): Column =
-    // Native kernel (r18): the HOF formulation below is CodegenFallback
-    // — every tile of every row walks an interpreted lambda tree, with
-    // the quadkey concat expanding to ~4·zoom interpreted
-    // sub-expressions per tile (the dominant q213 CPU at the sf1
-    // decade). The kernel computes the identical array (same corner
-    // floors in the same IEEE operation order, same guard, same tile
-    // order, same quadkey digits) in one compiled pass; BingTileSpec
-    // pins kernel == HOF over randomized boxes.
+    // Native kernel (r18): the earlier HOF formulation is
+    // CodegenFallback — every tile of every row walks an interpreted
+    // lambda tree, with the quadkey concat expanding to ~4·zoom
+    // interpreted sub-expressions per tile (the dominant q213 CPU at
+    // the sf1 decade). The kernel computes the identical array (same
+    // corner floors in the same IEEE operation order, same guard, same
+    // tile order, same quadkey digits) in one compiled pass;
+    // BingTileSpec pins kernel == HOF over randomized boxes.
     graft.plans.NativeFunctions.tileCover(lonMin, latMin, lonMax, latMax,
       zoom, maxTiles)
-
-  /** The pre-r18 HOF formulation of [[envelopeCover]] — kept as the
-    * kernel's in-repo parity oracle (BingTileSpec compares the two on
-    * randomized boxes; the DuckDB side replays the same ranges
-    * independently in q213's SQL).
-    */
-  private[graft] def envelopeCoverHof(lonMin: Column, latMin: Column,
-                                      lonMax: Column, latMax: Column,
-                                      zoom: Int,
-                                      maxTiles: Long = 1000000L): Column = {
-    // The four corner tile coordinates are computed ONCE per row into a
-    // single-element struct array and bound through a transform lambda:
-    // the guard's tile count and the cover body both read the lambda
-    // variable's fields. Referencing tileXAt/tileYAt subtrees directly
-    // from both the assert and the when-branch would DUPLICATE the
-    // Mercator sin/log arithmetic per row — conditional branches are
-    // outside Catalyst's subexpression elimination, and the duplication
-    // was a measured ~1.7× q213 CPU regression in r16 (VERDICT r16
-    // "What's wrong" item 1).
-    val corners = struct(
-      tileXAt(lonMin, zoom).as("x0"), tileXAt(lonMax, zoom).as("x1"),
-      tileYAt(latMax, zoom).as("y0"), tileYAt(latMin, zoom).as("y1"))
-    element_at(transform(array(corners), { t =>
-      val x0 = t.getField("x0"); val x1 = t.getField("x1")
-      val y0 = t.getField("y0"); val y1 = t.getField("y1")
-      val count = (x1.cast("bigint") - x0 + 1L) * (y1.cast("bigint") - y0 + 1L)
-      // assert_true returns NULL on pass, so when(guard.isNull, cover)
-      // keeps this a single expression; on violation the task fails loudly.
-      val guard = assert_true(
-        lonMin <= lonMax && latMin <= latMax && count <= lit(maxTiles),
-        concat(lit(s"envelope cover: inverted bounds or more than $maxTiles tiles at zoom $zoom (lon "),
-          lonMin, lit(".."), lonMax, lit(", lat "), latMin, lit(".."), latMax, lit(")")))
-      when(guard.isNull,
-        flatten(transform(sequence(x0, x1), xx =>
-          transform(sequence(y0, y1), yy =>
-            struct(xx.as("x"), yy.as("y"), quadkey(xx, yy, zoom).as("qk"))))))
-    }), 1)
-  }
 
   /** Tile envelope corners in degrees: (lonMin, lonMax, latMin, latMax)
     * — bing_tile_polygon's rectangle. Longitude edges are linear in x;

@@ -16,40 +16,19 @@ object Sketches {
 
   /** k-permutation MinHash signature (array<bigint>, length k) over a
     * string-array column. sig[i] = min over elements of xxhash64(elem, i).
-    * Native codegen'd kernel; `minhashSignatureHof` is the bit-identical
-    * HOF formulation kept as its parity oracle (SketchParitySpec).
+    * Native codegen'd kernel; SketchParitySpec pins it to its
+    * bit-identical HOF formulation.
     */
   def minhashSignature(setCol: String, k: Int = 32): Column =
     graft.plans.NativeFunctions.minhashSig(col(setCol), k)
 
-  def minhashSignatureHof(setCol: String, k: Int = 32): Column =
-    expr(s"transform(sequence(0, ${k - 1}), i -> array_min(transform($setCol, e -> xxhash64(e, i))))")
-
-  /** Estimated Jaccard similarity from two equal-length signatures:
-    * fraction of agreeing slots. HOF formulation — parity oracle for the
-    * native SlotAgreement kernel that the dedup pipeline uses
-    * (SketchParitySpec).
-    */
-  def estJaccardHof(sigA: String, sigB: String, k: Int = 32): Column =
-    expr(s"aggregate(zip_with($sigA, $sigB, (x, y) -> if(x = y, 1, 0)), 0, (a, v) -> a + v)") / lit(k.toDouble)
-
   /** 64-bit SimHash of a string-array column: bit b is set when the
     * majority of element hashes have bit b set (±1 vote per element).
-    * Native codegen'd kernel; `simhashHof` is the bit-identical HOF
-    * formulation kept as its parity oracle (SketchParitySpec).
+    * Native codegen'd kernel; SketchParitySpec pins it to its
+    * bit-identical HOF formulation.
     */
   def simhash(setCol: String): Column =
     graft.plans.NativeFunctions.simhash64(col(setCol))
-
-  def simhashHof(setCol: String, hashesCol: String = null): Column = {
-    val hashes = Option(hashesCol).getOrElse(s"transform($setCol, w -> xxhash64(w))")
-    expr(
-      s"""aggregate(
-         |  transform(sequence(0, 63), b ->
-         |    if(aggregate($hashes, 0, (a, h) -> a + if((shiftright(h, b) & 1L) = 1L, 1, -1)) > 0,
-         |       shiftleft(1L, b), 0L)),
-         |  0L, (acc, x) -> acc | x)""".stripMargin)
-  }
 
   // ---- SQL-replayable (oracle-able) sketch family ----------------------
   // md5-derived 60-bit base hashes + affine slot mixing mod 2^31−1: every
@@ -66,47 +45,25 @@ object Sketches {
     graft.plans.NativeFunctions.md5Hash60(col(setCol))
 
   /** [[md5Hashes]] reduced mod P — the input domain of the affine
-    * minhash mixing (keeps a·h + b inside 2^62).
+    * minhash mixing (keeps a·h + b inside 2^62). SketchParitySpec pins
+    * both faces to the conv(substr(md5)) chain the DuckDB oracle
+    * replays.
     */
   def md5HashesModP(setCol: String): Column =
     graft.plans.NativeFunctions.md5Hash60(col(setCol), graft.plans.Affine.P)
 
-  /** HOF formulations of [[md5Hashes]]/[[md5HashesModP]] — parity
-    * oracles for the native kernel (SketchParitySpec), and the exact
-    * shape the DuckDB oracle replays.
+  /** Affine MinHash signature over pre-hashed elements (native kernel;
+    * SketchParitySpec pins it to its HOF formulation).
     */
-  def md5HashesHof(setCol: String): Column =
-    expr(s"transform($setCol, x -> cast(conv(substr(md5(x), 1, 15), 16, 10) as bigint))")
-
-  def md5HashesModPHof(setCol: String): Column =
-    expr(s"transform($setCol, x -> cast(conv(substr(md5(x), 1, 15), 16, 10) as bigint) % ${graft.plans.Affine.P}L)")
-
-  /** Affine MinHash signature over pre-hashed elements (native kernel). */
   def minhashAffine(hashesCol: String, k: Int = 32): Column =
     graft.plans.NativeFunctions.minhashAffine(col(hashesCol), k)
 
-  /** HOF formulation of [[minhashAffine]] — parity oracle for the kernel. */
-  def minhashAffineHof(hashesCol: String, k: Int = 32): Column = {
-    val as = (0 until k).map(graft.plans.Affine.a).mkString(", ")
-    val bs = (0 until k).map(graft.plans.Affine.b).mkString(", ")
-    expr(s"transform(sequence(0, ${k - 1}), i -> array_min(transform($hashesCol, h -> " +
-      s"(element_at(array($as), cast(i as int) + 1) * h + element_at(array($bs), cast(i as int) + 1)) % ${graft.plans.Affine.P}L)))")
-  }
-
   /** Majority-vote SimHash over the low `bits` bits of pre-hashed
-    * elements (native kernel).
+    * elements (native kernel; SketchParitySpec pins it to its HOF
+    * formulation).
     */
   def simhashBits(hashesCol: String, bits: Int = 60): Column =
     graft.plans.NativeFunctions.simhashBits(col(hashesCol), bits)
-
-  /** HOF formulation of [[simhashBits]] — parity oracle for the kernel. */
-  def simhashBitsHof(hashesCol: String, bits: Int = 60): Column =
-    expr(
-      s"""aggregate(
-         |  transform(sequence(0, ${bits - 1}), b ->
-         |    if(2 * size(filter($hashesCol, h -> (shiftright(h, cast(b as int)) & 1L) = 1L)) > size($hashesCol),
-         |       shiftleft(1L, cast(b as int)), 0L)),
-         |  0L, (acc, x) -> acc | x)""".stripMargin)
 
   /** The 15-bit chunks of a 60-bit simhash (hamming-bucket candidate
     * generation, pigeonhole over 4 chunks).
@@ -139,19 +96,11 @@ object Sketches {
     * [[hyperplaneSigns]]-derived ±1 hyperplanes (Charikar '02 — buckets
     * cluster by cosine direction). bit i = sign(projection onto plane i).
     * Native codegen'd kernel (graft.plans.HyperplaneBucket) — runs once
-    * per corpus vector; [[affineHyperplaneBucketHof]] is the
-    * bit-identical HOF parity oracle.
+    * per corpus vector; SketchParitySpec pins it to its bit-identical
+    * HOF formulation.
     */
   def affineHyperplaneBucket(vecCol: String, nBits: Int = 4, dim: Int = 64): Column =
     graft.plans.NativeFunctions.hyperplaneBucket(col(vecCol), nBits)
-
-  def affineHyperplaneBucketHof(vecCol: String, nBits: Int = 4, dim: Int = 64): Column = {
-    val terms = hyperplaneSigns(nBits, dim).zipWithIndex.map { case (hp, i) =>
-      val arr = hp.map(s => s"${s}.0D").mkString(", ")
-      s"if(aggregate(zip_with($vecCol, array($arr), (x, h) -> x * h), 0.0D, (a, v) -> a + v) > 0D, ${1L << i}L, 0L)"
-    }
-    expr(terms.mkString("(", " + ", ")"))
-  }
 
   // ---- SQL-replayable HyperLogLog (m = 2^p registers) ------------------
   // Flajolet '07 HLL over the md5-derived 60-bit hash: bucket = h mod m,

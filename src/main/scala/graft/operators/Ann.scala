@@ -19,18 +19,11 @@ object Ann {
 
   /** Exact cosine similarity between two double-array columns (by name):
     * native codegen'd kernel (graft.plans.CosineSim) — one fused
-    * dot+norms loop per pair, no interpreted lambdas.
+    * dot+norms loop per pair, no interpreted lambdas. SketchParitySpec
+    * pins it to its HOF formulation.
     */
   def cosine(a: String, b: String): org.apache.spark.sql.Column =
     graft.plans.NativeFunctions.cosineSim(col(a), col(b))
-
-  /** HOF formulation of the same kernel — kept as the parity oracle for
-    * the native expression (AnnSpec asserts equality).
-    */
-  def cosineHof(a: String, b: String): org.apache.spark.sql.Column =
-    expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)") /
-      (sqrt(expr(s"aggregate($a, 0.0D, (acc, x) -> acc + x * x)")) *
-        sqrt(expr(s"aggregate($b, 0.0D, (acc, x) -> acc + x * x)")))
 
   // native Cast (codegen'd), not a transform() lambda
   private def asDouble(c: String) = col(c).cast("array<double>")
@@ -237,8 +230,8 @@ object Ann {
     * products and L2, so ADC scores are unchanged as a metric while a
     * skewed eigenspectrum's variance spreads evenly across subspaces
     * (measured on the sf1 aniso set: PQ recall@5 0.31 unrotated →
-    * recovered to the isotropic level rotated; AnisoProbe /
-    * BENCHNOTES r12). Compose: `pqKnn(rotate(corpus), rotate(queries),
+    * recovered to the isotropic level rotated; BENCHNOTES.md r12).
+    * Compose: `pqKnn(rotate(corpus), rotate(queries),
     * …)` — corpus and queries MUST share the seed. One codegen'd
     * dim×dim multiply per vector per pass; the matrix is a broadcast
     * literal, never per-row data.
@@ -694,8 +687,8 @@ object Ann {
     * in n at a FIXED nBits (measured 59× shuffle bytes for 10× data at
     * nBits = 4). At scale, hold bucket occupancy constant:
     * nBits ≈ log₂(n) − 8 keeps candidates linear; recall at the fixed
-    * 1-bit multi-probe drops with nBits (Q71Probe: 0.57 at +2 bits,
-    * 0.29 at +4), so the HIGH-RECALL scale path for cosine near-dup
+    * 1-bit multi-probe drops with nBits (BENCHNOTES.md r12: 0.57 at
+    * +2 bits, 0.29 at +4), so the HIGH-RECALL scale path for cosine near-dup
     * detection is [[graft.operators.Dedup.minhashCandidates]]'s banded
     * tables (recall composes across independent bands) or
     * [[graft.operators.SemDedup.dupPairs]]'s k-means cells — this face
@@ -724,7 +717,7 @@ object Ann {
     // through the aggregate itself, and the order decides whether the
     // dedup exchange carries every CANDIDATE pair or only survivors
     // (measured at the sf1 decade, threshold 0.4: 851 → 11.4 MB
-    // shuffled, identical 62 675-pair output — Q71Probe/BENCHNOTES r12)
+    // shuffled, identical 62 675-pair output — BENCHNOTES.md r12)
     a.join(b, Seq("bucket")).filter(col("va") < col("vb"))
       .withColumn("sim", round(cosine("ea", "eb"), 4))
       .filter(col("sim") >= threshold)
@@ -750,16 +743,10 @@ object Ann {
     * same per-pair hot path that motivated the cosine kernel. The
     * per-candidate eval count (n·m·ksub per corpus pass) grows with
     * the corpus; the HOF form pays an interpreted closure call per
-    * eval there.
+    * eval there. SketchParitySpec pins the kernel to that HOF form.
     */
   def l2sq(a: String, b: String): org.apache.spark.sql.Column =
     graft.plans.NativeFunctions.l2Sq(col(a), col(b))
-
-  /** HOF formulation of the same kernel — the parity oracle for the
-    * native expression (SketchParitySpec asserts equality).
-    */
-  def l2sqHof(a: String, b: String): org.apache.spark.sql.Column =
-    expr(s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0D, (s, v) -> s + v)")
 
   /** (vec_id, sub, sv): the m contiguous subvectors of each embedding. */
   private def subvecs(df: DataFrame, m: Int, dim: Int): DataFrame = {
@@ -1530,7 +1517,7 @@ object Ann {
   /** ANN index-QUALIFICATION recall report (r15): recall@k of an
     * approximate ranking against the exact baseline, per query — the
     * table a deployment reads before switching an index family (the
-    * measurement NswRecallProbe ran as a tool, promoted to a
+    * r14 graph-ANN recall measurement of BENCHNOTES.md, promoted to a
     * first-class oracled operator). Both inputs are (qid, cid, rn)
     * rankings (any of the bruteKnn/lshKnn/ivfKnn/pqKnn/nswKnn faces);
     * the base is the EXACT list's actual size (< k only when the

@@ -139,8 +139,8 @@ object Bpe {
     * one fold/kernel layer per round, and by round ~100 the plan tree
     * alone OOMs the driver while each round re-pays optimization of
     * the whole depth (the Components.scala pointer-jumping posture;
-    * measured by tools/BpeScaleProbe — 128 serial rounds OOMed an 8g
-    * driver before this cut existed). 16 keeps the oracled k=6 and
+    * measured in BENCHNOTES.md post-close r12 — 128 serial rounds
+    * OOMed an 8g driver before this cut existed). 16 keeps the oracled k=6 and
     * every spec path bit-identical (the cut never fires there) while
     * bounding plan depth for real vocabularies; checkpoint blocks per
     * cut are vocab-sized and reclaimed by the ContextCleaner as the

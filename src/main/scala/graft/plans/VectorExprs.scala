@@ -1,8 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * presto-main/src/main/java/com/facebook/presto/operator/scalar/
   * MathFunctions.java:1 — scalar kernels compiled, not interpreted).
   *
-  * Hash semantics are bit-identical to the HOF formulations in
-  * graft.functions.Sketches (asserted by SketchParitySpec): the sketch
+  * Hash semantics are bit-identical to the HOF formulations in the
+  * test tree's HofOracles (asserted by SketchParitySpec): the sketch
   * hash is Spark's xxhash64 chain — XXH64(seed 42) over the UTF8 bytes,
   * then XXH64.hashInt with the slot index.
   *
@@ -85,9 +87,9 @@ object CosineSim {
 }
 
 /** l2sq(a, b) over two array<double> columns: Σ(xᵢ−yᵢ)² in one fused
-  * loop — PQ's metric. The HOF form (aggregate∘zip_with, kept in
-  * Ann.l2sqHof as the parity oracle) is CodegenFallback and runs once
-  * per (vector, sub, code) candidate in codebook training/encoding —
+  * loop — PQ's metric. The HOF form (aggregate∘zip_with, the parity
+  * oracle in SketchParitySpec) is CodegenFallback and runs once per
+  * (vector, sub, code) candidate in codebook training/encoding —
   * n·m·ksub interpreted closure calls per corpus pass, the count that
   * dominates at real corpus scale. At sf0.1 (2000 vectors) the fit
   * stages are cold-start/orchestration-dominated, so the local win is
@@ -577,9 +579,25 @@ object Affine {
   def b(i: Int): Long = (2654435761L * 40503L * (i + 1)) % P
 }
 
-/** sig[i] = min over h in the input array<bigint> (pre-reduced mod P) of
-  * (a_i·h + b_i) mod P — the SQL-replayable MinHash. Empty input → k
-  * null slots.
+/** Generates `compute(childOrNull, ...)` for the kernels below that map
+  * a null input to a value rather than to null (the HOF semantics their
+  * SQL replays have).
+  */
+private object NullInputCodeGen {
+  def apply(e: UnaryExpression, ctx: CodegenContext, ev: ExprCode)(
+      call: String => String): ExprCode = {
+    val c = e.child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(e.dataType)} ${ev.value} =
+        ${call(s"(${c.isNull} ? null : ${c.value})")};""", isNull = FalseLiteral)
+  }
+}
+
+/** sig[i] = min over the non-null h in the input array<bigint>
+  * (pre-reduced mod P) of (a_i·h + b_i) mod P — the SQL-replayable
+  * MinHash. A null or empty input, or one whose elements are all null,
+  * gives k null slots (array_min over nothing).
   */
 case class MinHashAffine(child: Expression, k: Int)
     extends UnaryExpression {
@@ -589,13 +607,14 @@ case class MinHashAffine(child: Expression, k: Int)
       s"graft_minhash_affine requires an array<bigint> input, got $t")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
   override def prettyName: String = "graft_minhash_affine"
 
-  override protected def nullSafeEval(v: Any): Any =
-    MinHashAffine.compute(v.asInstanceOf[ArrayData], k)
+  override def eval(input: InternalRow): Any =
+    MinHashAffine.compute(child.eval(input).asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.MinHashAffine.compute($a, $k)")
+    NullInputCodeGen(this, ctx, ev)(a => s"graft.plans.MinHashAffine.compute($a, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashAffine =
     copy(child = newChild)
@@ -603,28 +622,32 @@ case class MinHashAffine(child: Expression, k: Int)
 
 object MinHashAffine {
   def compute(arr: ArrayData, k: Int): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](k))
+    val n = if (arr == null) 0 else arr.numElements()
     val mins = Array.fill(k)(Long.MaxValue)
+    var any = false
     var i = 0
     while (i < k) {
       val a = Affine.a(i); val b = Affine.b(i)
       var j = 0
       while (j < n) {
-        val h = (a * arr.getLong(j) + b) % Affine.P
-        if (h < mins(i)) mins(i) = h
+        if (!arr.isNullAt(j)) {
+          any = true
+          val h = (a * arr.getLong(j) + b) % Affine.P
+          if (h < mins(i)) mins(i) = h
+        }
         j += 1
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    if (any) new GenericArrayData(mins) else new GenericArrayData(new Array[Any](k))
   }
 }
 
 /** Majority-vote SimHash over the low `bits` bits of pre-hashed
   * array<bigint> elements — the SQL-replayable SimHash (60 bits: the
   * md5-derived base hash carries 15 hex digits). Tie → bit unset,
-  * matching 2·count > n in SQL.
+  * matching 2·count > n in SQL; a null element counts in n and sets no
+  * bit; a null input gives 0, like an empty one.
   */
 case class SimHashBits(child: Expression, bits: Int)
     extends UnaryExpression {
@@ -634,13 +657,14 @@ case class SimHashBits(child: Expression, bits: Int)
       s"graft_simhash_bits requires an array<bigint> input, got $t")
   }
   override def dataType: DataType = LongType
+  override def nullable: Boolean = false
   override def prettyName: String = "graft_simhash_bits"
 
-  override protected def nullSafeEval(v: Any): Any =
-    SimHashBits.compute(v.asInstanceOf[ArrayData], bits)
+  override def eval(input: InternalRow): Any =
+    SimHashBits.compute(child.eval(input).asInstanceOf[ArrayData], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.SimHashBits.compute($a, $bits)")
+    NullInputCodeGen(this, ctx, ev)(a => s"graft.plans.SimHashBits.compute($a, $bits)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHashBits =
     copy(child = newChild)
@@ -648,11 +672,11 @@ case class SimHashBits(child: Expression, bits: Int)
 
 object SimHashBits {
   def compute(arr: ArrayData, bits: Int): Long = {
-    val n = arr.numElements()
+    val n = if (arr == null) 0 else arr.numElements()
     val counts = new Array[Int](bits)
     var j = 0
     while (j < n) {
-      val h = arr.getLong(j)
+      val h = if (arr.isNullAt(j)) 0L else arr.getLong(j)
       var b = 0
       while (b < bits) {
         if (((h >>> b) & 1L) == 1L) counts(b) += 1
@@ -700,7 +724,7 @@ object SimHash64 {
   * reference object, never rebuilt per row. Built as the OPQ-style
   * pre-subvector ROTATION hook for the PQ family (Ge et al., CVPR 2013
   * "Optimized Product Quantization"; r12 anisotropy adjudication —
-  * AnisoProbe measured PQ recall 0.41→0.31 under a geometrically
+  * BENCHNOTES.md r12 measured PQ recall 0.41→0.31 under a geometrically
   * decaying eigenspectrum while the rotation-invariant IVF control
   * ROSE 0.79→0.98, isolating subspace starvation): an orthonormal M
   * preserves inner products and L2 distances, so ADC in rotated space

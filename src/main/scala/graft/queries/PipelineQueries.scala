@@ -936,7 +936,7 @@ object PipelineQueries extends QueryFamily {
   }
 
   // The ROTATED PQ face (r12; the OPQ-style anisotropy fix — Ge et al.
-  // CVPR 2013, measured in AnisoProbe/BENCHNOTES r12: a skewed
+  // CVPR 2013, measured in BENCHNOTES.md r12: a skewed
   // eigenspectrum starves consecutive-dim subquantizers, recall@5
   // 0.41→0.31 unrotated vs 0.60 rotated on the sf1 aniso set): corpus
   // AND queries pass through the seeded orthonormal rotation
@@ -2597,9 +2597,9 @@ object PipelineQueries extends QueryFamily {
   // ---- q216: ANN recall report (index qualification) ----------------------
   // recall@5 of the LSH index face (q65's exact plan) against the brute
   // baseline (q64's) — the go/no-go table a deployment reads before
-  // switching its similarity-search index (Ann.recallAtK; the
-  // NswRecallProbe measurement promoted to a first-class oracled
-  // operator). Integer-exact: both rankings are replay-deterministic
+  // switching its similarity-search index (Ann.recallAtK; the r14
+  // graph-ANN recall measurement of BENCHNOTES.md promoted to a
+  // first-class oracled operator). Integer-exact: both rankings are replay-deterministic
   // (round-4 sims, cid tie-breaks), hits are set-intersection counts,
   // recall_ppm is hits·1e6 div base. The grading joins are
   // rank-list-sized (queries × k rows) regardless of corpus size.

@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 import graft._
 
 /** Measured-shuffle sweep: execute every registered query and report the
@@ -16,25 +12,15 @@ import graft._
   * under-reports bytesRead for most scans, so an input-relative ratio
   * would mislead.)
   *
-  * Each query runs once to a noop sink with the cache cleared first; a
-  * short post-run pause lets the listener bus drain (stage events are
-  * asynchronous — the tail stage of a query can otherwise be billed to
-  * the next one; audit-grade, not bench-grade).
+  * Each query runs once to a noop sink with the cache cleared first;
+  * its shuffle writes are summed over exactly the stages that run
+  * completed ([[StageLog]] drains before and after it).
   */
 object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val shufW = new AtomicLong; val shufRec = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) {
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRec.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-    })
+    val stages = StageLog.attach(spark.sparkContext)
     def mb(b: Long): String = f"${b / 1048576.0}%.2f"
     // optional regex filter (same knob as Bench/PlanAudit)
     val filter = sys.env.get("SPARK_GRAFT_FILTER").map(_.r)
@@ -45,22 +31,11 @@ object ShuffleAudit {
     def measure(name: String, run: () => org.apache.spark.sql.DataFrame): Unit =
       try {
         spark.catalog.clearCache()
-        Thread.sleep(200); shufW.set(0); shufRec.set(0)
+        stages.drain()
         run().write.format("noop").mode("overwrite").save()
-        // Drain the async listener bus until the counters are STABLE for
-        // two consecutive intervals (≥600 ms quiet), not a fixed pause —
-        // a fixed 300 ms misattributed a slow query's tail stages to the
-        // NEXT query on a loaded machine. Bounded at 5 s so a stuck bus
-        // can't hang the audit; audit-grade numbers, not a benchmark.
-        var quiet = 0; var waited = 0
-        var last = (shufW.get, shufRec.get)
-        while (quiet < 2 && waited < 5000) {
-          Thread.sleep(300); waited += 300
-          val now = (shufW.get, shufRec.get)
-          if (now == last) quiet += 1 else { quiet = 0; last = now }
-        }
-        println(f"[shuffle] $name%-32s shuffle_mb=${mb(shufW.get)}%-9s " +
-          f"shuffle_rows=${shufRec.get}%d")
+        val ran = stages.drain()
+        println(f"[shuffle] $name%-32s shuffle_mb=${mb(ran.map(_.shuffleBytes).sum)}%-9s " +
+          f"shuffle_rows=${ran.map(_.shuffleRecords).sum}%d")
       } catch {
         case e: Throwable => println(s"[shuffle] $name ERROR ${e.getMessage.take(60)}")
       }

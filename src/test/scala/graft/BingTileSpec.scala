@@ -215,7 +215,7 @@ class BingTileSpec extends SparkSpec {
         else boxes.where(col("lo1") - col("lo0") < 180.0)
       val both = in.select(
         BingTile.envelopeCover(col("lo0"), col("la0"), col("lo1"), col("la1"), zoom).as("k"),
-        BingTile.envelopeCoverHof(col("lo0"), col("la0"), col("lo1"), col("la1"), zoom).as("h"))
+        HofOracles.envelopeCoverHof(col("lo0"), col("la0"), col("lo1"), col("la1"), zoom).as("h"))
       assert(both.where(not(col("k") <=> col("h"))).count() == 0,
         s"kernel/HOF cover drift at zoom $zoom")
     }

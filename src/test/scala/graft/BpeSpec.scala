@@ -11,6 +11,25 @@ class BpeSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
+  /** Deterministic merge list at production merge counts, CHAINED the
+    * way trained lists are (every fused symbol exists before any merge
+    * that consumes it): 1296 char-pair merges over [a-z0-9], then pairs
+    * of the 2-char fusions, rank order = enumeration order. On natural
+    * words the first level makes every adjacent pair mergeable, so the
+    * greedy loop runs to its O(len²) worst case with a full-size rank
+    * table.
+    */
+  private def chainedMerges(m: Int): Seq[(String, String)] = {
+    val alpha = ('a' to 'z') ++ ('0' to '9')
+    val lvl1 = for (a <- alpha; b <- alpha) yield (a.toString, b.toString)
+    val fused = lvl1.map { case (a, b) => a + b }
+    val lvl2 = for (i <- fused.indices.take(190); j <- fused.indices.take(190))
+      yield (fused(i), fused(j))
+    val all = lvl1 ++ lvl2
+    require(all.length >= m, s"chainedMerges: can construct ${all.length} < $m")
+    all.take(m)
+  }
+
   test("overlapping stats vs non-overlapping apply: the 'aaa' contract") {
     // "aaa" x3: get_stats counts (a,a) twice per word; a left-to-right
     // merge fuses once per word
@@ -302,15 +321,13 @@ class BpeSpec extends SparkSpec {
   test("kernel at the production 32k merge count: exact greedy semantics, bounded time") {
     // THE claimed number: SURVEY says a real 32k-merge vocabulary is
     // reachable on the apply path because per-word cost is O(len²)
-    // hash probes independent of M. Pin it at M=32768 exactly — the
-    // probe tool measures wall time on the real corpus; this case
-    // pins semantics: the kernel result equals an in-memory greedy
-    // replay under the full 32k rank table, and char mass (Σ freq·|t|)
-    // matches the zero-merge character frequencies (merges only
-    // concatenate). Chained list from the probe: 1296 char pairs,
-    // then pairs of those fusions — every fused symbol exists before
-    // any merge consuming it, the trained-list invariant.
-    val merges = graft.tools.BpeEncodeScaleProbe.chainedMerges(32768)
+    // hash probes independent of M. Pin it at M=32768 exactly: the
+    // kernel result equals an in-memory greedy replay under the full
+    // 32k rank table, and char mass (Σ freq·|t|) matches the
+    // zero-merge character frequencies (merges only concatenate).
+    // chainedMerges keeps the trained-list invariant: every fused
+    // symbol exists before any merge consuming it.
+    val merges = chainedMerges(32768)
     assert(merges.length == 32768)
     val rnd = new scala.util.Random(23)
     val words = (1 to 60).map(_ =>

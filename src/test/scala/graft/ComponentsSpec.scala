@@ -81,18 +81,11 @@ class ComponentsSpec extends SparkSpec {
         col("cluster_id") =!= 0L || col("cluster_size") =!= (n + 1).toLong).count()
       assert(bad == 0, "every star node must land in cluster 0 of size n+1")
       assert(rows.count() == (n + 1).toLong)
-      // the listener bus drains asynchronously: poll until the measured
-      // maximum stops moving (two consecutive quiet 300 ms windows),
-      // bounded at 10 s — a fixed sleep passes vacuously on a loaded
-      // machine where events drain late
-      var last = -1L
-      var quiet = 0
-      var waited = 0L
-      while (quiet < 2 && waited < 10000L) {
-        Thread.sleep(300); waited += 300
-        val cur = maxTaskRecords.get()
-        if (cur == last) quiet += 1 else { quiet = 0; last = cur }
-      }
+      // the listener bus delivers asynchronously; every task-end event
+      // is posted before its action returns, so once the bus is empty
+      // the maximum is exact (an undelivered event would make this
+      // upper-bound check pass vacuously)
+      org.apache.spark.sql.graft.Bridge.waitUntilEmpty(spark.sparkContext)
       // unsalted, the hot-key join tasks read the full 100k fan-in
       // (measured: 100001); the salted run's residual maximum is the
       // initial distinct() aggregation over UNIQUE node ids (~50k in

@@ -5,7 +5,7 @@ import graft.operators.Ann
 
 /** graft_matvec kernel + the OPQ-style rotation hook (plans/VectorExprs
   * MatVec, Ann.rotationMatrix/rotateEmbeddings — r12 anisotropy
-  * adjudication). Recall numbers live in AnisoProbe/BENCHNOTES; this
+  * adjudication). Recall numbers live in BENCHNOTES.md r12; this
   * spec pins the kernel's algebra and contracts.
   */
 class MatVecSpec extends SparkSpec {

@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Sketches, Text}
 import graft.operators.Ann
 
 /** The native codegen kernels (graft.plans.VectorExprs) must be
-  * bit-identical to their HOF formulations — same hash chain, same fold
-  * order — so swapping them in changes nothing but speed.
+  * bit-identical to their HOF formulations ([[HofOracles]]) — same hash
+  * chain, same fold order — so swapping them in changes nothing but
+  * speed.
   */
 class SketchParitySpec extends SparkSpec {
 
@@ -17,7 +19,7 @@ class SketchParitySpec extends SparkSpec {
   test("native minhash signature == HOF minhash signature") {
     val mismatches = docs
       .select(Sketches.minhashSignature("w").as("native"),
-        Sketches.minhashSignatureHof("w").as("hof"))
+        HofOracles.minhashSignatureHof("w").as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
     assert(mismatches === 0)
@@ -26,7 +28,7 @@ class SketchParitySpec extends SparkSpec {
   test("native simhash == HOF simhash") {
     val mismatches = docs
       .select(Sketches.simhash("w").as("native"),
-        Sketches.simhashHof("w").as("hof"))
+        HofOracles.simhashHof("w").as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
     assert(mismatches === 0)
@@ -34,8 +36,8 @@ class SketchParitySpec extends SparkSpec {
 
   test("native md5-60 hashes == HOF conv(substr(md5)) chain, plain and mod P") {
     val mismatches = docs
-      .select(Sketches.md5Hashes("w").as("n1"), Sketches.md5HashesHof("w").as("h1"),
-        Sketches.md5HashesModP("w").as("n2"), Sketches.md5HashesModPHof("w").as("h2"))
+      .select(Sketches.md5Hashes("w").as("n1"), HofOracles.md5HashesHof("w").as("h1"),
+        Sketches.md5HashesModP("w").as("n2"), HofOracles.md5HashesModPHof("w").as("h2"))
       .filter(not(col("n1") <=> col("h1")) || not(col("n2") <=> col("h2")))
       .count()
     assert(mismatches === 0)
@@ -66,16 +68,68 @@ class SketchParitySpec extends SparkSpec {
     val b = sigs.select(col("doc_id").as("ib"), col("sig").as("sb"))
     val sigMismatch = a.join(b, col("ia") < col("ib")).limit(3000)
       .select((NativeFunctions.slotAgree(col("sa"), col("sb")) / 32.0d).as("native"),
-        Sketches.estJaccardHof("sa", "sb", 32).as("hof"))
+        HofOracles.estJaccardHof("sa", "sb", 32).as("hof"))
       .filter(not(col("native") <=> col("hof"))).count()
     assert(sigMismatch === 0)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("embedding").cast("array<double>").as("emb"))
     val hpMismatch = e
       .select(Sketches.affineHyperplaneBucket("emb", 4, 64).as("native"),
-        Sketches.affineHyperplaneBucketHof("emb", 4, 64).as("hof"))
+        HofOracles.affineHyperplaneBucketHof("emb", 4, 64).as("hof"))
       .filter(not(col("native") <=> col("hof"))).count()
     assert(hpMismatch === 0)
+  }
+
+  /** sf0.1's word-shingle md5 hashes (`mod` 0: full 60 bits), plus the
+    * edge arrays: empty, null, a null element among values, all nulls.
+    */
+  private def shingleHashInputs(mod: Long): org.apache.spark.sql.DataFrame = {
+    val sf01 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.1").getPath
+    val corpus = Tables.documents(spark, sf01)
+      .select(graft.plans.NativeFunctions.shingleHashes(
+        Text.words(col("text")), 3, "md5", mod).as("hs"))
+    val edges = spark.range(1).select(explode(array(
+      expr("cast(array() as array<bigint>)"),
+      expr("cast(null as array<bigint>)"),
+      expr("array(12345L, cast(null as bigint), 987654321L)"),
+      expr("array(cast(null as bigint), cast(null as bigint))"))).as("hs"))
+    corpus.unionByName(edges)
+  }
+
+  /** Rows of `in` where `native` and `hof` differ, with the kernel run
+    * compiled (whole-stage codegen) and interpreted.
+    */
+  private def mismatches(in: org.apache.spark.sql.DataFrame,
+                         native: Column, hof: Column): Seq[String] =
+    Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN").flatMap { case (ws, mode) =>
+      spark.conf.set("spark.sql.codegen.wholeStage", ws)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try in.select(col("hs"), native.as("native"), hof.as("hof"))
+        .filter(not(col("native") <=> col("hof")))
+        .collect().map(r => s"$mode: $r").toSeq
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+
+  test("native affine minhash == HOF affine minhash at k 1 and 32 (edge arrays too)") {
+    val in = shingleHashInputs(graft.plans.Affine.P)
+    assert(in.count() > 1000)
+    for (k <- Seq(1, 32)) {
+      val bad = mismatches(in, Sketches.minhashAffine("hs", k),
+        HofOracles.minhashAffineHof("hs", k))
+      assert(bad.isEmpty, s"k=$k: ${bad.take(3).mkString("; ")}")
+    }
+  }
+
+  test("native simhash bits == HOF simhash bits at bits 1 and 60 (edge arrays too)") {
+    val in = shingleHashInputs(0L)
+    for (bits <- Seq(1, 60)) {
+      val bad = mismatches(in, Sketches.simhashBits("hs", bits),
+        HofOracles.simhashBitsHof("hs", bits))
+      assert(bad.isEmpty, s"bits=$bits: ${bad.take(3).mkString("; ")}")
+    }
   }
 
   test("native cosine == HOF cosine (exact double equality)") {
@@ -85,7 +139,7 @@ class SketchParitySpec extends SparkSpec {
     val b = e.select(col("vec_id").as("ib"), col("emb").as("eb"))
     val mismatches = a.join(b, col("ia") < col("ib")).limit(5000)
       .select(Ann.cosine("ea", "eb").as("native"),
-        Ann.cosineHof("ea", "eb").as("hof"))
+        HofOracles.cosineHof("ea", "eb").as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
     assert(mismatches === 0)
@@ -106,7 +160,7 @@ class SketchParitySpec extends SparkSpec {
     val b = e.select(col("vec_id").as("ib"), col("emb").as("eb"))
     val mismatches = a.join(b, col("ia") < col("ib")).limit(5000)
       .select(Ann.l2sq("ea", "eb").as("native"),
-        Ann.l2sqHof("ea", "eb").as("hof"))
+        HofOracles.l2sqHof("ea", "eb").as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
     assert(mismatches === 0)
