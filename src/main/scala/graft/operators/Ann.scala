@@ -374,7 +374,8 @@ object Ann {
   /** The IVF index table: one row per vector with its (kept) embedding
     * and its nearest-centroid cluster id — the persisted layout
     * (bucketed by `cluster` at warehouse scale) that [[ivfSearch]]
-    * probes. Encoding is a single broadcast-join pass over the corpus:
+    * probes. Encoding is one map-only pass over the corpus (the model
+    * rides inside the nearest-centroid kernel, no join, no exchange):
     * incremental batches append without touching history.
     */
   def ivfEncode(corpus: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame =
@@ -386,11 +387,24 @@ object Ann {
       .withColumn("cluster",
         graft.plans.NativeFunctions.nearestCentroid(col("ve"), cents))
 
-  /** IVF query path — model + index + queries only, no training: rank
-    * each query's `nprobe` closest centroids against the broadcast
-    * model, then equi-join the probe set against the index on
-    * `cluster`. At 100 TB this reads nprobe/c of the index and nothing
-    * else; the raw corpus is never re-assigned.
+  /** IVF query path — model + index + queries only, no training — in
+    * one scan of the index:
+    *   1. collect the bounded query batch and route each query to its
+    *      `nprobe` closest centroids on the driver
+    *      ([[graft.plans.IvfProbe.Router]]);
+    *   2. scan `index` filtered to `cluster IN (probed cells)` — the
+    *      filter reaches the parquet scan, so at 100 TB this reads
+    *      nprobe/c of the index and nothing else — keeping each query's
+    *      exact-cosine top-k per task ([[probeIndex]]);
+    *   3. merge the tasks' top-k lists on the driver.
+    * Its jobs are the query collect (none for a local batch) and the
+    * scan; it broadcasts, shuffles and persists nothing. Driver memory
+    * is O(queries · (dim + nprobe)) for the batch plus O(tasks ·
+    * queries · k) merged rows. The result is a local (qid, cid, sim,
+    * rn) table in the queries' and the index's id types.
+    *
+    * Query vec_ids must be unique (IllegalArgumentException naming the
+    * duplicate otherwise); null query and index ids take no part.
     *
     * `excludeSelf` drops candidates whose vec_id EQUALS the query's —
     * correct when queries are drawn from the indexed corpus (the inline
@@ -402,25 +416,55 @@ object Ann {
     */
   def ivfSearch(cents: Seq[(Int, Seq[Double])], index: DataFrame,
                 queries: DataFrame, k: Int, nprobe: Int = 4,
-                excludeSelf: Boolean = true): DataFrame =
-    probeIndex(index, queryProbes(cents, queries, nprobe), k, excludeSelf)
+                excludeSelf: Boolean = true): DataFrame = {
+    val qs = collectQueries(queries)
+    probeIndex(index, qs, route(cents, qs, nprobe), k, excludeSelf)
+  }
 
-  /** The IVF routing step shared by [[ivfSearch]] and
-    * [[contrastivePairsFromIndex]]: rank each query's `nprobe` closest
-    * centroids against the broadcast model → (qid, qe, cluster).
+  /** A query batch collected to the driver: unique non-null ids (as
+    * longs; `idType` is the column's own type) and their embeddings as
+    * doubles (nullable; a null element reads as 0.0, as in CosineSim).
     */
-  private def queryProbes(cents: Seq[(Int, Seq[Double])], queries: DataFrame,
-                          nprobe: Int): DataFrame = {
+  private final class QueryBatch(val ids: Array[Long], val vecs: Array[Array[Double]],
+                                 val idType: org.apache.spark.sql.types.DataType)
+
+  private def collectQueries(queries: DataFrame): QueryBatch = {
+    val rows = queries.filter(col("vec_id").isNotNull)
+      .select(col("vec_id").cast("long"), asDouble("embedding")).collect()
+    val ids = rows.map(_.getLong(0))
+    ids.groupBy(identity).collectFirst { case (id, dup) if dup.length > 1 => id }
+      .foreach(id => throw new IllegalArgumentException(s"duplicate vec_id $id among the queries"))
+    val vecs = rows.map { r =>
+      if (r.isNullAt(1)) null
+      else r.getSeq[Any](1).iterator.map {
+        case d: Double => d
+        case _ => 0.0
+      }.toArray
+    }
+    new QueryBatch(ids, vecs, queries.schema("vec_id").dataType)
+  }
+
+  /** Each query's `nprobe` closest centroid ids, best first. */
+  private def route(cents: Seq[(Int, Seq[Double])], qs: QueryBatch,
+                    nprobe: Int): Array[Array[Int]] = {
+    val router = new graft.plans.IvfProbe.Router(cents)
+    qs.vecs.map(router.route(_, nprobe))
+  }
+
+  /** The IVF routing of [[contrastivePairsFromIndex]] (and, as
+    * [[route]], of [[ivfSearch]] and the graph walk's seeds): each
+    * query's `nprobe` closest centroids, ranked on the driver → a local
+    * (qid, qe, cluster) table. Driver memory O(queries · (dim + nprobe)).
+    */
+  private[graft] def queryProbes(cents: Seq[(Int, Seq[Double])], queries: DataFrame,
+                                 nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val centDf = broadcast(cents.toDF("cid", "ce"))
-    queries.select(col("vec_id").as("qid"), asDouble("embedding").as("qe"))
-      .join(centDf)
-      .withColumn("csim", cosine("qe", "ce"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cid"))))
-      .filter(col("rn") <= nprobe)
-      .select(col("qid"), col("qe"), col("cid").as("cluster"))
+    val qs = collectQueries(queries)
+    val probes = route(cents, qs, nprobe)
+    qs.ids.indices.flatMap(i => probes(i).map(c => (qs.ids(i), qs.vecs(i), c)))
+      .toDF("qid", "qe", "cluster")
+      .select(col("qid").cast(qs.idType), col("qe"), col("cluster"))
   }
 
   /** INDEX-BACKED contrastive mining (r13 VERDICT item 3): the
@@ -428,14 +472,17 @@ object Ann {
     * PERSISTED IVF index (model + index only, zero training jobs, the
     * ivfSearch/q180 posture) instead of broadcasting against a full
     * corpus scan, so anchor sets scale past broadcast and each anchor
-    * reads ~nprobe/c of the index. Same output contract as the brute
-    * face: positives = every probed candidate at sim ≥ `posThreshold`,
-    * hard negatives = the k most similar probed candidates below it,
-    * rn ranked within (qid, role) by (sim desc, cid). Approximation is
-    * confined to CANDIDATE GENERATION exactly as in [[ivfSearch]]: a
-    * near-dup positive lands in the anchor's own top cluster by
-    * construction, and with nprobe = c the output equals the brute face
-    * row-for-row (AnnIndexSpec pins both laws).
+    * reads ~nprobe/c of the index. The anchors are routed on the driver
+    * ([[queryProbes]]: O(anchors · (dim + nprobe)) driver memory) and
+    * the local probe table joins the index on `cluster`. Same output
+    * contract as the brute face: positives = every probed candidate at
+    * sim ≥ `posThreshold`, hard negatives = the k most similar probed
+    * candidates below it, rn ranked within (qid, role) by (sim desc,
+    * cid). Approximation is confined to CANDIDATE GENERATION exactly as
+    * in [[ivfSearch]]: a near-dup positive lands in the anchor's own
+    * top cluster by construction, and with nprobe = c the output equals
+    * the brute face row-for-row (AnnIndexSpec pins both laws). Anchor
+    * vec_ids must be unique; null anchor ids take no part.
     */
   def contrastivePairsFromIndex(cents: Seq[(Int, Seq[Double])], index: DataFrame,
                                 queries: DataFrame, k: Int,
@@ -456,21 +503,36 @@ object Ann {
         col("rn"))
   }
 
-  /** Shared query tail of the IVF family: candidates = probe-set
-    * equi-join against the index on `cluster`, exact-cosine rank,
-    * top-k. `qprobes`: (qid, qe, cluster), broadcast here (bounded
-    * query batch × nprobe rows).
+  /** Shared query tail of the IVF family: query `i` of `qs` probes the
+    * cells `probes(i)`. One scan of the index rows in those cells
+    * (`cluster IN` pushed into the scan) keeps each query's top-k per
+    * task in [[graft.plans.IvfProbe.Scan]]; the driver merges the
+    * tasks' lists (O(tasks · queries · k) rows) into ranks 1..k — a
+    * local (qid, cid, sim, rn) table.
     */
-  private def probeIndex(index: DataFrame, qprobes: DataFrame, k: Int,
-                         excludeSelf: Boolean): DataFrame = {
-    val cand = index.select(col("vec_id").as("cvid"), col("ve").as("cve"), col("cluster"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cvid"))
-    cand.join(broadcast(qprobes), Seq("cluster"))
-      .filter(if (excludeSelf) col("qid") =!= col("cvid") else lit(true))
-      .withColumn("sim", round(cosine("qe", "cve"), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cvid").as("cid"), col("sim"), col("rn"))
+  private def probeIndex(index: DataFrame, qs: QueryBatch, probes: Array[Array[Int]],
+                         k: Int, excludeSelf: Boolean): DataFrame = {
+    val scan = new graft.plans.IvfProbe.Scan(qs.ids, qs.vecs, probes, k, excludeSelf)
+    val cells = scan.cells
+    val parts =
+      if (k <= 0 || cells.isEmpty) Array.empty[graft.plans.IvfProbe.Part]
+      else index.filter(col("cluster").isin(cells.toIndexedSeq: _*))
+        .select(col("vec_id").cast("long"), asDouble("ve"), col("cluster").cast("int"))
+        .queryExecution.toRdd.mapPartitions(scan.run).collect()
+    hitsFrame(index.sparkSession, qs, scan.merge(parts),
+      index.schema("vec_id").dataType)
+  }
+
+  /** Ranked hits per query of `qs` → a local (qid, cid, sim, rn) table
+    * in the queries' and the index's (`cidType`) id types.
+    */
+  private def hitsFrame(spark: org.apache.spark.sql.SparkSession, qs: QueryBatch,
+                        hits: Array[Array[graft.plans.CosineRank.Hit]],
+                        cidType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import spark.implicits._
+    qs.ids.indices.flatMap(i => hits(i).map(h => (qs.ids(i), h.cid, h.sim, h.rn)))
+      .toDF("qid", "cid", "sim", "rn")
+      .select(col("qid").cast(qs.idType), col("cid").cast(cidType), col("sim"), col("rn"))
   }
 
   // ---------------------------------------------------------------------
@@ -484,7 +546,7 @@ object Ann {
   // stays model-sized (√c×dim). Leaf cluster ids are global
   // (parent·cChild + childIdx), so the encode output is schema- and
   // semantics-compatible with everything downstream of [[ivfEncode]]:
-  // [[probeIndex]] search, SemDedup.dupPairsFromIndex, persisted
+  // the [[probeIndex]] scan, SemDedup.dupPairsFromIndex, persisted
   // bucketed index tables.
   // ---------------------------------------------------------------------
 
@@ -570,7 +632,9 @@ object Ann {
 
   /** Two-level query routing: rank super-cells (keep `nprobeSuper`),
     * rank children WITHIN each probed super (keep `nprobePerSuper`
-    * leaves each), then the shared [[probeIndex]] cluster equi-join.
+    * leaves each), then the shared [[probeIndex]] scan. The query batch
+    * is collected once (as in [[ivfSearch]]); the routing runs over it
+    * as a local table and its (qid, cluster) probe rows are collected.
     * Per query: cSuper + nprobeSuper·cChild centroid comparisons —
     * 2√c-ish, vs flat c. Per-super child ranking (not one global leaf
     * ranking) keeps probing balanced AND makes a structural guarantee
@@ -585,10 +649,11 @@ object Ann {
                     excludeSelf: Boolean = true): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
+    val qs = collectQueries(queries)
     val supDf = broadcast(superCents.toDF("scid", "sce"))
     val chDf = broadcast(children.toDF("parent", "ccid", "ce"))
-    val qprobes =
-      queries.select(col("vec_id").as("qid"), asDouble("embedding").as("qe"))
+    val probeRows =
+      qs.ids.toSeq.zip(qs.vecs).toDF("qid", "qe")
         .join(supDf)
         .withColumn("ssim", cosine("qe", "sce"))
         // .desc id tie-breaks MATCH the encode argmax (max(struct) prefers
@@ -604,9 +669,11 @@ object Ann {
           Window.partitionBy(col("qid"), col("parent"))
             .orderBy(col("csim").desc, col("ccid").desc)))
         .filter(col("rn") <= nprobePerSuper)
-        .select(col("qid"), col("qe"),
-          (col("parent") * cChild + col("ccid")).cast("int").as("cluster"))
-    probeIndex(index, qprobes, k, excludeSelf)
+        .select(col("qid"), (col("parent") * cChild + col("ccid")).cast("int"))
+        .as[(Long, Int)].collect()
+        .groupMap(_._1)(_._2)
+    val probes = qs.ids.map(id => probeRows.getOrElse(id, Array.emptyIntArray))
+    probeIndex(index, qs, probes, k, excludeSelf)
   }
 
   /** Hierarchical-IVF top-k — fit∘encode∘search composition (the
@@ -1187,36 +1254,54 @@ object Ann {
       .distinct()
 
   /** Fixed-hop beam search over the neighbor table: route each query
-    * to its `nprobe` closest cells via the broadcast centroid model
-    * (exactly [[ivfSearch]]'s routing — an identical vector provably
-    * routes to its own cell first), seed the beam at those cells'
-    * entry nodes, then walk the graph in one driver-side pass
-    * ([[nswWalk]]): each hop expands the beam through the undirected
-    * adjacency, scores the new candidates exactly, and keeps the top
-    * `beam` per query; the final top-k ranks over everything visited.
-    * Per call it reads the whole index and edge table once into driver
-    * memory, O(n·(dim + degree)). Deterministic: md5 entry order,
-    * (sim desc, cid) tie-breaks everywhere. `nRows` is accepted for
-    * signature stability and unused: the walk has no exchange to size.
+    * to its `nprobe` closest cells on the driver (exactly
+    * [[ivfSearch]]'s routing — an identical vector provably routes to
+    * its own cell first), seed the beam at those cells' entry nodes,
+    * then walk the graph in one driver-side pass ([[nswWalk]]): each
+    * hop expands the beam through the undirected adjacency, scores the
+    * new candidates exactly, and keeps the top `beam` per query; the
+    * final top-k ranks over everything visited. Per call it reads the
+    * query batch, the entry table, and the whole index and edge table
+    * once into driver memory, O(n·(dim + degree)); nothing is
+    * broadcast. Deterministic: md5 entry order, (sim desc, cid)
+    * tie-breaks everywhere. `nRows` is accepted for signature stability
+    * and unused: the walk has no exchange to size.
     */
   def nswSearch(cents: Seq[(Int, Seq[Double])], edges: DataFrame,
                 index: DataFrame, entries: DataFrame, queries: DataFrame,
                 k: Int, beam: Int = 16, hops: Int = 4, nprobe: Int = 4,
                 excludeSelf: Boolean = true,
-                pred: Option[Column] = None, nRows: Long = -1): DataFrame =
-    nswWalk(nswSeeds(cents, queries, entries, nprobe), edges, index, queries,
+                pred: Option[Column] = None, nRows: Long = -1): DataFrame = {
+    val qs = collectQueries(queries)
+    nswWalk(entrySeeds(route(cents, qs, nprobe), entries), edges, index, qs,
       k, beam, hops, excludeSelf, pred)
+  }
 
-  /** Centroid routing for the graph walk: each query's `nprobe` closest
-    * cells ([[queryProbes]]) joined with the broadcast entry table →
-    * (qid, cid) seeds.
+  /** Each query's seeds: the entry nodes of the cells it probes, from
+    * the collected (cluster, vec_id) entry table.
+    */
+  private def entrySeeds(probes: Array[Array[Int]], entries: DataFrame): Array[Array[Long]] = {
+    val spark = entries.sparkSession
+    import spark.implicits._
+    val byCell = entries.select(col("cluster").cast("int"), col("vec_id").cast("long"))
+      .filter(col("cluster").isNotNull && col("vec_id").isNotNull)
+      .as[(Int, Long)].collect()
+      .groupMap(_._1)(_._2)
+    probes.map(_.flatMap(c => byCell.getOrElse(c, Array.emptyLongArray)))
+  }
+
+  /** Centroid routing for the graph walk as a local (qid, cid) seed
+    * table: each query's `nprobe` closest cells' entry nodes.
     */
   private[graft] def nswSeeds(cents: Seq[(Int, Seq[Double])], queries: DataFrame,
-                              entries: DataFrame, nprobe: Int): DataFrame =
-    queryProbes(cents, queries, nprobe)
-      .select(col("qid"), col("cluster"))
-      .join(broadcast(entries), Seq("cluster"))
-      .select(col("qid"), col("vec_id").as("cid"))
+                              entries: DataFrame, nprobe: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val qs = collectQueries(queries)
+    val seeds = entrySeeds(route(cents, qs, nprobe), entries)
+    qs.ids.indices.flatMap(i => seeds(i).map(qs.ids(i) -> _)).toDF("qid", "cid")
+      .select(col("qid").cast(qs.idType), col("cid").cast(entries.schema("vec_id").dataType))
+  }
 
   /** Multi-probe LSH routing for the graph walk: each query's own
     * bucket and every hamming-1 flip (the [[lshKnn]] probe set) joined
@@ -1236,21 +1321,21 @@ object Ann {
       .select(col("qid"), col("vec_id").as("cid"))
   }
 
-  /** The walk itself, routing-agnostic, in one pass: collect the index
-    * rows (vec_id, ve, predicate bit), the edges, the queries and the
-    * (qid, cid) seeds once, build the undirected adjacency on the
-    * driver, and walk each query with a [[graft.plans.NswWalk.Walker]] —
-    * score the seeds, then `hops` rounds of expand / score the unvisited
-    * / top-beam (hop 1 expands every seed); final top-k over everything
+  /** The walk itself, routing-agnostic, in one pass: with the query
+    * batch `qs` already collected and `seeds(i)` the seed ids of its
+    * query i, collect the index rows (vec_id, ve, predicate bit) and the
+    * edges once, build the undirected adjacency on the driver, and walk
+    * each query with a [[graft.plans.NswWalk.Walker]] — score the
+    * seeds, then `hops` rounds of expand / score the unvisited /
+    * top-beam (hop 1 expands every seed); final top-k over everything
     * visited. Driver memory is O(n·(dim + degree)) for an index of n
     * rows: at 20,000 64-d vectors and ~430k edges (the seeded sf1's
     * q203/q214) the walk held 16–18 MB of driver heap while walking
     * and 48–49 MB at its peak, when the collected rows and the built
     * graph coexist (heap used after GC, local[4]). Its only jobs are
-    * the collects' (the routing runs inside the seeds' collect),
-    * whatever `hops` is, and it persists nothing. The result is a local
-    * (qid, cid, sim, rn) table in the queries' and the index's id
-    * types.
+    * the collects', whatever `hops` is, and it persists nothing. The
+    * result is a local (qid, cid, sim, rn) table in the queries' and
+    * the index's id types.
     *
     * Index and query vec_ids must be unique (IllegalArgumentException
     * naming the duplicate otherwise); null ids take no part.
@@ -1265,29 +1350,14 @@ object Ann {
     * very selective predicates callers raise `beam`/`hops` (the
     * filtered-HNSW budget rule).
     */
-  private def nswWalk(seeds: DataFrame, edges: DataFrame, index: DataFrame,
-                      queries: DataFrame, k: Int, beam: Int, hops: Int,
+  private def nswWalk(seeds: Array[Array[Long]], edges: DataFrame, index: DataFrame,
+                      qs: QueryBatch, k: Int, beam: Int, hops: Int,
                       excludeSelf: Boolean, pred: Option[Column]): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qs = queries.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), asDouble("embedding"))
-      .as[(Long, Array[Double])].collect()
-    qs.groupBy(_._1).collectFirst { case (id, dup) if dup.length > 1 => id }
-      .foreach(id => throw new IllegalArgumentException(s"duplicate vec_id $id among the queries"))
     val walker = new graft.plans.NswWalk.Walker(nswGraph(index, edges, pred))
-    val seedsOf = seeds.select(col("qid").cast("long"), col("cid").cast("long"))
-      .filter(col("qid").isNotNull && col("cid").isNotNull)
-      .as[(Long, Long)].collect()
-      .groupMap(_._1)(_._2)
-    val hits = qs.toSeq.flatMap { case (qid, qe) =>
-      walker.search(qid, qe,
-        seedsOf.getOrElse(qid, Array.emptyLongArray), k, beam, hops, excludeSelf)
-        .map(h => (qid, h.cid, h.sim, h.rn))
-    }
-    hits.toDF("qid", "cid", "sim", "rn")
-      .select(col("qid").cast(queries.schema("vec_id").dataType),
-        col("cid").cast(index.schema("vec_id").dataType), col("sim"), col("rn"))
+    val hits = qs.ids.indices.map { i =>
+      walker.search(qs.ids(i), qs.vecs(i), seeds(i), k, beam, hops, excludeSelf)
+    }.toArray
+    hitsFrame(index.sparkSession, qs, hits, index.schema("vec_id").dataType)
   }
 
   /** The walk's graph: the index rows (vec_id, ve, predicate bit with
@@ -1334,9 +1404,18 @@ object Ann {
   def nswSearchLsh(edges: DataFrame, index: DataFrame, entries: DataFrame,
                    queries: DataFrame, k: Int, nBits: Int, beam: Int = 16,
                    hops: Int = 4, excludeSelf: Boolean = true,
-                   pred: Option[Column] = None): DataFrame =
-    nswWalk(nswSeedsLsh(queries, entries, nBits), edges, index, queries, k,
-      beam, hops, excludeSelf, pred)
+                   pred: Option[Column] = None): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val qs = collectQueries(queries)
+    val seedsOf = nswSeedsLsh(queries, entries, nBits)
+      .select(col("qid").cast("long"), col("cid").cast("long"))
+      .filter(col("qid").isNotNull && col("cid").isNotNull)
+      .as[(Long, Long)].collect()
+      .groupMap(_._1)(_._2)
+    nswWalk(qs.ids.map(seedsOf.getOrElse(_, Array.emptyLongArray)), edges, index, qs,
+      k, beam, hops, excludeSelf, pred)
+  }
 
   /** INCREMENTAL graph ingestion — the continuous-ingestion face (the
     * minhash/SemDeDup accumulated-index posture, via the DiskANN

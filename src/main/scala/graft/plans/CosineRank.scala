@@ -1,0 +1,96 @@
+package graft.plans
+
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+
+/** Cosine scoring and ranking shared by graft's driver-side ANN kernels
+  * ([[NswWalk]], [[IvfProbe]]), so that they agree with each other and,
+  * bit for bit, with the DataFrame rankings they replaced:
+  *   - a score is `CosineSim.compute(q, v)` = dot / (‖q‖·‖v‖), each norm
+  *     summed in element order. A norm depends on one vector only, so
+  *     computing it once per vector keeps the bits. Callers give a null
+  *     score when either vector is null or the dimensions differ;
+  *   - a sim is a score under Spark's `round(x, 4)` ([[round4]]);
+  *   - rankings order by score descending under SQL double ordering
+  *     (`SQLOrderingUtil.compareDoubles`: NaN above every number,
+  *     −0.0 == 0.0), null scores last, then by id ascending.
+  */
+object CosineRank {
+
+  /** One ranked answer row: sim is null when the pair has no cosine. */
+  final case class Hit(cid: Long, sim: java.lang.Double, rn: Int)
+
+  def norm(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  /** dot(q, v) / (qNorm · vNorm), for non-null `q` and `v` of equal
+    * length whose norms are `qNorm` and `vNorm`.
+    */
+  def cosine(q: Array[Double], qNorm: Double, v: Array[Double], vNorm: Double): Double = {
+    var dot = 0.0; var i = 0
+    while (i < v.length) { dot += q(i) * v(i); i += 1 }
+    dot / (qNorm * vNorm)
+  }
+
+  /** Spark's `round(x, 4)` on a double: HALF_UP, NaN and ±Inf unchanged. */
+  def round4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** < 0 when (aNull, a, aId) ranks before (bNull, b, bId). */
+  def compare(aNull: Boolean, a: Double, aId: Long,
+              bNull: Boolean, b: Double, bId: Long): Int =
+    if (aNull != bNull) { if (aNull) 1 else -1 }
+    else {
+      val c = if (aNull) 0 else SQLOrderingUtil.compareDoubles(b, a)
+      if (c != 0) c else java.lang.Long.compare(aId, bId)
+    }
+
+  /** The best `k` of a stream of scored ids under [[compare]]: a binary
+    * heap with the worst kept entry on top, O(log k) per offer and
+    * O(k) memory. Entries that tie on (score, id) are interchangeable.
+    */
+  final class TopK(k: Int) {
+    private val cap = math.max(k, 0)
+    private val ids = new Array[Long](cap)
+    private val nulls = new Array[Boolean](cap)
+    private val scores = new Array[Double](cap)
+    private var n = 0
+
+    def size: Int = n
+
+    private def worse(i: Int, j: Int): Boolean =
+      compare(nulls(i), scores(i), ids(i), nulls(j), scores(j), ids(j)) > 0
+
+    private def swap(i: Int, j: Int): Unit = {
+      val id = ids(i); ids(i) = ids(j); ids(j) = id
+      val nl = nulls(i); nulls(i) = nulls(j); nulls(j) = nl
+      val s = scores(i); scores(i) = scores(j); scores(j) = s
+    }
+
+    def offer(id: Long, isNull: Boolean, score: Double): Unit =
+      if (n < cap) {
+        ids(n) = id; nulls(n) = isNull; scores(n) = score
+        var i = n
+        n += 1
+        while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+      } else if (cap > 0 && compare(isNull, score, id, nulls(0), scores(0), ids(0)) < 0) {
+        ids(0) = id; nulls(0) = isNull; scores(0) = score
+        var i = 0
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1
+          val w = if (l + 1 < n && worse(l + 1, l)) l + 1 else l
+          if (l < n && worse(w, i)) { swap(i, w); i = w } else done = true
+        }
+      }
+
+    /** Calls `f(id, isNull, score)` for each kept entry, best first. */
+    def foreachRanked(f: (Long, Boolean, Double) => Unit): Unit =
+      (0 until n).sortWith((i, j) => compare(nulls(i), scores(i), ids(i),
+        nulls(j), scores(j), ids(j)) < 0).foreach(i => f(ids(i), nulls(i), scores(i)))
+  }
+}

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import CosineRank.Hit
 
 /** The NSW beam walk over a driver-resident graph — the kernel behind
   * `Ann.nswWalk`, pure Scala over plain arrays.
@@ -22,16 +22,12 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
   * A candidate absent from the index, or equal to the query id under
   * `excludeSelf`, never enters the visited set.
   *
-  * Sims are `round(CosineSim.compute(qe, ve), 4)` (HALF_UP; NaN and
-  * ±Inf pass through), null when either vector is null or the
-  * dimensions differ. Rankings order by sim descending under SQL
-  * double ordering (`SQLOrderingUtil.compareDoubles`: NaN above every
-  * number, −0.0 == 0.0), null sims last, then by cid ascending.
+  * Sims and rankings are [[CosineRank]]'s: `round(CosineSim.compute(qe,
+  * ve), 4)`, null when either vector is null or the dimensions differ;
+  * sim descending under SQL double ordering, null sims last, then cid
+  * ascending.
   */
 object NswWalk {
-
-  /** One ranked answer row: sim is null when the pair has no cosine. */
-  final case class Hit(cid: Long, sim: java.lang.Double, rn: Int)
 
   /** The index rows by position (vec_ids unique, vectors nullable,
     * predicate bits) and the undirected adjacency over them, built from
@@ -55,7 +51,7 @@ object NswWalk {
 
     // √Σx² per vector, summed in CosineSim.compute's order: its two
     // norms depend on one vector each, so hoisting them keeps the bits
-    private[NswWalk] val norms = vecs.map(v => if (v == null) 0.0 else norm(v))
+    private[NswWalk] val norms = vecs.map(v => if (v == null) 0.0 else CosineRank.norm(v))
 
     // CSR adjacency, both directions of every edge
     private val (off, adj) = {
@@ -83,18 +79,6 @@ object NswWalk {
     }
   }
 
-  private def norm(v: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    math.sqrt(s)
-  }
-
-  /** Spark's `round(x, 4)` on a double. */
-  private def round4(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Walks queries over `g`. Its per-node state (seen, sim) is
     * allocated once and reset after each query at the positions that
     * query touched, so a query costs O(visited), not O(n). One walker
@@ -106,18 +90,14 @@ object NswWalk {
     private val sim = new Array[Double](g.n)
 
     private val rank: Ordering[Int] = (a, b) =>
-      if (simNull(a) != simNull(b)) { if (simNull(a)) 1 else -1 }
-      else {
-        val c = if (simNull(a)) 0 else SQLOrderingUtil.compareDoubles(sim(b), sim(a))
-        if (c != 0) c else java.lang.Long.compare(g.id(a), g.id(b))
-      }
+      CosineRank.compare(simNull(a), sim(a), g.id(a), simNull(b), sim(b), g.id(b))
 
     /** Query `qid` (vector `qe`, nullable) walked from `seeds` (ids; any
       * order, duplicates allowed): its ranked top-k, best first.
       */
     def search(qid: Long, qe: Array[Double], seeds: Array[Long],
                k: Int, beam: Int, hops: Int, excludeSelf: Boolean): Array[Hit] = {
-      val qNorm = if (qe == null) 0.0 else norm(qe)
+      val qNorm = if (qe == null) 0.0 else CosineRank.norm(qe)
       val visited = scala.collection.mutable.ArrayBuffer.empty[Int]
       val self = if (excludeSelf) g.indexOf(qid) else -1
       if (self >= 0) seen(self) = true
@@ -126,11 +106,7 @@ object NswWalk {
         seen(p) = true
         val v = g.vec(p)
         if (qe == null || v == null || qe.length != v.length) simNull(p) = true
-        else {
-          var dot = 0.0; var i = 0
-          while (i < v.length) { dot += qe(i) * v(i); i += 1 }
-          sim(p) = round4(dot / (qNorm * g.norms(p)))
-        }
+        else sim(p) = CosineRank.round4(CosineRank.cosine(qe, qNorm, v, g.norms(p)))
         visited += p
       }
 

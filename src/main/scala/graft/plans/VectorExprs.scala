@@ -28,8 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash is Spark's xxhash64 chain — XXH64(seed 42) over the UTF8 bytes,
   * then XXH64.hashInt with the slot index.
   *
-  * Input arrays must not contain null elements (the corpus contract:
-  * words()/embedding columns are never element-null).
+  * MinHashSig, SimHash64, Md5Hash60, MinHashAffine, SimHashBits and
+  * HyperplaneBucket follow their HOF oracles on null arrays and null
+  * elements too (SketchParitySpec's edge arrays). The vector kernels
+  * (CosineSim, L2Sq) read a null element as 0.0 — the corpus contract
+  * is that embedding columns are never element-null.
   */
 
 /** cosine(a, b) over two array<double> columns: fused dot + norms in one
@@ -149,7 +152,10 @@ object L2Sq {
 /** k-slot MinHash signature of an array<string>: sig[i] = min over
   * elements of xxhash64(elem, i). One UTF8 hash per element, then k
   * cheap integer mixes — O(n + n·k) integer ops, no per-slot re-hash of
-  * the bytes and no interpreted lambdas.
+  * the bytes and no interpreted lambdas. As in the HOF formulation, a
+  * null element hashes as xxhash64(null, i) = hashInt(i, 42) (a null
+  * argument leaves the seed unchanged), and a null or empty array gives
+  * k null slots (array_min over nothing).
   */
 case class MinHashSig(child: Expression, k: Int)
     extends UnaryExpression {
@@ -159,13 +165,14 @@ case class MinHashSig(child: Expression, k: Int)
       s"graft_minhash requires an array<string> input, got $t")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
   override def prettyName: String = "graft_minhash"
 
-  override protected def nullSafeEval(v: Any): Any =
-    MinHashSig.compute(v.asInstanceOf[ArrayData], k)
+  override def eval(input: InternalRow): Any =
+    MinHashSig.compute(child.eval(input).asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.MinHashSig.compute($a, $k)")
+    NullInputCodeGen(this, ctx, ev)(a => s"graft.plans.MinHashSig.compute($a, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
@@ -173,14 +180,14 @@ case class MinHashSig(child: Expression, k: Int)
 
 object MinHashSig {
   def compute(arr: ArrayData, k: Int): ArrayData = {
-    val n = arr.numElements()
-    // empty input → k null slots (matches array_min(empty) = null in the
-    // HOF formulation)
+    val n = if (arr == null) 0 else arr.numElements()
+    // null or empty input → k null slots (matches array_min(empty) = null
+    // in the HOF formulation)
     if (n == 0) return new GenericArrayData(new Array[Any](k))
     val mins = Array.fill(k)(Long.MaxValue)
     var j = 0
     while (j < n) {
-      val h0 = XXH64.hashUTF8String(arr.getUTF8String(j), 42L)
+      val h0 = if (arr.isNullAt(j)) 42L else XXH64.hashUTF8String(arr.getUTF8String(j), 42L)
       var i = 0
       while (i < k) {
         val h = XXH64.hashInt(i, h0)
@@ -194,7 +201,9 @@ object MinHashSig {
 }
 
 /** 64-bit SimHash of an array<string>: per-bit majority vote over
-  * element hashes. One UTF8 hash + 64 shifts per element.
+  * element hashes. One UTF8 hash + 64 shifts per element. As in the HOF
+  * formulation, a null element hashes as xxhash64(null) = 42 (the seed)
+  * and a null array gives 0.
   */
 case class SimHash64(child: Expression)
     extends UnaryExpression {
@@ -204,13 +213,14 @@ case class SimHash64(child: Expression)
       s"graft_simhash requires an array<string> input, got $t")
   }
   override def dataType: DataType = LongType
+  override def nullable: Boolean = false
   override def prettyName: String = "graft_simhash"
 
-  override protected def nullSafeEval(v: Any): Any =
-    SimHash64.compute(v.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any =
+    SimHash64.compute(child.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.SimHash64.compute($a)")
+    NullInputCodeGen(this, ctx, ev)(a => s"graft.plans.SimHash64.compute($a)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -230,7 +240,9 @@ case class Md5Hash60(child: Expression, mod: Long)
     case t => TypeCheckResult.TypeCheckFailure(
       s"graft_md5_60 requires an array<string> input, got $t")
   }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  // a null element hashes to null (md5(null) is null in the HOF form)
+  override def dataType: DataType = ArrayType(LongType,
+    containsNull = child.dataType.asInstanceOf[ArrayType].containsNull)
   override def prettyName: String = "graft_md5_60"
 
   override protected def nullSafeEval(v: Any): Any =
@@ -366,19 +378,24 @@ object Md5Hash60 {
     val md = digests.get()
     val n = arr.numElements()
     val out = new Array[Long](n)
+    var anyNull = false
     var i = 0
     while (i < n) {
-      md.reset()
-      val d = md.digest(arr.getUTF8String(i).getBytes)
-      // first 8 digest bytes big-endian, top 60 bits (= 15 hex digits)
-      var h = 0L
-      var j = 0
-      while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-      h = h >>> 4
-      out(i) = if (mod > 0) h % mod else h
+      if (arr.isNullAt(i)) anyNull = true
+      else {
+        md.reset()
+        val d = md.digest(arr.getUTF8String(i).getBytes)
+        // first 8 digest bytes big-endian, top 60 bits (= 15 hex digits)
+        var h = 0L
+        var j = 0
+        while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
+        h = h >>> 4
+        out(i) = if (mod > 0) h % mod else h
+      }
       i += 1
     }
-    new GenericArrayData(out)
+    if (!anyNull) new GenericArrayData(out)
+    else new GenericArrayData(Array.tabulate[Any](n)(j => if (arr.isNullAt(j)) null else out(j)))
   }
 }
 
@@ -440,13 +457,14 @@ case class HyperplaneBucket(child: Expression, nBits: Int)
       s"graft_hyperplane_bucket requires an array<double> input, got $t")
   }
   override def dataType: DataType = LongType
+  override def nullable: Boolean = false
   override def prettyName: String = "graft_hyperplane_bucket"
 
-  override protected def nullSafeEval(v: Any): Any =
-    HyperplaneBucket.compute(v.asInstanceOf[ArrayData], nBits)
+  override def eval(input: InternalRow): Any =
+    HyperplaneBucket.compute(child.eval(input).asInstanceOf[ArrayData], nBits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.HyperplaneBucket.compute($a, $nBits)")
+    NullInputCodeGen(this, ctx, ev)(a => s"graft.plans.HyperplaneBucket.compute($a, $nBits)")
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneBucket =
     copy(child = newChild)
@@ -458,8 +476,15 @@ object HyperplaneBucket {
     if (v % 2 == 1) 1.0 else -1.0
   }
 
+  /** A null array, or one with a null element, gives 0: in the HOF
+    * formulation each projection sum is then null, and `if(null > 0)`
+    * sets no bit.
+    */
   def compute(vec: ArrayData, nBits: Int): Long = {
+    if (vec == null) return 0L
     val dim = vec.numElements()
+    var j0 = 0
+    while (j0 < dim) { if (vec.isNullAt(j0)) return 0L; j0 += 1 }
     var bucket = 0L
     var i = 0
     while (i < nBits) {
@@ -696,11 +721,11 @@ object SimHashBits {
 
 object SimHash64 {
   def compute(arr: ArrayData): Long = {
-    val n = arr.numElements()
+    val n = if (arr == null) 0 else arr.numElements()
     val counts = new Array[Int](64)
     var j = 0
     while (j < n) {
-      val h = XXH64.hashUTF8String(arr.getUTF8String(j), 42L)
+      val h = if (arr.isNullAt(j)) 42L else XXH64.hashUTF8String(arr.getUTF8String(j), 42L)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1

@@ -51,17 +51,30 @@ class AnnIndexSpec extends SparkSpec {
     }
     val model = Ann.ivfModelFrom(spark.read.parquet(s"$dir/model"))
     val index = spark.read.parquet(s"$dir/index")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val (got, searchJobs) = countJobs {
       rows(Ann.ivfSearch(model, index, queries, k = 5, nprobe = 3))
     }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
     val want = rows(Ann.ivfKnn(embs, queries, k = 5, c = 8, nprobe = 3))
     assert(got == want, "split search must reproduce the inline composition")
-    // the query path is probe-rank + one cluster equi-join: a handful of
-    // AQE/broadcast jobs — never the per-Lloyd-round collect loop the
-    // fit phase runs (each round is its own multi-stage job set)
+    // the query path is the query collect plus one scan of the probed
+    // cells — never the per-Lloyd-round collect loop the fit phase runs
+    // (each round is its own multi-stage job set). Here the query
+    // collect is 3 of the 4 jobs: `queries` re-reads the parquet
+    // embeddings (a schema job) and Tables rebalances them (2 jobs)
     assert(searchJobs < fitJobs,
       s"search ($searchJobs jobs) must be lighter than fit+encode ($fitJobs)")
-    assert(searchJobs <= 10, s"query path launched $searchJobs jobs — training leaked in?")
+    assert(searchJobs <= 4, s"query path launched $searchJobs jobs — training leaked in?")
+    assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
+    // a driver-local query batch (the serving posture) costs the scan alone
+    val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
+      queries.schema)
+    val (gotLocal, localJobs) = countJobs {
+      rows(Ann.ivfSearch(model, index, local, k = 5, nprobe = 3))
+    }
+    assert(gotLocal == want)
+    assert(localJobs == 1, s"a local batch's search launched $localJobs jobs, want the one scan")
   }
 
   test("PQ: reloaded codebooks+code table serve ADC queries with no training jobs; split == inline") {
@@ -204,9 +217,9 @@ class AnnIndexSpec extends SparkSpec {
     assert(got == want, "reloaded walk must reproduce the inline composition")
     // the query path is the LSH routing plus one collect each of the
     // index, edges, queries and seeds, then a driver-side walk: a
-    // handful of jobs whatever `hops` is (the IVF search's budget), never
-    // a job chain per hop, the NN-Descent round loop or a fit
-    assert(searchJobs <= 10, s"query path launched $searchJobs jobs " +
+    // handful of jobs whatever `hops` is, never a job chain per hop, the
+    // NN-Descent round loop or a fit
+    assert(searchJobs <= 8, s"query path launched $searchJobs jobs " +
       "(a per-hop or build loop leaked into search)")
     // and it owns no state: nothing persisted outlives the call
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
@@ -247,7 +260,7 @@ class AnnIndexSpec extends SparkSpec {
     }
     assert(full == rows(Ann.contrastivePairs(corpus, queries, k = 5,
       posThreshold = 0.9)), "full probe must equal the brute face")
-    assert(searchJobs <= 15, s"query path launched $searchJobs jobs " +
+    assert(searchJobs <= 6, s"query path launched $searchJobs jobs " +
       "(a Lloyd loop leaked into search)")
     // law 2: a near-dup positive shares the anchor's top cluster
     // (identical vector -> identical assignment), so even nprobe = 1

@@ -132,6 +132,52 @@ class SketchParitySpec extends SparkSpec {
     }
   }
 
+  /** The first 200 documents' words, plus the edge arrays: empty, null,
+    * a null element among words, all nulls.
+    */
+  private def wordInputs: org.apache.spark.sql.DataFrame = {
+    val edges = spark.range(1).select(explode(array(
+      expr("cast(array() as array<string>)"),
+      expr("cast(null as array<string>)"),
+      expr("array('a', cast(null as string), 'b')"),
+      expr("array(cast(null as string), cast(null as string))"))).as("hs"))
+    docs.select(col("w").as("hs")).unionByName(edges)
+  }
+
+  test("native minhash and simhash == their HOFs on edge arrays too") {
+    val in = wordInputs
+    for (k <- Seq(1, 32)) {
+      val bad = mismatches(in, Sketches.minhashSignature("hs", k),
+        HofOracles.minhashSignatureHof("hs", k))
+      assert(bad.isEmpty, s"minhash k=$k: ${bad.take(3).mkString("; ")}")
+    }
+    val bad = mismatches(in, Sketches.simhash("hs"), HofOracles.simhashHof("hs"))
+    assert(bad.isEmpty, s"simhash: ${bad.take(3).mkString("; ")}")
+  }
+
+  test("native md5-60 hashes == HOF chain on edge arrays too, plain and mod P") {
+    val in = wordInputs
+    val plain = mismatches(in, Sketches.md5Hashes("hs"), HofOracles.md5HashesHof("hs"))
+    assert(plain.isEmpty, plain.take(3).mkString("; "))
+    val modP = mismatches(in, Sketches.md5HashesModP("hs"), HofOracles.md5HashesModPHof("hs"))
+    assert(modP.isEmpty, modP.take(3).mkString("; "))
+  }
+
+  test("native hyperplane bucket == HOF on empty, null, partly-null and all-null vectors") {
+    val edges = spark.range(1).select(explode(array(
+      expr("cast(array() as array<double>)"),
+      expr("cast(null as array<double>)"),
+      expr("transform(sequence(1, 64), i -> if(i = 7, cast(null as double), cast(i as double) - 30.0D))"),
+      expr("transform(sequence(1, 64), i -> cast(null as double))"))).as("hs"))
+    val in = Tables.embeddings(spark, sfDir)
+      .select(col("embedding").cast("array<double>").as("hs")).unionByName(edges)
+    for (nBits <- Seq(1, 4)) {
+      val bad = mismatches(in, Sketches.affineHyperplaneBucket("hs", nBits, 64),
+        HofOracles.affineHyperplaneBucketHof("hs", nBits, 64))
+      assert(bad.isEmpty, s"nBits=$nBits: ${bad.take(3).mkString("; ")}")
+    }
+  }
+
   test("native cosine == HOF cosine (exact double equality)") {
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
