@@ -42,8 +42,8 @@ object Bench {
     // line itself (compact — only outliers).
     val slowDetail = collection.mutable.ArrayBuffer[(String, String)]()
     // Slow-watch registry (r12 VERDICT items 2/3/9): local min-of-2
-    // floors measured on this machine (BENCH_LOCAL_r12 /
-    // BENCH_LOCAL_sf1_r12). A min-of-2 exceeding 1.5× its floor keeps an
+    // floors measured on this machine (records/BENCH_LOCAL_r12 /
+    // records/BENCH_LOCAL_sf1_r12). A min-of-2 exceeding 1.5× its floor keeps an
     // INLINE per-stage capture, so the bench record itself carries the
     // stage-level diagnosis — breaches get profiled, not re-adjudicated
     // as noise. Floors are machine+SF-specific: the sf1 map covers the
@@ -51,10 +51,10 @@ object Bench {
     val floors: Map[String, Double] =
       // path-normalized scale detection (a trailing slash must not
       // silently apply sf0.1 floors to sf1 runs)
-      // r14 re-pin (BENCH_LOCAL_r14 / BENCH_LOCAL_sf1_r14; the sf1
+      // r14 re-pin (records/BENCH_LOCAL_r14 / records/BENCH_LOCAL_sf1_r14; the sf1
       // entries are the FIRST on the relational-decade data — r13's sf1
       // relational floors measured symlinked sf0.1 tables)
-      // r16 re-pin (BENCH_LOCAL_r15 / BENCH_LOCAL_sf1_r15 — VERDICT r15
+      // r16 re-pin (records/BENCH_LOCAL_r15 / records/BENCH_LOCAL_sf1_r15 — VERDICT r15
       // item 8): q214 joins the registry (kmeans-NSW, build-inclusive)
       // r17 re-pin (VERDICT r16 item 9): the four judge-named keys take
       // their r16 steady-state readings (q203's local floor is the
@@ -127,6 +127,11 @@ object Bench {
           System.err.println(f"[slowstage] $name run=$run id=${s.id}%3d tasks=${s.tasks}%3d " +
             f"wall=${s.wall}%6.2f s task=${s.run}%7.2f s  ${s.name}")
         }
+        // a filtered JVM runs the query without the earlier queries of a
+        // full sweep warming the JIT, so its breach may be warm-up alone
+        def noteCold(): Unit = if (filter.isDefined)
+          System.err.println(
+            s"[slowstage] $name filtered run: cold JVM; floors are full-sweep readings")
         val r = (once(), once()) match {
           case (Right((a, ga, sa0)), Right((b, gb, sb0))) =>
             System.err.println(
@@ -136,6 +141,7 @@ object Bench {
             // filtered alone: 7.41 s then 0.57 s against a 0.347 s floor)
             val (sa, sb) = if (breached(math.min(a, b))) (sa0, sb0) else (Nil, Nil)
             logStages("a", sa); logStages("b", sb)
+            if (breached(math.min(a, b))) noteCold()
             // the floor-breach stage table rides the slow JSON section:
             // top 3 stages of the faster run (the min-of-2 that breached;
             // the slower one is the likelier to carry warm-up), compact
@@ -148,8 +154,12 @@ object Bench {
             if (math.min(a, b) > 1.5 || breach.nonEmpty)
               slowDetail += name -> f"""{"a":$a%.2f,"b":$b%.2f,"gc":${math.max(ga, gb)},"cc":$codeCacheUsedMb$breach}"""
             name -> Right(math.min(a, b))
-          case (Right((a, _, sa)), _) => if (breached(a)) logStages("a", sa); name -> Right(a)
-          case (_, Right((b, _, sb))) => if (breached(b)) logStages("b", sb); name -> Right(b)
+          case (Right((a, _, sa)), _) =>
+            if (breached(a)) { logStages("a", sa); noteCold() }
+            name -> Right(a)
+          case (_, Right((b, _, sb))) =>
+            if (breached(b)) { logStages("b", sb); noteCold() }
+            name -> Right(b)
           case _ => name -> Left("err")
         }
         // Isolate queries from each other: drop every cached frame the
@@ -228,7 +238,7 @@ object Bench {
     // The driver captures only the stdout TAIL (~2000 chars): at 168
     // queries the full line above no longer fits, so its FRONT — metric,
     // value, the first third of the queries map — falls out of the
-    // window (BENCH_r04/r05 both landed with parsed:null and 57 query
+    // window (records/BENCH_r04/r05 both landed with parsed:null and 57 query
     // times unrecoverable). Emit a compact summary as the LAST line:
     // it always fits the window whole, so the driver's parse succeeds
     // even when the full line is clipped. r8: the summary now carries

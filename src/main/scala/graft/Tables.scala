@@ -9,6 +9,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-expressed as plain parquet scans so Catalyst gets pushdown + pruning.
   */
 object Tables {
+  /** `$dir/$name.parquet`, read with no explicit schema. In a graft
+    * session [[graft.plans.SchemaPin]] pins the schema: the first load of
+    * a table infers it (a one-task job plus a footer read), and a later
+    * load whose key is unchanged reuses it and starts no job. The key is
+    * the qualified path, the reader options, the session's
+    * `spark.sql.parquet.*`/`spark.sql.legacy.parquet.*` values and
+    * `spark.sql.caseSensitive`, and the (name, length, mtime) of each
+    * file in the table directory, parquet summary files included and
+    * Spark's hidden files skipped. A written, appended, removed or
+    * touched file, or a changed option or conf, invalidates the entry.
+    * A partitioned table directory passes through and is inferred on
+    * every load, as is a `mergeSchema` read.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

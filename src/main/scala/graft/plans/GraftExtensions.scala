@@ -10,10 +10,13 @@ import org.apache.spark.sql.graft.Bridge
   * SparkSessionExtensions — installable either through
   * `GraftSession.builder()` or with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` on any
-  * stock Spark cluster.
+  * stock Spark cluster. Also installs [[SchemaPin]], which skips the
+  * schema inference of a parquet read whose files have not changed.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectHintResolutionRule(s => new SchemaPin(s, SchemaPin.cacheOf(s)))
+    ext.injectCheckRule(s => new SchemaPin.Record(SchemaPin.cacheOf(s)))
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),

@@ -19,4 +19,11 @@ object Bridge {
     * once this returns.
     */
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** True for a file or directory name Spark's file index skips when it
+    * lists a table: `_`- and `.`-prefixed names and `._COPYING_` files,
+    * except parquet's `_metadata` and `_common_metadata` summaries.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -21,24 +21,6 @@ class AnnIndexSpec extends SparkSpec {
     d.toString
   }
 
-  /** Count Spark jobs launched by `body`. The listener bus is async:
-    * drain it (every job `body` ran has posted its start) before reading.
-    */
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.sql.graft.Bridge.waitUntilEmpty(spark.sparkContext)
-      (r, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -61,11 +43,11 @@ class AnnIndexSpec extends SparkSpec {
     // the query path is the query collect plus one scan of the probed
     // cells — never the per-Lloyd-round collect loop the fit phase runs
     // (each round is its own multi-stage job set). Here the query
-    // collect is 3 of the 4 jobs: `queries` re-reads the parquet
-    // embeddings (a schema job) and Tables rebalances them (2 jobs)
+    // collect is 2 of the 3 jobs: Tables rebalances the embeddings (the
+    // re-read of their parquet is pinned by SchemaPin: no schema job)
     assert(searchJobs < fitJobs,
       s"search ($searchJobs jobs) must be lighter than fit+encode ($fitJobs)")
-    assert(searchJobs <= 4, s"query path launched $searchJobs jobs — training leaked in?")
+    assert(searchJobs <= 3, s"query path launched $searchJobs jobs — training leaked in?")
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
     // a driver-local query batch (the serving posture) costs the scan alone
     val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
@@ -218,8 +200,9 @@ class AnnIndexSpec extends SparkSpec {
     // the query path is the LSH routing plus one collect each of the
     // index, edges, queries and seeds, then a driver-side walk: a
     // handful of jobs whatever `hops` is, never a job chain per hop, the
-    // NN-Descent round loop or a fit
-    assert(searchJobs <= 8, s"query path launched $searchJobs jobs " +
+    // NN-Descent round loop or a fit (and no schema job: the queries'
+    // parquet re-read is pinned)
+    assert(searchJobs <= 7, s"query path launched $searchJobs jobs " +
       "(a per-hop or build loop leaked into search)")
     // and it owns no state: nothing persisted outlives the call
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
@@ -260,7 +243,7 @@ class AnnIndexSpec extends SparkSpec {
     }
     assert(full == rows(Ann.contrastivePairs(corpus, queries, k = 5,
       posThreshold = 0.9)), "full probe must equal the brute face")
-    assert(searchJobs <= 6, s"query path launched $searchJobs jobs " +
+    assert(searchJobs <= 5, s"query path launched $searchJobs jobs " +
       "(a Lloyd loop leaked into search)")
     // law 2: a near-dup positive shares the anchor's top cluster
     // (identical vector -> identical assignment), so even nprobe = 1

@@ -3,7 +3,7 @@
 for the cross-scale regime-transition test (r14 VERDICT item 2).
 
 BENCHNOTES r14 made a falsifiable prediction: the >12x bytes-per-decade
-keys in SHUFFLE_r14 vs SHUFFLE_sf1_r14 are the partial-aggregation
+keys in records/SHUFFLE_r14 vs records/SHUFFLE_sf1_r14 are the partial-aggregation
 keys-bound -> rows-bound transition, so the sf1 -> sf10 ratio should
 DECAY back toward ~10x once both scales sit in the rows-bound regime.
 This script synthesizes exactly the tables behind those keys at 10x the
