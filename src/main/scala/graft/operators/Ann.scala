@@ -70,8 +70,8 @@ object Ann {
     bruteKnn(corpus.filter(pred), queries, k)
 
   /** Filtered IVF search: `pred` prunes the probed buckets' rows before
-    * the exact-cosine ranking — at scale the scan reads nprobe/c of the
-    * index WITH the pushed predicate. With nprobe = c this equals
+    * the exact-cosine ranking, and reaches the index scan with the probe
+    * set where [[ivfSearch]] pushes it. With nprobe = c this equals
     * [[bruteKnnFiltered]] row-for-row (AnnSpec pins the law).
     */
   def ivfSearchFiltered(cents: Seq[(Int, Seq[Double])], index: DataFrame,
@@ -392,10 +392,11 @@ object Ann {
     *   1. collect the bounded query batch and route each query to its
     *      `nprobe` closest centroids on the driver
     *      ([[graft.plans.IvfProbe.Router]]);
-    *   2. scan `index` filtered to `cluster IN (probed cells)` — the
-    *      filter reaches the parquet scan, so at 100 TB this reads
-    *      nprobe/c of the index and nothing else — keeping each query's
-    *      exact-cosine top-k per task ([[probeIndex]]);
+    *   2. scan `index` for the rows of the probed cells, keeping each
+    *      query's exact-cosine top-k per task ([[probeIndex]]). The
+    *      scan prunes only on an index laid out by cell (`compactIndex`,
+    *      `bucketBy`, partitions) and only when the batch probes fewer
+    *      than half of the cells; otherwise it reads the whole index;
     *   3. merge the tasks' top-k lists on the driver.
     * Its jobs are the query collect (none for a local batch) and the
     * scan; it broadcasts, shuffles and persists nothing. Driver memory
@@ -418,7 +419,7 @@ object Ann {
                 queries: DataFrame, k: Int, nprobe: Int = 4,
                 excludeSelf: Boolean = true): DataFrame = {
     val qs = collectQueries(queries)
-    probeIndex(index, qs, route(cents, qs, nprobe), k, excludeSelf)
+    probeIndex(index, qs, route(cents, qs, nprobe), cents.size, k, excludeSelf)
   }
 
   /** A query batch collected to the driver: unique non-null ids (as
@@ -434,15 +435,18 @@ object Ann {
     val ids = rows.map(_.getLong(0))
     ids.groupBy(identity).collectFirst { case (id, dup) if dup.length > 1 => id }
       .foreach(id => throw new IllegalArgumentException(s"duplicate vec_id $id among the queries"))
-    val vecs = rows.map { r =>
-      if (r.isNullAt(1)) null
-      else r.getSeq[Any](1).iterator.map {
-        case d: Double => d
-        case _ => 0.0
-      }.toArray
-    }
-    new QueryBatch(ids, vecs, queries.schema("vec_id").dataType)
+    new QueryBatch(ids, rows.map(vector(_, 1)), queries.schema("vec_id").dataType)
   }
+
+  /** Field `i` of `r`, an array<double>, as an array (null when the field
+    * is null; a null element reads as 0.0, as in CosineSim).
+    */
+  private def vector(r: org.apache.spark.sql.Row, i: Int): Array[Double] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Any](i).iterator.map {
+      case d: Double => d
+      case _ => 0.0
+    }.toArray
 
   /** Each query's `nprobe` closest centroid ids, best first. */
   private def route(cents: Seq[(Int, Seq[Double])], qs: QueryBatch,
@@ -503,20 +507,36 @@ object Ann {
         col("rn"))
   }
 
+  /** A batch that probes at least this share of the model's cells scans
+    * the index without the `cluster IN` filter. Past half, a filter can
+    * skip at most half the rows even on an index laid out by cell, and
+    * on a flat index, where every row group holds every cell, it skips
+    * none while each file still pays for evaluating it.
+    */
+  private final val UnfilteredProbeShare = 0.5
+
   /** Shared query tail of the IVF family: query `i` of `qs` probes the
-    * cells `probes(i)`. One scan of the index rows in those cells
-    * (`cluster IN` pushed into the scan) keeps each query's top-k per
-    * task in [[graft.plans.IvfProbe.Scan]]; the driver merges the
-    * tasks' lists (O(tasks · queries · k) rows) into ranks 1..k — a
-    * local (qid, cid, sim, rn) table.
+    * cells `probes(i)` of a model of `cellCount` cells. One scan of the
+    * index keeps each query's top-k per task in
+    * [[graft.plans.IvfProbe.Scan]], which drops the rows of unprobed
+    * cells; the driver merges the tasks' lists (O(tasks · queries · k)
+    * rows) into ranks 1..k — a local (qid, cid, sim, rn) table.
+    *
+    * The probe set is pushed into the scan as `cluster IN (cells)`
+    * unless the batch probes at least [[UnfilteredProbeShare]] of the
+    * cells and `cluster` is an int column, as [[ivfEncode]] writes it.
+    * Any other type keeps the filter: its cast to int could alias an
+    * unprobed cell to a probed one.
     */
   private def probeIndex(index: DataFrame, qs: QueryBatch, probes: Array[Array[Int]],
-                         k: Int, excludeSelf: Boolean): DataFrame = {
+                         cellCount: Int, k: Int, excludeSelf: Boolean): DataFrame = {
     val scan = new graft.plans.IvfProbe.Scan(qs.ids, qs.vecs, probes, k, excludeSelf)
     val cells = scan.cells
+    val unfiltered = cells.length >= cellCount * UnfilteredProbeShare &&
+      index.schema("cluster").dataType == org.apache.spark.sql.types.IntegerType
     val parts =
       if (k <= 0 || cells.isEmpty) Array.empty[graft.plans.IvfProbe.Part]
-      else index.filter(col("cluster").isin(cells.toIndexedSeq: _*))
+      else (if (unfiltered) index else index.filter(col("cluster").isin(cells.toIndexedSeq: _*)))
         .select(col("vec_id").cast("long"), asDouble("ve"), col("cluster").cast("int"))
         .queryExecution.toRdd.mapPartitions(scan.run).collect()
     hitsFrame(index.sparkSession, qs, scan.merge(parts),
@@ -673,7 +693,7 @@ object Ann {
         .as[(Long, Int)].collect()
         .groupMap(_._1)(_._2)
     val probes = qs.ids.map(id => probeRows.getOrElse(id, Array.emptyIntArray))
-    probeIndex(index, qs, probes, k, excludeSelf)
+    probeIndex(index, qs, probes, children.size, k, excludeSelf)
   }
 
   /** Hierarchical-IVF top-k — fit∘encode∘search composition (the
@@ -1361,23 +1381,24 @@ object Ann {
   }
 
   /** The walk's graph: the index rows (vec_id, ve, predicate bit with
-    * null → false) and the (u, v) edges collected to the driver. A
-    * method of its own so the collected rows are garbage once the
-    * graph holds its arrays.
+    * null → false) and the (u, v) edges collected to the driver. Vectors
+    * decode as the query batch's do ([[collectQueries]]): a null element
+    * reads as 0.0. A method of its own so the collected rows are garbage
+    * once the graph holds its arrays.
     */
   private def nswGraph(index: DataFrame, edges: DataFrame,
                        pred: Option[Column]): graft.plans.NswWalk.Graph = {
     val spark = index.sparkSession
     import spark.implicits._
     val rows = index.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), col("ve"),
+      .select(col("vec_id").cast("long"), asDouble("ve"),
         coalesce(pred.getOrElse(lit(true)), lit(false)))
-      .as[(Long, Array[Double], Boolean)].collect()
+      .collect()
     val adjacency = edges.select(col("u").cast("long"), col("v").cast("long"))
       .filter(col("u").isNotNull && col("v").isNotNull)
       .as[(Long, Long)].collect()
-    new graft.plans.NswWalk.Graph(rows.map(_._1), rows.map(_._2),
-      rows.map(_._3), adjacency)
+    new graft.plans.NswWalk.Graph(rows.map(_.getLong(0)), rows.map(vector(_, 1)),
+      rows.map(_.getBoolean(2)), adjacency)
   }
 
   /** LSH-celled NSW — the model-free deterministic graph-ANN face:
@@ -1471,8 +1492,9 @@ object Ann {
     * appends per-batch SEGMENTS to the persisted bucketed tables
     * forever: each append lands in its batch's file layout, not the
     * warehouse bucketing, so over time a bucket's rows scatter across
-    * every segment file and the probe path's "read nprobe/c of the
-    * index" promise decays into a full-segment-list scan. Compaction
+    * every segment file and the probe scan's pruning (a batch probing
+    * fewer than half of the cells, [[probeIndex]]) decays into a
+    * full-segment-list scan. Compaction
     * re-keys the accumulated rows into the warehouse layout — one
     * exchange on the bucket key, after which writing with
     * bucketBy(cluster) restores the co-located layout every search

@@ -13,6 +13,13 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
   *   - rankings order by score descending under SQL double ordering
   *     (`SQLOrderingUtil.compareDoubles`: NaN above every number,
   *     −0.0 == 0.0), null scores last, then by id ascending.
+  *
+  * A NaN sim's raw bits are not part of the contract: every NaN counts
+  * as one value, as SQL ordering, `tools/check.py` and the parity specs
+  * compare it. Java leaves the sign and payload of a NaN that an
+  * operation produces to the compiled code (a sum of NaNs in whole-stage
+  * codegen gave 0xfff8…, the same sum here 0x7ff8…); [[round4]] passes
+  * a NaN through unchanged, as Spark's `round` does.
   */
 object CosineRank {
 
@@ -34,11 +41,43 @@ object CosineRank {
     dot / (qNorm * vNorm)
   }
 
-  /** Spark's `round(x, 4)` on a double: HALF_UP, NaN and ±Inf unchanged. */
-  def round4(x: Double): Double =
+  /** Spark's `round(x, 4)` on a double, bit for bit: HALF_UP of x's
+    * decimal form (`BigDecimal.valueOf(x).setScale(4, HALF_UP)`), a zero
+    * result as +0.0, NaN and ±Inf unchanged.
+    *
+    * The fast path rounds k = HALF_UP(|x|·10⁴) through `floor` and
+    * returns ±k / 10⁴, the division `BigDecimal.doubleValue` performs
+    * itself for such a k. For |x| < 1e5 the product |x|·10⁴ lies below
+    * 2³⁰, where it and the decimal form scaled by 10⁴ differ by under
+    * 2e-7 (half an ulp of the product plus the decimal form's half ulp
+    * of x, scaled): only a fractional part within [[TieGuard]] of ½ can
+    * round the two differently, and there, or for |x| ≥ 1e5, the
+    * BigDecimal form decides.
+    */
+  def round4(x: Double): Double = {
+    val a = math.abs(x)
     if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+    else if (a >= 1e5) round4Exact(x)
+    else {
+      val y = a * 1e4
+      val f = math.floor(y)
+      val frac = y - f
+      if (math.abs(frac - 0.5) < TieGuard) round4Exact(x)
+      else {
+        val k = if (frac > 0.5) f + 1 else f
+        if (k == 0) 0.0 else if (x < 0) -(k / 1e4) else k / 1e4
+      }
+    }
+  }
+
+  /** How close, in units of the fourth decimal place, the fractional
+    * part of |x|·10⁴ may come to ½ before [[round4]] leaves the tie to
+    * BigDecimal: five times the largest gap between the two forms.
+    */
+  private final val TieGuard = 1e-6
+
+  private def round4Exact(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** < 0 when (aNull, a, aId) ranks before (bNull, b, bId). */
   def compare(aNull: Boolean, a: Double, aId: Long,

@@ -11,7 +11,9 @@ import CosineRank.{Hit, TopK}
   *
   * Scores and rankings are [[CosineRank]]'s. Routing ranks centroids by
   * their unrounded cosine to the query, so a null query vector probes
-  * the lowest cids. Candidates rank by sim, rounded to 4 places.
+  * the lowest cids. Candidates rank by sim, rounded to 4 places. A NaN
+  * sim's raw bits are not part of the contract (see [[CosineRank]]):
+  * every NaN is one value, ranked above every number.
   */
 object IvfProbe {
 
@@ -72,9 +74,10 @@ object IvfProbe {
     /** Scores every (vec_id: bigint, ve: array<double>, cluster: int)
       * row against the queries probing its cell, keeping each query's
       * best `k`; emits at most one [[Part]] per query. Rows with a null
-      * id take no part; a null vector or one whose dimension differs
-      * from the query's scores null. Memory: O(queries · k) plus one
-      * vector.
+      * id, a null cluster or a cell no query probes take no part, so
+      * `rows` may be the whole index; a null vector or one whose
+      * dimension differs from the query's scores null. Memory:
+      * O(queries · k) plus one vector.
       */
     def run(rows: Iterator[InternalRow]): Iterator[Part] = {
       val tops = new Array[TopK](qids.length)

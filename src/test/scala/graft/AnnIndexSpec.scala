@@ -59,6 +59,50 @@ class AnnIndexSpec extends SparkSpec {
     assert(localJobs == 1, s"a local batch's search launched $localJobs jobs, want the one scan")
   }
 
+  /** `body`'s result, its jobs and the rows its tasks read from files
+    * (task input metrics).
+    */
+  private def countRead[A](body: => A): (A, Int, Long) = {
+    val read = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (r, jobs) = countJobs(body)
+      (r, jobs, read.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("IVF probe pushdown: a small batch skips row groups of a cell-sorted index; " +
+      "a batch probing half the cells reads every row") {
+    val dir = tmp("ivf_sorted")
+    val c = 8
+    val cents = Ann.ivfFit(embs, c = c, iters = 2)
+    // one file sorted by cell, in row groups of a few dozen rows
+    Ann.ivfEncode(embs, cents).repartition(1).sortWithinPartitions("cluster")
+      .write.mode("overwrite")
+      .option("parquet.block.size", 16384L).option("parquet.block.size.row.check.min", 8L)
+      .parquet(dir)
+    val index = spark.read.parquet(dir)
+    val total = index.count()
+    def local(n: Int) = spark.createDataFrame(
+      java.util.Arrays.asList(embs.filter(col("vec_id") < n).collect(): _*), embs.schema)
+    for ((qs, nprobe) <- Seq(local(1) -> 1, local(10) -> c / 2)) {
+      val probed = IvfSearchOracle.queryProbes(cents, qs, nprobe)
+        .select("cluster").distinct().count()
+      val (got, jobs, read) = countRead(rows(Ann.ivfSearch(cents, index, qs, k = 5, nprobe)))
+      val what = s"${qs.count()} queries probing $probed of $c cells"
+      assert(got == rows(IvfSearchOracle.ivfSearch(cents, index, qs, 5, nprobe,
+        excludeSelf = true)), what)
+      assert(got.nonEmpty, what)
+      assert(jobs == 1, s"$what: $jobs jobs, want the one scan")
+      if (2 * probed < c) assert(read < total, s"$what: read $read of $total rows")
+      else assert(read == total, s"$what: read $read of $total rows")
+    }
+  }
+
   test("PQ: reloaded codebooks+code table serve ADC queries with no training jobs; split == inline") {
     val dir = tmp("pq")
     val (_, fitJobs) = countJobs {

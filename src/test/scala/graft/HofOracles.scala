@@ -85,6 +85,15 @@ object HofOracles {
       (sqrt(expr(s"aggregate($a, 0.0D, (acc, x) -> acc + x * x)")) *
         sqrt(expr(s"aggregate($b, 0.0D, (acc, x) -> acc + x * x)")))
 
+  /** [[graft.plans.CosineRank.round4]] as it was before its fast path,
+    * and as Spark's `round(x, 4)` computes it on a double: HALF_UP of
+    * `BigDecimal.valueOf(x)`, NaN and ±Inf unchanged (Round4Spec).
+    */
+  def round4BigDecimal(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+
   /** [[graft.operators.Ann.l2sq]]; mismatched dimensions give null
     * (zip_with pads with null).
     */

@@ -20,6 +20,12 @@ import graft.operators.Ann
   * rows, int query ids); and a ScalaCheck property over generated mixes
   * of all of them.
   *
+  * Both sides of the probe pushdown are covered: the 80-query sf0.1
+  * batch at nprobe c probes every cell and scans the index unfiltered,
+  * a 2-query batch at nprobe 1 pushes its cells into the scan, and
+  * bigint and double `cluster` columns keep the filter at any batch
+  * size (a cast to int would alias their cells).
+  *
   * Two deliberate departures from the oracle, pinned on their own: a
   * duplicate query id throws, and null query and index ids take no part
   * (the oracle is fed the same inputs without those rows).
@@ -103,6 +109,33 @@ class IvfSearchParitySpec extends SparkSpec {
           assert(types(got) == wantTypes, what)
           val (g, w) = (answers(got), all.filter(_._4 <= k))
           assert(g == w, s"$what: ${diff(g, w)}")
+        }
+      }
+    }
+  }
+
+  test("a 2-query batch at nprobe 1 (the probe set pushed into the scan)") {
+    val two = queries.filter(col("vec_id").isin(3L, 1000007L))
+    bothModes { mode =>
+      for (excl <- Seq(true, false)) assertSame(Ann.ivfSearch(cents, index, two, 10, 1, excl),
+        IvfSearchOracle.ivfSearch(cents, index, two, 10, 1, excl), s"$mode excludeSelf=$excl")
+    }
+  }
+
+  test("bigint and double clusters keep the filter: no cast aliases an unprobed cell") {
+    // every hand row again under a fresh id, in a cell whose int cast is
+    // a probed cell: bigint 2³² + c wraps to c, double c + 0.5 truncates
+    Seq("bigint" -> (1L << 32).toDouble, "double" -> 0.5).foreach { case (tpe, offset) =>
+      val rows = handRows.map { case (id, v, cl) => (id, v, cl.map(_.toDouble)) } ++
+        handRows.collect { case (Some(id), v, Some(cl)) => (Option(id + 1000L), v, Option(cl + offset)) }
+      val idx = rows.toDF("vec_id", "ve", "cluster")
+        .withColumn("cluster", col("cluster").cast(tpe))
+      bothModes { mode =>
+        for (nprobe <- Seq(1, 4); excl <- Seq(true, false)) {
+          val got = Ann.ivfSearch(axes, idx, handQs, 40, nprobe, excl)
+          assertSame(got, IvfSearchOracle.ivfSearch(axes, idx, handQs, 40, nprobe, excl),
+            s"$tpe $mode nprobe=$nprobe excludeSelf=$excl")
+          assert(got.filter(col("cid") >= 1000L).isEmpty, s"$tpe $mode: an aliased row answered")
         }
       }
     }

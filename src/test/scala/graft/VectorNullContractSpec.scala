@@ -12,10 +12,9 @@ import graft.operators.Ann
   *   - `IvfProbe` (the routed index scan), `NswWalk` (the driver-side
   *     graph walk) and `CosineRank` (the cosine, rounding and ranking
   *     both share) mirror that reading on purpose, so that the ANN
-  *     search faces equal the DataFrame searches they replaced. The
-  *     exception: `Ann.nswSearch` decodes the index vectors it collects
-  *     for the walk as `Array[Double]`, whose encoder throws
-  *     NOT_NULL_ASSERT_VIOLATION on a null element.
+  *     search faces equal the DataFrame searches they replaced. Both
+  *     the query batch and the index vectors `Ann.nswSearch` collects
+  *     for its walk decode that way.
   *
   * Each kernel is fed partly-null vectors and the same vectors with
   * every null element replaced by 0.0, under whole-stage codegen and
@@ -117,8 +116,7 @@ class VectorNullContractSpec extends SparkSpec {
     }
   }
 
-  test("NswWalk and CosineRank (Ann.nswSearch) read a null query element as 0.0; " +
-      "a null index element fails loudly") {
+  test("NswWalk and CosineRank (Ann.nswSearch) read a null element as 0.0") {
     val edges = frame(StructType(Seq(StructField("u", LongType), StructField("v", LongType))),
       Seq(Row(1L, 2L), Row(2L, 3L), Row(3L, 4L), Row(1L, 4L)))
     val entries = frame(StructType(Seq(StructField("cluster", IntegerType),
@@ -126,14 +124,12 @@ class VectorNullContractSpec extends SparkSpec {
     def search(idx: DataFrame, qs: DataFrame) = answers(Ann.nswSearch(cents, edges, idx,
       entries, qs, k = 4, beam = 4, hops = 2, nprobe = 2, excludeSelf = false))
     bothModes { mode =>
-      val got = search(index(true), queries(false))
-      assert(got.length == 8, s"$mode: the walk reaches all four vectors from either seed")
-      assert(got == search(index(true), queries(true)), s"$mode: partly-null vs zero-filled")
-      // the graph's index collect decodes each vector as Array[Double],
-      // whose encoder rejects a null element
-      val e = intercept[RuntimeException](search(index(false), queries(true)))
-      assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition ==
-        "NOT_NULL_ASSERT_VIOLATION", s"$mode: ${e.getMessage}")
+      val want = search(index(true), queries(true))
+      assert(want.length == 8, s"$mode: the walk reaches all four vectors from either seed")
+      for (fillIndex <- Seq(true, false); fillQueries <- Seq(true, false))
+        assert(search(index(fillIndex), queries(fillQueries)) == want,
+          s"$mode: partly-null (index filled $fillIndex, queries filled $fillQueries) " +
+            "vs zero-filled")
     }
   }
 }
