@@ -20,7 +20,8 @@ object Tables {
     * Spark's hidden files skipped. A written, appended, removed or
     * touched file, or a changed option or conf, invalidates the entry.
     * A partitioned table directory passes through and is inferred on
-    * every load, as is a `mergeSchema` read.
+    * every load, as is a `mergeSchema` read and every load in a
+    * Hive-enabled session (see SchemaPin).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

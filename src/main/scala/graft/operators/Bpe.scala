@@ -136,17 +136,22 @@ object Bpe {
     */
   /** Truncate the vocab's plan lineage every N rounds: an iterative
     * DataFrame whose plan references the previous round's plan grows
-    * one fold/kernel layer per round, and by round ~100 the plan tree
-    * alone OOMs the driver while each round re-pays optimization of
-    * the whole depth (the Components.scala pointer-jumping posture;
-    * measured in BENCHNOTES.md post-close r12 — 128 serial rounds
-    * OOMed an 8g driver before this cut existed). 16 keeps the oracled k=6 and
-    * every spec path bit-identical (the cut never fires there) while
-    * bounding plan depth for real vocabularies; checkpoint blocks per
-    * cut are vocab-sized and reclaimed by the ContextCleaner as the
-    * loop advances past them.
+    * one fold/kernel layer per round, and each round re-pays
+    * optimization of the whole depth (the Components.scala
+    * pointer-jumping posture; measured in BENCHNOTES.md post-close r12 —
+    * 128 serial rounds OOMed an 8g driver before this cut existed).
+    * The plan's DESCRIPTION grows faster than its depth: each round
+    * reads the previous round's persisted plan, and a cached AQE plan
+    * describes both its current and its initial plan, so the string
+    * every action builds for its SQL execution event doubles per round
+    * (a two-row vocab: 4.5 KB at round 1, 5 MB at round 12; 16 rounds
+    * OOMed a 4g driver inside `QueryExecution.explainString`). 4 bounds
+    * it to 8× one round's; the registered queries' 6 merges in batches
+    * of 3 train in 2 passes and never reach a cut. Checkpoint blocks per
+    * cut are vocab-sized and reclaimed by the ContextCleaner as the loop
+    * advances past them.
     */
-  private val LineageCutEvery = 16
+  private val LineageCutEvery = 4
 
   private def lineageCut(vocab: DataFrame, round: Int): DataFrame =
     if (round % LineageCutEvery == 0) {

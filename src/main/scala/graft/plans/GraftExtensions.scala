@@ -11,12 +11,15 @@ import org.apache.spark.sql.graft.Bridge
   * `GraftSession.builder()` or with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` on any
   * stock Spark cluster. Also installs [[SchemaPin]], which skips the
-  * schema inference of a parquet read whose files have not changed.
+  * schema inference of a parquet read whose files have not changed, and
+  * [[SmallGather]], which plans a provably small shuffle as a gather into
+  * one partition.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectHintResolutionRule(s => new SchemaPin(s, SchemaPin.cacheOf(s)))
     ext.injectCheckRule(s => new SchemaPin.Record(SchemaPin.cacheOf(s)))
+    ext.injectQueryStagePrepRule(_ => new SmallGather)
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),

@@ -49,7 +49,11 @@ import org.apache.spark.sql.types.StructType
   * subdirectory (a partitioned table), a glob, a streaming source, a
   * path given as an option, any format but parquet, a path that cannot
   * be listed, and a relation with partition columns (a `basePath` read).
-  * Spark infers those as it always has.
+  * Spark infers those as it always has. So does every read in a
+  * Hive-enabled session (`enableHiveSupport()`, spark-shell's default):
+  * Spark 4.1's `HiveSessionStateBuilder` builds its analyzer without the
+  * hint-resolution rules, and no other analyzer slot that it honours
+  * runs before `ResolveDataSource`, so the pin never sees the read there.
   */
 final class SchemaPin(session: SparkSession, cache: SchemaPin.Cache)
     extends Rule[LogicalPlan] {

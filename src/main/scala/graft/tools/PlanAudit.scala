@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft._
+import graft.plans.SmallGather
 
 /** Plan-quality sweep: print each query's join strategies and shuffle
   * topology so accidental nested-loop joins / missed broadcasts / lost
@@ -51,7 +52,7 @@ object PlanAudit {
     val logical = df.queryExecution.optimizedPlan.collect {
       case w: LWindow if w.partitionSpec.isEmpty => w
     }.size
-    val physical = structuralCounts(df.queryExecution.executedPlan)._3
+    val physical = structuralCounts(df.queryExecution.executedPlan).globalWindows
     // the outer query's windows appear in BOTH trees (1:1); cached
     // subtrees appear only in the physical traversal — take the max,
     // never the sum, to avoid double-counting the outer ones
@@ -296,22 +297,32 @@ object PlanAudit {
     visit(root)
   }
 
-  /** (join-class → count, shuffle-exchange count, un-partitioned-window
-    * count) over the plan's true execution topology.
+  /** Structural counts over a plan's true execution topology: joins by
+    * class, shuffle exchanges, un-partitioned windows, and the exchanges
+    * among those shuffles that [[graft.plans.SmallGather]] planned as a
+    * gather into one partition. A gather is told by the rule's tag, not
+    * by its `SinglePartition`, which a global window's or a global
+    * aggregate's own feed also has.
     */
-  def structuralCounts(root: SparkPlan): (Map[String, Int], Int, Int) = {
+  final case class Counts(joins: Map[String, Int], shuffles: Int, globalWindows: Int,
+      gathers: Int)
+
+  def structuralCounts(root: SparkPlan): Counts = {
     val joins = mutable.Map.empty[String, Int].withDefaultValue(0)
     var exchanges = 0
     var globalWins = 0
+    var gathers = 0
     walk(root) {
-      case _: ShuffleExchangeExec => exchanges += 1
+      case e: ShuffleExchangeExec =>
+        exchanges += 1
+        if (SmallGather.isGather(e)) gathers += 1
       case w: WindowExec if w.partitionSpec.isEmpty => globalWins += 1
       case n if joinClasses(n.getClass.getSimpleName) =>
         val k = n.getClass.getSimpleName.stripSuffix("Exec")
         joins(k) = joins(k) + 1
       case _ => ()
     }
-    (joins.toMap, exchanges, globalWins)
+    Counts(joins.toMap, exchanges, globalWins, gathers)
   }
 
   /** Scans per SOURCE TABLE (file-scan leaves, keyed by the parquet
@@ -353,8 +364,11 @@ object PlanAudit {
     * plan (call after an action has run). For each un-partitioned
     * WindowExec, descend its (unary) child chain to the nearest node
     * with a populated row count — a finished shuffle stage's runtime
-    * statistics (the single-partition exchange every global window
-    * reads) or a node carrying a numOutputRows metric. Cached builds
+    * statistics (the single-partition exchange a global window reads)
+    * or a node carrying a numOutputRows metric. Where SmallGather
+    * dropped that exchange because its input is one partition already,
+    * the descent reaches the operator or the gather below it, which
+    * carries the same rows. Cached builds
     * and AQE final plans are traversed like [[walk]]. A window whose
     * input count cannot be recovered reports -1 (treated as a
     * violation by the caller — an unmeasurable whitelisted window is
@@ -414,7 +428,8 @@ object PlanAudit {
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, d)
-        val (joinCounts, exchanges, _) = structuralCounts(df.queryExecution.executedPlan)
+        val counts = structuralCounts(df.queryExecution.executedPlan)
+        val joinCounts = counts.joins
         val joins = joinCounts.toSeq.sortBy(_._1).map { case (k, n) => s"$k x$n" }
         val globalWin = globalWindows(df)
         val winFlag =
@@ -467,7 +482,7 @@ object PlanAudit {
               violations ::= name
               s" scans=$scanStr MULTI-SCAN-NOT-WHITELISTED"
           }
-        println(f"[plan] $name%-28s ${joins.mkString(", ")}%-60s shuffles=$exchanges$winFlag$nlFlag$scanFlag")
+        println(f"[plan] $name%-28s ${joins.mkString(", ")}%-60s shuffles=${counts.shuffles} gathers=${counts.gathers}$winFlag$nlFlag$scanFlag")
       } catch {
         case e: Throwable => println(s"[plan] $name ERROR ${e.getMessage.take(60)}")
       }

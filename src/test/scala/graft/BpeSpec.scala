@@ -132,7 +132,7 @@ class BpeSpec extends SparkSpec {
 
   test("lineage cut goes reliable when a checkpoint dir is set, results identical") {
     import spark.implicits._
-    // ≥17 rounds so the round-16 lineage cut fires on both paths
+    // 17 rounds so the lineage cuts (every 4th round) fire on both paths
     val corpus = Seq(
       (1L, "abcdefgh ijklmnop qrstuvwx abcdefgh"),
       (2L, "abcdefgh ijklmnop yzabcdef")).toDF("doc_id", "text")

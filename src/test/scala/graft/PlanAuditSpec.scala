@@ -38,6 +38,28 @@ class PlanAuditSpec extends SparkSpec {
     assert(PlanAudit.globalWindows(docs.withColumn("r", row_number().over(w))) == 0)
   }
 
+  test("a gathered partitioned window is counted as a gather, not as a global window") {
+    // SmallGather plans the small window's hash exchange as one partition:
+    // the same SinglePartition a global window's feed has
+    val w = Window.partitionBy(col("id") % 7).orderBy(col("id"))
+    val counts = PlanAudit.structuralCounts(
+      docs.withColumn("r", row_number().over(w)).queryExecution.executedPlan)
+    assert(counts.gathers == 1 && counts.shuffles == 1 && counts.globalWindows == 0,
+      s"counts: $counts")
+  }
+
+  test("a global window over a gathered aggregate measures the rows that entered it") {
+    // the window's own single-partition feed is dropped (its input is
+    // one partition already); the measurement reaches the aggregate
+    val df = docs.groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n"))
+      .withColumn("r", row_number().over(Window.orderBy(col("k"))))
+    val counts = PlanAudit.structuralCounts(df.queryExecution.executedPlan)
+    assert(counts.gathers == 1 && counts.shuffles == 1 && counts.globalWindows == 1,
+      s"counts: $counts")
+    df.queryExecution.toRdd.count()
+    assert(PlanAudit.globalWindowInputRows(df.queryExecution.executedPlan) == Seq(7L))
+  }
+
   test("an unbounded global window fails the audit (not whitelisted)") {
     // the audit's pass condition is whitelist membership; a data-sized
     // global window in a hypothetical query has no whitelist entry
@@ -79,7 +101,7 @@ class PlanAuditSpec extends SparkSpec {
     val a = docs.select(col("id"))
     val b = docs.select(col("id").as("id2")).limit(3)
     val cross = a.crossJoin(b)
-    val (joins, _, _) = PlanAudit.structuralCounts(cross.queryExecution.executedPlan)
+    val joins = PlanAudit.structuralCounts(cross.queryExecution.executedPlan).joins
     assert(joins.getOrElse("BroadcastNestedLoopJoin", 0) +
       joins.getOrElse("CartesianProduct", 0) >= 1, s"counts: $joins")
   }

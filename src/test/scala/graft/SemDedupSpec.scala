@@ -41,8 +41,8 @@ class SemDedupSpec extends SparkSpec {
     // structural count (the PlanAudit discipline): the persisted encode
     // build plan is counted ONCE, however many sides scan the cache
     val df = SemDedup.dupPairs(withTwins, threshold = 0.9, c = 16)
-    val (joins, _, _) =
-      graft.tools.PlanAudit.structuralCounts(df.queryExecution.executedPlan)
+    val joins =
+      graft.tools.PlanAudit.structuralCounts(df.queryExecution.executedPlan).joins
     assert(joins.getOrElse("CartesianProduct", 0) == 0)
     // the only BNLJ allowed is the c-row centroid-model assignment join
     assert(joins.getOrElse("BroadcastNestedLoopJoin", 0) <= 1,
