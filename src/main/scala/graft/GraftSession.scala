@@ -32,9 +32,9 @@ object GraftSession {
       // item 1). Sized to hold a full bench
       // session's stages; executors on a real cluster run the same
       // long-lived rotation, so this is an engine default, not a
-      // local-mode tune. Parameterized for deployments.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      // local-mode tune. A deployment overrides it on the returned
+      // builder.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       // AQE inside persisted plans (default false): the dedup/ANN
       // operators persist their index tables, and with this off every
       // shuffle BELOW a persist keeps the full conf-width partition

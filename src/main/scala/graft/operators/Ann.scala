@@ -12,8 +12,10 @@ import graft.functions.Sketches
   * Scale design: brute force is the correctness baseline and is only ever
   * run against a bounded query set (queries broadcast against the
   * candidate corpus — the corpus is never self-cross-joined). The LSH
-  * path buckets the corpus by hyperplane signs so each query probes one
-  * bucket: at 100 TB the bucketed table is the persisted index.
+  * path buckets the corpus by hyperplane signs so each query probes its
+  * own bucket and every hamming-1 flip: at 100 TB the bucketed table is
+  * the persisted index. Every face that collects its query batch routes
+  * it on the driver through one module, [[graft.plans.IvfProbe]].
   */
 object Ann {
 
@@ -166,27 +168,25 @@ object Ann {
   }
 
   /** LSH-bucketed approximate top-k with multi-probe: corpus vectors are
-    * bucketed once by random-hyperplane signs; each query probes its own
+    * bucketed by random-hyperplane signs; each query probes its own
     * bucket plus every bucket at hamming distance 1 (flip one sign bit).
-    * `nBits` trades recall (fewer bits → bigger buckets) for work; the
-    * bucketed corpus is the persisted index at 100 TB — queries never
-    * touch vectors outside their probe set.
+    * `nBits` (1..31, IllegalArgumentException otherwise) trades recall
+    * (fewer bits → bigger buckets) for work; at 100 TB the bucketed
+    * corpus is the persisted index ([[lshIndex]]).
+    *
+    * The batch is collected once and routed on the driver by
+    * [[graft.plans.IvfProbe.LshRouter]], the one module every collected
+    * batch is routed by; one scan of the corpus then ranks the probed
+    * buckets, as in [[ivfSearch]] ([[probeIndex]]). Query vec_ids must be
+    * unique (IllegalArgumentException naming the duplicate otherwise);
+    * null query and corpus ids take no part, and a query never answers
+    * itself. The result is a local (qid, cid, sim, rn) table.
     */
   def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int, nBits: Int = 4): DataFrame = {
-    val dim = 64
-    val c = corpus.select(col("vec_id").as("cid"), asDouble("embedding").as("ce"))
-      .withColumn("bucket", Sketches.affineHyperplaneBucket("ce", nBits, dim))
-    val probes = expr(
-      s"array_union(array(bucket), transform(sequence(0, ${nBits - 1}), i -> bucket ^ shiftleft(1L, i)))")
-    val q = broadcast(queries.select(col("vec_id").as("qid"), asDouble("embedding").as("qe"))
-      .withColumn("bucket", Sketches.affineHyperplaneBucket("qe", nBits, dim))
-      .select(col("qid"), col("qe"), explode(probes).as("bucket")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    c.join(q, Seq("bucket")).filter(col("qid") =!= col("cid"))
-      .withColumn("sim", round(cosine("qe", "ce"), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rn"))
+    val (qs, probes) = lshBatch(queries, nBits)
+    val index = corpus.select(col("vec_id"), asDouble("embedding").as("ve"))
+      .withColumn("cluster", Sketches.affineHyperplaneBucket("ve", nBits).cast("int"))
+    probeIndex(index, qs, probes, 1L << nBits, k, excludeSelf = true)
   }
 
   /** Deterministic hash-sample of the corpus for codebook TRAINING (the
@@ -423,19 +423,37 @@ object Ann {
   }
 
   /** A query batch collected to the driver: unique non-null ids (as
-    * longs; `idType` is the column's own type) and their embeddings as
-    * doubles (nullable; a null element reads as 0.0, as in CosineSim).
+    * longs; `idType` is the column's own type), their embeddings as
+    * doubles (nullable; a null element reads as 0.0, as in CosineSim)
+    * and, for a batch collected with `lshBits` > 0, each embedding's
+    * `lshBits`-bit hyperplane bucket, hashed in the collect from the
+    * array itself (0 otherwise).
     */
-  private final class QueryBatch(val ids: Array[Long], val vecs: Array[Array[Double]],
-                                 val idType: org.apache.spark.sql.types.DataType)
+  private[graft] final class QueryBatch(val ids: Array[Long], val vecs: Array[Array[Double]],
+                                        val buckets: Array[Long],
+                                        val idType: org.apache.spark.sql.types.DataType)
 
-  private def collectQueries(queries: DataFrame): QueryBatch = {
+  private def collectQueries(queries: DataFrame, lshBits: Int = 0): QueryBatch = {
+    val bucket =
+      if (lshBits > 0) graft.plans.NativeFunctions.hyperplaneBucket(asDouble("embedding"), lshBits)
+      else lit(0L)
     val rows = queries.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), asDouble("embedding")).collect()
+      .select(col("vec_id").cast("long"), asDouble("embedding"), bucket).collect()
     val ids = rows.map(_.getLong(0))
     ids.groupBy(identity).collectFirst { case (id, dup) if dup.length > 1 => id }
       .foreach(id => throw new IllegalArgumentException(s"duplicate vec_id $id among the queries"))
-    new QueryBatch(ids, rows.map(vector(_, 1)), queries.schema("vec_id").dataType)
+    new QueryBatch(ids, rows.map(vector(_, 1)), rows.map(_.getLong(2)),
+      queries.schema("vec_id").dataType)
+  }
+
+  /** The batch and each query's multi-probe LSH cells, best first
+    * ([[graft.plans.IvfProbe.LshRouter]]); `nBits` is checked before
+    * anything runs.
+    */
+  private[graft] def lshBatch(queries: DataFrame, nBits: Int): (QueryBatch, Array[Array[Int]]) = {
+    val router = new graft.plans.IvfProbe.LshRouter(nBits)
+    val qs = collectQueries(queries, nBits)
+    (qs, qs.buckets.map(router.route))
   }
 
   /** Field `i` of `r`, an array<double>, as an array (null when the field
@@ -456,7 +474,7 @@ object Ann {
   }
 
   /** The IVF routing of [[contrastivePairsFromIndex]] (and, as
-    * [[route]], of [[ivfSearch]] and the graph walk's seeds): each
+    * [[route]], of [[ivfSearch]] and [[nswSearch]]'s seeds): each
     * query's `nprobe` closest centroids, ranked on the driver → a local
     * (qid, qe, cluster) table. Driver memory O(queries · (dim + nprobe)).
     */
@@ -529,7 +547,7 @@ object Ann {
     * unprobed cell to a probed one.
     */
   private def probeIndex(index: DataFrame, qs: QueryBatch, probes: Array[Array[Int]],
-                         cellCount: Int, k: Int, excludeSelf: Boolean): DataFrame = {
+                         cellCount: Long, k: Int, excludeSelf: Boolean): DataFrame = {
     val scan = new graft.plans.IvfProbe.Scan(qs.ids, qs.vecs, probes, k, excludeSelf)
     val cells = scan.cells
     val unfiltered = cells.length >= cellCount * UnfilteredProbeShare &&
@@ -652,14 +670,19 @@ object Ann {
 
   /** Two-level query routing: rank super-cells (keep `nprobeSuper`),
     * rank children WITHIN each probed super (keep `nprobePerSuper`
-    * leaves each), then the shared [[probeIndex]] scan. The query batch
-    * is collected once (as in [[ivfSearch]]); the routing runs over it
-    * as a local table and its (qid, cluster) probe rows are collected.
+    * leaves each), then the shared [[probeIndex]] scan. The batch is
+    * collected once and routed on the driver by
+    * [[graft.plans.IvfProbe.HierRouter]], the one module every collected
+    * batch is routed by; the search then runs as [[ivfSearch]]'s does,
+    * with its job, memory and batch contracts: query vec_ids must be
+    * unique (IllegalArgumentException naming the duplicate otherwise),
+    * and null query and index ids take no part.
     * Per query: cSuper + nprobeSuper·cChild centroid comparisons —
     * 2√c-ish, vs flat c. Per-super child ranking (not one global leaf
     * ranking) keeps probing balanced AND makes a structural guarantee
     * the oracle leans on: a vector identical to an indexed one routes
-    * to the same rank-1 super and rank-1 child, so its twin's leaf is
+    * to the same rank-1 super and rank-1 child (ties at both levels go
+    * to the higher id, as in the encode argmax), so its twin's leaf is
     * ALWAYS in the probe set.
     */
   def ivfSearchHier(superCents: Seq[(Int, Seq[Double])],
@@ -667,33 +690,10 @@ object Ann {
                     queries: DataFrame, k: Int, cChild: Int = 16,
                     nprobeSuper: Int = 2, nprobePerSuper: Int = 2,
                     excludeSelf: Boolean = true): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
     val qs = collectQueries(queries)
-    val supDf = broadcast(superCents.toDF("scid", "sce"))
-    val chDf = broadcast(children.toDF("parent", "ccid", "ce"))
-    val probeRows =
-      qs.ids.toSeq.zip(qs.vecs).toDF("qid", "qe")
-        .join(supDf)
-        .withColumn("ssim", cosine("qe", "sce"))
-        // .desc id tie-breaks MATCH the encode argmax (max(struct) prefers
-        // the higher id on an exact sim tie) — the twin guarantee above
-        // holds even on degenerate float ties
-        .withColumn("srn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("ssim").desc, col("scid").desc)))
-        .filter(col("srn") <= nprobeSuper)
-        .select(col("qid"), col("qe"), col("scid").as("parent"))
-        .join(chDf, Seq("parent"))
-        .withColumn("csim", cosine("qe", "ce"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("qid"), col("parent"))
-            .orderBy(col("csim").desc, col("ccid").desc)))
-        .filter(col("rn") <= nprobePerSuper)
-        .select(col("qid"), (col("parent") * cChild + col("ccid")).cast("int"))
-        .as[(Long, Int)].collect()
-        .groupMap(_._1)(_._2)
-    val probes = qs.ids.map(id => probeRows.getOrElse(id, Array.emptyIntArray))
-    probeIndex(index, qs, probes, children.size, k, excludeSelf)
+    val router = new graft.plans.IvfProbe.HierRouter(superCents, children, cChild)
+    probeIndex(index, qs, qs.vecs.map(router.route(_, nprobeSuper, nprobePerSuper)),
+      children.size, k, excludeSelf)
   }
 
   /** Hierarchical-IVF top-k — fit∘encode∘search composition (the
@@ -731,6 +731,16 @@ object Ann {
     corpus.select(col("vec_id"), asDouble("embedding").as("emb"))
       .withColumn("bucket", Sketches.affineHyperplaneBucket("emb", nBits, 64))
 
+  /** The multi-probe set of the bigint bucket column `bucket`, as an
+    * array: the bucket, then the bucket with bit i flipped for i = 0
+    * until nBits. Lazy SQL, for the faces that join the probes in a
+    * plan; [[graft.plans.IvfProbe.LshRouter]] is its driver twin for a
+    * collected batch (IvfSearchParitySpec checks the two agree).
+    */
+  private[graft] def lshProbeSet(bucket: String, nBits: Int): Column =
+    expr(s"array_union(array($bucket), " +
+      s"transform(sequence(0, ${nBits - 1}), i -> $bucket ^ shiftleft(1L, i)))")
+
   /** Incremental ANN ingestion (the continuous-ingestion shape, like
     * Dedup.minhashCandidatesAgainst): a NEW batch of vectors probes the
     * EXISTING bucketed index — own bucket + 1-bit flips — and each
@@ -740,10 +750,8 @@ object Ann {
     */
   def lshDupsAgainst(newVecs: DataFrame, index: DataFrame, threshold: Double,
                      nBits: Int = 4): DataFrame = {
-    val probes = expr(
-      s"array_union(array(bucket), transform(sequence(0, ${nBits - 1}), i -> bucket ^ shiftleft(1L, i)))")
-    val n = lshIndex(newVecs, nBits)
-      .select(col("vec_id").as("new_id"), col("emb").as("ne"), explode(probes).as("bucket"))
+    val n = lshIndex(newVecs, nBits).select(col("vec_id").as("new_id"), col("emb").as("ne"),
+      explode(lshProbeSet("bucket", nBits)).as("bucket"))
     // verify + threshold BEFORE the pair dedup (the cosineDupPairs
     // ordering, measured there): sim is functionally determined by the
     // pair, so the filter commutes with dropDuplicates — ordered the
@@ -782,15 +790,12 @@ object Ann {
     * is the exact-verification primitive for bounded-occupancy inputs.
     */
   def cosineDupPairs(embs: DataFrame, threshold: Double, nBits: Int = 4): DataFrame = {
-    val dim = 64
-    val base = embs.select(col("vec_id"), asDouble("embedding").as("emb"))
-      .withColumn("bucket", Sketches.affineHyperplaneBucket("emb", nBits, dim))
+    val base = lshIndex(embs, nBits)
     // probe side: own bucket + every 1-bit flip; the other side stays in
     // its home bucket — flips are symmetric, so each ≤1-bit pair is
     // found in at least one orientation and `va < vb` keeps exactly one
-    val probes = expr(
-      s"array_union(array(bucket), transform(sequence(0, ${nBits - 1}), i -> bucket ^ shiftleft(1L, i)))")
-    val a = base.select(col("vec_id").as("va"), col("emb").as("ea"), explode(probes).as("bucket"))
+    val a = base.select(col("vec_id").as("va"), col("emb").as("ea"),
+      explode(lshProbeSet("bucket", nBits)).as("bucket"))
     val b = base.select(col("vec_id").as("vb"), col("emb").as("eb"), col("bucket"))
     // sim is computed BEFORE the pair dedup so the dedup exchange moves
     // 24-byte (va, vb, sim) rows, not ~1 KB rows dragging both embedding
@@ -1179,27 +1184,27 @@ object Ann {
     conv(substring(md5(concat(lit("nsw|"), c.cast("string"))), 1, 15), 16, 10)
       .cast("long")
 
+  /** Index rows per partition of the graph-ANN build's exchange:
+    * about 2 MB of 64-d vectors.
+    */
+  private final val BuildRowsPerPartition = 4096L
+
   /** Partition count for the graph-ANN build's exchange, sized
     * from the index row count (guide §2.2: from the data, never a
-    * constant tuned for one deployment): ceil(n / rowsPerPartition),
-    * clamped to [1, spark.sql.shuffle.partitions]. rowsPerPartition is
-    * `spark.graft.ann.rowsPerPartition` (default 4096 ≈ 2 MB of 64-d
-    * vectors). At small n this avoids dozens of near-empty tasks per
-    * stage; at large n the conf value is the ceiling, so cluster
-    * deployments keep their tuned width. Callers that do not know n
-    * pass -1 and keep the conf value. Partition count never changes
-    * results (AnnSpec pins layout-independence). The walk has no
-    * exchange and does not use it.
+    * constant tuned for one deployment): ceil(n / [[BuildRowsPerPartition]]),
+    * clamped to [1, spark.sql.shuffle.partitions]. At small n this
+    * avoids dozens of near-empty tasks per stage; at large n the
+    * shuffle width is the ceiling, so cluster deployments keep their
+    * tuned width. Callers that do not know n pass -1 and keep the
+    * shuffle width. Partition count never changes results (AnnSpec pins
+    * layout-independence). The walk has no exchange and does not use it.
     */
   private def annParallelism(spark: org.apache.spark.sql.SparkSession,
                              n: Long): Int = {
     val conf = spark.sessionState.conf.numShufflePartitions
     if (n <= 0) conf
-    else {
-      val target = spark.conf.get("spark.graft.ann.rowsPerPartition", "4096").toLong
-      require(target >= 1, s"spark.graft.ann.rowsPerPartition must be >= 1, got $target")
-      math.max(1L, math.min(conf.toLong, (n + target - 1) / target)).toInt
-    }
+    else math.max(1L, math.min(conf.toLong,
+      (n + BuildRowsPerPartition - 1) / BuildRowsPerPartition)).toInt
   }
 
   /** The neighbor table (u, v, sim) over a cell-labelled index
@@ -1310,37 +1315,6 @@ object Ann {
     probes.map(_.flatMap(c => byCell.getOrElse(c, Array.emptyLongArray)))
   }
 
-  /** Centroid routing for the graph walk as a local (qid, cid) seed
-    * table: each query's `nprobe` closest cells' entry nodes.
-    */
-  private[graft] def nswSeeds(cents: Seq[(Int, Seq[Double])], queries: DataFrame,
-                              entries: DataFrame, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qs = collectQueries(queries)
-    val seeds = entrySeeds(route(cents, qs, nprobe), entries)
-    qs.ids.indices.flatMap(i => seeds(i).map(qs.ids(i) -> _)).toDF("qid", "cid")
-      .select(col("qid").cast(qs.idType), col("cid").cast(entries.schema("vec_id").dataType))
-  }
-
-  /** Multi-probe LSH routing for the graph walk: each query's own
-    * bucket and every hamming-1 flip (the [[lshKnn]] probe set) joined
-    * with the broadcast entry table → (qid, cid) seeds.
-    */
-  private[graft] def nswSeedsLsh(queries: DataFrame, entries: DataFrame,
-                                 nBits: Int): DataFrame = {
-    val probes = expr(
-      s"array_union(array(bucket), transform(sequence(0, ${nBits - 1}), i -> bucket ^ shiftleft(1L, i)))")
-    queries
-      .select(col("vec_id").as("qid"), asDouble("embedding").as("qe"))
-      .withColumn("bucket",
-        Sketches.affineHyperplaneBucket("qe", nBits, 64))
-      .select(col("qid"), explode(probes).as("pb"))
-      .select(col("qid"), col("pb").cast("int").as("cluster"))
-      .join(broadcast(entries), Seq("cluster"))
-      .select(col("qid"), col("vec_id").as("cid"))
-  }
-
   /** The walk itself, routing-agnostic, in one pass: with the query
     * batch `qs` already collected and `seeds(i)` the seed ids of its
     * query i, collect the index rows (vec_id, ve, predicate bit) and the
@@ -1418,24 +1392,24 @@ object Ann {
       .withColumn("cluster",
         Sketches.affineHyperplaneBucket("ve", nBits, 64).cast("int"))
 
-  /** Beam search over an LSH-celled graph: multi-probe LSH routing
-    * ([[nswSeedsLsh]]) seeds the same one-pass walk as [[nswSearch]],
-    * with the same driver memory bound.
+  /** Beam search over an LSH-celled graph: the batch is collected once
+    * and routed on the driver by [[graft.plans.IvfProbe.LshRouter]] (the
+    * one module every collected batch is routed by: each query's own
+    * bucket, hashed from its array, and every hamming-1 flip, with
+    * `nBits` in 1..31), and the probed buckets' entry nodes seed the
+    * same one-pass walk as [[nswSearch]], with the same driver memory
+    * bound and batch contract: query vec_ids must be unique
+    * (IllegalArgumentException naming the duplicate otherwise), and null
+    * ids take no part. Its jobs are the collects of the queries (none
+    * for a local batch), the entries, the index and the edges; it
+    * broadcasts and persists nothing.
     */
   def nswSearchLsh(edges: DataFrame, index: DataFrame, entries: DataFrame,
                    queries: DataFrame, k: Int, nBits: Int, beam: Int = 16,
                    hops: Int = 4, excludeSelf: Boolean = true,
                    pred: Option[Column] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qs = collectQueries(queries)
-    val seedsOf = nswSeedsLsh(queries, entries, nBits)
-      .select(col("qid").cast("long"), col("cid").cast("long"))
-      .filter(col("qid").isNotNull && col("cid").isNotNull)
-      .as[(Long, Long)].collect()
-      .groupMap(_._1)(_._2)
-    nswWalk(qs.ids.map(seedsOf.getOrElse(_, Array.emptyLongArray)), edges, index, qs,
-      k, beam, hops, excludeSelf, pred)
+    val (qs, probes) = lshBatch(queries, nBits)
+    nswWalk(entrySeeds(probes, entries), edges, index, qs, k, beam, hops, excludeSelf, pred)
   }
 
   /** INCREMENTAL graph ingestion — the continuous-ingestion face (the

@@ -88,7 +88,26 @@ object Components {
     * split, which is how the 100k-star spec exercises the salted path.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-                          salt: Int = 1): DataFrame = {
+                          salt: Int = 1): DataFrame =
+    components(edges, maxIter, salt, LocalEdgeMax)
+
+  /** The largest symmetric closure, in rows, that [[connectedComponents]]
+    * resolves on the driver: about 1 MB of pairs, the ivfFit/argmaxF1
+    * driver-decision budget. A 100 TB corpus' dup set exceeds it and
+    * takes the distributed loop.
+    */
+  private final val LocalEdgeMax = 65536L
+
+  /** [[connectedComponents]] by the distributed label-propagation loop
+    * alone, whatever the graph's size (ComponentsSpec compares the
+    * driver path against it).
+    */
+  private[graft] def labelPropagation(edges: DataFrame, maxIter: Int = 20,
+                                      salt: Int = 1): DataFrame =
+    components(edges, maxIter, salt, localMax = 0L)
+
+  private def components(edges: DataFrame, maxIter: Int, salt: Int,
+                         localMax: Long): DataFrame = {
     val cols = edges.columns
     val e0 = edges.select(col(cols(0)).as("a"), col(cols(1)).as("b"))
     // symmetric closure, one row per direction
@@ -99,16 +118,11 @@ object Components {
     // checkpoints + the convergence probe — and near-dup edge sets are
     // BOUNDED by construction (band/df caps), so at bench scale the loop
     // is pure job-launch latency over KB-sized tables). When the
-    // symmetric closure fits under `spark.graft.components.localEdgeMax`
-    // rows (default 65536 ≈ 1 MB of pairs — the ivfFit/argmaxF1
-    // driver-decision budget; a 100 TB corpus' dup set exceeds it and
-    // takes the distributed loop unchanged), collect it once and run
-    // min-root union-find on the driver: EXACTLY the serial truth
+    // symmetric closure fits under `localMax` rows, collect it once and
+    // run min-root union-find on the driver: EXACTLY the serial truth
     // ComponentsSpec already pins the loop against, so the two paths are
     // output-identical by the same test. One count + one collect of the
     // already-persisted closure replaces rounds x 3 jobs.
-    val localMax = edges.sparkSession.conf
-      .get("spark.graft.components.localEdgeMax", "65536").toLong
     val idType = sym.schema("a").dataType
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType

@@ -4,26 +4,34 @@ import org.apache.spark.sql.catalyst.InternalRow
 
 import CosineRank.{Hit, TopK}
 
-/** The IVF search kernels behind `Ann.ivfSearch`, pure Scala over plain
-  * arrays and internal rows. IvfSearchParitySpec pins (qid, cid, sim
-  * bits, rn) equality with the DataFrame search they replaced (every
-  * NaN counting as one value).
+/** The routing of a collected query batch and the one-scan search
+  * behind `Ann`'s IVF and LSH faces, pure Scala over plain arrays and
+  * internal rows. Every batch routing lives here: flat IVF
+  * ([[Router]]), two-level IVF ([[HierRouter]]) and multi-probe LSH
+  * ([[LshRouter]]). IvfSearchParitySpec and NswWalkParitySpec pin
+  * (qid, cid, sim bits, rn) equality with the DataFrame routings and
+  * searches they replaced (every NaN counting as one value).
   *
   * Scores and rankings are [[CosineRank]]'s. Routing ranks centroids by
   * their unrounded cosine to the query, so a null query vector probes
-  * the lowest cids. Candidates rank by sim, rounded to 4 places. A NaN
-  * sim's raw bits are not part of the contract (see [[CosineRank]]):
-  * every NaN is one value, ranked above every number.
+  * the lowest cids (the highest, under the two-level router).
+  * Candidates rank by sim, rounded to 4 places. A NaN sim's raw bits
+  * are not part of the contract (see [[CosineRank]]): every NaN is one
+  * value, ranked above every number.
   */
 object IvfProbe {
 
   /** Routes queries against a centroid model of (cid, vector) pairs; a
-    * centroid vector may be null.
+    * centroid vector may be null. Centroids rank by sim descending
+    * ([[CosineRank.compare]]), then by cid ascending or, with
+    * `tiesToHigherCid`, descending.
     */
-  final class Router(cents: Seq[(Int, Seq[Double])]) {
+  final class Router(cents: Seq[(Int, Seq[Double])], tiesToHigherCid: Boolean = false) {
     private val cids = cents.map(_._1).toArray
     private val vecs = cents.map(c => if (c._2 == null) null else c._2.toArray).toArray
     private val norms = vecs.map(v => if (v == null) 0.0 else CosineRank.norm(v))
+    // TopK breaks ties by ascending id, so a negated cid ranks descending
+    private val sign = if (tiesToHigherCid) -1L else 1L
 
     /** The cids of the `nprobe` centroids closest to `qe` (nullable),
       * best first.
@@ -34,14 +42,51 @@ object IvfProbe {
       var i = 0
       while (i < cids.length) {
         val v = vecs(i)
-        if (qe == null || v == null || v.length != qe.length) top.offer(cids(i), isNull = true, 0.0)
-        else top.offer(cids(i), isNull = false, CosineRank.cosine(qe, qNorm, v, norms(i)))
+        if (qe == null || v == null || v.length != qe.length) top.offer(sign * cids(i), isNull = true, 0.0)
+        else top.offer(sign * cids(i), isNull = false, CosineRank.cosine(qe, qNorm, v, norms(i)))
         i += 1
       }
       val out = Array.newBuilder[Int]
-      top.foreachRanked((cid, _, _) => out += cid.toInt)
+      top.foreachRanked((id, _, _) => out += (sign * id).toInt)
       out.result()
     }
+  }
+
+  /** Routes queries against a two-level model: super centroids (scid,
+    * vector) and children (parent scid, child cid, vector), whose leaf
+    * cell is `parent · cChild + child cid`.
+    */
+  final class HierRouter(superCents: Seq[(Int, Seq[Double])],
+                         children: Seq[(Int, Int, Seq[Double])], cChild: Int) {
+    private val supers = new Router(superCents, tiesToHigherCid = true)
+    private val kids: Map[Int, Router] = children.groupBy(_._1).map { case (p, cs) =>
+      p -> new Router(cs.map(c => (c._2, c._3)), tiesToHigherCid = true)
+    }
+
+    /** The leaf cells of `qe` (nullable): the `nprobeSuper` closest
+      * super centroids, then within each the `nprobePerSuper` closest
+      * children. Ties at both levels go to the higher id, as in the
+      * encode argmax (`NearestCentroidId`), so a vector identical to an
+      * indexed one always probes that vector's leaf.
+      */
+    def route(qe: Array[Double], nprobeSuper: Int, nprobePerSuper: Int): Array[Int] =
+      supers.route(qe, nprobeSuper).flatMap { p =>
+        kids.get(p).fold(Array.emptyIntArray)(_.route(qe, nprobePerSuper).map(p * cChild + _))
+      }
+  }
+
+  /** Multi-probe LSH routing over `nBits`-bit sign buckets: a query's
+    * own bucket, then the bucket with bit i flipped for i = 0 until
+    * nBits — the probe set `Ann.lshProbeSet` computes in SQL. The
+    * bucket comes from the hyperplane kernel on the query's own array
+    * (a null vector or element gives bucket 0). Buckets are below 2³¹
+    * for nBits ≤ 31, so the cells are ints.
+    */
+  final class LshRouter(nBits: Int) {
+    require(nBits >= 1 && nBits <= 31, s"LSH nBits must be in 1..31, got $nBits")
+
+    def route(bucket: Long): Array[Int] =
+      (bucket +: Array.tabulate(nBits)(i => bucket ^ (1L << i))).map(_.toInt)
   }
 
   /** One task's best candidates for query `q` (a position in the batch).

@@ -222,10 +222,8 @@ object PlanAudit {
       "q88_interval_join" -> selfJoin,
       "q64_embedding_knn_brute" ->
         "corpus role + queries-drawn-from-corpus role (bounded planted query side)",
-      "q65_embedding_knn_lsh" ->
-        "corpus role + queries-drawn-from-corpus role (bounded planted query side)",
       "q216_ann_recall" ->
-        "two ranker pipelines by definition (brute baseline + LSH candidate) — the q64 and q65 corpus/query role contracts composed; the grading join itself is rank-list-sized",
+        "the brute baseline ranker's corpus + bounded query roles (the q64 contract); the LSH candidate ranking is a local table, and the grading join is rank-list-sized",
       "q217_nn_label_agreement" ->
         "corpus role + bounded probe role (the q64 contract); the label lookups read ONE checkpointed thin (vec_id, label) projection",
       "q220_hybrid_search" ->
@@ -233,7 +231,7 @@ object PlanAudit {
       "q222_filtered_ann" ->
         "corpus role (predicate-pruned at the scan) + bounded probe role drawn from the same table (the q64 contract)",
       "q223_hybrid_indexed_recall" ->
-        "embeddings x6: the q216 grading contract (brute baseline + LSH candidate ranker pipelines) composed with the q220 fusion roles (corpus + bounded probe + probe-id spine per ranker) — every extra pass is id-pruned to the 3-probe set",
+        "embeddings x4: the brute baseline ranker's corpus + bounded probe roles (the q64 contract) and the 3-probe-id spine of each of the two fusions (the q220 roles; the LSH candidate ranking is a local table) — every extra pass is id-pruned to the 3-probe set",
       "q225_filtered_hybrid" ->
         "documents x2 (predicate-pruned lexical corpus role + the thin (doc_id, lang) metadata projection riding the vector side's filter) and embeddings x3 (the q220 corpus/probe/spine roles) — every extra pass is pruned to 2 columns or the probe set",
       "q219_corpus_diff" ->

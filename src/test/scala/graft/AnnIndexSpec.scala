@@ -241,14 +241,33 @@ class AnnIndexSpec extends SparkSpec {
     val want = rows(Ann.nswSearchLsh(Ann.nswBuild(index2, 6, 2), index2,
       Ann.nswEntries(index2), queries, k = 5, nBits = 4, beam = 16, hops = 3))
     assert(got == want, "reloaded walk must reproduce the inline composition")
-    // the query path is the LSH routing plus one collect each of the
-    // index, edges, queries and seeds, then a driver-side walk: a
-    // handful of jobs whatever `hops` is, never a job chain per hop, the
-    // NN-Descent round loop or a fit (and no schema job: the queries'
-    // parquet re-read is pinned)
-    assert(searchJobs <= 7, s"query path launched $searchJobs jobs " +
+    // the query path is one collect each of the queries (2 jobs: Tables
+    // rebalances the embeddings), the entries, the index and the edges,
+    // then driver-side routing and walk: never a job per hop, a second
+    // read of the queries, the NN-Descent round loop or a fit (and no
+    // schema job: the parquet re-reads are pinned)
+    assert(searchJobs <= 5, s"query path launched $searchJobs jobs " +
       "(a per-hop or build loop leaked into search)")
     // and it owns no state: nothing persisted outlives the call
+    assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
+  }
+
+  test("LSH and two-level IVF search: the query collect and one scan, nothing left persisted") {
+    val (sup, ch) = Ann.ivfFitHier(embs, cSuper = 4, cChild = 4, iters = 1)
+    val hIndex = Ann.ivfEncodeHier(embs, sup, ch, cChild = 4)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // routing runs on the driver, between the query collect and one
+    // scan of the corpus or index, merged on the driver. Tables
+    // rebalances the embeddings, so the query collect is 2 jobs, and so
+    // is each scan here (lshKnn's of the corpus, ivfSearchHier's of an
+    // index encoded from it): 4 jobs each, as measured
+    val (lsh, lshJobs) = countJobs(rows(Ann.lshKnn(embs, queries, k = 5, nBits = 4)))
+    val (hier, hierJobs) = countJobs(rows(Ann.ivfSearchHier(sup, ch, hIndex, queries,
+      k = 5, cChild = 4)))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(lsh.nonEmpty && hier.nonEmpty)
+    assert(lshJobs <= 4, s"lshKnn launched $lshJobs jobs")
+    assert(hierJobs <= 4, s"ivfSearchHier launched $hierJobs jobs")
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
   }
 

@@ -33,7 +33,9 @@ class ComponentsSpec extends SparkSpec {
     val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
     // without path compression this chain needs ~39 rounds; maxIter=10
     // only passes because pointer jumping halves the depth per round
-    val comp = Components.connectedComponents(edges, maxIter = 10).collect()
+    // (the loop itself: connectedComponents resolves a chain this small
+    // on the driver)
+    val comp = Components.labelPropagation(edges, maxIter = 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1 to n).forall(i => comp(i.toLong) == 1L))
   }
@@ -117,7 +119,9 @@ class ComponentsSpec extends SparkSpec {
       }
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val expected = nodes.map(i => i -> find(i.toInt).toLong).toMap
-      val got = Components.connectedComponents(edges.toDF("a", "b"),
+      // salt matters to the loop alone: the graph is small enough for
+      // connectedComponents' driver path
+      val got = Components.labelPropagation(edges.toDF("a", "b"),
           salt = if (trial % 2 == 0) 4 else 1)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"trial $trial (n=$n) diverges from union-find")
@@ -134,23 +138,17 @@ class ComponentsSpec extends SparkSpec {
     assert(run(1) == run(8))
   }
 
-  test("the small-graph driver fast path equals the distributed loop " +
-      "(r18: localEdgeMax=0 forces the loop; default takes the fast path)") {
+  test("the small-graph driver path equals the label-propagation loop") {
     val rnd = new scala.util.Random(20260819)
-    val conf = spark.conf
-    val key = "spark.graft.components.localEdgeMax"
     for (trial <- 1 to 3) {
       val n = 40 + rnd.nextInt(30)
       val edges = ((1 to n).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
         Seq((100L, 100L))).toDF("a", "b") // self-loop hardening
-      def run(): Seq[(Long, Long, Long)] =
-        Components.dedupClusters(edges).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      conf.unset(key) // default: fast path
-      val fast = run()
-      conf.set(key, "0") // disabled: the distributed label-propagation loop
-      try assert(run() == fast, s"trial $trial: fast path diverges from the loop")
-      finally conf.unset(key)
+      def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(labels(Components.connectedComponents(edges)) ==
+        labels(Components.labelPropagation(edges)),
+        s"trial $trial: the driver path diverges from the loop")
     }
   }
 

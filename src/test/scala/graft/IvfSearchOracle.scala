@@ -4,14 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Sketches
+import graft.operators.Ann
 import graft.plans.NativeFunctions
 
-/** The DataFrame formulation of `Ann.ivfSearch` and `Ann.ivfSearchHier`
-  * that the one-scan search ([[graft.plans.IvfProbe]]) replaced, kept as
-  * its parity oracle: route every query by a cross join with the
-  * broadcast centroid model and a per-query window, then equi-join the
-  * broadcast probe set against the index on `cluster`, score, and rank
-  * by a second window.
+/** The DataFrame formulation of `Ann.ivfSearch`, `Ann.ivfSearchHier` and
+  * `Ann.lshKnn` that the driver routing and one-scan search
+  * ([[graft.plans.IvfProbe]]) replaced, kept as their parity oracle:
+  * route every query in the plan (a cross join with the broadcast
+  * centroid model and a per-query window, or the query's exploded
+  * multi-probe LSH buckets), then equi-join the broadcast probe set
+  * against the index on `cluster` (the corpus on `bucket`), score, and
+  * rank by a second window.
   */
 object IvfSearchOracle {
 
@@ -78,5 +82,24 @@ object IvfSearchOracle {
       .select(col("qid"), col("qe"),
         (col("parent") * cChild + col("ccid")).cast("int").as("cluster"))
     probeIndex(index, qprobes, k, excludeSelf)
+  }
+
+  /** `Ann.lshKnn` as it was: both sides bucketed in the plan, the
+    * queries' multi-probe buckets exploded and broadcast, the join on
+    * `bucket` ranked by a per-query window. A query never answers
+    * itself.
+    */
+  def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int, nBits: Int): DataFrame = {
+    val c = corpus.select(col("vec_id").as("cid"), col("embedding").cast("array<double>").as("ce"))
+      .withColumn("bucket", Sketches.affineHyperplaneBucket("ce", nBits))
+    val q = broadcast(queryRows(queries)
+      .withColumn("bucket", Sketches.affineHyperplaneBucket("qe", nBits))
+      .select(col("qid"), col("qe"), explode(Ann.lshProbeSet("bucket", nBits)).as("bucket")))
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
+    c.join(q, Seq("bucket")).filter(col("qid") =!= col("cid"))
+      .withColumn("sim", round(cosine("qe", "ce"), 4))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("cid"), col("sim"), col("rn"))
   }
 }

@@ -7,18 +7,21 @@ import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 
 import graft.operators.Ann
+import graft.plans.NativeFunctions
 
-/** `Ann.ivfSearch`/`ivfSearchFiltered`/`ivfSearchHier` (driver routing +
-  * one index scan, [[graft.plans.IvfProbe]]) vs the DataFrame search
-  * they replaced ([[IvfSearchOracle]]): identical (qid, cid, sim bits,
-  * rn) answers and column types, each case run under whole-stage
+/** `Ann.ivfSearch`/`ivfSearchFiltered`/`ivfSearchHier`/`lshKnn` (driver
+  * routing + one index scan, [[graft.plans.IvfProbe]]) vs the DataFrame
+  * search they replaced ([[IvfSearchOracle]]): identical (qid, cid, sim
+  * bits, rn) answers and column types, each case run under whole-stage
   * codegen and interpreted. Cases: the sf0.1 vectors at nprobe 1, 4
   * and c, k 1, 10 and 50, `excludeSelf` on and off; a predicate; the
-  * hierarchical face; hand-built edge inputs (empty cells, k above the
-  * candidate count, nprobe above c, sim ties broken by cid, zero, NaN
-  * and short vectors, null vectors, ids and clusters, duplicated index
-  * rows, int query ids); and a ScalaCheck property over generated mixes
-  * of all of them.
+  * hierarchical face, with exact centroid ties; `lshKnn` at several
+  * nBits, with a query holding a null element; hand-built edge inputs
+  * (empty cells, k above the candidate count, nprobe above c, sim ties
+  * broken by cid, zero, NaN and short vectors, null vectors, ids and
+  * clusters, duplicated index rows, int query ids); a ScalaCheck
+  * property over generated mixes of all of them; and one that the
+  * driver's LSH probe sets equal the SQL ones.
   *
   * Both sides of the probe pushdown are covered: the 80-query sf0.1
   * batch at nprobe c probes every cell and scans the index unfiltered,
@@ -26,9 +29,10 @@ import graft.operators.Ann
   * bigint and double `cluster` columns keep the filter at any batch
   * size (a cast to int would alias their cells).
   *
-  * Two deliberate departures from the oracle, pinned on their own: a
-  * duplicate query id throws, and null query and index ids take no part
-  * (the oracle is fed the same inputs without those rows).
+  * Deliberate departures from the oracle, pinned on their own: a
+  * duplicate query id throws, null query and index ids take no part
+  * (the oracle is fed the same inputs without those rows), and
+  * `lshKnn` rejects nBits outside 1..31 before any job runs.
   */
 class IvfSearchParitySpec extends SparkSpec {
   import spark.implicits._
@@ -70,18 +74,6 @@ class IvfSearchParitySpec extends SparkSpec {
       .toSeq.sorted
 
   private def types(df: DataFrame) = df.schema.map(_.dataType)
-
-  /** Runs `body` under whole-stage codegen, then interpreted. */
-  private def bothModes(body: String => Unit): Unit =
-    Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN").foreach { case (ws, mode) =>
-      spark.conf.set("spark.sql.codegen.wholeStage", ws)
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try body(mode)
-      finally {
-        spark.conf.unset("spark.sql.codegen.wholeStage")
-        spark.conf.unset("spark.sql.codegen.factoryMode")
-      }
-    }
 
   private def diff(g: Seq[Answer], w: Seq[Answer]): String =
     s"${g.size} vs ${w.size} rows; only kernel ${g.diff(w).take(5)}; only oracle ${w.diff(g).take(5)}"
@@ -161,6 +153,108 @@ class IvfSearchParitySpec extends SparkSpec {
         IvfSearchOracle.ivfSearchHier(sup, ch, hIndex, queries, 10, 6, 2, 2, excl),
         s"$mode excludeSelf=$excl")
     }
+  }
+
+  test("hierarchical face: exact centroid ties go to the higher id at both levels") {
+    // supers 0 and 1 are one vector, as are children 0 and 1 of super
+    // 0 and of super 2; child 1 of super 3 is null
+    val sup = Seq((0, Seq(1.0, 0.0, 0.0)), (1, Seq(1.0, 0.0, 0.0)),
+      (2, Seq(0.0, 1.0, 0.0)), (3, Seq(0.0, 0.0, 1.0)))
+    val ch = Seq((0, 0, Seq(1.0, 0.1, 0.0)), (0, 1, Seq(1.0, 0.1, 0.0)), (0, 2, Seq(1.0, 0.0, 0.1)),
+      (1, 0, Seq(1.0, 0.0, 0.0)), (1, 1, Seq(0.9, 0.1, 0.0)),
+      (2, 0, Seq(0.0, 1.0, 0.0)), (2, 1, Seq(0.0, 1.0, 0.0)),
+      (3, 0, Seq(0.0, 0.0, 1.0)), (3, 1, null: Seq[Double]))
+    val rows = for (p <- 0 until 4; c <- 0 until 3; j <- 0 until 2) yield
+      (Option(100L + p * 10 + c * 3 + j), Option(Seq(1.0 - p * 0.2, c * 0.3, j * 0.5)), Option(p * 3 + c))
+    val qs = handQueries((Some(1L), Some(Seq(1.0, 0.0, 0.0))), (Some(2L), Some(Seq(1.0, 0.1, 0.0))),
+      (Some(3L), Some(Seq(0.0, 1.0, 0.0))), (Some(4L), None), (Some(5L), Some(Seq(0.0, 0.0, 0.0))),
+      (Some(6L), Some(Seq(Double.NaN, 1.0, 0.0))), (Some(7L), Some(Seq(1.0, 0.0))),
+      (Some(8L), Some(Seq(-0.0, 0.0, 1.0))))
+    bothModes { mode =>
+      for (ns <- Seq(1, 2, 5); np <- Seq(1, 2, 3); excl <- Seq(true, false)) assertSame(
+        Ann.ivfSearchHier(sup, ch, handIndex(rows), qs, k = 4, cChild = 3,
+          nprobeSuper = ns, nprobePerSuper = np, excludeSelf = excl),
+        IvfSearchOracle.ivfSearchHier(sup, ch, handIndex(rows), qs, 4, 3, ns, np, excl),
+        s"$mode nprobeSuper=$ns nprobePerSuper=$np excludeSelf=$excl")
+    }
+    // the ties decide the leaves: query 1 probes child 0 of super 1 and
+    // child 2 of super 0 (a three-way tie), query 2 child 1 of super 1
+    // and child 1 of super 0
+    val top = Ann.ivfSearchHier(sup, ch, handIndex(rows), qs, k = 40, cChild = 3,
+        nprobeSuper = 2, nprobePerSuper = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).groupMap(_._1)(_._2)
+    assert(top(1L).toSet == Set(110L, 111L, 106L, 107L), top(1L).toSeq)
+    assert(top(2L).toSet == Set(113L, 114L, 103L, 104L), top(2L).toSeq)
+  }
+
+  // ---- lshKnn: driver LSH routing + one corpus scan ----------------------
+
+  test("lshKnn on the sf0.1 vectors: nBits 2, 4 and 8; k 1, 10 and 50") {
+    val embs = corpus.select("vec_id", "embedding")
+    bothModes { mode =>
+      for (nBits <- Seq(2, 4, 8)) {
+        val want50 = IvfSearchOracle.lshKnn(embs, queries, 50, nBits)
+        val all = answers(want50)
+        assert(all.nonEmpty, s"$mode nBits=$nBits: oracle answered nothing")
+        for (k <- Seq(1, 10, 50)) {
+          val got = Ann.lshKnn(embs, queries, k, nBits)
+          val what = s"$mode nBits=$nBits k=$k"
+          assert(types(got) == types(want50), what)
+          val (g, w) = (answers(got), all.filter(_._4 <= k))
+          assert(g == w, s"$what: ${diff(g, w)}")
+        }
+      }
+    }
+  }
+
+  test("lshKnn edge inputs: ties, zero/NaN/short/null vectors, null corpus ids, int query ids") {
+    val rows = handRows.map { case (id, v, _) => (id, v) } ++
+      Seq((None, Some(Seq(1.0, 0.0, 0.0))), (Some(400L), Some(Seq(Double.NegativeInfinity, 1.0, 0.0))))
+    val embs = rows.toDF("vec_id", "embedding")
+    val qs = handQs.filter(col("vec_id").isNotNull)
+    val intQs = qs.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    bothModes { mode =>
+      for (nBits <- Seq(1, 2, 4); k <- Seq(1, 3, 40)) {
+        assertSame(Ann.lshKnn(embs, qs, k, nBits),
+          IvfSearchOracle.lshKnn(embs.filter(col("vec_id").isNotNull), qs, k, nBits),
+          s"$mode nBits=$nBits k=$k")
+        assertSame(Ann.lshKnn(embs, intQs, k, nBits),
+          IvfSearchOracle.lshKnn(embs.filter(col("vec_id").isNotNull), intQs, k, nBits),
+          s"$mode int ids nBits=$nBits k=$k")
+      }
+    }
+  }
+
+  test("lshKnn: a query with a null element routes from bucket 0, as the hyperplane kernel hashes it") {
+    val embs = corpus.select("vec_id", "embedding")
+    // read as 0.0, the null element hashes the vector into another bucket
+    def patched(v: String) = queries.withColumn("embedding",
+      expr(s"transform(embedding, (x, i) -> if(i = 5, $v, x))"))
+    val (withNull, zeroFilled) = (patched("null"), patched("0.0f"))
+    def buckets(qs: DataFrame) = qs.select(NativeFunctions.hyperplaneBucket(
+      col("embedding").cast("array<double>"), 4)).as[Long].collect().toSeq
+    assert(buckets(withNull).forall(_ == 0L) && buckets(zeroFilled).exists(_ != 0L))
+    bothModes { mode =>
+      val got = Ann.lshKnn(embs, withNull, 10, 4)
+      assertSame(got, IvfSearchOracle.lshKnn(embs, withNull, 10, 4), mode)
+      assert(answers(got) != answers(Ann.lshKnn(embs, zeroFilled, 10, 4)),
+        s"$mode: the input does not tell the two readings apart")
+    }
+  }
+
+  test("deliberate: lshKnn throws on a duplicate query id and on nBits outside 1..31; " +
+      "null query ids take no part") {
+    val embs = handRows.map { case (id, v, _) => (id, v) }.toDF("vec_id", "embedding")
+    val dup = handQs.unionByName(handQueries((Some(2L), Some(Seq(1.0, 0.0, 0.0)))))
+    val e = intercept[IllegalArgumentException](Ann.lshKnn(embs, dup, 3))
+    assert(e.getMessage.contains("duplicate vec_id 2"), e.getMessage)
+    for (nBits <- Seq(-1, 0, 32, 64)) {
+      val (bad, jobs) = countJobs(intercept[IllegalArgumentException](Ann.lshKnn(embs, handQs, 3, nBits)))
+      assert(bad.getMessage.contains(s"got $nBits") && jobs == 0, s"nBits=$nBits: ${bad.getMessage}, $jobs jobs")
+    }
+    val withNullId = handQs.unionByName(handQueries((None, Some(Seq(1.0, 0.0, 0.0)))))
+    assert(answers(Ann.lshKnn(embs, withNullId, 40, 2)) ==
+      answers(IvfSearchOracle.lshKnn(embs, handQs, 40, 2)))
   }
 
   // ---- hand-built edge inputs over four cells ----------------------------
@@ -283,6 +377,39 @@ class IvfSearchParitySpec extends SparkSpec {
   } yield Mix(cids.toSeq.zip(cvecs.map(_.orNull)),
     rows, qids.toSeq.zip(qnull).zip(qvecs).map { case ((id, n), v) => (if (n) None else Some(id), v) },
     k, nprobe, excl)
+
+  /** An element of an LSH query: small numbers, null, NaN, ±0.0, ±Inf. */
+  private val lshElement: Gen[java.lang.Double] = Gen.frequency(
+    1 -> Gen.const(null: java.lang.Double),
+    11 -> Gen.frequency(6 -> Gen.choose(-2.0, 2.0), 1 -> Gen.const(Double.NaN),
+      1 -> Gen.const(0.0), 1 -> Gen.const(-0.0), 1 -> Gen.const(Double.PositiveInfinity),
+      1 -> Gen.const(Double.NegativeInfinity)).map(Double.box))
+
+  /** A batch of LSH queries (null, short and 64-d vectors) and its bits. */
+  private val lshBatch: Gen[(Int, Seq[Option[Seq[java.lang.Double]]])] = for {
+    nBits <- Gen.choose(1, 31)
+    n <- Gen.choose(1, 6)
+    vs <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(None),
+      8 -> Gen.oneOf(Gen.choose(0, 8), Gen.const(64)).flatMap(d => Gen.listOfN(d, lshElement).map(Some(_)))))
+  } yield (nBits, vs)
+
+  test("ScalaCheck: the driver's LSH probe sets equal the SQL ones (nBits 1..31; null, NaN, ±0, ±Inf)") {
+    bothModes { mode =>
+      val prop = Prop.forAll(lshBatch) { case (nBits, vs) =>
+        val qs = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+        val (batch, probes) = Ann.lshBatch(qs, nBits)
+        val driver = batch.ids.zip(probes.map(_.toSeq.map(_.toLong))).toMap
+        val sql = qs.select(col("vec_id"),
+            NativeFunctions.hyperplaneBucket(col("embedding").cast("array<double>"), nBits).as("bucket"))
+          .select(col("vec_id"), Ann.lshProbeSet("bucket", nBits))
+          .as[(Long, Seq[Long])].collect().toMap
+        (driver == sql) :| s"$mode nBits=$nBits $vs: driver $driver, SQL $sql"
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
+        .withWorkers(1).withInitialSeed(Seed(20261019L)), prop)
+      assert(res.passed, s"$mode: ${res.status}")
+    }
+  }
 
   test("ScalaCheck: generated mixes equal the oracle, compiled and interpreted") {
     bothModes { mode =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Sketches
+import graft.operators.Ann
 import graft.plans.NativeFunctions
 
 /** The DataFrame formulation of `Ann.nswWalk` that the one-pass
@@ -15,8 +17,36 @@ import graft.plans.NativeFunctions
   * the final top-k ranks the allowed visited nodes. Only the layout
   * tuning of the old operator (the co-locating repartitions, their
   * persists and release) is left out — none of it changes a row.
+  *
+  * The seeds come from the DataFrame routings the driver routers
+  * ([[graft.plans.IvfProbe]]) replaced, so that a parity case compares
+  * the routing too: [[seedsIvf]] and [[seedsLsh]].
   */
 object NswWalkOracle {
+
+  /** Centroid routing for `Ann.nswSearch`: each query's `nprobe`
+    * closest cells ([[IvfSearchOracle.queryProbes]]) joined with the
+    * (cluster, vec_id) entry table → (qid, cid) seeds.
+    */
+  def seedsIvf(cents: Seq[(Int, Seq[Double])], queries: DataFrame, entries: DataFrame,
+               nprobe: Int): DataFrame =
+    IvfSearchOracle.queryProbes(cents, queries, nprobe)
+      .join(entries, Seq("cluster"))
+      .select(col("qid"), col("vec_id").as("cid"))
+
+  /** Multi-probe LSH routing for `Ann.nswSearchLsh`: each query's own
+    * bucket and every hamming-1 flip, hashed in the plan, joined with
+    * the broadcast entry table → (qid, cid) seeds.
+    */
+  def seedsLsh(queries: DataFrame, entries: DataFrame, nBits: Int): DataFrame =
+    queries
+      .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qe"))
+      .withColumn("bucket", Sketches.affineHyperplaneBucket("qe", nBits))
+      .select(col("qid"), explode(Ann.lshProbeSet("bucket", nBits)).as("pb"))
+      .select(col("qid"), col("pb").cast("int").as("cluster"))
+      .join(broadcast(entries), Seq("cluster"))
+      .select(col("qid"), col("vec_id").as("cid"))
+
   def walk(seeds: DataFrame, edges: DataFrame, index: DataFrame,
            queries: DataFrame, k: Int, beam: Int, hops: Int,
            excludeSelf: Boolean, pred: Option[Column] = None): DataFrame = {

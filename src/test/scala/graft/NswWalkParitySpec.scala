@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Ann
 
-/** `Ann.nswSearch`/`nswSearchLsh` (the one-pass driver walk,
-  * [[graft.plans.NswWalk]]) vs the DataFrame walk it replaced
-  * ([[NswWalkOracle]]) fed the same routed seeds: identical (qid, cid,
+/** `Ann.nswSearch`/`nswSearchLsh` (driver routing, [[graft.plans.IvfProbe]],
+  * and the one-pass driver walk, [[graft.plans.NswWalk]]) vs the
+  * DataFrame walk it replaced ([[NswWalkOracle]]) seeded by the
+  * DataFrame routing the routers replaced: identical (qid, cid,
   * raw sim bits, rn) answers and id types. Cases: the IVF face on the
   * sf0.1 vectors (fresh and corpus queries, `excludeSelf` on and off,
   * a predicate, an appended segment the graph does not reach,
   * hops = 0, beam = 1, k = 50, a zero query's NaN sims, a short
-  * query's null sims), the LSH face before and after `nswInsert`
-  * links a batch in, and hand-built edge inputs — edges naming absent
+  * query's null sims), the LSH face (compiled and interpreted) before
+  * and after `nswInsert` links a batch in and on queries with a null
+  * element, and hand-built edge inputs — edges naming absent
   * ids, probed cells without entries, null vectors, null predicate
   * values, duplicate vectors (sim ties broken by cid) — plus a seeded
   * generated mix of all of them.
@@ -52,17 +54,22 @@ class NswWalkParitySpec extends SparkSpec {
     assertSame(
       Ann.nswSearch(cents, edges, index, entries, queries, k, beam, hops, nprobe,
         excludeSelf, pred),
-      NswWalkOracle.walk(Ann.nswSeeds(cents, queries, entries, nprobe), edges,
+      NswWalkOracle.walk(NswWalkOracle.seedsIvf(cents, queries, entries, nprobe), edges,
         index, queries, k, beam, hops, excludeSelf, pred),
       nonEmpty)
 
+  /** The LSH face against the oracle walk seeded by the oracle's LSH
+    * routing, compiled and interpreted.
+    */
   private def lshCase(edges: DataFrame, index: DataFrame, entries: DataFrame,
                       queries: DataFrame, nBits: Int, k: Int = 5, beam: Int = 16,
                       hops: Int = 3): Unit =
-    assertSame(
-      Ann.nswSearchLsh(edges, index, entries, queries, k, nBits, beam, hops),
-      NswWalkOracle.walk(Ann.nswSeedsLsh(queries, entries, nBits), edges, index,
-        queries, k, beam, hops, excludeSelf = true))
+    bothModes { _ =>
+      assertSame(
+        Ann.nswSearchLsh(edges, index, entries, queries, k, nBits, beam, hops),
+        NswWalkOracle.walk(NswWalkOracle.seedsLsh(queries, entries, nBits), edges, index,
+          queries, k, beam, hops, excludeSelf = true))
+    }
 
   /** Corpus vectors moved off the data: ids shifted by `idBase`. */
   private def near(ids: Column, idBase: Long): DataFrame =
@@ -128,6 +135,19 @@ class NswWalkParitySpec extends SparkSpec {
     val queries = near(col("vec_id") % 40 === 11, 6000000L)
       .unionByName(near(col("vec_id") % 50 === 17, 7000000L))
     lshCase(e1.localCheckpoint(), index1, Ann.nswEntriesSampled(index1), queries, nBits)
+  }
+
+  test("LSH face: a query with a null element routes from bucket 0, as the hyperplane kernel hashes it") {
+    // the router must take the bucket from the raw array: read as 0.0,
+    // the null element hashes the vector into another bucket
+    val withNull = fresh.withColumn("embedding",
+      expr("transform(embedding, (x, i) -> if(i = 5, null, x))"))
+    val zeroFilled = fresh.withColumn("embedding",
+      expr("transform(embedding, (x, i) -> if(i = 5, 0.0f, x))"))
+    val entries = Ann.nswEntriesSampled(lshIndex)
+    def seeds(qs: DataFrame) = NswWalkOracle.seedsLsh(qs, entries, nBits).collect().toSet
+    assert(seeds(withNull) != seeds(zeroFilled), "the input does not tell the two readings apart")
+    lshCase(lshEdges, lshIndex, entries, withNull, nBits)
   }
 
   // ---- hand-built edge inputs over three axis cells ----------------------

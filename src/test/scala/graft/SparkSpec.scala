@@ -12,6 +12,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Count Spark jobs launched by `body`. The listener bus is async:
     * drain it (every job `body` ran has posted its start) before reading.
     */
+  /** Runs `body` under whole-stage codegen, then interpreted, with the
+    * mode's name.
+    */
+  def bothModes(body: String => Unit): Unit =
+    Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN").foreach { case (ws, mode) =>
+      spark.conf.set("spark.sql.codegen.wholeStage", ws)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+
   def countJobs[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {

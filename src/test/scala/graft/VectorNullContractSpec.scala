@@ -37,18 +37,6 @@ class VectorNullContractSpec extends SparkSpec {
 
   private val nul: java.lang.Double = null
 
-  /** Runs `body` under whole-stage codegen, then interpreted. */
-  private def bothModes(body: String => Unit): Unit =
-    Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN").foreach { case (ws, mode) =>
-      spark.conf.set("spark.sql.codegen.wholeStage", ws)
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try body(mode)
-      finally {
-        spark.conf.unset("spark.sql.codegen.wholeStage")
-        spark.conf.unset("spark.sql.codegen.factoryMode")
-      }
-    }
-
   private val pairs = Seq(
     d(0.6, nul, 0.8) -> d(0.5, 0.5, nul),
     d(nul, 2.0, -1.0) -> d(3.0, nul, 4.0),
