@@ -72,15 +72,22 @@ object Tables {
     val df = prefilter.fold(base)(base.filter)
     val conf = s.sessionState.conf
     val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val bytes =
-      try path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(path).getLength
-      catch { case _: Throwable => Long.MaxValue }
+    val (bytes, files) =
+      try {
+        val c = path.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(path)
+        (c.getLength, c.getFileCount)
+      } catch { case _: Throwable => (Long.MaxValue, Long.MaxValue) }
+    // a single file within the open cost is one scan split whatever the
+    // split size works out to: min(maxPartitionBytes, max(openCost, ·))
+    val oneSplit = files == 1 && bytes <= conf.filesOpenCostInBytes
     if (bytes >= conf.filesMaxPartitionBytes) df
     else if (bytesPerPartition <= 0L) df.repartition(conf.numShufflePartitions)
-    else df.repartition(math.max(1L, math.min(
-      s.sessionState.conf.numShufflePartitions.toLong,
-      (bytes + bytesPerPartition - 1) / bytesPerPartition)).toInt)
+    else {
+      val target = math.max(1L, math.min(conf.numShufflePartitions.toLong,
+        (bytes + bytesPerPartition - 1) / bytesPerPartition)).toInt
+      // a shuffle from one split into one partition spreads nothing
+      if (target == 1 && oneSplit) df else df.repartition(target)
+    }
   }
 
   /** Documents rebalance is BYTE-SIZED like [[embeddings]] (guide §2.2,
@@ -115,7 +122,9 @@ object Tables {
     * stage's task count by 32 at small scale. ~1 MB per partition
     * (~2.5k vectors) keeps dozens of tasks off each of the ANN
     * family's chained stages locally while growing partitions linearly
-    * with the table, conf-clamped at cluster scale.
+    * with the table, conf-clamped at cluster scale. A table of one
+    * file that fits one partition (under 1 MB: sf0.01, sf0.1) is read
+    * as its one scan split, with no shuffle.
     */
   def embeddings(s: SparkSession, d: String): DataFrame =
     rebalanced(s, d, "embeddings", None, bytesPerPartition = 1L << 20)

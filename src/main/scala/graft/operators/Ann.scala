@@ -394,8 +394,8 @@ object Ann {
     *      ([[graft.plans.IvfProbe.Router]]);
     *   2. scan `index` for the rows of the probed cells, keeping each
     *      query's exact-cosine top-k per task ([[probeIndex]]). The
-    *      scan prunes only on an index laid out by cell (`compactIndex`,
-    *      `bucketBy`, partitions) and only when the batch probes fewer
+    *      scan prunes only on an index laid out by cell (`bucketBy`,
+    *      partitions) and only when the batch probes fewer
     *      than half of the cells; otherwise it reads the whole index;
     *   3. merge the tasks' top-k lists on the driver.
     * Its jobs are the query collect (none for a local batch) and the
@@ -437,8 +437,10 @@ object Ann {
     val bucket =
       if (lshBits > 0) graft.plans.NativeFunctions.hyperplaneBucket(asDouble("embedding"), lshBits)
       else lit(0L)
+    // the executed plan's rows, decoded without a Dataset row encoder
     val rows = queries.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), asDouble("embedding"), bucket).collect()
+      .select(col("vec_id").cast("long"), asDouble("embedding"), bucket)
+      .queryExecution.executedPlan.executeCollect()
     val ids = rows.map(_.getLong(0))
     ids.groupBy(identity).collectFirst { case (id, dup) if dup.length > 1 => id }
       .foreach(id => throw new IllegalArgumentException(s"duplicate vec_id $id among the queries"))
@@ -459,12 +461,12 @@ object Ann {
   /** Field `i` of `r`, an array<double>, as an array (null when the field
     * is null; a null element reads as 0.0, as in CosineSim).
     */
-  private def vector(r: org.apache.spark.sql.Row, i: Int): Array[Double] =
+  private def vector(r: org.apache.spark.sql.catalyst.InternalRow, i: Int): Array[Double] =
     if (r.isNullAt(i)) null
-    else r.getSeq[Any](i).iterator.map {
-      case d: Double => d
-      case _ => 0.0
-    }.toArray
+    else {
+      val a = r.getArray(i)
+      Array.tabulate(a.numElements())(j => if (a.isNullAt(j)) 0.0 else a.getDouble(j))
+    }
 
   /** Each query's `nprobe` closest centroid ids, best first. */
   private def route(cents: Seq[(Int, Seq[Double])], qs: QueryBatch,
@@ -567,9 +569,16 @@ object Ann {
   private def hitsFrame(spark: org.apache.spark.sql.SparkSession, qs: QueryBatch,
                         hits: Array[Array[graft.plans.CosineRank.Hit]],
                         cidType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import spark.implicits._
-    qs.ids.indices.flatMap(i => hits(i).map(h => (qs.ids(i), h.cid, h.sim, h.rn)))
-      .toDF("qid", "cid", "sim", "rn")
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+    // rows built as they are stored: no encoder is derived per call
+    val rows = qs.ids.indices.flatMap(i => hits(i).map(h => InternalRow(qs.ids(i), h.cid, h.sim, h.rn)))
+    val out = Seq(AttributeReference("qid", LongType, nullable = false)(),
+      AttributeReference("cid", LongType, nullable = false)(),
+      AttributeReference("sim", DoubleType)(), AttributeReference("rn", IntegerType, nullable = false)())
+    org.apache.spark.sql.graft.Bridge.frame(spark,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(out, rows))
       .select(col("qid").cast(qs.idType), col("cid").cast(cidType), col("sim"), col("rn"))
   }
 
@@ -1171,12 +1180,16 @@ object Ann {
   // [[graft.plans.NswCellGraph]] kernel): build edges never leave a cell,
   // so the build ships each cell's vectors once and needs no further
   // exchange (REPOSE's partition-local index shape).
-  // Query cost: routing plus one collect each of the index rows, the
-  // edges, the queries and the seeds, then every query's walk runs in
-  // the driver ([[nswWalk]] → the [[graft.plans.NswWalk]] kernel, the
-  // REPOSE shape of a top-k search run to completion over a local
-  // index) — a handful of jobs whatever `hops` is, O(n·(dim + degree))
-  // driver memory, and similarity work ~ graph degree, not corpus.
+  // Query cost: routing plus the graph and the seeds, then every
+  // query's walk runs in the driver ([[nswWalk]] → the
+  // [[graft.plans.NswWalk]] kernel, the REPOSE shape of a top-k search
+  // run to completion over a local index). The graph and the seeds come
+  // from the session's serving cache ([[graft.plans.WalkCache]]): built
+  // from one collect each of the index rows, the edges and the entries
+  // when their files change, extended from the new files alone when the
+  // index only grew, and held as they are otherwise — at most a handful
+  // of jobs whatever `hops` is, O(n·(dim + degree)) driver memory, and
+  // similarity work ~ graph degree, not corpus.
   // ---------------------------------------------------------------------
 
   /** 60-bit deterministic hash rank of a vec_id (the ring/entry order). */
@@ -1286,10 +1299,10 @@ object Ann {
     * hop expands the beam through the undirected adjacency, scores the
     * new candidates exactly, and keeps the top `beam` per query; the
     * final top-k ranks over everything visited. Per call it reads the
-    * query batch, the entry table, and the whole index and edge table
-    * once into driver memory, O(n·(dim + degree)); nothing is
-    * broadcast. Deterministic: md5 entry order, (sim desc, cid)
-    * tie-breaks everywhere. `nRows` is accepted for signature stability
+    * query batch; the entry table and the whole index and edge table
+    * are read into driver memory, O(n·(dim + degree)), only when their
+    * files change ([[nswWalk]]); nothing is broadcast. Deterministic:
+    * md5 entry order, (sim desc, cid) tie-breaks everywhere. `nRows` is accepted for signature stability
     * and unused: the walk has no exchange to size.
     */
   def nswSearch(cents: Seq[(Int, Seq[Double])], edges: DataFrame,
@@ -1303,33 +1316,35 @@ object Ann {
   }
 
   /** Each query's seeds: the entry nodes of the cells it probes, from
-    * the collected (cluster, vec_id) entry table.
+    * the (cluster, vec_id) entry table, collected once per change of its
+    * files ([[graft.plans.WalkCache]]).
     */
   private def entrySeeds(probes: Array[Array[Int]], entries: DataFrame): Array[Array[Long]] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-    val byCell = entries.select(col("cluster").cast("int"), col("vec_id").cast("long"))
-      .filter(col("cluster").isNotNull && col("vec_id").isNotNull)
-      .as[(Int, Long)].collect()
-      .groupMap(_._1)(_._2)
+    val byCell = graft.plans.WalkCache.seedsByCell(entries)
     probes.map(_.flatMap(c => byCell.getOrElse(c, Array.emptyLongArray)))
   }
 
   /** The walk itself, routing-agnostic, in one pass: with the query
     * batch `qs` already collected and `seeds(i)` the seed ids of its
-    * query i, collect the index rows (vec_id, ve, predicate bit) and the
-    * edges once, build the undirected adjacency on the driver, and walk
-    * each query with a [[graft.plans.NswWalk.Walker]] — score the
-    * seeds, then `hops` rounds of expand / score the unvisited /
+    * query i, take the graph of the index rows (vec_id, ve, predicate
+    * bit) and the edges (the undirected adjacency, built on the
+    * driver) and walk each query with a [[graft.plans.NswWalk.Walker]]
+    * — score the seeds, then `hops` rounds of expand / score the unvisited /
     * top-beam (hop 1 expands every seed); final top-k over everything
     * visited. Driver memory is O(n·(dim + degree)) for an index of n
     * rows: at 20,000 64-d vectors and ~430k edges (the seeded sf1's
     * q203/q214) the walk held 16–18 MB of driver heap while walking
     * and 48–49 MB at its peak, when the collected rows and the built
     * graph coexist (heap used after GC, local[4]). Its only jobs are
-    * the collects', whatever `hops` is, and it persists nothing. The
-    * result is a local (qid, cid, sim, rn) table in the queries' and
-    * the index's id types.
+    * the collects', whatever `hops` is, and it persists nothing.
+    *
+    * The graph, and the entry table behind `seeds`, come from the
+    * session's serving cache ([[graft.plans.WalkCache]]) when the index,
+    * edges and entries are plain parquet reads: a repeat over unchanged
+    * files runs no job for them, and an index that only grew by new files
+    * costs one job that reads those files. Any other frame is collected
+    * and built on every call. The result is a local (qid, cid, sim, rn)
+    * table in the queries' and the index's id types.
     *
     * Index and query vec_ids must be unique (IllegalArgumentException
     * naming the duplicate otherwise); null ids take no part.
@@ -1347,32 +1362,11 @@ object Ann {
   private def nswWalk(seeds: Array[Array[Long]], edges: DataFrame, index: DataFrame,
                       qs: QueryBatch, k: Int, beam: Int, hops: Int,
                       excludeSelf: Boolean, pred: Option[Column]): DataFrame = {
-    val walker = new graft.plans.NswWalk.Walker(nswGraph(index, edges, pred))
+    val walker = new graft.plans.NswWalk.Walker(graft.plans.WalkCache.graph(index, edges, pred))
     val hits = qs.ids.indices.map { i =>
       walker.search(qs.ids(i), qs.vecs(i), seeds(i), k, beam, hops, excludeSelf)
     }.toArray
     hitsFrame(index.sparkSession, qs, hits, index.schema("vec_id").dataType)
-  }
-
-  /** The walk's graph: the index rows (vec_id, ve, predicate bit with
-    * null → false) and the (u, v) edges collected to the driver. Vectors
-    * decode as the query batch's do ([[collectQueries]]): a null element
-    * reads as 0.0. A method of its own so the collected rows are garbage
-    * once the graph holds its arrays.
-    */
-  private def nswGraph(index: DataFrame, edges: DataFrame,
-                       pred: Option[Column]): graft.plans.NswWalk.Graph = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val rows = index.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), asDouble("ve"),
-        coalesce(pred.getOrElse(lit(true)), lit(false)))
-      .collect()
-    val adjacency = edges.select(col("u").cast("long"), col("v").cast("long"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .as[(Long, Long)].collect()
-    new graft.plans.NswWalk.Graph(rows.map(_.getLong(0)), rows.map(vector(_, 1)),
-      rows.map(_.getBoolean(2)), adjacency)
   }
 
   /** LSH-celled NSW — the model-free deterministic graph-ANN face:
@@ -1400,8 +1394,8 @@ object Ann {
     * same one-pass walk as [[nswSearch]], with the same driver memory
     * bound and batch contract: query vec_ids must be unique
     * (IllegalArgumentException naming the duplicate otherwise), and null
-    * ids take no part. Its jobs are the collects of the queries (none
-    * for a local batch), the entries, the index and the edges; it
+    * ids take no part. Its jobs are the collect of the queries (none
+    * for a local batch) and those of [[nswWalk]]'s graph and seeds; it
     * broadcasts and persists nothing.
     */
   def nswSearchLsh(edges: DataFrame, index: DataFrame, entries: DataFrame,
@@ -1424,8 +1418,8 @@ object Ann {
     * arrivals), and (b) a hash-ring chain among the batch's own nodes
     * per bucket (the long-link spine keeps growing, and batch-local
     * pairs are ring-REACHABLE before any walk links them directly). Cost per
-    * batch: one [[nswSearchLsh]] pass (the index and edges read once,
-    * one driver-side walk per new node) + batch-sized appends —
+    * batch: one [[nswSearchLsh]] pass (the index and edges read at most
+    * once, one driver-side walk per new node) + batch-sized appends —
     * history is never re-linked wholesale.
     * `StreamingGraphAnnSpec` pins that a twin of an EARLIER streamed
     * vector is found against the accumulated graph.
@@ -1459,26 +1453,6 @@ object Ann {
       .distinct()
     (index.unionByName(bIdx), newEdges)
   }
-
-  /** Index COMPACTION — the missing piece of the fit/encode/search
-    * deployment story (r17, VERDICT r16 item 8). Streamed ingestion
-    * ([[lshDupsAgainst]], [[nswInsert]], SemDedup's accumulated index)
-    * appends per-batch SEGMENTS to the persisted bucketed tables
-    * forever: each append lands in its batch's file layout, not the
-    * warehouse bucketing, so over time a bucket's rows scatter across
-    * every segment file and the probe scan's pruning (a batch probing
-    * fewer than half of the cells, [[probeIndex]]) decays into a
-    * full-segment-list scan. Compaction
-    * re-keys the accumulated rows into the warehouse layout — one
-    * exchange on the bucket key, after which writing with
-    * bucketBy(cluster) restores the co-located layout every search
-    * face assumes. Values are untouched (row-set equality is the spec's
-    * law); only the physical layout moves.
-    */
-  def compactIndex(index: DataFrame, bucketCol: String = "cluster"): DataFrame =
-    index.repartition(
-      index.sparkSession.sessionState.conf.numShufflePartitions,
-      col(bucketCol))
 
   /** NSW graph compaction: re-link the cells TOUCHED by streamed
     * inserts. [[nswInsert]] keeps the graph navigable per batch (walk

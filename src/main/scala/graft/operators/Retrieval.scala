@@ -115,8 +115,8 @@ object Retrieval {
     * append is EXACT: appended faces equal a fresh whole-corpus build
     * row-for-row (RetrievalSpec pins the law) — no compaction pass is
     * ever needed for correctness, only the warehouse re-bucketing
-    * ([[graft.operators.Ann.compactIndex]] on the term key) to keep
-    * the probe's bucket pruning effective as segments accumulate.
+    * (`bucketBy` on the term key) to keep the probe's bucket pruning
+    * effective as segments accumulate.
     */
   def lexIndexAppend(batch: DataFrame, postings: DataFrame,
                      dl: DataFrame): (DataFrame, DataFrame, DataFrame) = {

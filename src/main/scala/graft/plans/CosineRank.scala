@@ -32,12 +32,35 @@ object CosineRank {
     math.sqrt(s)
   }
 
+  /** The norm of the `len` elements of `v` from `from`. */
+  def norm(v: Array[Double], from: Int, len: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < len) { val x = v(from + i); s += x * x; i += 1 }
+    math.sqrt(s)
+  }
+
   /** dot(q, v) / (qNorm · vNorm), for non-null `q` and `v` of equal
     * length whose norms are `qNorm` and `vNorm`.
     */
   def cosine(q: Array[Double], qNorm: Double, v: Array[Double], vNorm: Double): Double = {
     var dot = 0.0; var i = 0
     while (i < v.length) { dot += q(i) * v(i); i += 1 }
+    dot / (qNorm * vNorm)
+  }
+
+  /** [[cosine]] of `q` and the `q.length` elements of `v` from `from`. */
+  def cosine(q: Array[Double], qNorm: Double, v: Array[Double], from: Int, vNorm: Double): Double = {
+    var dot = 0.0; var i = 0
+    while (i < q.length) { dot += q(i) * v(from + i); i += 1 }
+    dot / (qNorm * vNorm)
+  }
+
+  /** [[cosine]] over float elements, each widened to a double in the
+    * same order: the bits of the double form of `v`.
+    */
+  def cosine(q: Array[Double], qNorm: Double, v: Array[Float], from: Int, vNorm: Double): Double = {
+    var dot = 0.0; var i = 0
+    while (i < q.length) { dot += q(i) * v(from + i).toDouble; i += 1 }
     dot / (qNorm * vNorm)
   }
 

@@ -27,15 +27,15 @@ import org.apache.spark.sql.types.StructType
   * it with its key; [[SchemaPin.Record]], a check rule, then files the
   * schema the inference produced under that key.
   *
-  * '''Key.''' The format; the qualified paths; the reader options; the
-  * session's `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and
+  * '''Key.''' The format; the read's [[Listing]] (the qualified paths,
+  * the reader options and the files); the session's `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and
   * `spark.sql.caseSensitive` values (GraftSession's `nanosAsLong` turns
-  * a TIMESTAMP(NANOS) column into a long); and the (name, length, mtime)
-  * of every file in each path's one-level listing, parquet's `_metadata`
-  * and `_common_metadata` summaries included and Spark's other hidden
-  * files (`_SUCCESS`, `.crc`, …) skipped, as its file index skips them.
-  * The listing is taken before inference, so a file that changes while
-  * Spark infers gives the next read a new key.
+  * a TIMESTAMP(NANOS) column into a long). The listing's files are each
+  * path's one-level `listStatus`, parquet's `_metadata` and
+  * `_common_metadata` summaries included and Spark's other hidden files
+  * (`_SUCCESS`, `.crc`, …) skipped, as its file index skips them. It is
+  * taken before inference, so a file that changes while Spark infers
+  * gives the next read a new key.
   *
   * '''Invalidation.''' Any change to a key part is a miss: an appended,
   * removed, rewritten or touched file, or a changed option or conf. A
@@ -77,13 +77,11 @@ final class SchemaPin(session: SparkSession, cache: SchemaPin.Cache)
     if (merge || u.paths.isEmpty || u.options.contains("path") ||
         u.options.contains("paths")) return None
     val hadoopConf = session.sessionState.newHadoopConfWithOptions(u.options.originalMap)
-    val listings = u.paths.map(listing(_, hadoopConf))
-    if (listings.exists(_.isEmpty)) return None
+    val listed = u.paths.map(list(_, hadoopConf))
+    if (listed.exists(_.isEmpty)) return None
     Some(Key(
       u.format.toLowerCase(Locale.ROOT),
-      listings.flatten.toVector,
-      u.options.originalMap.toVector
-        .map { case (k, v) => (k.toLowerCase(Locale.ROOT), v) }.sorted,
+      Listing(listed.flatten.map(_._1), u.options.originalMap, listed.flatten.flatMap(_._2)),
       conf.getAllConfs.toVector.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") ||
           k.startsWith("spark.sql.legacy.parquet.") || k == "spark.sql.caseSensitive"
@@ -93,8 +91,8 @@ final class SchemaPin(session: SparkSession, cache: SchemaPin.Cache)
   /** The qualified path and its files, or None when the path is a glob,
     * holds a subdirectory or cannot be listed.
     */
-  private def listing(p: String, hadoopConf: org.apache.hadoop.conf.Configuration)
-      : Option[(String, Vector[(String, Long, Long)])] =
+  private def list(p: String, hadoopConf: org.apache.hadoop.conf.Configuration)
+      : Option[(String, Seq[FileStatus])] =
     if (p.exists("{}[]*?\\".contains(_))) None
     else try {
       val path = new Path(p)
@@ -105,9 +103,7 @@ final class SchemaPin(session: SparkSession, cache: SchemaPin.Cache)
         if (status.isFile) Seq(status)
         else fs.listStatus(qualified).toSeq
           .filterNot(s => Bridge.hiddenPathName(s.getPath.getName))
-      if (files.exists(_.isDirectory)) None
-      else Some(qualified.toString ->
-        files.map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toVector.sorted)
+      if (files.exists(_.isDirectory)) None else Some(qualified.toString -> files)
     } catch { case NonFatal(_) => None }
 }
 
@@ -117,11 +113,7 @@ object SchemaPin {
   val MaxEntries = 256
 
   /** What a pinned schema was inferred from; see the class doc. */
-  final case class Key(
-      format: String,
-      listings: Vector[(String, Vector[(String, Long, Long)])],
-      options: Vector[(String, String)],
-      confs: Vector[(String, String)])
+  final case class Key(format: String, listing: Listing, confs: Vector[(String, String)])
 
   private[plans] val KeyTag = TreeNodeTag[Key]("graft.schemaPin.key")
 

@@ -42,12 +42,12 @@ class AnnIndexSpec extends SparkSpec {
     assert(got == want, "split search must reproduce the inline composition")
     // the query path is the query collect plus one scan of the probed
     // cells — never the per-Lloyd-round collect loop the fit phase runs
-    // (each round is its own multi-stage job set). Here the query
-    // collect is 2 of the 3 jobs: Tables rebalances the embeddings (the
-    // re-read of their parquet is pinned by SchemaPin: no schema job)
+    // (each round is its own multi-stage job set): 2 jobs. The
+    // embeddings are one small file, read as one split with no
+    // rebalance, and their re-read is pinned by SchemaPin: no schema job
     assert(searchJobs < fitJobs,
       s"search ($searchJobs jobs) must be lighter than fit+encode ($fitJobs)")
-    assert(searchJobs <= 3, s"query path launched $searchJobs jobs — training leaked in?")
+    assert(searchJobs <= 2, s"query path launched $searchJobs jobs — training leaked in?")
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
     // a driver-local query batch (the serving posture) costs the scan alone
     val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
@@ -241,15 +241,24 @@ class AnnIndexSpec extends SparkSpec {
     val want = rows(Ann.nswSearchLsh(Ann.nswBuild(index2, 6, 2), index2,
       Ann.nswEntries(index2), queries, k = 5, nBits = 4, beam = 16, hops = 3))
     assert(got == want, "reloaded walk must reproduce the inline composition")
-    // the query path is one collect each of the queries (2 jobs: Tables
-    // rebalances the embeddings), the entries, the index and the edges,
-    // then driver-side routing and walk: never a job per hop, a second
-    // read of the queries, the NN-Descent round loop or a fit (and no
-    // schema job: the parquet re-reads are pinned)
-    assert(searchJobs <= 5, s"query path launched $searchJobs jobs " +
+    // the query path is one collect each of the queries, the entries,
+    // the index and the edges, then driver-side routing and walk: never
+    // a job per hop, a second read of the queries, the NN-Descent round
+    // loop or a fit (and no schema job: the parquet re-reads are pinned)
+    assert(searchJobs <= 4, s"query path launched $searchJobs jobs " +
       "(a per-hop or build loop leaked into search)")
     // and it owns no state: nothing persisted outlives the call
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
+    // the session's serving cache holds the graph and the entries: a
+    // local batch over the unchanged reads runs no job at all
+    val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
+      queries.schema)
+    val (gotLocal, localJobs) = countJobs {
+      rows(Ann.nswSearchLsh(spark.read.parquet(s"$dir/edges"), spark.read.parquet(s"$dir/index"),
+        spark.read.parquet(s"$dir/entries"), local, k = 5, nBits = 4, beam = 16, hops = 3))
+    }
+    assert(gotLocal == want)
+    assert(localJobs == 0, s"a repeat over unchanged reads launched $localJobs jobs")
   }
 
   test("LSH and two-level IVF search: the query collect and one scan, nothing left persisted") {
@@ -257,17 +266,14 @@ class AnnIndexSpec extends SparkSpec {
     val hIndex = Ann.ivfEncodeHier(embs, sup, ch, cChild = 4)
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     // routing runs on the driver, between the query collect and one
-    // scan of the corpus or index, merged on the driver. Tables
-    // rebalances the embeddings, so the query collect is 2 jobs, and so
-    // is each scan here (lshKnn's of the corpus, ivfSearchHier's of an
-    // index encoded from it): 4 jobs each, as measured
+    // scan of the corpus or index, merged on the driver: 2 jobs each
     val (lsh, lshJobs) = countJobs(rows(Ann.lshKnn(embs, queries, k = 5, nBits = 4)))
     val (hier, hierJobs) = countJobs(rows(Ann.ivfSearchHier(sup, ch, hIndex, queries,
       k = 5, cChild = 4)))
     val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
     assert(lsh.nonEmpty && hier.nonEmpty)
-    assert(lshJobs <= 4, s"lshKnn launched $lshJobs jobs")
-    assert(hierJobs <= 4, s"ivfSearchHier launched $hierJobs jobs")
+    assert(lshJobs <= 2, s"lshKnn launched $lshJobs jobs")
+    assert(hierJobs <= 2, s"ivfSearchHier launched $hierJobs jobs")
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
   }
 

@@ -207,8 +207,9 @@ class SchemaPinSpec extends SparkSpec {
   test("the cache never holds more than MaxEntries entries, least recently used out first") {
     val cache = new SchemaPin.Cache
     val schema = spark.range(1).schema
-    def key(i: Int) = SchemaPin.Key("parquet",
-      Vector(s"file:/t$i" -> Vector(("part-0.parquet", i.toLong, 0L))), Vector.empty, Vector.empty)
+    def key(i: Int) = SchemaPin.Key("parquet", graft.plans.Listing(Vector(s"file:/t$i"),
+      Vector.empty, Vector(graft.plans.Listing.File(s"file:/t$i/part-0.parquet", i.toLong, 0L))),
+      Vector.empty)
     (0 until SchemaPin.MaxEntries).foreach(i => cache.put(key(i), schema))
     assert(cache.size == SchemaPin.MaxEntries)
     assert(cache.get(key(0)).contains(schema)) // key 0 is now the most recent
