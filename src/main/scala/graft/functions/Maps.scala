@@ -32,27 +32,16 @@ object Maps {
       .agg(map_from_entries(sort_array(collect_list(struct(col("k"), col("v")))))
         .as(out))
 
-  /** Presto map_union with max-wins conflict resolution (the reference
-    * keeps an arbitrary value; a deterministic engine must pin one).
-    */
-  def mapUnionMax(df: DataFrame, keys: Seq[String], mapCol: String,
-                  out: String = "map_union"): DataFrame =
-    rebuild(entryRows(df, keys, mapCol).groupBy((keys :+ "k").map(col): _*)
-      .agg(max(col("v")).as("v")), keys, out)
-
-  /** Presto map_union_sum: values of shared keys add. */
-  def mapUnionSum(df: DataFrame, keys: Seq[String], mapCol: String,
-                  out: String = "map_union_sum"): DataFrame =
-    rebuild(entryRows(df, keys, mapCol).groupBy((keys :+ "k").map(col): _*)
-      .agg(sum(col("v")).as("v")), keys, out)
-
-  /** map_union AND map_union_sum over the same input in ONE entry pass —
-    * the shape the reference executes when a query computes several map
-    * aggregates in the same GROUP BY (one AggregationNode, shared
-    * input). Separate [[mapUnionMax]]/[[mapUnionSum]] calls re-explode
-    * and re-shuffle the entry stream per aggregate and then need a join
-    * to reunite results that were never apart — at corpus scale that is
-    * two extra passes over the map column for zero information.
+  /** Presto map_union AND map_union_sum over the same input in ONE
+    * entry pass — the shape the reference executes when a query computes
+    * several map aggregates in the same GROUP BY (one AggregationNode,
+    * shared input). `outMax` resolves a key shared across rows max-wins
+    * (the reference keeps an arbitrary value; a deterministic engine
+    * must pin one); in `outSum` the values of shared keys add. One call
+    * per aggregate would re-explode and re-shuffle the entry stream per
+    * aggregate and then need a join to reunite results that were never
+    * apart — at corpus scale that is two extra passes over the map
+    * column for zero information.
     */
   def mapUnions(df: DataFrame, keys: Seq[String], mapCol: String,
                 outMax: String = "map_union",

@@ -9,48 +9,25 @@ import org.apache.spark.sql.functions._
   * sketch-style aggregation surface; the dedup application follows the
   * MinHash-LSH banding scheme of Broder '97 / MMDS ch.3).
   *
-  * All hashes derive from xxhash64 with literal seeds — deterministic
-  * across runs and executors, no RNG state to ship.
+  * All hashes are md5-derived 60-bit base hashes (minhash slots mix
+  * them affinely mod 2^31−1; graft.plans.Affine holds the shared
+  * constants) — deterministic across runs and executors, no RNG state
+  * to ship, and every step is portable SQL, so the DuckDB oracle
+  * replays the whole pipeline. The xxhash64 sketches are SQL functions only
+  * (`graft_minhash`, `graft_simhash`).
   */
 object Sketches {
-
-  /** k-permutation MinHash signature (array<bigint>, length k) over a
-    * string-array column. sig[i] = min over elements of xxhash64(elem, i).
-    * Native codegen'd kernel; SketchParitySpec pins it to its
-    * bit-identical HOF formulation.
-    */
-  def minhashSignature(setCol: String, k: Int = 32): Column =
-    graft.plans.NativeFunctions.minhashSig(col(setCol), k)
-
-  /** 64-bit SimHash of a string-array column: bit b is set when the
-    * majority of element hashes have bit b set (±1 vote per element).
-    * Native codegen'd kernel; SketchParitySpec pins it to its
-    * bit-identical HOF formulation.
-    */
-  def simhash(setCol: String): Column =
-    graft.plans.NativeFunctions.simhash64(col(setCol))
-
-  // ---- SQL-replayable (oracle-able) sketch family ----------------------
-  // md5-derived 60-bit base hashes + affine slot mixing mod 2^31−1: every
-  // step is portable SQL, so the DuckDB oracle replays the whole pipeline
-  // (graft.plans.Affine holds the shared constants).
 
   /** Per-element 60-bit md5-derived hashes, as array<bigint>. Native
     * codegen'd kernel (graft.plans.Md5Hash60) — the corpus-side hashing
     * runs once per shingle, and the interpreted HOF md5→hex→conv chain
     * was the dominant cost of the minhash/simhash pipelines. Full 60
-    * bits — simhash needs every bit to carry signal.
+    * bits — simhash needs every bit to carry signal. SketchParitySpec
+    * pins it, and its mod-P form (the input domain of the affine minhash
+    * mixing), to the conv(substr(md5)) chain the DuckDB oracle replays.
     */
   def md5Hashes(setCol: String): Column =
     graft.plans.NativeFunctions.md5Hash60(col(setCol))
-
-  /** [[md5Hashes]] reduced mod P — the input domain of the affine
-    * minhash mixing (keeps a·h + b inside 2^62). SketchParitySpec pins
-    * both faces to the conv(substr(md5)) chain the DuckDB oracle
-    * replays.
-    */
-  def md5HashesModP(setCol: String): Column =
-    graft.plans.NativeFunctions.md5Hash60(col(setCol), graft.plans.Affine.P)
 
   /** Affine MinHash signature over pre-hashed elements (native kernel;
     * SketchParitySpec pins it to its HOF formulation).
@@ -70,13 +47,6 @@ object Sketches {
     */
   def simhash60Chunks(hashCol: String): Column =
     expr(s"transform(sequence(0, 3), j -> shiftright($hashCol, cast(j as int) * 15) & 32767L)")
-
-  /** The 16-bit chunks of a simhash (for hamming-bucket candidate
-    * generation: two hashes within hamming distance 3 share at least one
-    * of 4 chunks by pigeonhole).
-    */
-  def simhashChunks(hashCol: String): Column =
-    expr(s"transform(sequence(0, 3), j -> shiftright($hashCol, j * 16) & 65535L)")
 
   /** Deterministic ±1 hyperplane components for the SQL-replayable LSH
     * bucketing: sign(i, j) = parity of (a_i·(j+1) + b_i) mod P, from the

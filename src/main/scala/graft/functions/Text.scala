@@ -86,13 +86,10 @@ object Text {
     })
   }
 
-  /** Word n-gram shingles over an existing array column (by name).
-    * expr-based because the lambda needs positional element access.
-    */
-  def shingles(wordsCol: String, n: Int = 3): Column = expr(shinglesSql(wordsCol, n))
-
-  /** SQL-fragment form of [[shingles]] (composable inside larger exprs,
-    * e.g. the parity oracles for the fused native shingle-hash kernel).
+  /** Word n-gram shingles over an existing array column (by name), as a
+    * SQL fragment: the lambda needs positional element access, and the
+    * fragment composes inside larger exprs (e.g. the parity oracles for
+    * the fused native shingle-hash kernel).
     */
   def shinglesSql(wordsCol: String, n: Int = 3): String = {
     val parts = (0 until n).map(k => s"element_at($wordsCol, i + $k)").mkString(", ")

@@ -793,7 +793,7 @@ object Ann {
     * nBits ≈ log₂(n) − 8 keeps candidates linear; recall at the fixed
     * 1-bit multi-probe drops with nBits (BENCHNOTES.md r12: 0.57 at
     * +2 bits, 0.29 at +4), so the HIGH-RECALL scale path for cosine near-dup
-    * detection is [[graft.operators.Dedup.minhashCandidates]]'s banded
+    * detection is [[graft.operators.Dedup.minhashCandidatesW]]'s banded
     * tables (recall composes across independent bands) or
     * [[graft.operators.SemDedup.dupPairs]]'s k-means cells — this face
     * is the exact-verification primitive for bounded-occupancy inputs.
@@ -1638,19 +1638,5 @@ object Ann {
           .as("n_agree"))
       .withColumn("agreement_ppm",
         expr("cast(n_agree * 1000000 div n_queries as bigint)"))
-  }
-
-  /** Exact L2 top-k baseline (the PQ recall reference; same broadcast
-    * bounded-query posture as [[bruteKnn]]).
-    */
-  def bruteKnnL2(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("qid"), asDouble("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("cid"), asDouble("embedding").as("ce"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("cid"))
-    c.join(q, col("qid") =!= col("cid"))
-      .withColumn("d2", round(l2sq("qe", "ce"), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("d2"), col("rn"))
   }
 }

@@ -82,8 +82,8 @@ object Bpe {
 
   /** (doc_id, word, cw) usage counts — ONE corpus words pass; empty
     * docs keep a single null-word row (explode_outer), the UNK/empty
-    * contract [[encodeDocCounts]] relies on. The shared input that
-    * lets one BPE consumer pay a single corpus scan for training AND
+    * contract [[encodeDocCountsFromWords]] relies on. The shared input
+    * that lets one BPE consumer pay a single corpus scan for training AND
     * per-doc encoding (via [[wordFreqFromDocCounts]]) — callers that
     * read it twice materialize it first.
     */
@@ -105,35 +105,6 @@ object Bpe {
       .groupBy(col("word"))
       .agg(sum(col("cw")).as("freq"))
 
-  /** The FULL multi-round Sennrich training loop (q177 is one round's
-    * statistics): `rounds` merge rounds, each (1) counting adjacent
-    * SYMBOL pairs over the vocab weighted by word frequency
-    * (overlapping — get_stats), (2) choosing the top pair with the
-    * deterministic (count desc, pair asc) ranking, (3) re-tokenizing
-    * the vocab with a left-to-right non-overlapping merge and
-    * (4) recording the corpus token count after the merge. Returns one
-    * row per round: (round, pair_a, pair_b, n_adjacent,
-    * n_tokens_after) — n_tokens_after strictly decreases, the loop's
-    * progress invariant.
-    *
-    * Scale shape: after ONE corpus scan builds the persisted
-    * word-frequency table, every round touches only vocab-sized data
-    * (pair explode ≈ Σ|word| rows over DISTINCT words; merge is a
-    * per-row fold). The per-round top-1 collect is a 1-row
-    * model-sized driver read — the merge DECISION, like ivfFit's
-    * centroid collect. Each round's vocab is re-persisted and the
-    * previous round released, so peak cache is 2× vocab.
-    *
-    * The merge fold represents a word's symbols as a '|'-delimited
-    * string: step(acc, s) appends s WITHOUT a delimiter when acc ends
-    * with '|'+pa and s = pb (fusing the trailing pa into pa·pb, whose
-    * tail no longer matches — non-overlap falls out), else '|'+s.
-    * Replayable in DuckDB as list_reduce over list_prepend('', syms).
-    * Training vocabulary is restricted to ^[a-z0-9]+$ word forms so
-    * the delimiter cannot occur inside a symbol (BPE corpora are
-    * pre-normalized; punctuation-bearing forms are out of the merge
-    * alphabet).
-    */
   /** Truncate the vocab's plan lineage every N rounds: an iterative
     * DataFrame whose plan references the previous round's plan grows
     * one fold/kernel layer per round, and each round re-pays
@@ -153,7 +124,7 @@ object Bpe {
     */
   private val LineageCutEvery = 4
 
-  private def lineageCut(vocab: DataFrame, round: Int): DataFrame =
+  private[graft] def lineageCut(vocab: DataFrame, round: Int): DataFrame =
     if (round % LineageCutEvery == 0) {
       // localCheckpoint blocks are NON-REPLAYABLE: an executor loss
       // mid-training loses the lineage from that point and a long
@@ -171,45 +142,23 @@ object Bpe {
       cut
     } else vocab
 
-  def trainMerges(docs: DataFrame, rounds: Int = 6): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab = charVocab(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    vocab.count()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(element_at(syms, i) AS pa, element_at(syms, i + 1) AS pb))")).as("p"),
-          col("freq"))
-        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pa"), col("pb"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (pa, pb, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        val next = vocab.select(expr(mergeFoldSql(pa, pb)).as("syms"),
-          col("freq"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nAfter = next.agg(sum(size(col("syms")).cast("long") * col("freq")))
-          .collect()(0).getLong(0)
-        vocab.unpersist(blocking = false)
-        vocab = lineageCut(next, r)
-        merges += ((r, pa, pb, cnt, nAfter))
-        r += 1
-      }
-    }
-    vocab.unpersist(blocking = false)
-    merges.toSeq.toDF("round", "pair_a", "pair_b", "n_adjacent", "n_tokens_after")
-  }
-
-  /** [[trainMerges]] with BATCHED rounds — the production-scale face of
-    * the training loop. The serial loop pays 2 driver-synchronized jobs
+  /** The FULL multi-round Sennrich training loop (q177 is one round's
+    * statistics): `rounds` merge rounds, each (1) counting adjacent
+    * SYMBOL pairs over the vocab weighted by word frequency
+    * (overlapping — get_stats), (2) choosing the top pair with the
+    * deterministic (count desc, pair asc) ranking, (3) re-tokenizing
+    * the vocab with a left-to-right non-overlapping merge and
+    * (4) recording the corpus token count after the merge. Returns one
+    * row per round: (round, pair_a, pair_b, n_adjacent,
+    * n_tokens_after) — n_tokens_after strictly decreases, the loop's
+    * progress invariant. Training vocabulary is restricted to
+    * ^[a-z0-9]+$ word forms (BPE corpora are pre-normalized;
+    * punctuation-bearing forms are out of the merge alphabet).
+    *
+    * Scale shape: after ONE corpus scan builds the persisted
+    * word-frequency table, every round touches only vocab-sized data,
+    * and rounds are BATCHED. A serial loop (the test tree's
+    * `BpeOracles.trainMerges`) pays 2 driver-synchronized jobs
     * per merge (stats top-1 + post-merge recount); at a real 32k-merge
     * vocabulary that is ~64k sequential jobs on vocab-sized data, where
     * per-job latency (not data volume) is the wall. This variant selects
@@ -246,7 +195,7 @@ object Bpe {
     * the face a consumer uses to share ONE corpus words pass between
     * training and its own encode/usage side (q182/q195/q206). An
     * alphabet-prefiltered wf (e.g. derived from [[usageByLang]]) is
-    * fine: charVocab's own `^[a-z0-9]+$` filter makes the training
+    * fine: [[charVocabWf]]'s own `^[a-z0-9]+$` filter makes the training
     * vocabulary identical either way.
     */
   def trainMergesBatchedWf(wf: DataFrame, rounds: Int = 6,
@@ -324,10 +273,11 @@ object Bpe {
         // one job: every kept merge's non-overlapping fusion count on
         // the round-START vocab (independence keeps each count valid at
         // its serial application point). Counted through the NATIVE
-        // single-merge kernel, not the interpreted mergeFoldSql
-        // aggregate() — the fold rebuilds each word as a string via
-        // O(len²) concat per merge per word and was the hottest stage
-        // of every BPE consumer (q195: 97 task-seconds at sf0.1).
+        // single-merge kernel, not an interpreted aggregate() merge
+        // fold (the test tree's BpeOracles.mergeFoldSql) — the fold
+        // rebuilds each word as a string via O(len²) concat per merge
+        // per word and was the hottest stage of every BPE consumer
+        // (q195: 97 task-seconds at sf0.1).
         // BpeSpec pins kernel == fold, so the counts are identical.
         val applyCols: Seq[Column] = kept.toSeq.zipWithIndex.map { case ((pa, pb, _), j) =>
           sum(col("freq") *
@@ -356,26 +306,8 @@ object Bpe {
     merges.toSeq.toDF("round", "pair_a", "pair_b", "n_adjacent", "n_tokens_after")
   }
 
-  /** The left-to-right non-overlapping merge of symbol pair (pa, pb)
-    * as a SQL fold over a syms array — the single primitive both
-    * training rounds and encode application repeat. pa/pb come from
-    * the `^[a-z0-9]+$` training alphabet (enforced at wordFreq
-    * filtering), so embedding them in the expression text and using
-    * '|' as the delimiter are both safe.
-    */
-  private def mergeFoldSql(pa: String, pb: String): String = {
-    // enforce the alphabet contract loudly: a pair containing ' , | or \
-    // would otherwise silently corrupt tokenization or throw a SQL
-    // parse error from inside the generated expression text
-    require(pa.matches("[a-z0-9]+") && pb.matches("[a-z0-9]+"),
-      s"BPE merge pair ('$pa', '$pb') outside the [a-z0-9]+ training alphabet")
-    s"split(substring(aggregate(syms, '', (acc, s) -> " +
-      s"CASE WHEN endswith(acc, concat('|', '$pa')) AND s = '$pb' " +
-      s"THEN concat(acc, s) ELSE concat(acc, '|', s) END), 2), '\\\\|')"
-  }
-
   /** BPE APPLICATION — tokenize the corpus with an already-trained
-    * merge list ([[trainMerges]] output order): the deployment face
+    * merge list ([[trainMergesBatched]] output order): the deployment face
     * that closes the tokenizer loop (train once, encode every corpus
     * snapshot). Returns the top-`k` subword tokens by corpus
     * occurrence count: (token, freq), ranked (freq desc, token asc).
@@ -406,7 +338,8 @@ object Bpe {
       .orderBy(col("freq").desc, col("token"))
       .limit(k)
 
-  /** The FULL (token, freq) table behind [[encodeTokens]] — also the
+  /** The FULL (token, freq) table behind [[encodeTokens]], over a
+    * precomputed (word, freq) table ([[wordFreq]] output) — also the
     * per-micro-batch unit of the STREAMING ingestion face: each batch
     * of arriving documents is tokenized against the fixed trained
     * merge list and its counts merged into a running token-frequency
@@ -415,10 +348,6 @@ object Bpe {
     * live "tokens ingested so far per subword" telemetry of a corpus
     * build, at per-batch vocab-sized cost.
     */
-  def encodeTokenFreq(docs: DataFrame,
-                      merges: Seq[(String, String)]): DataFrame =
-    encodeTokenFreqWf(wordFreq(docs), merges)
-
   def encodeTokenFreqWf(wf: DataFrame,
                         merges: Seq[(String, String)]): DataFrame = {
     val vocab = charVocabWf(wf)
@@ -432,54 +361,19 @@ object Bpe {
       .agg(sum(col("freq")).as("freq"))
   }
 
-  /** The pre-kernel formulation of [[encodeTokenFreq]]: M chained
-    * interpreted `aggregate()` folds, one per merge. Kept as the
-    * differential-parity counterpart for the native kernel
-    * (`BpeSpec` pins kernel == fold on trained merge lists) — the
-    * kernel is the deployment face because M chained HOF projections
-    * cannot reach a real 32k-merge vocabulary (CodegenFallback per
-    * fold, Catalyst analysis on an M-deep projection chain).
+  /** (syms, freq) at the character stage over the training alphabet,
+    * from a (word, freq) table — the table every BPE face starts from.
     */
-  def encodeTokenFreqFold(docs: DataFrame,
-                          merges: Seq[(String, String)]): DataFrame = {
-    var vocab = charVocab(docs)
-    for ((pa, pb) <- merges)
-      vocab = vocab.select(expr(mergeFoldSql(pa, pb)).as("syms"), col("freq"))
-    vocab.select(explode(col("syms")).as("token"), col("freq"))
-      .groupBy(col("token"))
-      .agg(sum(col("freq")).as("freq"))
-  }
-
-  /** (syms, freq) at the character stage over the training alphabet —
-    * the table every BPE face starts from.
-    */
-  private def charVocab(docs: DataFrame): DataFrame =
-    charVocabWf(wordFreq(docs))
-
-  private def charVocabWf(wf: DataFrame): DataFrame =
+  private[graft] def charVocabWf(wf: DataFrame): DataFrame =
     wf
       .filter(col("word").rlike("^[a-z0-9]+$"))
       .select(expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))").as("syms"),
         col("freq"))
 
-  /** Per-DOCUMENT subword token counts under a trained merge list —
-    * what a tokenized PACKER consumes (q195: shard layout by real
-    * tokenizer counts, not whitespace counts). The merge fold runs
-    * once per DISTINCT alphabet word (vocab-sized — the
-    * [[encodeTokenFreq]] shape; the tokenizer math costs |vocab|·M,
-    * never corpus·M); per-doc counts come from joining each document's
-    * word usage back to the word → subword-length table.
-    *
-    * Counting contract: word forms outside the training alphabet
-    * (`^[a-z0-9]+$` — punctuation-bearing) count ONE token each (the
-    * UNK convention); zero-word documents count 1 — Pack's
-    * n_tokens ≥ 1 invariant (the shards-spanned sequence explode must
-    * never see a descending range). Returns (doc_id, n_tokens).
-    */
   /** word → (word, wchars, n_sub): character count and subword count
     * under a trained merge list — the vocab-sized kernel fold SHARED by
-    * [[encodeDocCounts]] and [[fertilityFromUsage]]. Parity-load-
+    * [[encodeDocCountsFromWords]] and [[fertilityFromUsage]]. Parity-load-
     * bearing: the syms construction and the empty-merges branch are
     * replayed character-for-character by the q179/q182/q195/q206
     * oracles, so there must be exactly ONE copy.
@@ -493,18 +387,24 @@ object Bpe {
          else size(graft.plans.NativeFunctions.bpeEncode(col("syms"), merges)))
           .cast("long").as("n_sub"))
 
-  def encodeDocCounts(docs: DataFrame,
-                      merges: Seq[(String, String)]): DataFrame =
-    // ONE corpus words pass (r17 opt): the usage table supplies BOTH
-    // the distinct-word list the merge fold runs over and the per-doc
-    // counts — deriving the vocab from a second wordFreq(docs) scan
-    // paid a duplicate corpus explode for the same word set
-    encodeDocCountsFromWords(docWordCounts(docs).localCheckpoint(true),
-      merges)
-
-  /** [[encodeDocCounts]] over a precomputed (MATERIALIZED — it is read
-    * twice) [[docWordCounts]] table: the face q195 uses to share one
-    * corpus words pass across training and encoding.
+  /** Per-DOCUMENT subword token counts under a trained merge list —
+    * what a tokenized PACKER consumes (q195: shard layout by real
+    * tokenizer counts, not whitespace counts). The merge fold runs
+    * once per DISTINCT alphabet word (vocab-sized — the
+    * [[encodeTokenFreqWf]] shape; the tokenizer math costs |vocab|·M,
+    * never corpus·M); per-doc counts come from joining each document's
+    * word usage back to the word → subword-length table.
+    *
+    * Counting contract: word forms outside the training alphabet
+    * (`^[a-z0-9]+$` — punctuation-bearing) count ONE token each (the
+    * UNK convention); zero-word documents count 1 — Pack's
+    * n_tokens ≥ 1 invariant (the shards-spanned sequence explode must
+    * never see a descending range). Returns (doc_id, n_tokens).
+    *
+    * Input: a MATERIALIZED (it is read twice) [[docWordCounts]] table.
+    * It supplies BOTH the distinct-word list the merge fold runs over
+    * and the per-doc counts, so one corpus words pass serves both —
+    * and q195 shares it across training and encoding.
     */
   def encodeDocCountsFromWords(dw: DataFrame,
                                merges: Seq[(String, String)]): DataFrame = {
@@ -543,8 +443,8 @@ object Bpe {
     * contract matches training: only `^[a-z0-9]+$` word forms
     * participate.
     *
-    * Scale shape — the encodeDocCounts split: the merge fold runs once
-    * per DISTINCT alphabet word (vocab-sized, |vocab|·M), per-language
+    * Scale shape — the [[encodeDocCountsFromWords]] split: the merge
+    * fold runs once per DISTINCT alphabet word (vocab-sized, |vocab|·M), per-language
     * usage is one corpus-thin (lang, word) map-side-combined shuffle,
     * and the join keys on the unique word; the final groupBy(lang) is
     * L rows.

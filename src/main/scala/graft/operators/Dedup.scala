@@ -30,13 +30,8 @@ object Dedup {
     * is carried as a 64-bit hash, not the string: the self-join and the
     * df-count shuffle move 8-byte keys instead of ~20-byte strings, and
     * key equality is a long compare (collision odds at 64 bits are
-    * ~n²/2⁶⁵ — negligible against corpus-level shingle counts).
-    */
-  def docShingles(docs: DataFrame, n: Int = 3, maxDf: Int = 50): DataFrame =
-    docShinglesW(Text.wordsTable(docs), n, maxDf)
-
-  /** [[docShingles]] over a precomputed words table (`Text.wordsTable`
-    * output) — the shared-words-pass face.
+    * ~n²/2⁶⁵ — negligible against corpus-level shingle counts). `dw` is
+    * a words table (`Text.wordsTable` output).
     */
   def docShinglesW(dw: DataFrame, n: Int = 3, maxDf: Int = 50): DataFrame = {
     // fused shingle+xxhash64 kernel == xxhash64(concat_ws(' ', window))
@@ -53,13 +48,8 @@ object Dedup {
   /** Exact n-gram Jaccard near-duplicate pairs above `threshold`:
     * shingle-bucket self-join (shared-shingle counting), then
     * |A∩B| / (|A| + |B| − |A∩B|). No all-pairs scan: only documents
-    * sharing at least one (non-hot) shingle are ever compared.
-    */
-  def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3, maxDf: Int = 50): DataFrame =
-    jaccardPairsW(Text.wordsTable(docs), threshold, n, maxDf)
-
-  /** [[jaccardPairs]] over a precomputed words table — the shared-
-    * words-pass face.
+    * sharing at least one (non-hot) shingle are ever compared. `dw` is a
+    * words table (`Text.wordsTable` output).
     */
   def jaccardPairsW(dw: DataFrame, threshold: Double, n: Int = 3, maxDf: Int = 50): DataFrame = {
     // The shingle index feeds four consumers (df-count, both join sides,
@@ -98,13 +88,13 @@ object Dedup {
     * not the corpus), so its shingle index is explicitly `broadcast` —
     * the 100 TB training corpus streams map-side against it with NO
     * shuffle of training shingles for the probe. The df cap (shared with
-    * [[docShingles]]) drops stop-shingles that would otherwise make
+    * [[docShinglesW]]) drops stop-shingles that would otherwise make
     * every document "contaminated". One aggregation shuffle on train
     * doc_id produces the per-doc overlap counts.
     */
   def decontaminate(docs: DataFrame, evalPred: org.apache.spark.sql.Column,
                     minOverlap: Double, n: Int = 3, maxDf: Int = 50): DataFrame = {
-    val sh = docShingles(docs, n, maxDf)
+    val sh = docShinglesW(Text.wordsTable(docs), n, maxDf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ev = sh.filter(evalPred).select(col("doc_id").as("eval_id"), col("s"))
     val tr = sh.filter(!evalPred)
@@ -147,25 +137,14 @@ object Dedup {
     out
   }
 
-  /** MinHash+LSH near-duplicate candidates: k-slot signatures, banded
-    * into k/rowsPerBand buckets; documents colliding in any band become a
-    * candidate pair, scored by estimated Jaccard (signature agreement).
-    * The band join is the scale path — candidates are bounded by bucket
-    * occupancy, capped at `maxBucket` docs per (band, key).
-    */
   /** The per-document MinHash signature table — the unit that gets
     * persisted as the dedup index at warehouse scale. md5+affine sketch
     * family (not xxhash64): every step is portable SQL, so the DuckDB
     * oracle replays the pipeline end to end. Signs over 3-gram shingles
-    * (same feature set as jaccardPairs) — word sets are too coarse: a
-    * shared vocabulary makes all word-Jaccards high, while
-    * shingle-Jaccard discriminates documents.
-    */
-  def minhashSignatures(docs: DataFrame, k: Int = 32): DataFrame =
-    minhashSignaturesW(Text.wordsTable(docs), k)
-
-  /** [[minhashSignatures]] over a precomputed words table — the
-    * shared-words-pass face.
+    * (same feature set as [[jaccardPairsW]]) — word sets are too coarse:
+    * a shared vocabulary makes all word-Jaccards high, while
+    * shingle-Jaccard discriminates documents. `dw` is a words table
+    * (`Text.wordsTable` output).
     */
   def minhashSignaturesW(dw: DataFrame, k: Int = 32): DataFrame =
     dw
@@ -189,14 +168,13 @@ object Dedup {
       .select(Seq(col("doc_id"), col("sig"), col("band")) ++ slotCols: _*)
   }
 
-  def minhashCandidates(docs: DataFrame, k: Int = 32, rowsPerBand: Int = 4,
-                        maxBucket: Int = 20, minEstJaccard: Double = 0.5): DataFrame =
-    minhashCandidatesW(Text.wordsTable(docs), k, rowsPerBand, maxBucket,
-      minEstJaccard)
-
-  /** [[minhashCandidates]] over a precomputed words table — the
-    * shared-words-pass face (`dw` = `Text.wordsTable` output, persisted
-    * by callers that feed other stages from the same tokenization).
+  /** MinHash+LSH near-duplicate candidates: k-slot signatures, banded
+    * into k/rowsPerBand buckets; documents colliding in any band become a
+    * candidate pair, scored by estimated Jaccard (signature agreement).
+    * The band join is the scale path — candidates are bounded by bucket
+    * occupancy, capped at `maxBucket` docs per (band, key). `dw` is a
+    * words table (`Text.wordsTable` output, persisted by callers that
+    * feed other stages from the same tokenization).
     */
   def minhashCandidatesW(dw: DataFrame, k: Int = 32, rowsPerBand: Int = 4,
                          maxBucket: Int = 20, minEstJaccard: Double = 0.5): DataFrame = {
@@ -375,8 +353,8 @@ object Dedup {
 
   /** The calibration grid sweep shared by the q155 report and the
     * learned-threshold deployment above: join exact ground truth
-    * ([[jaccardPairs]] output) with minhash candidates
-    * ([[minhashCandidates]] output) full-outer on the pair key, and
+    * ([[jaccardPairsW]] output) with minhash candidates
+    * ([[minhashCandidatesW]] output) full-outer on the pair key, and
     * count tp/fp/fn per grid point i ∈ 6..18 (threshold i/20) in
     * integer micro-units — positives at exact ≥ 0.5, predictions at
     * est ≥ i/20, an LSH-missed true pair (est NULL → −1) counting
@@ -410,8 +388,9 @@ object Dedup {
                                k: Int = 32, rowsPerBand: Int = 4,
                                minEstJaccard: Double = 0.5): DataFrame = {
     val keyNames = (0 until rowsPerBand).map(j => s"k$j")
-    val newBands = minhashBands(minhashSignatures(newDocs, k), k, rowsPerBand)
-    // score-then-distinct: same exchange diet as [[minhashCandidates]]
+    val newBands = minhashBands(minhashSignaturesW(Text.wordsTable(newDocs), k),
+      k, rowsPerBand)
+    // score-then-distinct: same exchange diet as [[minhashCandidatesW]]
     // (est is pair-determined; survivors-only 24-byte rows shuffle)
     newBands.as("n")
       .join(index.as("o"),
@@ -424,7 +403,7 @@ object Dedup {
   }
 
   /** SimHash near-duplicate candidates: 60-bit md5+affine sketch (SQL-
-    * replayable — see [[minhashCandidates]]), bucketed on its four 15-bit
+    * replayable — see [[minhashSignaturesW]]), bucketed on its four 15-bit
     * chunks (pigeonhole: hamming ≤ 3 ⟹ some chunk equal), verified by
     * exact hamming distance.
     *
@@ -435,7 +414,7 @@ object Dedup {
     * (the q71/lshDupsAgainst reorder), and the dedup exchange now
     * carries only VERIFIED near-dup pairs (4-byte hamming payload)
     * instead of every chunk-collision candidate with two 8-byte
-    * sketches. And like [[minhashCandidates]]' hot buckets, chunks whose
+    * sketches. And like [[minhashCandidatesW]]' hot buckets, chunks whose
     * document frequency exceeds `maxChunkDf` are dropped by an
     * aggregate+broadcast anti-join before the self-join — a
     * boilerplate-heavy corpus would otherwise put near-identical docs in
@@ -476,8 +455,8 @@ object Dedup {
     * which copy of each near-dup cluster ships. Keep-earliest throws
     * away information; the production convention (RefinedWeb/
     * FineWeb-style) keeps the HIGHEST-QUALITY member. Takes the docs
-    * table and a near-dup pair table (any of [[minhashCandidates]] /
-    * [[jaccardPairs]] / [[simhashCandidates]] output), closes the
+    * table and a near-dup pair table (any of [[minhashCandidatesW]] /
+    * [[jaccardPairsW]] / [[simhashCandidates]] output), closes the
     * pairs into clusters ([[Components.dedupClusters]]), scores
     * quality ONLY for cluster members ([[Quality.score]] after a
     * semi-join prune — at 100 TB the member set is a vanishing
@@ -579,7 +558,7 @@ object Dedup {
     * identical on both engines.
     *
     * Scale shape: pairs come banded + bucket-bounded from
-    * [[minhashCandidates]] (never all-pairs); the two source lookups
+    * [[minhashCandidatesW]] (never all-pairs); the two source lookups
     * are thin unique-key equi-joins against a (doc_id, source)
     * projection; the final groupBy is |sources|² cells, map-side
     * combined.
@@ -590,7 +569,7 @@ object Dedup {
     // side re-scans the full documents parquet (text included) just to
     // project two columns (PlanAudit's multi-scan gate)
     val meta = docs.select(col("doc_id"), col("source")).localCheckpoint(true)
-    leakageFromState(meta, minhashCandidates(docs))
+    leakageFromState(meta, minhashCandidatesW(Text.wordsTable(docs)))
   }
 
   /** [[crossSourceLeakage]] over accumulated state — the STREAMING
@@ -603,7 +582,7 @@ object Dedup {
     * Pairs must carry (doc_a, doc_b, est_jaccard) where est_jaccard is
     * the MINHASH m/32 estimate (an exact dyadic double — the ·32
     * recovery below depends on it); pairs from a continuous-similarity
-    * source (e.g. jaccardPairs) would silently quantize to 1/32 steps —
+    * source (e.g. jaccardPairsW) would silently quantize to 1/32 steps —
     * attach sources to those with a plain join instead.
     */
   def leakageFromState(meta: DataFrame, pairs: DataFrame): DataFrame = {

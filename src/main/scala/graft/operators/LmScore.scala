@@ -28,30 +28,20 @@ import org.apache.spark.sql.functions._
   */
 object LmScore {
 
-  /** Tokens for scoring: Text.words minus empty-string artifacts.
-    * `split('', ' ')` yields `['']` in both engines, so an empty or
-    * whitespace-only (or null) document would otherwise count one
-    * phantom token; here it counts zero.
-    */
-  private def tokens(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    tokensW(graft.functions.Text.words(c))
-
-  /** [[tokens]] over an existing words-array column (the shared-words-
-    * pass face): same empty-form drop, same null→[] coalesce.
+  /** Tokens for scoring over a words-array column (`Text.words`
+    * output) minus empty-string artifacts. `split('', ' ')` yields
+    * `['']` in both engines, so an empty or whitespace-only (or null)
+    * document would otherwise count one phantom token; here it counts
+    * zero.
     */
   private def tokensW(w: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     coalesce(filter(w, x => x =!= ""), expr("cast(array() as array<string>)"))
 
   /** (term, lnp_micro): top-`v` unigrams with quantized smoothed
     * log-prob. `totals` rides along via broadcast cross-join — no
-    * driver-side collect of N.
-    */
-  def unigramModel(docs: DataFrame, v: Int): (DataFrame, DataFrame) =
-    unigramModelW(graft.functions.Text.wordsTable(docs), v)
-
-  /** [[unigramModel]] over a precomputed words table — the shared-
-    * words-pass face (`dw` = `Text.wordsTable` output, persisted by
-    * the caller when it has other consumers).
+    * driver-side collect of N. `dw` is a words table
+    * (`Text.wordsTable` output, persisted by the caller when it has
+    * other consumers).
     */
   def unigramModelW(dw: DataFrame, v: Int): (DataFrame, DataFrame) = {
     // ONE corpus scan for the whole model fit: the vocab-sized unigram
@@ -88,7 +78,7 @@ object LmScore {
     * plus the n_tokens=0 guards on the integer divisions.
     */
   def score(docs: DataFrame, v: Int = 4096, threshold: Double = -9.0): DataFrame =
-    scoredMicro(docs, v)
+    scoredMicroW(graft.functions.Text.wordsTable(docs), v)
       .select(col("doc_id"), col("n_tokens"),
         (col("oov_micro6").cast("double") / 1000000.0).as("oov_frac"),
         (col("avg_micro6").cast("double") / 1000000.0).as("avg_logp"),
@@ -100,14 +90,8 @@ object LmScore {
     * micro-units (avg/oov NULL for zero-token docs). `carry` names
     * passthrough doc columns (e.g. lang) that ride the score
     * aggregation as group keys, so a consumer needing them pays no
-    * extra corpus scan.
-    */
-  def scoredMicro(docs: DataFrame, v: Int = 4096,
-                  carry: Seq[String] = Nil): DataFrame =
-    scoredMicroW(graft.functions.Text.wordsTable(docs, carry), v, carry)
-
-  /** [[scoredMicro]] over a precomputed words table — the shared-
-    * words-pass face. With `dw` persisted by the caller, the model fit
+    * extra corpus scan. `dw` is a words table (`Text.wordsTable(docs,
+    * carry)` output); with `dw` persisted by the caller, the model fit
     * and the scoring pass read one tokenization instead of each
     * re-running the normText regexp over the corpus.
     */
@@ -117,22 +101,13 @@ object LmScore {
     scoredMicroAgainstW(dw, model, totals, v, carry)
   }
 
-  /** [[scoredMicro]] against a FIXED model — the streaming deployment
-    * face (the q189/Mix.keepAgainst posture: fit [[unigramModel]] ONCE
+  /** [[scoredMicroW]] against a FIXED model — the streaming deployment
+    * face (the q189/Mix.keepAgainst posture: fit [[unigramModelW]] ONCE
     * on the corpus or a calibration sample, then score every arriving
     * micro-batch under the same quantized log-probs). Scoring is
     * per-document given the model, so the streamed scores equal the
     * batch scores exactly regardless of arrival split
     * (`StreamingCcnetSpec` pins it).
-    */
-  def scoredMicroAgainst(docs: DataFrame, model: DataFrame, totals: DataFrame,
-                         v: Int = 4096, carry: Seq[String] = Nil): DataFrame =
-    scoredMicroAgainstW(graft.functions.Text.wordsTable(docs, carry),
-      model, totals, v, carry)
-
-  /** [[scoredMicroAgainst]] over a precomputed words table — the
-    * shared-words-pass face (tokens = the same empty-form filter over
-    * the words array the text face applies, so output is row-identical).
     */
   def scoredMicroAgainstW(dw: DataFrame, model: DataFrame, totals: DataFrame,
                           v: Int = 4096, carry: Seq[String] = Nil): DataFrame = {

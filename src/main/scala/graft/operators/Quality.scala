@@ -34,7 +34,7 @@ object Quality {
 
   /** [[score]] with passthrough doc columns (e.g. source, lang) riding
     * the projection — a consumer needing them pays no join and no
-    * second scan (the scoredMicro carry convention).
+    * second scan (the scoredMicroW carry convention).
     */
   def score(docs: DataFrame, carry: Seq[String]): DataFrame =
     featureTail(docs.select(

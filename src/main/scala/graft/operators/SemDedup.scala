@@ -61,15 +61,6 @@ object SemDedup {
     dupPairsFromIndex(index, threshold)
   }
 
-  /** The scale configuration: cluster via the TWO-LEVEL coarse
-    * quantizer ([[Ann.ivfFitHier]]/[[Ann.ivfEncodeHier]]), then the
-    * same intra-cluster pair search. SemDeDup's contract — "choose c
-    * so clusters stay bounded" — forces c toward the paper's ~10⁴ at
-    * 100 TB, where flat assignment (n·c candidate rows, one c×dim
-    * broadcast) dies; two-level routing costs n·(cSuper + cChild) ≈
-    * n·2√c with model-sized broadcasts per level. Same output
-    * contract as [[dupPairs]].
-    */
   /** Incremental SemDeDup ingestion (the Ann.lshDupsAgainst shape,
     * for Structured Streaming foreachBatch loops): a NEW batch is
     * encoded against the already-FITTED model — broadcast centroids
@@ -79,8 +70,8 @@ object SemDedup {
     * index is the caller's merge step, exactly how the persisted
     * bucketed index table grows at 100 TB: batch-sized encode, no
     * recompute of history.
-    */
-  /** `excludeSelf` (default true) drops pairs whose ids are EQUAL —
+    *
+    * `excludeSelf` (default true) drops pairs whose ids are EQUAL —
     * correct when the batch and the index share one id space (the
     * streaming ingestion loop, where a batch may be re-processed
     * against an index that already contains it). Pass false when the
@@ -91,31 +82,8 @@ object SemDedup {
   def dupsAgainstIndex(newVecs: DataFrame, cents: Seq[(Int, Seq[Double])],
                        index: DataFrame, threshold: Double,
                        excludeSelf: Boolean = true): DataFrame =
-    probeIndexJoin(Ann.ivfEncode(newVecs, cents), index, threshold, excludeSelf)
-
-  /** [[dupsAgainstIndex]] over a TWO-LEVEL index ([[Ann.ivfFitHier]]/
-    * [[Ann.ivfEncodeHier]] — the 100 TB cluster-count configuration):
-    * the batch is routed super→child (n·2√c work, model-sized
-    * broadcasts per level) into the SAME global leaf-id space the
-    * index persists, then the identical cluster equi-join probes it.
-    */
-  def dupsAgainstIndexHier(newVecs: DataFrame,
-                           superCents: Seq[(Int, Seq[Double])],
-                           children: Seq[(Int, Int, Seq[Double])],
-                           cChild: Int, index: DataFrame,
-                           threshold: Double,
-                           excludeSelf: Boolean = true): DataFrame =
-    probeIndexJoin(Ann.ivfEncodeHier(newVecs, superCents, children, cChild),
-      index, threshold, excludeSelf)
-
-  /** The shared probe: encoded batch (vec_id, ve, cluster) against an
-    * accumulated index of the same schema — cluster equi-join, exact
-    * cosine verify, (new_id, old_id, sim).
-    */
-  private def probeIndexJoin(enc: DataFrame, index: DataFrame,
-                             threshold: Double,
-                             excludeSelf: Boolean): DataFrame =
-    enc.select(col("cluster"), col("vec_id").as("new_id"), col("ve").as("nve"))
+    Ann.ivfEncode(newVecs, cents)
+      .select(col("cluster"), col("vec_id").as("new_id"), col("ve").as("nve"))
       .join(index.select(col("cluster"), col("vec_id").as("old_id"), col("ve").as("ove")),
         Seq("cluster"))
       .filter(if (excludeSelf) col("new_id") =!= col("old_id") else lit(true))
@@ -191,15 +159,5 @@ object SemDedup {
         coalesce(col("ngram_hit"), lit(false)).as("ngram_flag"),
         coalesce(col("sem_hit"), lit(false)).as("sem_flag"),
         col("overlap"), col("max_sim"))
-  }
-
-  def dupPairsHier(corpus: DataFrame, threshold: Double, cSuper: Int = 16,
-                   cChild: Int = 16, iters: Int = 2,
-                   trainMod: Int = 1): DataFrame = {
-    val (sup, ch) = Ann.ivfFitHier(corpus, cSuper, cChild, iters, trainMod)
-    val index = Ann.ivfEncodeHier(corpus, sup, ch, cChild)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    index.count()
-    dupPairsFromIndex(index, threshold)
   }
 }

@@ -171,28 +171,19 @@ object Winnow {
         col("start_b"), col("end_b"), col("n_fp"))
   }
 
-  /** Incremental face: new documents probed against an ACCUMULATED
-    * fingerprint index (a prior [[fingerprints]] output, persisted —
-    * bucketed by `fh` at scale so only the batch side shuffles, the
+  /** Incremental face: a new batch's fingerprints (`fp`, the batch's
+    * [[fingerprints]] output) probed against an ACCUMULATED fingerprint
+    * index (a prior [[fingerprints]] output, persisted — bucketed by
+    * `fh` at scale so only the batch side shuffles, the
     * [[graft.operators.Ann.lshDupsAgainst]] ingestion shape). Returns
     * (new_id, old_id, n_spans): spans the new batch shares with any
     * already-indexed document. The df cap is computed over the INDEX
     * (that is where boilerplate accumulates); only new-vs-indexed pairs
     * are emitted — callers fold the batch into the index afterwards.
     *
-    * A loop running detect AND cut on the same micro-batch should
-    * compute [[fingerprints]] once, persist it, and call
-    * [[spansAgainstFp]] + [[exciseAgainstFp]] with that handle — this
-    * convenience face derives its own fingerprints per call.
-    */
-  def spansAgainst(newDocs: DataFrame, index: DataFrame,
-                   k: Int = 5, w: Int = 8, maxDf: Int = 50): DataFrame =
-    spansAgainstFp(fingerprints(newDocs, k, w), index, maxDf)
-
-  /** [[spansAgainst]] over a caller-held fingerprint table (the shared-
-    * scan streaming face: one [[fingerprints]] pass per micro-batch
-    * feeds detect and cut). `fp` must be the batch's [[fingerprints]]
-    * output, persisted by the caller.
+    * A loop running detect AND cut on the same micro-batch persists
+    * `fp` once and passes it here and to [[exciseAgainstFp]]: one
+    * [[fingerprints]] pass per micro-batch feeds both.
     */
   def spansAgainstFp(fp: DataFrame, index: DataFrame,
                      maxDf: Int = 50): DataFrame =
@@ -203,7 +194,7 @@ object Winnow {
   /** Verified fingerprint matches between a batch's fingerprints and
     * the accumulated index, df-capped over the INDEX (where boilerplate
     * accumulates): (new_id, old_id, pn, diag, gram) — shared by
-    * [[spansAgainst]] (detect) and [[exciseAgainst]] (cut).
+    * [[spansAgainstFp]] (detect) and [[exciseAgainst]] (cut).
     */
   private def indexMatches(fp: DataFrame, index: DataFrame,
                            maxDf: Int): DataFrame =
@@ -246,7 +237,7 @@ object Winnow {
 
   /** The streaming counterpart of [[exciseSpans]]: cut each NEW
     * document's passages already present in the ACCUMULATED fingerprint
-    * index (the [[spansAgainst]] ingestion shape — df cap over the
+    * index (the [[spansAgainstFp]] ingestion shape — df cap over the
     * index, only the batch side shuffles when the index is bucketed by
     * fh), AND passages duplicated WITHIN the arriving batch (an
     * intra-batch [[extentsOfFp]] pass over the batch's own
@@ -273,8 +264,8 @@ object Winnow {
     * exactly what future arrivals must learn.
     *
     * This convenience face computes its own fingerprint pass; a loop
-    * that also runs [[spansAgainst]] on the same batch should persist
-    * one [[fingerprints]] output and use [[spansAgainstFp]] +
+    * that also runs detection on the same batch should persist one
+    * [[fingerprints]] output and use [[spansAgainstFp]] +
     * [[exciseAgainstFp]] so the batch is scanned once for both.
     */
   def exciseAgainst(newDocs: DataFrame, index: DataFrame,

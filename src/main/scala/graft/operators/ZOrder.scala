@@ -49,16 +49,4 @@ object ZOrder {
       .sortWithinPartitions("zval")
       .drop("zval")
       .write.mode("overwrite").parquet(path)
-
-  /** Per-file bounding boxes of (x, y) — the statistics a reader prunes
-    * with. Used by ZOrderSpec to show the z-layout's boxes are far
-    * tighter than a one-dimensional sort's.
-    */
-  def fileBoxes(spark: org.apache.spark.sql.SparkSession, path: String,
-                x: String, y: String): DataFrame =
-    spark.read.parquet(path)
-      .withColumn("file", input_file_name())
-      .groupBy("file")
-      .agg(min(x).as("x_min"), max(x).as("x_max"),
-        min(y).as("y_min"), max(y).as("y_max"), count(lit(1)).as("rows"))
 }

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the tokenizer application loop of Sennrich et al., ACL 2016, the
   * same greedy lowest-rank loop production tokenizers run per word).
   *
-  * Why an expression and not the SQL fold: `Bpe.encodeTokenFreq`'s
+  * Why an expression and not the SQL fold: `Bpe.encodeTokenFreqWf`'s
   * original formulation applied M merges as M chained `aggregate()`
   * HOF projections — HOF lambdas are CodegenFallback (interpreted),
   * and a production tokenizer carries M ≈ 32k–100k merges, where a
@@ -27,10 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * closure calls for the chained folds.
   *
   * Equivalence with the sequential per-merge fold (the DuckDB oracle's
-  * replay, and `Bpe.mergeFoldSql`): for a VALID trained merge list —
-  * one where each merged symbol pa·pb can only occur inside pairs of
-  * strictly higher rank, which is every list `trainMerges` emits,
-  * since a pair over pa·pb cannot be counted before pa·pb exists —
+  * replay, and the test tree's `BpeOracles.mergeFoldSql`): for a VALID
+  * trained merge list — one where each merged symbol pa·pb can only
+  * occur inside pairs of strictly higher rank, which is every list
+  * `Bpe.trainMergesBatched` emits, since a pair over pa·pb cannot be
+  * counted before pa·pb exists —
   * fusing the lowest rank present never creates a lower-ranked pair
   * (every new adjacency involves the new symbol, whose pairs all rank
   * higher), so the greedy order visits ranks exactly as the sequential
@@ -88,7 +89,7 @@ object BpeEncode {
 
   /** pair→rank table from the literal merge list. Enforces the
     * `^[a-z0-9]+$` alphabet contract mechanically (same contract as
-    * `Bpe.mergeFoldSql`); first occurrence of a duplicate pair wins,
+    * the test tree's `BpeOracles.mergeFoldSql`); first occurrence of a duplicate pair wins,
     * matching sequential application (the second pass finds nothing).
     */
   def buildRanks(merges: ArrayData): java.util.HashMap[String, Integer] = {

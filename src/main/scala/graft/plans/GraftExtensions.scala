@@ -348,6 +348,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       import org.apache.spark.sql.{DataFrame, SparkSession}
       import org.apache.spark.sql.functions.{col, expr}
       import graft.operators.{Dedup, Mix, Pack, Quality, Winnow}
+      import graft.functions.Text
       def tvf(name: String)(
           build: (DataFrame, Seq[Expression]) => DataFrame): Unit =
         ext.injectTableFunction((
@@ -389,13 +390,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       // dedup family
       tvf("graft_dedup_exact")((docs, _) => Dedup.exactGroups(docs))
       tvf("graft_jaccard_pairs") { (docs, a) =>
-        Dedup.jaccardPairs(docs,
+        Dedup.jaccardPairsW(Text.wordsTable(docs),
           threshold = reqNum(a, 0, "graft_jaccard_pairs", "threshold"),
           n = num(a, 1, 3, "graft_jaccard_pairs").toInt,
           maxDf = num(a, 2, 50, "graft_jaccard_pairs").toInt)
       }
       tvf("graft_minhash_pairs") { (docs, a) =>
-        Dedup.minhashCandidates(docs,
+        Dedup.minhashCandidatesW(Text.wordsTable(docs),
           k = num(a, 0, 32, "graft_minhash_pairs").toInt,
           rowsPerBand = num(a, 1, 4, "graft_minhash_pairs").toInt,
           maxBucket = num(a, 2, 20, "graft_minhash_pairs").toInt,
@@ -420,7 +421,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           maxDf = num(a, 2, 50, "graft_excise_spans").toInt)
       }
       tvf("graft_dedup_keep_best") { (docs, a) =>
-        Dedup.keepBest(docs, Dedup.minhashCandidates(docs,
+        Dedup.keepBest(docs, Dedup.minhashCandidatesW(Text.wordsTable(docs),
           minEstJaccard = num(a, 0, 0.5, "graft_dedup_keep_best")))
       }
       // mix family (budget is REQUIRED — a defaulted token budget would
@@ -450,7 +451,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       // corpus/index table, from SQL
       tvf2("graft_minhash_against") { (batch, corpus, a) =>
         Dedup.minhashCandidatesAgainst(batch,
-          Dedup.minhashBands(Dedup.minhashSignatures(corpus)),
+          Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(corpus))),
           minEstJaccard = num(a, 0, 0.5, "graft_minhash_against"))
       }
       tvf2("graft_excise_against") { (batch, corpus, a) =>
@@ -577,7 +578,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       // curation reports (q204/q205/q206 faces)
       tvf("graft_dedup_savings") { (docs, _) =>
         graft.operators.Components.savingsBySource(docs,
-          Dedup.minhashCandidates(docs).select(col("doc_a"), col("doc_b")))
+          Dedup.minhashCandidatesW(Text.wordsTable(docs)).select(col("doc_a"), col("doc_b")))
       }
       tvf("graft_source_leakage")((docs, _) => Dedup.crossSourceLeakage(docs))
       // graft_fertility('docs', 'merges'): trained merge list as a fit
@@ -681,12 +682,6 @@ object NativeFunctions {
   /** One NSW cell's ring + NN-Descent edges — see [[NswCellGraph]]. */
   def nswCellGraph(members: Column, kNbr: Int, rounds: Int): Column =
     Bridge.column(NswCellGraph(col2expr(members), kNbr, rounds))
-
-  def minhashSig(arr: Column, k: Int): Column =
-    Bridge.column(MinHashSig(col2expr(arr), k))
-
-  def simhash64(arr: Column): Column =
-    Bridge.column(SimHash64(col2expr(arr)))
 
   def minhashAffine(hashes: Column, k: Int): Column =
     Bridge.column(MinHashAffine(col2expr(hashes), k))

@@ -633,8 +633,8 @@ object AggregateQueries extends QueryFamily {
       .agg(map_from_entries(sort_array(collect_list(struct(col("seg"), col("cnt")))))
         .as("m"))
       .localCheckpoint(true)
-    // both unions in ONE entry pass (r6 plan diet: the mapUnionMax +
-    // mapUnionSum + join shape re-shuffled the same entries twice and
+    // both unions in ONE entry pass (r6 plan diet: a max-union +
+    // sum-union + join shape re-shuffled the same entries twice and
     // sort-merge-joined two 5-row aggregates back together)
     val u = Maps.mapUnions(nmaps, Seq("region"), "m", "u_max", "u_sum")
     // the multimap's input is nmaps re-exploded, not a fresh cn pass
@@ -790,7 +790,7 @@ object AggregateQueries extends QueryFamily {
   // sorted; set_union = distinct union of array inputs; any_value is
   // "arbitrary" in the reference — graft pins min so results are
   // reproducible under any partitioning (same determinism contract as
-  // Maps.mapUnionMax). All hash-aggregate with map-side partials; xor
+  // Maps.mapUnions' max-wins union). All hash-aggregate with map-side partials; xor
   // is commutative/associative so partial combine is exact.
   val q134 = Q(
     "q134_set_aggs",

@@ -56,7 +56,7 @@ object PipelineQueries extends QueryFamily {
        |FROM pairs JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
        |WHERE round(CAST(shared AS DOUBLE) / (ca.n + cb.n - shared), 6) >= 0.5
        |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-    Dedup.jaccardPairs(Tables.documents(s, d), threshold = 0.5)
+    Dedup.jaccardPairsW(Text.wordsTable(Tables.documents(s, d)), threshold = 0.5)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -99,7 +99,7 @@ object PipelineQueries extends QueryFamily {
   val q62 = Q(
     "q62_dedup_minhash",
     s"$q62PairsSql\nORDER BY doc_a, doc_b") { (s, d) =>
-    Dedup.minhashCandidates(Tables.documents(s, d))
+    Dedup.minhashCandidatesW(Text.wordsTable(Tables.documents(s, d)))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -597,7 +597,7 @@ object PipelineQueries extends QueryFamily {
        |FROM comp JOIN sz USING (cluster_id)
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     import graft.operators.Components
-    val pairs = Dedup.minhashCandidates(Tables.documents(s, d))
+    val pairs = Dedup.minhashCandidatesW(Text.wordsTable(Tables.documents(s, d)))
       .select(col("doc_a"), col("doc_b"))
     Components.dedupClusters(pairs).orderBy("doc_id")
   }
@@ -1550,8 +1550,8 @@ object PipelineQueries extends QueryFamily {
   // count pairs → pick top merge → re-tokenize the vocab → recount, for
   // k rounds. The oracle UNROLLS the same k rounds in SQL — DuckDB's
   // list_reduce over list_prepend('', syms) replays the '|'-delimited
-  // left-to-right non-overlapping merge fold exactly (see
-  // Bpe.trainMerges), so pair choice, overlapping counts, AND the
+  // left-to-right non-overlapping merge fold exactly (see the test
+  // tree's BpeOracles.mergeFoldSql), so pair choice, overlapping counts, AND the
   // post-merge corpus token count are compared bit-for-bit per round.
   private val bpeRounds = 6
   // The unrolled k-round training CTE chain, shared by q179 (reads the
@@ -1678,7 +1678,7 @@ object PipelineQueries extends QueryFamily {
       .orderBy("round").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     // the oracle unrolls EXACTLY bpeRounds rounds; a corpus too small
-    // to sustain them (trainMerges exhausts early) would silently
+    // to sustain them (training exhausts early) would silently
     // diverge — its t_r CTE goes empty and the cross join annihilates
     // the oracle vocab while Spark applies fewer merges. Fail loudly.
     require(merges.length == bpeRounds,
@@ -2013,8 +2013,8 @@ object PipelineQueries extends QueryFamily {
   // q163/q181/q190 pack by whitespace token counts; a real training
   // run packs by the TOKENIZER's counts — a tokenizer-aware corpus
   // build composes q179 (train merges) → per-doc subword counts
-  // (Bpe.encodeDocCounts: the vocab-sized merge fold joined back to
-  // word usage — tokenizer math costs |vocab|·M, never corpus·M) →
+  // (Bpe.encodeDocCountsFromWords: the vocab-sized merge fold joined
+  // back to word usage — tokenizer math costs |vocab|·M, never corpus·M) →
   // q181's seeded shard packer over the corpus-THIN counted table.
   // Out-of-alphabet words count 1 (UNK); empty docs count 1 (Pack's
   // n_tokens ≥ 1 invariant). FULL oracle: q179's unrolled training
@@ -3170,7 +3170,7 @@ object PipelineQueries extends QueryFamily {
        | CAST(CAST(tokens_removed AS HUGEINT) * 1000000 // tokens_total AS BIGINT) AS removal_ppm
        |FROM g ORDER BY source""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val pairs = Dedup.minhashCandidates(docs).select(col("doc_a"), col("doc_b"))
+    val pairs = Dedup.minhashCandidatesW(Text.wordsTable(docs)).select(col("doc_a"), col("doc_b"))
     graft.operators.Components.savingsBySource(docs, pairs)
       .orderBy("source")
   }
@@ -3226,7 +3226,7 @@ object PipelineQueries extends QueryFamily {
          |FROM f ORDER BY lang""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
     // ONE corpus words pass: the per-(lang, word) usage table feeds
-    // training (summed over langs — charVocab's alphabet filter makes
+    // training (summed over langs — charVocabWf's alphabet filter makes
     // the training vocabulary identical to a wordFreq-derived one) and
     // the fertility report (r17 opt)
     val usage = graft.operators.Bpe.usageByLang(docs).localCheckpoint(true)
@@ -3567,7 +3567,7 @@ object PipelineQueries extends QueryFamily {
       val meta = docs.select(col("doc_id"),
         expr("cast(size(split(trim(text), '\\\\s+')) as bigint)").as("toks"))
         .localCheckpoint(true)
-      val pairs = Dedup.minhashCandidates(docs).localCheckpoint(true)
+      val pairs = Dedup.minhashCandidatesW(Text.wordsTable(docs)).localCheckpoint(true)
       graft.operators.Components.roiSweep(meta, pairs, thresholds)
         .orderBy("threshold")
     }

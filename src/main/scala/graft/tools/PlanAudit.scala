@@ -333,7 +333,7 @@ object PlanAudit {
     * audit exits non-zero.
     *
     * KNOWN BLIND SPOT (documented, not fixable at this layer):
-    * driver-looped training queries (q179 trainMerges — its result is
+    * driver-looped training queries (q179 trainMergesBatched — its result is
     * a collected local table; q182's training phase; every ivfFit-
     * style centroid collect) and checkpoint-fronted compositions
     * (q190's mix stage, localCheckpointed so the pack plan stays

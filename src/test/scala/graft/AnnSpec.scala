@@ -8,6 +8,25 @@ class AnnSpec extends SparkSpec {
 
   private def embs = Tables.embeddings(spark, sfDir)
 
+  /** Exact L2 top-k of each query over the corpus, self-matches
+    * excluded: the recall reference of the PQ faces.
+    */
+  private def bruteKnnL2(corpus: org.apache.spark.sql.DataFrame,
+                         queries: org.apache.spark.sql.DataFrame,
+                         k: Int): org.apache.spark.sql.DataFrame = {
+    val q = broadcast(queries.select(col("vec_id").as("qid"),
+      col("embedding").cast("array<double>").as("qe")))
+    val c = corpus.select(col("vec_id").as("cid"),
+      col("embedding").cast("array<double>").as("ce"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
+      .orderBy(col("d2").asc, col("cid"))
+    c.join(q, col("qid") =!= col("cid"))
+      .withColumn("d2", round(Ann.l2sq("qe", "ce"), 4))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("cid"), col("d2"), col("rn"))
+  }
+
   test("hier fit backfills childless supers: encode covers every vector under starved training") {
     // aggressive subsampling leaves fewer training points than super
     // cells — classic empty-cell k-means. Every FINAL super centroid
@@ -319,7 +338,7 @@ class AnnSpec extends SparkSpec {
 
   test("PQ ADC knn reaches ≥40% recall@5 vs exact L2 and returns k rows per query") {
     val queries = embs.filter(col("vec_id") < 20)
-    val exact = Ann.bruteKnnL2(embs, queries, k = 5).collect()
+    val exact = bruteKnnL2(embs, queries, k = 5).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
     val approx = Ann.pqKnn(embs, queries, k = 5, m = 32, ksub = 16).collect()
     assert(approx.groupBy(_.getAs[Long]("qid")).forall(_._2.length == 5))
@@ -330,7 +349,7 @@ class AnnSpec extends SparkSpec {
 
   test("IVF-PQ knn reaches ≥30% recall@5 vs exact L2 with half the cells probed") {
     val queries = embs.filter(col("vec_id") < 20)
-    val exact = Ann.bruteKnnL2(embs, queries, k = 5).collect()
+    val exact = bruteKnnL2(embs, queries, k = 5).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
     val approx = Ann.ivfPqKnn(embs, queries, k = 5, c = 8, nprobe = 4, m = 16).collect()
     assert(approx.groupBy(_.getAs[Long]("qid")).forall(_._2.length == 5))
@@ -345,7 +364,7 @@ class AnnSpec extends SparkSpec {
     // sample-sized (the FAISS practice); recall must not collapse
     val big = Tables.embeddings(spark, "/root/testdata/sf0.1")
     val queries = big.filter(col("vec_id") < 20)
-    val exact = Ann.bruteKnnL2(big, queries, k = 5).collect()
+    val exact = bruteKnnL2(big, queries, k = 5).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
     def recallOf(mod: Int): Double = {
       val approx = Ann.pqKnn(big, queries, k = 5, m = 32, ksub = 16, trainMod = mod)

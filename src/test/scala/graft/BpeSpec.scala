@@ -78,7 +78,7 @@ class BpeSpec extends SparkSpec {
   }
 
   /** Serial in-memory Sennrich loop — the reference fold the
-    * distributed trainMerges must reproduce round-for-round.
+    * Spark serial trainer (BpeOracles.trainMerges) must reproduce round-for-round.
     */
   private def serialTrain(words: Map[String, Long],
                           rounds: Int): Seq[(Int, String, String, Long, Long)] = {
@@ -117,15 +117,17 @@ class BpeSpec extends SparkSpec {
       (3L, "hello! aaab"),      // UNK(1) + 3 = 4
       (4L, "zz")                // no merge applies -> 2
     ).toDF("doc_id", "text")
-    val got = Bpe.encodeDocCounts(docs, Seq(("a", "a"))).collect()
+    def docCounts(d: org.apache.spark.sql.DataFrame) =
+      Bpe.encodeDocCountsFromWords(Bpe.docWordCounts(d).localCheckpoint(true), Seq(("a", "a")))
+    val got = docCounts(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 8L, 2L -> 1L, 3L -> 4L, 4L -> 2L), got.toString)
     // conservation vs the corpus-level token-frequency face on a fully
     // in-alphabet corpus: per-doc counts sum to the token-freq total
     val clean = Seq((1L, "aaab aaab cc"), (2L, "zz aaab")).toDF("doc_id", "text")
-    val perDoc = Bpe.encodeDocCounts(clean, Seq(("a", "a")))
+    val perDoc = docCounts(clean)
       .agg(org.apache.spark.sql.functions.sum("n_tokens")).head.getLong(0)
-    val byToken = Bpe.encodeTokenFreq(clean, Seq(("a", "a")))
+    val byToken = Bpe.encodeTokenFreqWf(Bpe.wordFreq(clean), Seq(("a", "a")))
       .agg(org.apache.spark.sql.functions.sum("freq")).head.getLong(0)
     assert(perDoc == byToken, s"$perDoc != $byToken")
   }
@@ -136,11 +138,11 @@ class BpeSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "abcdefgh ijklmnop qrstuvwx abcdefgh"),
       (2L, "abcdefgh ijklmnop yzabcdef")).toDF("doc_id", "text")
-    val local = Bpe.trainMerges(corpus, rounds = 17).orderBy("round").collect().toSeq
+    val local = BpeOracles.trainMerges(corpus, rounds = 17).orderBy("round").collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("bpe_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val reliable = Bpe.trainMerges(corpus, rounds = 17).orderBy("round").collect().toSeq
+      val reliable = BpeOracles.trainMerges(corpus, rounds = 17).orderBy("round").collect().toSeq
       assert(reliable == local, "reliable-checkpoint training must be bit-identical")
       // the cut actually wrote replayable state to the reliable dir
       def files(p: java.io.File): Seq[java.io.File] = {
@@ -170,7 +172,7 @@ class BpeSpec extends SparkSpec {
       .flatMap(_.getString(1).split(" "))
       .groupBy(identity).map { case (w, a) => w -> a.length.toLong }
     val expected = serialTrain(wordCounts, rounds = 5)
-    val got = Bpe.trainMerges(corpus, rounds = 5).orderBy("round").collect()
+    val got = BpeOracles.trainMerges(corpus, rounds = 5).orderBy("round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
       .toSeq
     assert(got == expected, s"\ngot      $got\nexpected $expected")
@@ -186,7 +188,7 @@ class BpeSpec extends SparkSpec {
       (1L, "low low low low low lower lower newest newest newest"),
       (2L, "newest newest newest widest widest widest aaaa aaaa aa"),
       (3L, "the cat the hat the cat"))
-    val trained = Bpe.trainMerges(corpus, rounds = 5).orderBy("round").collect()
+    val trained = BpeOracles.trainMerges(corpus, rounds = 5).orderBy("round").collect()
     val merges = trained.map(r => (r.getString(1), r.getString(2))).toSeq
     val tokens = Bpe.encodeTokens(corpus, merges, k = 1000).collect()
     assert(tokens.map(_.getLong(1)).sum == trained.last.getLong(4))
@@ -232,7 +234,7 @@ class BpeSpec extends SparkSpec {
       val wordCounts = words.groupBy(identity)
         .map { case (w, a) => w -> a.length.toLong }
       val expected = serialTrain(wordCounts, rounds = 3)
-      val got = Bpe.trainMerges(corpus, rounds = 3).orderBy("round").collect()
+      val got = BpeOracles.trainMerges(corpus, rounds = 3).orderBy("round").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
         .toSeq
       assert(got == expected,
@@ -247,11 +249,11 @@ class BpeSpec extends SparkSpec {
       (1L, "low low low low low lower lower newest newest newest"),
       (2L, "newest newest newest widest widest widest aaaa aaaa aa"),
       (3L, "the cat the hat the cat"))
-    val merges = Bpe.trainMerges(corpus, rounds = 6).orderBy("round").collect()
+    val merges = BpeOracles.trainMerges(corpus, rounds = 6).orderBy("round").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val kernel = Bpe.encodeTokenFreq(corpus, merges)
+    val kernel = Bpe.encodeTokenFreqWf(Bpe.wordFreq(corpus), merges)
       .orderBy("token").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val fold = Bpe.encodeTokenFreqFold(corpus, merges)
+    val fold = BpeOracles.encodeTokenFreqFold(corpus, merges)
       .orderBy("token").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(kernel == fold, s"\nkernel $kernel\nfold   $fold")
   }
@@ -311,7 +313,7 @@ class BpeSpec extends SparkSpec {
     val expected = words.toSeq.flatMap(serialGreedy)
       .groupBy(identity).map { case (t, a) => t -> a.length.toLong }
     val t0 = System.nanoTime()
-    val got = Bpe.encodeTokenFreq(corpus, merges).collect()
+    val got = Bpe.encodeTokenFreqWf(Bpe.wordFreq(corpus), merges).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     assert(got == expected)
@@ -338,12 +340,12 @@ class BpeSpec extends SparkSpec {
     val expected = words.flatMap(greedy)
       .groupBy(identity).map { case (t, a) => t -> a.length.toLong }
     val t0 = System.nanoTime()
-    val got = Bpe.encodeTokenFreq(corpus, merges).collect()
+    val got = Bpe.encodeTokenFreqWf(Bpe.wordFreq(corpus), merges).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     assert(got == expected)
     val mass = got.map { case (t, f) => t.length * f }.sum
-    val charMass = Bpe.encodeTokenFreq(corpus, Nil).collect()
+    val charMass = Bpe.encodeTokenFreqWf(Bpe.wordFreq(corpus), Nil).collect()
       .map(r => r.getString(0).length * r.getLong(1)).sum
     assert(mass == charMass, s"char-mass invariant broken: $mass != $charMass")
     assert(secs < 60.0, s"32768-merge encode took ${secs}s — kernel ceiling regressed")
@@ -374,11 +376,11 @@ class BpeSpec extends SparkSpec {
       }
       val corpus = docs(words.grouped(5).zipWithIndex
         .map { case (ws, i) => ((i + 1).toLong, ws.mkString(" ")) }.toSeq: _*)
-      val trained = Bpe.trainMerges(corpus, rounds = 4).orderBy("round").collect()
+      val trained = BpeOracles.trainMerges(corpus, rounds = 4).orderBy("round").collect()
       val merges = trained.map(r => (r.getString(1), r.getString(2))).toSeq
-      val kernel = Bpe.encodeTokenFreq(corpus, merges)
+      val kernel = Bpe.encodeTokenFreqWf(Bpe.wordFreq(corpus), merges)
         .orderBy("token").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val fold = Bpe.encodeTokenFreqFold(corpus, merges)
+      val fold = BpeOracles.encodeTokenFreqFold(corpus, merges)
         .orderBy("token").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(kernel == fold, s"trial $trial over '${words.mkString(" ")}'")
     }
@@ -391,7 +393,7 @@ class BpeSpec extends SparkSpec {
       (1L, "low low low low low lower lower newest newest newest"),
       (2L, "newest newest newest widest widest widest aaaa aaaa aa"),
       (3L, "the cat the hat the cat"))
-    val serial = Bpe.trainMerges(corpus, rounds = 6).orderBy("round").collect()
+    val serial = BpeOracles.trainMerges(corpus, rounds = 6).orderBy("round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
     for (b <- Seq(1, 2, 3, 4, 8)) {
       val batched = Bpe.trainMergesBatched(corpus, rounds = 6, batch = b)
@@ -410,7 +412,7 @@ class BpeSpec extends SparkSpec {
     // pair (x,y) at count 1, so batched round 2 recounts and finds
     // (ax,y) exactly like the serial loop.
     val corpus = docs((1L, "axy ax cc"))
-    val serial = Bpe.trainMerges(corpus, rounds = 3).orderBy("round").collect()
+    val serial = BpeOracles.trainMerges(corpus, rounds = 3).orderBy("round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
     assert(serial.map(m => (m._2, m._3)).take(2) == Seq(("a", "x"), ("ax", "y")),
       s"counterexample corpus lost its shape: $serial")
@@ -432,7 +434,7 @@ class BpeSpec extends SparkSpec {
         (docs((1L, "aaaaaaa aaaa aaaaaa aaa aa")), 5),
         (docs((1L, "ababab abab ab aabb baba")), 6),
         (docs((1L, "aaa bbb aaabbb ab ba aabb")), 6))) {
-      val serial = Bpe.trainMerges(corpus, rounds).orderBy("round").collect()
+      val serial = BpeOracles.trainMerges(corpus, rounds).orderBy("round").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
       for (b <- Seq(2, 4)) {
         val batched = Bpe.trainMergesBatched(corpus, rounds, batch = b)
@@ -455,7 +457,7 @@ class BpeSpec extends SparkSpec {
       }
       val corpus = docs(words.grouped(5).zipWithIndex
         .map { case (ws, i) => ((i + 1).toLong, ws.mkString(" ")) }.toSeq: _*)
-      val serial = Bpe.trainMerges(corpus, rounds = 6).orderBy("round").collect()
+      val serial = BpeOracles.trainMerges(corpus, rounds = 6).orderBy("round").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
       val batched = Bpe.trainMergesBatched(corpus, rounds = 6, batch = 3)
         .orderBy("round").collect()
@@ -480,7 +482,7 @@ class BpeSpec extends SparkSpec {
       sc.statusTracker.getJobIdsForGroup(group).length
     }
     val serialJobs = jobsIn("bpe-serial") {
-      Bpe.trainMerges(corpus, rounds = 12).collect()
+      BpeOracles.trainMerges(corpus, rounds = 12).collect()
     }
     val batchedJobs = jobsIn("bpe-batched") {
       val got = Bpe.trainMergesBatched(corpus, rounds = 12, batch = 4).collect()
@@ -518,7 +520,7 @@ class BpeSpec extends SparkSpec {
     // a word containing '|' (the fold delimiter) must not poison the
     // vocab — it is excluded by the ^[a-z0-9]+$ gate, merges still run
     val corpus = docs((1L, "ab|cd ab|cd abab abab abab"))
-    val got = Bpe.trainMerges(corpus, rounds = 2).collect()
+    val got = BpeOracles.trainMerges(corpus, rounds = 2).collect()
     assert(got.length == 2)
     assert(got.forall(r => !r.getString(1).contains("|") && !r.getString(2).contains("|")))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 
 /** Bucketed-table co-located join (§2.7): both sides bucketed on the
   * join key with the same bucket count → the sort-merge join reads
@@ -73,7 +74,7 @@ class BucketedJoinSpec extends SparkSpec {
       (1L, base),
       (2L, "completely different content about spark catalyst optimizer internals"))
       .toDF("doc_id", "text")
-    Dedup.minhashBands(Dedup.minhashSignatures(seed))
+    Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(seed)))
       .write.mode("overwrite")
       .bucketBy(8, "band", "k0", "k1", "k2", "k3")
       .saveAsTable("minhash_multi_b")
@@ -87,7 +88,7 @@ class BucketedJoinSpec extends SparkSpec {
       val found = collection.mutable.Set[(Long, Long)]()
       batches.foreach { case (id, text) =>
         val batch = Seq((id, text)).toDF("doc_id", "text")
-        val probeBands = Dedup.minhashBands(Dedup.minhashSignatures(batch))
+        val probeBands = Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(batch)))
         val joined = spark.table("minhash_multi_b").as("o")
           .join(probeBands.as("n"),
             keyNames.map(c => col(s"n.$c") === col(s"o.$c")).reduce(_ && _))
@@ -124,7 +125,7 @@ class BucketedJoinSpec extends SparkSpec {
     // the signature index as persisted at warehouse scale: bucketed by
     // the full band-bucket key, so a new batch joins straight into the
     // index's layout — only the (small) batch side exchanges
-    Dedup.minhashBands(Dedup.minhashSignatures(corpus))
+    Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(corpus)))
       .write.mode("overwrite")
       .bucketBy(8, "band", "k0", "k1", "k2", "k3")
       .saveAsTable("minhash_index_b")
@@ -133,7 +134,7 @@ class BucketedJoinSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val keyNames = Seq("band", "k0", "k1", "k2", "k3")
-      val probeBands = Dedup.minhashBands(Dedup.minhashSignatures(batch))
+      val probeBands = Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(batch)))
       val joined = spark.table("minhash_index_b").as("o")
         .join(probeBands.as("n"),
           keyNames.map(c => col(s"n.$c") === col(s"o.$c")).reduce(_ && _))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 import graft.operators.Dedup
 
 /** Planted-duplicate tests for the dedup family. */
@@ -31,14 +32,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngram jaccard finds the planted near-copy above 0.8") {
-    val pairs = Dedup.jaccardPairs(docsWithPlants, threshold = 0.8)
+    val pairs = Dedup.jaccardPairsW(Text.wordsTable(docsWithPlants), threshold = 0.8)
       .filter(col("doc_b") === 9002).collect()
     assert(pairs.exists(r => r.getAs[Long]("doc_a") == 1L),
       s"pair (1, 9002) missing from ${pairs.mkString(",")}")
   }
 
   test("minhash LSH surfaces the planted pairs as candidates") {
-    val cands = Dedup.minhashCandidates(docsWithPlants)
+    val cands = Dedup.minhashCandidatesW(Text.wordsTable(docsWithPlants))
       .filter(col("doc_b") >= 9001).collect()
     val found = cands.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(found.contains((0L, 9001L)), s"exact copy not a candidate: $found")
@@ -80,7 +81,7 @@ class DedupSpec extends SparkSpec {
   test("incremental minhash finds a new near-dup against the existing index only") {
     import spark.implicits._
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val index = Dedup.minhashBands(Dedup.minhashSignatures(corpus))
+    val index = Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(corpus)))
     val d1 = corpus.filter(col("doc_id") === 1).head().getString(1)
     val near = d1.split(" ").zipWithIndex
       .map { case (w, i) => if (i == 5) "REPLACED" else w }.mkString(" ")
@@ -111,7 +112,7 @@ class DedupSpec extends SparkSpec {
     assert(flagged.nonEmpty && flagged.min == thr,
       s"learned $thr vs sweep argmax ${flagged.toSeq.sorted}")
     // the pair set is exactly the candidates at the learned threshold
-    val want = Dedup.minhashCandidates(docs, minEstJaccard = 0.25)
+    val want = Dedup.minhashCandidatesW(Text.wordsTable(docs), minEstJaccard = 0.25)
       .filter(round(col("est_jaccard") * 1000000).cast("long") >=
         math.round(thr * 20) * 50000L)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet

@@ -15,8 +15,8 @@ import graft.plans.Affine
   */
 object HofOracles {
 
-  /** [[Sketches.minhashSignature]]: sig[i] = min over elements of
-    * xxhash64(elem, i).
+  /** `graft_minhash(arr, k)` ([[graft.plans.MinHashSig]]): sig[i] = min
+    * over elements of xxhash64(elem, i).
     */
   def minhashSignatureHof(setCol: String, k: Int = 32): Column =
     expr(s"transform(sequence(0, ${k - 1}), i -> array_min(transform($setCol, e -> xxhash64(e, i))))")
@@ -27,8 +27,8 @@ object HofOracles {
   def estJaccardHof(sigA: String, sigB: String, k: Int = 32): Column =
     expr(s"aggregate(zip_with($sigA, $sigB, (x, y) -> if(x = y, 1, 0)), 0, (a, v) -> a + v)") / lit(k.toDouble)
 
-  /** [[Sketches.simhash]]: bit b set when the majority of element hashes
-    * have bit b set (±1 vote per element).
+  /** `graft_simhash(arr)` ([[graft.plans.SimHash64]]): bit b set when the
+    * majority of element hashes have bit b set (±1 vote per element).
     */
   def simhashHof(setCol: String, hashesCol: String = null): Column = {
     val hashes = Option(hashesCol).getOrElse(s"transform($setCol, w -> xxhash64(w))")
@@ -40,7 +40,8 @@ object HofOracles {
          |  0L, (acc, x) -> acc | x)""".stripMargin)
   }
 
-  /** [[Sketches.md5Hashes]]/[[Sketches.md5HashesModP]]: the exact
+  /** [[Sketches.md5Hashes]] and its mod-P form
+    * (`NativeFunctions.md5Hash60(arr, Affine.P)`): the exact
     * conv(substr(md5)) chain the DuckDB oracle replays.
     */
   def md5HashesHof(setCol: String): Column =

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
 import graft.operators.LmScore
 
 /** Laws of the corpus-statistical LM quality filter
@@ -91,8 +92,8 @@ class LmScoreSpec extends SparkSpec {
 
   test("ccnet assignment fails loudly for a language missing from the cutoffs") {
     def scored(rows: Seq[(Long, String, String)]) =
-      LmScore.scoredMicro(rows.toDF("doc_id", "lang", "text"), v = 5,
-          carry = Seq("lang"))
+      LmScore.scoredMicroW(Text.wordsTable(rows.toDF("doc_id", "lang", "text"), Seq("lang")),
+          v = 5, carry = Seq("lang"))
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           col("avg_micro6").as("am"))
     val cuts = LmScore.ccnetCutoffs(

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.Maps
 
-/** The single-pass mapUnions must agree with the per-aggregate forms it
-  * replaces (q110's r6 plan diet) — same maps, any grouping, ties and
+/** The single-pass mapUnions must agree with the per-aggregate unions it
+  * replaces (q110's r6 plan diet), a max-wins union and a sum union,
+  * computed here on the driver — same maps, any grouping, ties and
   * disjoint key sets included.
   */
 class MapsSpec extends SparkSpec {
@@ -19,14 +18,21 @@ class MapsSpec extends SparkSpec {
   }
 
   test("mapUnions == mapUnionMax ⋈ mapUnionSum") {
-    val one = Maps.mapUnions(maps, Seq("g"), "m", "a_max", "a_sum")
-    val two = Maps.mapUnionMax(maps, Seq("g"), "m", "b_max")
-      .join(Maps.mapUnionSum(maps, Seq("g"), "m", "b_sum"), "g")
-    val joined = one.join(two, "g")
-    assert(joined.count() == 40)
-    // maps have no equality ordering — compare the (sorted) entry lists
-    assert(joined.filter(map_entries(col("a_max")) =!= map_entries(col("b_max")) ||
-      map_entries(col("a_sum")) =!= map_entries(col("b_sum"))).count() == 0)
+    // per group, per key: every value the group's maps carry
+    val values = maps.collect().toSeq
+      .flatMap(r => r.getMap[String, Long](1).toSeq.map(kv => (r.getLong(0), kv)))
+      .groupBy(_._1).map { case (g, es) =>
+        g -> es.map(_._2).groupBy(_._1).map { case (k, kvs) => k -> kvs.map(_._2) }
+      }
+    val got = Maps.mapUnions(maps, Seq("g"), "m", "a_max", "a_sum").collect()
+    assert(got.length == 40)
+    for (r <- got) {
+      val vs = values(r.getLong(0))
+      assert(r.getMap[String, Long](1).toMap == vs.map { case (k, v) => k -> v.max },
+        s"max-wins union, group ${r.getLong(0)}")
+      assert(r.getMap[String, Long](2).toMap == vs.map { case (k, v) => k -> v.sum },
+        s"sum union, group ${r.getLong(0)}")
+    }
   }
 
   test("duplicate keys resolve max-wins / sum across rows") {

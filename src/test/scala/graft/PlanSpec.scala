@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import graft.functions.Text
 import graft.queries.RelationalQueries
 
 /** Physical-plan assertions (SURVEY.md §2.7): pushdown, pruning,
@@ -56,7 +57,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup/text pipeline stays UDF-free (no BatchEvalPython/ScalaUDF nodes)") {
-    val df = graft.operators.Dedup.jaccardPairs(Tables.documents(spark, sfDir), 0.5)
+    val df = graft.operators.Dedup.jaccardPairsW(
+      Text.wordsTable(Tables.documents(spark, sfDir)), 0.5)
     val plan = df.queryExecution.optimizedPlan.toString
     assert(!plan.contains("UDF"), s"UDF found in optimized plan:\n$plan")
   }

@@ -62,22 +62,6 @@ class SemDedupSpec extends SparkSpec {
     assert(loose.count() > 0)
   }
 
-  test("two-level quantizer at a 256-leaf budget recovers every twin pair (scale config)") {
-    // the 100 TB posture: SemDeDup's bounded-cluster contract forces
-    // c toward ~10⁴ where flat assignment dies; the hierarchical face
-    // must preserve the planted-twin invariant — identical vectors
-    // co-locate in one leaf regardless of the (cSuper, cChild) split
-    val expected = embs.filter(col("vec_id") % 10 === 3)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val pairs = SemDedup.dupPairsHier(withTwins, threshold = 0.9,
-      cSuper = 16, cChild = 16).collect()
-    val got = pairs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(got.forall { case (va, vb, sim) =>
-      expected.contains(va) && vb == va + 100000L && sim == 1.0
-    }, s"unexpected pair among ${got.take(5)}")
-    assert(got.map(_._1).toSet == expected, "a twin pair was missed")
-  }
-
   test("cross-corpus decontamination flags exactly the planted eval twins") {
     val expected = embs.filter(col("vec_id") % 10 === 7)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
@@ -151,25 +135,6 @@ class SemDedupSpec extends SparkSpec {
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
     assert(SemDedup.decontaminate(train, evalSet, threshold = 0.9, c = 16)
       .count() == 0)
-  }
-
-  test("cross-corpus probe through the TWO-LEVEL index flags the same twin set (scale config)") {
-    // the 100 TB decontamination posture: the maintained index is the
-    // hierarchical one; the eval batch routes super→child into the same
-    // global leaf-id space and the identical equi-join probes it
-    val expected = embs.filter(col("vec_id") % 10 === 7)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val evalSet = embs.filter(col("vec_id") % 10 === 7)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    val (sup, ch) = Ann.ivfFitHier(embs, cSuper = 16, cChild = 16)
-    val index = Ann.ivfEncodeHier(embs, sup, ch, cChild = 16)
-    val got = SemDedup.dupsAgainstIndexHier(evalSet, sup, ch, 16, index, 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(got.nonEmpty)
-    assert(got.forall { case (e, t, sim) =>
-      expected.contains(t) && e == t + 1000000L && sim == 1.0
-    }, s"unexpected flag among ${got.take(5)}")
-    assert(got.map(_._2).toSet == expected, "a contaminated vector was missed")
   }
 
   test("q176 twin offset stays outside the natural vec_id space at every SF") {

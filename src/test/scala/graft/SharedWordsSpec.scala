@@ -12,6 +12,11 @@ import graft.operators.{Classifier, Dedup, LmScore, Quality}
   * drift. Edge inputs include NULL text (words array NULL), empty and
   * whitespace-only documents (normText "", words [""]), mixed
   * whitespace runs, and non-alphabet word forms.
+  *
+  * The Dedup and LmScore faces have only the `*W` form: a case named
+  * "xW == x" checks that the face over a words table carrying extra
+  * columns equals it over the bare `Text.wordsTable(docs)`, the text
+  * face's former body.
   */
 class SharedWordsSpec extends SparkSpec {
 
@@ -45,22 +50,22 @@ class SharedWordsSpec extends SparkSpec {
   }
 
   test("Dedup.minhashSignaturesW == minhashSignatures") {
-    assertSame(Dedup.minhashSignatures(corpus), Dedup.minhashSignaturesW(dw),
+    assertSame(Dedup.minhashSignaturesW(Text.wordsTable(corpus)), Dedup.minhashSignaturesW(dw),
       "minhash signatures")
   }
 
   test("Dedup.minhashCandidatesW == minhashCandidates") {
-    assertSame(Dedup.minhashCandidates(corpus), Dedup.minhashCandidatesW(dw),
+    assertSame(Dedup.minhashCandidatesW(Text.wordsTable(corpus)), Dedup.minhashCandidatesW(dw),
       "minhash candidates")
   }
 
   test("Dedup.jaccardPairsW == jaccardPairs") {
-    assertSame(Dedup.jaccardPairs(corpus, threshold = 0.3),
+    assertSame(Dedup.jaccardPairsW(Text.wordsTable(corpus), threshold = 0.3),
       Dedup.jaccardPairsW(dw, threshold = 0.3), "jaccard pairs")
   }
 
   test("Dedup.keepBestW == keepBest on the same pair table") {
-    val pairs = Dedup.minhashCandidates(corpus)
+    val pairs = Dedup.minhashCandidatesW(Text.wordsTable(corpus))
     assertSame(Dedup.keepBest(corpus, pairs), Dedup.keepBestW(dw, pairs),
       "keep-best")
   }
@@ -72,7 +77,8 @@ class SharedWordsSpec extends SparkSpec {
   }
 
   test("LmScore.scoredMicroW == scoredMicro (lang carried)") {
-    assertSame(LmScore.scoredMicro(corpus, v = 16, carry = Seq("lang")),
+    assertSame(
+      LmScore.scoredMicroW(Text.wordsTable(corpus, Seq("lang")), v = 16, carry = Seq("lang")),
       LmScore.scoredMicroW(dw, v = 16, carry = Seq("lang")), "lm scored")
   }
 

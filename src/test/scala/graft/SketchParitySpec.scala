@@ -5,11 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Sketches, Text}
 import graft.operators.Ann
+import graft.plans.{Affine, NativeFunctions}
 
 /** The native codegen kernels (graft.plans.VectorExprs) must be
   * bit-identical to their HOF formulations ([[HofOracles]]) — same hash
   * chain, same fold order — so swapping them in changes nothing but
-  * speed.
+  * speed. The minhash and simhash kernels are reached through their
+  * registered SQL functions (`graft_minhash`, `graft_simhash`), the
+  * only face they have.
   */
 class SketchParitySpec extends SparkSpec {
 
@@ -18,7 +21,7 @@ class SketchParitySpec extends SparkSpec {
 
   test("native minhash signature == HOF minhash signature") {
     val mismatches = docs
-      .select(Sketches.minhashSignature("w").as("native"),
+      .select(expr("graft_minhash(w, 32)").as("native"),
         HofOracles.minhashSignatureHof("w").as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
@@ -27,7 +30,7 @@ class SketchParitySpec extends SparkSpec {
 
   test("native simhash == HOF simhash") {
     val mismatches = docs
-      .select(Sketches.simhash("w").as("native"),
+      .select(expr("graft_simhash(w)").as("native"),
         HofOracles.simhashHof("w").as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
@@ -37,14 +40,14 @@ class SketchParitySpec extends SparkSpec {
   test("native md5-60 hashes == HOF conv(substr(md5)) chain, plain and mod P") {
     val mismatches = docs
       .select(Sketches.md5Hashes("w").as("n1"), HofOracles.md5HashesHof("w").as("h1"),
-        Sketches.md5HashesModP("w").as("n2"), HofOracles.md5HashesModPHof("w").as("h2"))
+        NativeFunctions.md5Hash60(col("w"), Affine.P).as("n2"),
+        HofOracles.md5HashesModPHof("w").as("h2"))
       .filter(not(col("n1") <=> col("h1")) || not(col("n2") <=> col("h2")))
       .count()
     assert(mismatches === 0)
   }
 
   test("fused shingle hashes == hash of concat_ws shingle strings (md5 and xx64)") {
-    import graft.plans.NativeFunctions
     val mismatches = docs
       .select(
         NativeFunctions.shingleHashes(col("w"), 3, "md5", graft.plans.Affine.P).as("n1"),
@@ -58,7 +61,6 @@ class SketchParitySpec extends SparkSpec {
   }
 
   test("native slot agreement and hyperplane bucket == their HOF formulations") {
-    import graft.plans.NativeFunctions
     val sigs = docs
       .select(col("doc_id"), graft.plans.NativeFunctions
         .shingleHashes(col("w"), 3, "md5", graft.plans.Affine.P).as("hs"))
@@ -147,11 +149,11 @@ class SketchParitySpec extends SparkSpec {
   test("native minhash and simhash == their HOFs on edge arrays too") {
     val in = wordInputs
     for (k <- Seq(1, 32)) {
-      val bad = mismatches(in, Sketches.minhashSignature("hs", k),
+      val bad = mismatches(in, expr(s"graft_minhash(hs, $k)"),
         HofOracles.minhashSignatureHof("hs", k))
       assert(bad.isEmpty, s"minhash k=$k: ${bad.take(3).mkString("; ")}")
     }
-    val bad = mismatches(in, Sketches.simhash("hs"), HofOracles.simhashHof("hs"))
+    val bad = mismatches(in, expr("graft_simhash(hs)"), HofOracles.simhashHof("hs"))
     assert(bad.isEmpty, s"simhash: ${bad.take(3).mkString("; ")}")
   }
 
@@ -159,7 +161,8 @@ class SketchParitySpec extends SparkSpec {
     val in = wordInputs
     val plain = mismatches(in, Sketches.md5Hashes("hs"), HofOracles.md5HashesHof("hs"))
     assert(plain.isEmpty, plain.take(3).mkString("; "))
-    val modP = mismatches(in, Sketches.md5HashesModP("hs"), HofOracles.md5HashesModPHof("hs"))
+    val modP = mismatches(in, NativeFunctions.md5Hash60(col("hs"), Affine.P),
+      HofOracles.md5HashesModPHof("hs"))
     assert(modP.isEmpty, modP.take(3).mkString("; "))
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 
 /** A reference user ports SQL text, not DataFrame programs: the same
   * queries must run as literal SQL through spark.sql() — including the
@@ -48,15 +49,15 @@ class SqlSurfaceSpec extends SparkSpec {
     }
     pin("SELECT * FROM graft_dedup_exact('sql_docs')", Dedup.exactGroups(docs))
     pin("SELECT * FROM graft_jaccard_pairs('sql_docs', 0.5)",
-      Dedup.jaccardPairs(docs, 0.5))
+      Dedup.jaccardPairsW(Text.wordsTable(docs), 0.5))
     pin("SELECT * FROM graft_minhash_pairs('sql_docs')",
-      Dedup.minhashCandidates(docs))
+      Dedup.minhashCandidatesW(Text.wordsTable(docs)))
     pin("SELECT * FROM graft_simhash_pairs('sql_docs', 3)",
       Dedup.simhashCandidates(docs))
     pin("SELECT * FROM graft_winnow_extents('sql_docs')", Winnow.spanExtents(docs))
     pin("SELECT * FROM graft_excise_spans('sql_docs')", Winnow.exciseSpans(docs))
     pin("SELECT * FROM graft_dedup_keep_best('sql_docs')",
-      Dedup.keepBest(docs, Dedup.minhashCandidates(docs)))
+      Dedup.keepBest(docs, Dedup.minhashCandidatesW(Text.wordsTable(docs))))
     pin("SELECT * FROM graft_mix_keep('sql_docs', 50000)", Mix.keep(docs, 50000L))
     pin("SELECT * FROM graft_mix_keep_temperature('sql_docs', 50000)",
       Mix.keepTemperature(docs, 50000L))
@@ -78,7 +79,7 @@ class SqlSurfaceSpec extends SparkSpec {
     batch.createOrReplaceTempView("sql_batch")
     pin("SELECT * FROM graft_minhash_against('sql_batch', 'sql_docs')",
       Dedup.minhashCandidatesAgainst(batch,
-        Dedup.minhashBands(Dedup.minhashSignatures(docs))))
+        Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(docs)))))
     pin("SELECT * FROM graft_mix_keep_against('sql_batch', 'sql_docs', 50000)",
       Mix.keepAgainst(batch, Mix.availability(Mix.counted(docs), 50000L)))
     pin("SELECT * FROM graft_excise_against('sql_batch', 'sql_docs')",
@@ -118,7 +119,7 @@ class SqlSurfaceSpec extends SparkSpec {
     // r14 continuation: the curation reports (q204/q205/q206 faces)
     pin("SELECT * FROM graft_dedup_savings('sql_docs')",
       graft.operators.Components.savingsBySource(docs,
-        Dedup.minhashCandidates(docs).select(col("doc_a"), col("doc_b"))))
+        Dedup.minhashCandidatesW(Text.wordsTable(docs)).select(col("doc_a"), col("doc_b"))))
     pin("SELECT * FROM graft_source_leakage('sql_docs')",
       Dedup.crossSourceLeakage(docs))
     pin("SELECT * FROM graft_fertility('sql_docs', 'sql_merges')",

@@ -30,16 +30,16 @@ class StreamingBpeSpec extends SparkSpec {
     val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
 
     // train once, before the stream — the fixed deployment artifact
-    val merges = Bpe.trainMerges(corpus, rounds = 4).orderBy("round")
+    val merges = BpeOracles.trainMerges(corpus, rounds = 4).orderBy("round")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val batchFreq = Bpe.encodeTokenFreq(corpus, merges)
+    val batchFreq = Bpe.encodeTokenFreqWf(Bpe.wordFreq(corpus), merges)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     var acc: DataFrame = Seq.empty[(String, Long)].toDF("token", "freq")
     val stream = MemoryStream[Doc]
     val query = stream.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val counts = Bpe.encodeTokenFreq(batch.select("doc_id", "text"), merges)
+        val counts = Bpe.encodeTokenFreqWf(Bpe.wordFreq(batch.select("doc_id", "text")), merges)
         acc = Bpe.mergeTokenFreq(acc, counts).localCheckpoint()
         ()
       }.start()

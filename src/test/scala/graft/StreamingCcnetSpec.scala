@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
 import graft.operators.LmScore
 
 /** The streaming CCNet loop (q194's ingestion face): fit the unigram
@@ -36,12 +37,12 @@ class StreamingCcnetSpec extends SparkSpec {
       s"all three buckets must be populated: ${batchBuckets.values.toSet}")
 
     // calibrate ONCE: model + totals + cutoffs, all held fixed
-    val (model, totals) = LmScore.unigramModel(corpusDf, V)
+    val (model, totals) = LmScore.unigramModelW(Text.wordsTable(corpusDf), V)
     val modelFixed = model.localCheckpoint()
     val totalsFixed = totals.localCheckpoint()
     val cuts = LmScore.ccnetCutoffs(
-      LmScore.scoredMicroAgainst(corpusDf, modelFixed, totalsFixed, V,
-          carry = Seq("lang"))
+      LmScore.scoredMicroAgainstW(Text.wordsTable(corpusDf, Seq("lang")), modelFixed,
+          totalsFixed, V, carry = Seq("lang"))
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           col("avg_micro6").as("am"))).localCheckpoint()
 
@@ -49,8 +50,8 @@ class StreamingCcnetSpec extends SparkSpec {
     val streamed = collection.mutable.Map[Long, String]()
     val query = stream.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scored = LmScore.scoredMicroAgainst(batch.toDF(), modelFixed,
-            totalsFixed, V, carry = Seq("lang"))
+        val scored = LmScore.scoredMicroAgainstW(Text.wordsTable(batch.toDF(), Seq("lang")),
+            modelFixed, totalsFixed, V, carry = Seq("lang"))
           .select(col("doc_id"), col("lang"), col("n_tokens"),
             col("avg_micro6").as("am"))
         streamed ++= LmScore.ccnetAssign(scored, cuts)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
 import graft.operators.{Bpe, Components, Dedup}
 
 /** Streaming faces of the curation reports (q204/q205/q206): each
@@ -46,13 +47,13 @@ class StreamingCurationSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CurDoc]
     var index: DataFrame = Dedup.minhashBands(
-      Dedup.minhashSignatures(Seq.empty[(Long, String)].toDF("doc_id", "text")))
+      Dedup.minhashSignaturesW(Text.wordsTable(Seq.empty[(Long, String)].toDF("doc_id", "text"))))
     val pairs = collection.mutable.Map[(Long, Long), Double]()
     val query = stream.toDF().writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val docs = b.select("doc_id", "text")
         index = index.unionByName(
-          Dedup.minhashBands(Dedup.minhashSignatures(docs))).localCheckpoint()
+          Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(docs)))).localCheckpoint()
         pairs ++= Dedup.minhashCandidatesAgainst(docs, index)
           .filter(col("new_id") =!= col("old_id")).collect()
           .map(r => (math.min(r.getLong(0), r.getLong(1)),
@@ -75,7 +76,7 @@ class StreamingCurationSpec extends SparkSpec {
   test("streaming dedup savings == batch savingsBySource on monotone arrivals") {
     import spark.implicits._
     val batchOut = Components.savingsBySource(corpusDf,
-        Dedup.minhashCandidates(corpusDf).select(col("doc_a"), col("doc_b")))
+        Dedup.minhashCandidatesW(Text.wordsTable(corpusDf)).select(col("doc_a"), col("doc_b")))
       .collect().map(_.toSeq).toSet
     assert(batchOut.exists(_(2).asInstanceOf[Long] > 0),
       "corpus must produce removable dups for this test to mean anything")

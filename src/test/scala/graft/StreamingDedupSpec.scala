@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
 import graft.operators.Dedup
 
 /** The continuous-ingestion dedup loop: documents arrive as a stream;
@@ -31,7 +32,7 @@ class StreamingDedupSpec extends SparkSpec {
     val stream = MemoryStream[Doc]
     // index starts empty; grows by each batch's bands
     var index: DataFrame = Dedup.minhashBands(
-      Dedup.minhashSignatures(Seq.empty[(Long, String)].toDF("doc_id", "text")))
+      Dedup.minhashSignaturesW(Text.wordsTable(Seq.empty[(Long, String)].toDF("doc_id", "text"))))
     val dups = collection.mutable.Set[(Long, Long)]()
 
     val query = stream.toDF().writeStream
@@ -41,7 +42,7 @@ class StreamingDedupSpec extends SparkSpec {
           .select("new_id", "old_id").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         index = index.unionByName(
-          Dedup.minhashBands(Dedup.minhashSignatures(docs))).localCheckpoint()
+          Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(docs)))).localCheckpoint()
         ()
       }
       .start()
@@ -89,13 +90,13 @@ class StreamingDedupSpec extends SparkSpec {
     // batch is checked at the LEARNED threshold (self-matches dropped)
     val stream = MemoryStream[Doc]
     var index: DataFrame = Dedup.minhashBands(
-      Dedup.minhashSignatures(Seq.empty[(Long, String)].toDF("doc_id", "text")))
+      Dedup.minhashSignaturesW(Text.wordsTable(Seq.empty[(Long, String)].toDF("doc_id", "text"))))
     val dups = collection.mutable.Set[(Long, Long)]()
     val query = stream.toDF().writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val docs = b.select("doc_id", "text")
         index = index.unionByName(
-          Dedup.minhashBands(Dedup.minhashSignatures(docs))).localCheckpoint()
+          Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(docs)))).localCheckpoint()
         dups ++= Dedup.minhashCandidatesAgainst(docs, index, minEstJaccard = learned)
           .filter(col("new_id") =!= col("old_id"))
           .select("new_id", "old_id").collect()
@@ -133,7 +134,7 @@ class StreamingDedupSpec extends SparkSpec {
       6L -> ("totally unrelated content about catalyst plans" + pad),
       7L -> ("other unrelated content about shuffle exchanges" + pad))
     val docsDf = corpus.toDF("doc_id", "text")
-    val batchKept = Dedup.keepBest(docsDf, Dedup.minhashCandidates(docsDf))
+    val batchKept = Dedup.keepBest(docsDf, Dedup.minhashCandidatesW(Text.wordsTable(docsDf)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getInt(4))).toSet
     assert(batchKept.nonEmpty, "corpus produced no clusters")
@@ -141,7 +142,7 @@ class StreamingDedupSpec extends SparkSpec {
     // the three accumulated corpus-thin tables of the ingestion loop
     val stream = MemoryStream[Doc]
     var index: DataFrame = Dedup.minhashBands(
-      Dedup.minhashSignatures(Seq.empty[(Long, String)].toDF("doc_id", "text")))
+      Dedup.minhashSignaturesW(Text.wordsTable(Seq.empty[(Long, String)].toDF("doc_id", "text"))))
     var pairs: DataFrame = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     var scored: DataFrame = Seq.empty[(Long, Double)].toDF("doc_id", "quality")
     var kept = Set.empty[(Long, Long, Long, Double, Int)]
@@ -150,7 +151,7 @@ class StreamingDedupSpec extends SparkSpec {
         val docs = b.select("doc_id", "text")
         // bands merge FIRST so within-batch pairs surface too
         index = index.unionByName(
-          Dedup.minhashBands(Dedup.minhashSignatures(docs))).localCheckpoint()
+          Dedup.minhashBands(Dedup.minhashSignaturesW(Text.wordsTable(docs)))).localCheckpoint()
         val newPairs = Dedup.minhashCandidatesAgainst(docs, index)
           .filter(col("new_id") =!= col("old_id"))
           .select(least(col("new_id"), col("old_id")).as("doc_a"),

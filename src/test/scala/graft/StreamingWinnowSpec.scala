@@ -10,7 +10,7 @@ import graft.operators.Winnow
 
 /** Continuous-ingestion duplicated-span detection: each micro-batch's
   * winnowing fingerprints are probed against the ACCUMULATED index
-  * (Winnow.spansAgainst), then folded into it via foreachBatch — the
+  * (Winnow.spansAgainstFp), then folded into it via foreachBatch — the
   * streaming face of q161, mirroring StreamingDedupSpec's minhash loop
   * (index a persisted/bucketed table at scale, batch side the only
   * shuffle).
@@ -43,7 +43,7 @@ class StreamingWinnowSpec extends SparkSpec {
     val query = stream.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val docs = batch.select("doc_id", "text")
-        hits ++= Winnow.spansAgainst(docs, index, K, W)
+        hits ++= Winnow.spansAgainstFp(Winnow.fingerprints(docs, K, W), index)
           .select("new_id", "old_id").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         index = index.unionByName(Winnow.fingerprints(docs, K, W)).localCheckpoint()
@@ -77,7 +77,7 @@ class StreamingWinnowSpec extends SparkSpec {
       (100L, (randWords(rnd, 8) ++ boiler ++ randWords(rnd, 8)).mkString(" ")),
       (101L, (randWords(rnd, 8) ++ uniq ++ randWords(rnd, 8)).mkString(" "))
     ).toDF("doc_id", "text")
-    val pairs = Winnow.spansAgainst(newDocs, index, K, W, maxDf = 5)
+    val pairs = Winnow.spansAgainstFp(Winnow.fingerprints(newDocs, K, W), index, maxDf = 5)
       .select("new_id", "old_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSet == Set((101L, 50L)),
       s"expected only the unique-span pair, got ${pairs.toSet}")

@@ -90,7 +90,7 @@ class TextSpec extends SparkSpec {
     import spark.implicits._
     val out = Seq("a b c d").toDF("text")
       .select(Text.words(col("text")).as("w"))
-      .select(Text.shingles("w").as("s")).head().getSeq[String](0)
+      .select(expr(Text.shinglesSql("w")).as("s")).head().getSeq[String](0)
     assert(out == Seq("a b c", "b c d"))
   }
 

@@ -8,6 +8,16 @@ import graft.operators.ZOrder
   */
 class ZOrderSpec extends SparkSpec {
 
+  /** Per-file bounding boxes of (x, y) — the statistics a reader prunes
+    * with.
+    */
+  private def fileBoxes(path: String, x: String, y: String) =
+    spark.read.parquet(path)
+      .withColumn("file", input_file_name())
+      .groupBy("file")
+      .agg(min(x).as("x_min"), max(x).as("x_max"),
+        min(y).as("y_min"), max(y).as("y_max"), count(lit(1)).as("rows"))
+
   test("zval interleaves bits exactly (x even positions, y odd)") {
     import spark.implicits._
     // x=3 → bits 0,1 → z bits 0,2 = 5; y=5 → bits 0,2 → z bits 1,5 = 34
@@ -34,7 +44,7 @@ class ZOrderSpec extends SparkSpec {
 
     // files whose [min,max] stats overlap the slice [0,63] on dimension d
     def touched(path: String, d: String): Long =
-      ZOrder.fileBoxes(spark, path, "x", "y")
+      fileBoxes(path, "x", "y")
         .filter(col(s"${d}_min") <= 63 && col(s"${d}_max") >= 0)
         .count()
     val linWorst = math.max(touched(s"$dir/linear", "x"), touched(s"$dir/linear", "y"))
