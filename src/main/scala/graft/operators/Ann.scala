@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 import graft.functions.Sketches
 
@@ -28,7 +29,7 @@ object Ann {
     graft.plans.NativeFunctions.cosineSim(col(a), col(b))
 
   // native Cast (codegen'd), not a transform() lambda
-  private def asDouble(c: String) = col(c).cast("array<double>")
+  private def asDouble(c: String) = col(c).cast(ArrayType(DoubleType))
 
   /** Brute-force top-k cosine neighbours of each query vector.
     * The query set must be small (it is broadcast); the candidate corpus
@@ -185,7 +186,7 @@ object Ann {
   def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int, nBits: Int = 4): DataFrame = {
     val (qs, probes) = lshBatch(queries, nBits)
     val index = corpus.select(col("vec_id"), asDouble("embedding").as("ve"))
-      .withColumn("cluster", Sketches.affineHyperplaneBucket("ve", nBits).cast("int"))
+      .withColumn("cluster", Sketches.affineHyperplaneBucket("ve", nBits).cast(IntegerType))
     probeIndex(index, qs, probes, 1L << nBits, k, excludeSelf = true)
   }
 
@@ -250,7 +251,7 @@ object Ann {
   def rotateEmbeddings(df: DataFrame, rot: Seq[Seq[Double]],
                        embCol: String): DataFrame =
     df.withColumn(embCol,
-      graft.plans.NativeFunctions.matVec(col(embCol).cast("array<double>"), rot))
+      graft.plans.NativeFunctions.matVec(col(embCol).cast(ArrayType(DoubleType)), rot))
 
   /** The rotation as a (row_idx, r) DataFrame — the persistence face
     * (write as parquet next to the codebooks; reload with
@@ -268,7 +269,7 @@ object Ann {
   def rotationFrom(df: DataFrame): Seq[Seq[Double]] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("row_idx").cast("int"), col("r").cast("array<double>"))
+    df.select(col("row_idx").cast(IntegerType), col("r").cast(ArrayType(DoubleType)))
       .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1).map(_._2)
   }
 
@@ -367,7 +368,7 @@ object Ann {
   def ivfModelFrom(df: DataFrame): Seq[(Int, Seq[Double])] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("cid").cast("int"), col("ce").cast("array<double>"))
+    df.select(col("cid").cast(IntegerType), col("ce").cast(ArrayType(DoubleType)))
       .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1)
   }
 
@@ -393,16 +394,23 @@ object Ann {
     *      `nprobe` closest centroids on the driver
     *      ([[graft.plans.IvfProbe.Router]]);
     *   2. scan `index` for the rows of the probed cells, keeping each
-    *      query's exact-cosine top-k per task ([[probeIndex]]). The
-    *      scan prunes only on an index laid out by cell (`bucketBy`,
-    *      partitions) and only when the batch probes fewer
-    *      than half of the cells; otherwise it reads the whole index;
-    *   3. merge the tasks' top-k lists on the driver.
+    *      query's exact-cosine top-k ([[probeIndex]]). A plain parquet
+    *      read of the index is scanned on the driver from the session's
+    *      serving cache ([[graft.plans.WalkCache]]), which reads the
+    *      index's files once and then only the files an append adds.
+    *      Any other index is scanned by one job that prunes only on an
+    *      index laid out by cell (`bucketBy`, partitions) and only when
+    *      the batch probes fewer than half of the cells; otherwise it
+    *      reads the whole index;
+    *   3. merge the top-k lists on the driver.
     * Its jobs are the query collect (none for a local batch) and the
-    * scan; it broadcasts, shuffles and persists nothing. Driver memory
-    * is O(queries · (dim + nprobe)) for the batch plus O(tasks ·
-    * queries · k) merged rows. The result is a local (qid, cid, sim,
-    * rn) table in the queries' and the index's id types.
+    * scan's: none over a held index whose files are unchanged, one over
+    * the appended files, one over the whole index otherwise. It
+    * broadcasts, shuffles and persists nothing. Driver memory is
+    * O(queries · (dim + nprobe)) for the batch plus O(tasks · queries ·
+    * k) merged rows, plus the held index within the cache's bound. The
+    * result is a local (qid, cid, sim, rn) table in the queries' and
+    * the index's id types.
     *
     * Query vec_ids must be unique (IllegalArgumentException naming the
     * duplicate otherwise); null query and index ids take no part.
@@ -439,7 +447,7 @@ object Ann {
       else lit(0L)
     // the executed plan's rows, decoded without a Dataset row encoder
     val rows = queries.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), asDouble("embedding"), bucket)
+      .select(col("vec_id").cast(LongType), asDouble("embedding"), bucket)
       .queryExecution.executedPlan.executeCollect()
     val ids = rows.map(_.getLong(0))
     ids.groupBy(identity).collectFirst { case (id, dup) if dup.length > 1 => id }
@@ -536,13 +544,22 @@ object Ann {
   private final val UnfilteredProbeShare = 0.5
 
   /** Shared query tail of the IVF family: query `i` of `qs` probes the
-    * cells `probes(i)` of a model of `cellCount` cells. One scan of the
-    * index keeps each query's top-k per task in
-    * [[graft.plans.IvfProbe.Scan]], which drops the rows of unprobed
-    * cells; the driver merges the tasks' lists (O(tasks · queries · k)
-    * rows) into ranks 1..k — a local (qid, cid, sim, rn) table.
+    * cells `probes(i)` of a model of `cellCount` cells.
+    * [[graft.plans.IvfProbe.Scan]] keeps each query's top-k over the
+    * index rows and drops the rows of unprobed cells; the driver merges
+    * the lists into ranks 1..k — a local (qid, cid, sim, rn) table.
     *
-    * The probe set is pushed into the scan as `cluster IN (cells)`
+    * A plain parquet read of the index is served from the session's
+    * cache ([[graft.plans.WalkCache.ivfRows]]): the scan runs on the
+    * driver over the held rows, with no job while the index's files are
+    * unchanged, one job over the new files after an append, and one
+    * over the whole index on the first search or after any other
+    * change. Any other index frame (a computed or filtered one), an
+    * index whose `cluster` is not an int column and one larger than the
+    * cache's bound take one scan job instead, one task per split, whose
+    * tasks' lists (O(tasks · queries · k) rows) the driver merges.
+    *
+    * That job pushes the probe set into the scan as `cluster IN (cells)`
     * unless the batch probes at least [[UnfilteredProbeShare]] of the
     * cells and `cluster` is an int column, as [[ivfEncode]] writes it.
     * Any other type keeps the filter: its cast to int could alias an
@@ -552,13 +569,17 @@ object Ann {
                          cellCount: Long, k: Int, excludeSelf: Boolean): DataFrame = {
     val scan = new graft.plans.IvfProbe.Scan(qs.ids, qs.vecs, probes, k, excludeSelf)
     val cells = scan.cells
-    val unfiltered = cells.length >= cellCount * UnfilteredProbeShare &&
-      index.schema("cluster").dataType == org.apache.spark.sql.types.IntegerType
     val parts =
       if (k <= 0 || cells.isEmpty) Array.empty[graft.plans.IvfProbe.Part]
-      else (if (unfiltered) index else index.filter(col("cluster").isin(cells.toIndexedSeq: _*)))
-        .select(col("vec_id").cast("long"), asDouble("ve"), col("cluster").cast("int"))
-        .queryExecution.toRdd.mapPartitions(scan.run).collect()
+      else graft.plans.WalkCache.ivfRows(index) match {
+        case Some(rows) => scan.run(rows).toArray
+        case None =>
+          val unfiltered = cells.length >= cellCount * UnfilteredProbeShare &&
+            index.schema("cluster").dataType == IntegerType
+          val probed = if (unfiltered) index else index.filter(col("cluster").isin(cells.toIndexedSeq: _*))
+          graft.plans.Tasks.collect(graft.plans.WalkCache.ivfColumns(probed).queryExecution.toRdd,
+            scan).flatten
+      }
     hitsFrame(index.sparkSession, qs, scan.merge(parts),
       index.schema("vec_id").dataType)
   }
@@ -571,7 +592,6 @@ object Ann {
                         cidType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
     // rows built as they are stored: no encoder is derived per call
     val rows = qs.ids.indices.flatMap(i => hits(i).map(h => InternalRow(qs.ids(i), h.cid, h.sim, h.rn)))
     val out = Seq(AttributeReference("qid", LongType, nullable = false)(),
@@ -627,7 +647,7 @@ object Ann {
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("parent")).orderBy(col("vec_id"))))
       .filter(col("rn") <= cChild)
-      .select(col("parent"), (col("rn") - 1).cast("int").as("cid"), col("ve"))
+      .select(col("parent"), (col("rn") - 1).cast(IntegerType).as("cid"), col("ve"))
       .as[(Int, Int, Seq[Double])].collect().toSeq
     for (_ <- 1 to iters) {
       // children of OWN parent only: the grouped kernel selects the
@@ -675,7 +695,7 @@ object Ann {
       .withColumn("ccid", graft.plans.NativeFunctions.nearestCentroidBy(
         col("parent"), col("ve"), children, useCos = true))
       .select(col("vec_id"), col("ve"),
-        (col("parent") * cChild + col("ccid")).cast("int").as("cluster"))
+        (col("parent") * cChild + col("ccid")).cast(IntegerType).as("cluster"))
 
   /** Two-level query routing: rank super-cells (keep `nprobeSuper`),
     * rank children WITHIN each probed super (keep `nprobePerSuper`
@@ -939,8 +959,8 @@ object Ann {
   def pqModelFrom(df: DataFrame): Seq[(Int, Int, Seq[Double])] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("sub").cast("int"), col("cid").cast("int"),
-        col("ce").cast("array<double>"))
+    df.select(col("sub").cast(IntegerType), col("cid").cast(IntegerType),
+        col("ce").cast(ArrayType(DoubleType)))
       .as[(Int, Int, Seq[Double])].collect().toSeq.sortBy(c => (c._1, c._2))
   }
 
@@ -1195,7 +1215,7 @@ object Ann {
   /** 60-bit deterministic hash rank of a vec_id (the ring/entry order). */
   private def hrank(c: org.apache.spark.sql.Column) =
     conv(substring(md5(concat(lit("nsw|"), c.cast("string"))), 1, 15), 16, 10)
-      .cast("long")
+      .cast(LongType)
 
   /** Index rows per partition of the graph-ANN build's exchange:
     * about 2 MB of 64-d vectors.
@@ -1248,7 +1268,7 @@ object Ann {
       .select(col("cluster"), col("vec_id"), col("ve"))
       .repartition(annParallelism(index.sparkSession, nRows), col("cluster"))
       .groupBy(col("cluster"))
-      .agg(collect_list(struct(col("vec_id").cast("long").as("vec_id"),
+      .agg(collect_list(struct(col("vec_id").cast(LongType).as("vec_id"),
         hrank(col("vec_id")).as("h"), col("ve"))).as("members"))
       .select(explode(graft.plans.NativeFunctions.nswCellGraph(
         col("members"), kNbr, rounds)).as("e"))
@@ -1384,7 +1404,7 @@ object Ann {
   def nswLshIndex(corpus: DataFrame, nBits: Int): DataFrame =
     corpus.select(col("vec_id"), asDouble("embedding").as("ve"))
       .withColumn("cluster",
-        Sketches.affineHyperplaneBucket("ve", nBits, 64).cast("int"))
+        Sketches.affineHyperplaneBucket("ve", nBits, 64).cast(IntegerType))
 
   /** Beam search over an LSH-celled graph: the batch is collected once
     * and routed on the driver by [[graft.plans.IvfProbe.LshRouter]] (the

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 
 import CosineRank.{Hit, TopK}
@@ -98,11 +99,12 @@ object IvfProbe {
   /** The scan of the probed cells for a batch of queries: query `i` has
     * id `qids(i)`, vector `qvecs(i)` (nullable) and probes the cells
     * `probes(i)` (a cell probed twice yields its candidates twice).
-    * `excludeSelf` drops a candidate whose id equals the query's.
+    * `excludeSelf` drops a candidate whose id equals the query's. As a
+    * function it is the scan's task ([[Tasks.collect]]).
     */
   final class Scan(qids: Array[Long], qvecs: Array[Array[Double]],
                    probes: Array[Array[Int]], k: Int, excludeSelf: Boolean)
-      extends Serializable {
+      extends ((TaskContext, Iterator[InternalRow]) => Array[Part]) with Serializable {
     require(qids.length == qvecs.length && qids.length == probes.length,
       s"${qids.length} ids, ${qvecs.length} vectors, ${probes.length} probe lists")
 
@@ -151,6 +153,9 @@ object IvfProbe {
       }
       tops.indices.iterator.filter(q => tops(q) != null).map(q => part(q, tops(q)))
     }
+
+    /** One task's [[run]]. */
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Part] = run(rows).toArray
 
     /** Each query's ranked top-k over every task's [[Part]]s. */
     def merge(parts: Iterable[Part]): Array[Array[Hit]] = {

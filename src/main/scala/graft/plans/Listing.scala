@@ -13,9 +13,9 @@ import org.apache.hadoop.fs.FileStatus
   * reading a file to ask whether it changed.
   *
   * The one way graft asks "has this read changed". [[SchemaPin]] lists
-  * an unresolved read's paths itself, before Spark resolves it;
-  * [[WalkCache]] takes the files of a resolved relation's file index,
-  * the set the read scans.
+  * an unresolved read's paths itself, before Spark resolves it, and
+  * keeps the files Spark infers its schema from; [[WalkCache]] takes the
+  * files of a resolved relation's file index, the set the read scans.
   */
 final case class Listing(roots: Vector[String], options: Vector[(String, String)],
                          files: Vector[Listing.File]) {

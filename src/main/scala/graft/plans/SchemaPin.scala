@@ -28,17 +28,27 @@ import org.apache.spark.sql.types.StructType
   * schema the inference produced under that key.
   *
   * '''Key.''' The format; the read's [[Listing]] (the qualified paths,
-  * the reader options and the files); the session's `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and
+  * the reader options and the files Spark infers from); the session's
+  * `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and
   * `spark.sql.caseSensitive` values (GraftSession's `nanosAsLong` turns
-  * a TIMESTAMP(NANOS) column into a long). The listing's files are each
-  * path's one-level `listStatus`, parquet's `_metadata` and
-  * `_common_metadata` summaries included and Spark's other hidden files
-  * (`_SUCCESS`, `.crc`, …) skipped, as its file index skips them. It is
+  * a TIMESTAMP(NANOS) column into a long). With `mergeSchema` off Spark
+  * infers from one file (`ParquetUtils.inferSchema`): the first
+  * `_common_metadata` summary, else the first `_metadata`, else the
+  * first data file, by path across the listing
+  * (`ParquetUtils.splitFiles`). So the listing's files are every
+  * summary file and the first data file of each path's one-level
+  * `listStatus`, Spark's other hidden files (`_SUCCESS`, `.crc`, …)
+  * skipped, as its file index skips them. A read with an option that
+  * filters the files (`pathGlobFilter`, `modifiedBefore`,
+  * `modifiedAfter`) keys on every file listed instead. The listing is
   * taken before inference, so a file that changes while Spark infers
   * gives the next read a new key.
   *
-  * '''Invalidation.''' Any change to a key part is a miss: an appended,
-  * removed, rewritten or touched file, or a changed option or conf. A
+  * '''Invalidation.''' Any change to a key part is a miss: a rewritten
+  * or touched first data file, a data file that now sorts first, an
+  * added, removed or changed summary file, or a changed option or conf.
+  * A data file appended after the first keeps the pin: the rows come
+  * from Spark's own listing at resolution, only the schema is pinned. A
   * file rewritten in place with the same name, length and mtime (mtime
   * has millisecond resolution on a local disk) would be missed; that is
   * the price of never reading a footer on a hit. Each session's cache is
@@ -79,9 +89,14 @@ final class SchemaPin(session: SparkSession, cache: SchemaPin.Cache)
     val hadoopConf = session.sessionState.newHadoopConfWithOptions(u.options.originalMap)
     val listed = u.paths.map(list(_, hadoopConf))
     if (listed.exists(_.isEmpty)) return None
+    val files = listed.flatten.flatMap(_._2)
+    val (summaries, data) = files.partition(s => SummaryFiles(s.getPath.getName))
+    val read =
+      if (FileFilters.exists(u.options.contains)) files
+      else summaries ++ data.minByOption(_.getPath.toString)
     Some(Key(
       u.format.toLowerCase(Locale.ROOT),
-      Listing(listed.flatten.map(_._1), u.options.originalMap, listed.flatten.flatMap(_._2)),
+      Listing(listed.flatten.map(_._1), u.options.originalMap, read),
       conf.getAllConfs.toVector.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") ||
           k.startsWith("spark.sql.legacy.parquet.") || k == "spark.sql.caseSensitive"
@@ -111,6 +126,12 @@ object SchemaPin {
 
   /** Entries per session: one per distinct unchanged path and read set-up. */
   val MaxEntries = 256
+
+  /** Parquet's summary files, which inference reads before any data file. */
+  private val SummaryFiles = Set("_common_metadata", "_metadata")
+
+  /** Reader options that choose which of the listed files a read sees. */
+  private val FileFilters = Seq("pathGlobFilter", "modifiedBefore", "modifiedAfter")
 
   /** What a pinned schema was inferred from; see the class doc. */
   final case class Key(format: String, listing: Listing, confs: Vector[(String, String)])

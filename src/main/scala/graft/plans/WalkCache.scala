@@ -1,9 +1,11 @@
 package graft.plans
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, SubqueryExpression,
+  UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
@@ -11,50 +13,65 @@ import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructType}
+import org.apache.spark.unsafe.Platform
 
-/** A per-session serving cache of NSW walk graphs ([[NswWalk.Graph]])
-  * and entry tables, the state `Ann.nswSearch`/`nswSearchLsh` read on
-  * every call. Without it each call collects the whole index, the edge
-  * table and the entry table to the driver and builds the graph again;
-  * with it a search over unchanged reads runs no job for them.
+/** A per-session serving cache of the index state graft's ANN searches
+  * read on every call: NSW walk graphs ([[NswWalk.Graph]]) and entry
+  * tables for `Ann.nswSearch`/`nswSearchLsh`, and the rows of IVF
+  * indexes for `Ann.ivfSearch` (and through it `ivfSearchHier`). Without
+  * it each call reads the whole index again: the walk collects the
+  * index, the edge table and the entry table to the driver and builds
+  * the graph, and the IVF search runs a job over the index. With it a
+  * search over unchanged reads runs no job for them.
   *
   * '''Key.''' A graph is held per read set: the qualified roots of the
   * index and edges reads plus the predicate (its analyzed expression,
-  * columns by ordinal). An entry table is held per entries root. Each
-  * held value records the [[Listing]] and data schema of the reads it
-  * was built from, taken from the resolved relation's file index
-  * (`PartitioningAwareFileIndex.allFiles()`): exactly the files the
-  * uncached read scans, so asking costs no filesystem call. A call
-  * whose reads list the same files serves the held value.
+  * columns by ordinal). An entry table is held per entries root, and
+  * IVF rows per index root. Each held value records the [[Listing]] and
+  * data schema of the reads it was built from, taken from the resolved
+  * relation's file index (`PartitioningAwareFileIndex.allFiles()`):
+  * exactly the files the uncached read scans, so asking costs no
+  * filesystem call. A call whose reads list the same files serves the
+  * held value.
+  *
+  * '''IVF rows.''' The (vec_id bigint, ve array<double>, cluster int)
+  * projection [[IvfProbe.Scan]] reads ([[ivfColumns]]), as the scan's
+  * tasks see it: each task's unsafe rows packed into one buffer. The
+  * caller runs the same scan over them on the driver, so a served
+  * search answers as the scan does. An index whose `cluster` is not an
+  * int column is not held (see `Ann.probeIndex`), nor one whose size
+  * estimate (`HadoopFsRelation.sizeInBytes`, the one Spark's broadcast
+  * choice reads) exceeds the cache's bound.
   *
   * '''Append.''' When the index listing only grew (the same roots,
-  * options and schema; every held file unchanged; new files added) and
-  * the edges listing is unchanged, only the new files are read, in one
-  * job, and the held graph is extended ([[NswWalk.Graph.extend]]): the
-  * graph `build` would make now, including its duplicate-id check and
-  * the edges whose endpoints the new rows bring.
+  * options and schema; every held file unchanged; new files added) and,
+  * for a graph, the edges listing is unchanged, only the new files are
+  * read, in one job, and the held value is extended: the graph through
+  * [[NswWalk.Graph.extend]] (the graph `build` would make now, including
+  * its duplicate-id check and the edges whose endpoints the new rows
+  * bring), the IVF rows by the new files' rows.
   *
   * '''Rebuild.''' Any other change to the index or edges — a file
   * removed, rewritten or touched, a changed schema or option — builds
-  * the graph from scratch; any change to the entries listing collects
-  * the entry table again. The new value replaces the read set's old
-  * one: a read set never holds two.
+  * the value from scratch; any change to the entries listing collects
+  * the entry table again. The new value replaces its slot's old one: a
+  * read set never holds two.
   *
   * '''Bypass.''' A frame that is not a plain, unpartitioned parquet read
   * (a local or checkpointed frame, a computed table, a projection over
-  * a read) is collected and built on every call, uncached, as is a
-  * graph under a non-deterministic predicate or one with a subquery.
+  * a read) is read on every call, uncached, as is a graph under a
+  * non-deterministic predicate or one with a subquery.
   *
-  * '''Bound.''' Each session holds at most [[MaxBytes]] of graphs and
-  * entry tables, least recently used out first; a value larger than
-  * that is served but not held. The cache is locked per call (Overlap
-  * analyzes on several threads); a held graph is immutable, so a walk
-  * may read it while another call extends a copy.
+  * '''Bound.''' Each session holds at most [[MaxBytes]] of graphs, entry
+  * tables and IVF rows together, least recently used out first; a value
+  * larger than that is served but not held. The cache is locked per
+  * call (Overlap analyzes on several threads); a held value is
+  * immutable, so a search may read it while another call extends a copy.
   */
 object WalkCache {
 
-  /** Heap bytes of graphs and entry tables one session holds. */
+  /** Heap bytes of graphs, entry tables and IVF rows one session holds. */
   val MaxBytes: Long = 128L << 20
 
   /** A plain parquet read as the cache compares it. */
@@ -68,6 +85,7 @@ object WalkCache {
   private final case class GraphSlot(index: Vector[String], edges: Vector[String],
                                      pred: Expression) extends Slot
   private final case class SeedSlot(entries: Vector[String]) extends Slot
+  private final case class IvfSlot(index: Vector[String]) extends Slot
 
   private sealed trait Held { def bytes: Long }
   private final case class HeldGraph(index: Read, edges: Read, graph: NswWalk.Graph) extends Held {
@@ -76,9 +94,15 @@ object WalkCache {
   private final case class HeldSeeds(entries: Read, byCell: Map[Int, Array[Long]]) extends Held {
     def bytes: Long = byCell.valuesIterator.map(8L * _.length + 48L).sum + 256L
   }
+  private final case class HeldIvf(index: Read, parts: Vector[IvfPart]) extends Held {
+    def bytes: Long = parts.iterator.map(p => p.bytes.length + 4L * p.ends.length + 64L).sum + 64L
+  }
+
+  /** One task's unsafe rows in one buffer: row i is bytes [ends(i - 1), ends(i)). */
+  private final class IvfPart(val bytes: Array[Byte], val ends: Array[Int]) extends Serializable
 
   /** A bounded LRU map of held values, by bytes, locked per call. */
-  final class Cache(maxBytes: Long) {
+  final class Cache(val maxBytes: Long) {
     private val held = new java.util.LinkedHashMap[Slot, Held](16, 0.75f, true)
     private var total = 0L
 
@@ -155,10 +179,61 @@ object WalkCache {
     }
   }
 
+  /** The rows of `index`, a plain parquet IVF index, as
+    * [[IvfProbe.Scan]] reads them ([[ivfColumns]]), through the
+    * session's cache. None when `index` is not a plain read, its
+    * `cluster` column is not an int or its size estimate exceeds the
+    * cache's bound: the caller scans it then. The rows are one reused
+    * row, to be read before the next is asked for.
+    */
+  def ivfRows(index: DataFrame): Option[Iterator[InternalRow]] =
+    ivfRows(index, cacheOf(index.sparkSession))
+
+  private[graft] def ivfRows(index: DataFrame, cache: Cache): Option[Iterator[InternalRow]] =
+    plain(index).filter(ix => index.schema("cluster").dataType == IntegerType &&
+      ix.fs.sizeInBytes <= cache.maxBytes).map(ix => unpack(ivfParts(index, ix, cache)))
+
+  private def ivfParts(index: DataFrame, ix: Plain, cache: Cache): Vector[IvfPart] = {
+    val slot = IvfSlot(ix.read.listing.roots)
+    lazy val rows = ivfColumns(index)
+    val added = cache.get(slot) match {
+      case Some(HeldIvf(r, parts)) if r == ix.read => return parts
+      case Some(HeldIvf(r, parts)) if r.schema == ix.read.schema =>
+        ix.read.listing.addedSince(r.listing).map(files => (parts, files))
+      case _ => None
+    }
+    val parts = added match {
+      // one task: the driver takes every row anyway
+      case Some((had, files)) =>
+        had ++ Tasks.collect(onlyFiles(rows, ix, files).coalesce(1).queryExecution.toRdd, PackIvf)
+      case None => Tasks.collect(rows.queryExecution.toRdd, PackIvf).toVector
+    }
+    cache.put(slot, HeldIvf(ix.read, parts))
+    parts
+  }
+
+  /** The (vec_id bigint, ve array<double>, cluster int) projection of an
+    * IVF index that [[IvfProbe.Scan]] reads.
+    */
+  def ivfColumns(index: DataFrame): DataFrame =
+    index.select(col("vec_id").cast(LongType), col("ve").cast(ArrayType(DoubleType)),
+      col("cluster").cast(IntegerType))
+
+  private def unpack(parts: Vector[IvfPart]): Iterator[InternalRow] = {
+    val row = new UnsafeRow(3)
+    parts.iterator.flatMap { p =>
+      Iterator.range(0, p.ends.length).map { i =>
+        val start = if (i == 0) 0 else p.ends(i - 1)
+        row.pointTo(p.bytes, Platform.BYTE_ARRAY_OFFSET + start, p.ends(i) - start)
+        row
+      }
+    }
+  }
+
   private def collectSeeds(entries: DataFrame): Map[Int, Array[Long]] = {
     val spark = entries.sparkSession
     import spark.implicits._
-    entries.select(col("cluster").cast("int"), col("vec_id").cast("long"))
+    entries.select(col("cluster").cast(IntegerType), col("vec_id").cast(LongType))
       .filter(col("cluster").isNotNull && col("vec_id").isNotNull)
       .as[(Int, Long)].collect()
       .groupMap(_._1)(_._2)
@@ -169,7 +244,7 @@ object WalkCache {
     */
   private def indexRows(index: DataFrame, pred: Option[Column]): DataFrame =
     index.filter(col("vec_id").isNotNull)
-      .select(col("vec_id").cast("long"), col("ve").cast("array<double>"),
+      .select(col("vec_id").cast(LongType), col("ve").cast(ArrayType(DoubleType)),
         coalesce(pred.getOrElse(lit(true)), lit(false)))
 
   /** The predicate bit's expression with columns by ordinal, when it is
@@ -223,49 +298,66 @@ object WalkCache {
 
   /** The graph of `rows` ([[indexRows]]) and `edges`, uncached. */
   private def build(rows: DataFrame, edges: DataFrame): NswWalk.Graph = {
-    val pairs = edges.select(col("u").cast("long"), col("v").cast("long"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .queryExecution.toRdd.mapPartitions(packEdges).collect()
+    val pairs = Tasks.collect(edges.select(col("u").cast(LongType), col("v").cast(LongType))
+      .filter(col("u").isNotNull && col("v").isNotNull).queryExecution.toRdd, PackEdges)
     NswWalk.Graph(collectRows(rows), Array.concat(pairs.map(_._1).toIndexedSeq: _*),
       Array.concat(pairs.map(_._2).toIndexedSeq: _*))
   }
 
   private def collectRows(rows: DataFrame): NswWalk.Rows =
-    NswWalk.Rows.concat(rows.queryExecution.toRdd.mapPartitions(packRows).collect().toSeq)
+    NswWalk.Rows.concat(Tasks.collect(rows.queryExecution.toRdd, PackRows).toSeq)
 
   /** One task's [[indexRows]] packed; a null element reads as 0.0, as in
     * CosineSim.
     */
-  private def packRows(it: Iterator[InternalRow]): Iterator[NswWalk.Rows] = {
-    val ids = Array.newBuilder[Long]
-    val ends = Array.newBuilder[Int]
-    val values = Array.newBuilder[Double]
-    val nulls = Array.newBuilder[Boolean]
-    val ok = Array.newBuilder[Boolean]
-    var end = 0
-    it.foreach { r =>
-      ids += r.getLong(0)
-      nulls += r.isNullAt(1)
-      if (!r.isNullAt(1)) {
-        val a = r.getArray(1)
-        var i = 0
-        while (i < a.numElements()) {
-          values += (if (a.isNullAt(i)) 0.0 else a.getDouble(i))
-          i += 1
+  private object PackRows
+      extends ((TaskContext, Iterator[InternalRow]) => NswWalk.Rows) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): NswWalk.Rows = {
+      val ids = Array.newBuilder[Long]
+      val ends = Array.newBuilder[Int]
+      val values = Array.newBuilder[Double]
+      val nulls = Array.newBuilder[Boolean]
+      val ok = Array.newBuilder[Boolean]
+      var end = 0
+      it.foreach { r =>
+        ids += r.getLong(0)
+        nulls += r.isNullAt(1)
+        if (!r.isNullAt(1)) {
+          val a = r.getArray(1)
+          var i = 0
+          while (i < a.numElements()) {
+            values += (if (a.isNullAt(i)) 0.0 else a.getDouble(i))
+            i += 1
+          }
+          end += a.numElements()
         }
-        end += a.numElements()
+        ends += end
+        ok += r.getBoolean(2)
       }
-      ends += end
-      ok += r.getBoolean(2)
+      new NswWalk.Rows(ids.result(), ends.result(), values.result(), nulls.result(), ok.result())
     }
-    Iterator(new NswWalk.Rows(ids.result(), ends.result(), values.result(), nulls.result(),
-      ok.result()))
   }
 
-  private def packEdges(it: Iterator[InternalRow]): Iterator[(Array[Long], Array[Long])] = {
-    val us = Array.newBuilder[Long]
-    val vs = Array.newBuilder[Long]
-    it.foreach { r => us += r.getLong(0); vs += r.getLong(1) }
-    Iterator((us.result(), vs.result()))
+  private object PackEdges
+      extends ((TaskContext, Iterator[InternalRow]) => (Array[Long], Array[Long])) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): (Array[Long], Array[Long]) = {
+      val us = Array.newBuilder[Long]
+      val vs = Array.newBuilder[Long]
+      it.foreach { r => us += r.getLong(0); vs += r.getLong(1) }
+      (us.result(), vs.result())
+    }
+  }
+
+  /** One task's [[ivfColumns]] rows, copied into one buffer. The executed
+    * plan's rows are unsafe rows, as Spark's own collect assumes.
+    */
+  private object PackIvf extends ((TaskContext, Iterator[InternalRow]) => IvfPart) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): IvfPart = {
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](4096)
+      val ends = Array.newBuilder[Int]
+      it.foreach { r => r.asInstanceOf[UnsafeRow].writeToStream(out, buf); ends += out.size() }
+      new IvfPart(out.toByteArray, ends.result())
+    }
   }
 }

@@ -40,39 +40,24 @@ class AnnIndexSpec extends SparkSpec {
     val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
     val want = rows(Ann.ivfKnn(embs, queries, k = 5, c = 8, nprobe = 3))
     assert(got == want, "split search must reproduce the inline composition")
-    // the query path is the query collect plus one scan of the probed
-    // cells — never the per-Lloyd-round collect loop the fit phase runs
-    // (each round is its own multi-stage job set): 2 jobs. The
-    // embeddings are one small file, read as one split with no
-    // rebalance, and their re-read is pinned by SchemaPin: no schema job
+    // the query path is the query collect plus one read of the index —
+    // never the per-Lloyd-round collect loop the fit phase runs (each
+    // round is its own multi-stage job set): 2 jobs. The embeddings are
+    // one small file, read as one split with no rebalance, and their
+    // re-read is pinned by SchemaPin: no schema job
     assert(searchJobs < fitJobs,
       s"search ($searchJobs jobs) must be lighter than fit+encode ($fitJobs)")
     assert(searchJobs <= 2, s"query path launched $searchJobs jobs — training leaked in?")
     assert(left.isEmpty, s"search left persisted RDDs ${left.mkString(", ")}")
-    // a driver-local query batch (the serving posture) costs the scan alone
+    // a driver-local query batch (the serving posture) over the same
+    // unchanged index read is served from the session's cache: no job
     val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
       queries.schema)
     val (gotLocal, localJobs) = countJobs {
       rows(Ann.ivfSearch(model, index, local, k = 5, nprobe = 3))
     }
     assert(gotLocal == want)
-    assert(localJobs == 1, s"a local batch's search launched $localJobs jobs, want the one scan")
-  }
-
-  /** `body`'s result, its jobs and the rows its tasks read from files
-    * (task input metrics).
-    */
-  private def countRead[A](body: => A): (A, Int, Long) = {
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val (r, jobs) = countJobs(body)
-      (r, jobs, read.get())
-    } finally spark.sparkContext.removeSparkListener(l)
+    assert(localJobs == 0, s"a local batch's search over a held index launched $localJobs jobs")
   }
 
   test("IVF probe pushdown: a small batch skips row groups of a cell-sorted index; " +
@@ -85,7 +70,9 @@ class AnnIndexSpec extends SparkSpec {
       .write.mode("overwrite")
       .option("parquet.block.size", 16384L).option("parquet.block.size.row.check.min", 8L)
       .parquet(dir)
-    val index = spark.read.parquet(dir)
+    // the pushdown is the scan job's: a plain read of the index would be
+    // served from the session's cache, which reads every row once
+    val index = spark.read.parquet(dir).select("*")
     val total = index.count()
     def local(n: Int) = spark.createDataFrame(
       java.util.Arrays.asList(embs.filter(col("vec_id") < n).collect(): _*), embs.schema)
@@ -101,6 +88,37 @@ class AnnIndexSpec extends SparkSpec {
       if (2 * probed < c) assert(read < total, s"$what: read $read of $total rows")
       else assert(read == total, s"$what: read $read of $total rows")
     }
+  }
+
+  test("IVF: a repeat search over an unchanged index runs no job; after an append, " +
+      "one job that reads exactly the appended rows") {
+    val dir = s"${tmp("ivf_held")}/index"
+    val cents = Ann.ivfFit(embs, c = 8, iters = 2)
+    val encoded = Ann.ivfEncode(embs, cents).localCheckpoint()
+    encoded.filter(col("vec_id") % 5 =!= 0).repartition(2).write.parquet(dir)
+    val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
+      queries.schema)
+    def search(read: => org.apache.spark.sql.DataFrame) =
+      rows(Ann.ivfSearch(cents, read, local, k = 5, nprobe = 3, excludeSelf = false))
+    def served() = search(spark.read.parquet(dir))
+    // the same index behind a projection is not a plain read: it is scanned
+    def scanned() = search(spark.read.parquet(dir).select("*"))
+    val total = spark.read.parquet(dir).count()
+    val (first, firstJobs, firstRead) = countRead(served())
+    assert(firstJobs == 1 && firstRead == total,
+      s"the first search ran $firstJobs jobs reading $firstRead rows, want 1 job of $total")
+    val (again, jobs, read) = countRead(served())
+    assert(jobs == 0 && read == 0, s"a repeat ran $jobs jobs reading $read rows")
+    assert(again == first && first == scanned())
+    // an appended file that sorts after the first keeps the pinned schema
+    val added = encoded.filter(col("vec_id") % 5 === 0)
+    val n = added.count()
+    appendFile(added, dir, "part-99999-appended.parquet")
+    val (grown, grownJobs, grownRead) = countRead(served())
+    assert(grownJobs == 1 && grownRead == n,
+      s"after an append $grownJobs jobs read $grownRead rows, want 1 job of $n")
+    assert(grown == scanned() && grown != first)
+    assert(countRead(served()) == ((grown, 0, 0L)))
   }
 
   test("PQ: reloaded codebooks+code table serve ADC queries with no training jobs; split == inline") {

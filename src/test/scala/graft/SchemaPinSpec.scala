@@ -45,8 +45,9 @@ class SchemaPinSpec extends SparkSpec {
     jobs
   }
 
+  /** The first data file of `dir` by path: the one Spark infers from. */
   private def partFile(dir: String): String =
-    new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
+    new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).min
 
   /** A frame with nested, non-nullable and metadata-carrying columns. */
   private def sample(n: Int): DataFrame = {
@@ -82,10 +83,71 @@ class SchemaPinSpec extends SparkSpec {
     sample(100).write.parquet(path)
     spark.read.parquet(path)
     assert(spark.read.parquet(path).count() == 100)
-    sample(150).filter(col("id") >= 100).write.mode("append").parquet(path)
+    // a file that sorts before every part file: Spark now infers from it
+    appendFile(sample(150).filter(col("id") >= 100), path, "a-first.parquet")
     val jobs = assertSame(spark.read.parquet(path), path)
-    assert(jobs >= 1, "an appended file changes the listing: the read must infer again")
+    assert(jobs >= 1, "a new first data file changes the key: the read must infer again")
     assert(spark.read.parquet(path).count() == 150)
+  }
+
+  test("an append that sorts after the first data file keeps the pin and sees the new rows") {
+    val path = s"${tmp("append_after")}/t"
+    sample(100).repartition(2).write.parquet(path)
+    spark.read.parquet(path)
+    // an extra column that Spark's inference, from the first file, never sees
+    appendFile(sample(150).filter(col("id") >= 100).withColumn("extra", lit(1)), path,
+      "z-last.parquet")
+    val (df, jobs) = countJobs(spark.read.parquet(path))
+    assert(jobs == 0, s"an append after the first data file ran $jobs inference jobs")
+    assert(!df.columns.contains("extra") && df.count() == 150)
+    assertSame(spark.read.parquet(path), path)
+  }
+
+  test("an added or changed summary file and a rewritten first data file infer again") {
+    val dir = tmp("summary")
+    val path = s"$dir/t"
+    sample(100).repartition(3).write.parquet(path)
+    sample(10).select("id", "txt").coalesce(1).write.parquet(s"$dir/narrow")
+    sample(10).select("id").coalesce(1).write.parquet(s"$dir/narrower")
+    def reread(what: String, columns: Seq[String]): Unit = {
+      assert(assertSame(spark.read.parquet(path), path) >= 1, s"$what: the read must infer again")
+      val (df, jobs) = countJobs(spark.read.parquet(path))
+      assert(df.columns.toSeq == columns && jobs == 0, s"$what: ${df.columns.toSeq}, $jobs jobs")
+    }
+    spark.read.parquet(path)
+    val summary = Paths.get(path, "_common_metadata")
+    Files.copy(Paths.get(partFile(s"$dir/narrow")), summary)
+    reread("an added summary", Seq("id", "txt"))
+    Files.copy(Paths.get(partFile(s"$dir/narrower")), summary, StandardCopyOption.REPLACE_EXISTING)
+    reread("a changed summary", Seq("id"))
+    // the key of the first read again: its pin serves
+    Files.delete(summary)
+    val (df, jobs) = countJobs(spark.read.parquet(path))
+    assert(jobs == 0 && df.columns.toSeq == sample(1).columns.toSeq)
+    assertSame(spark.read.parquet(path), path)
+    val first = new java.io.File(partFile(path))
+    new java.io.File(first.getParent, s".${first.getName}.crc").delete()
+    Files.copy(Paths.get(partFile(s"$dir/narrow")), first.toPath, StandardCopyOption.REPLACE_EXISTING)
+    reread("a rewritten first data file", Seq("id", "txt"))
+  }
+
+  test("a read whose option filters its files keys on every file it lists") {
+    val dir = tmp("filtered")
+    val path = s"$dir/t"
+    sample(100).repartition(2).write.parquet(path)
+    sample(10).select("id", "txt").coalesce(1).write.parquet(s"$dir/narrow")
+    // sorts first, but the filter keeps Spark from inferring from it
+    Files.copy(Paths.get(partFile(s"$dir/narrow")), Paths.get(path, "a-skipped.parquet"))
+    def read = spark.read.option("pathGlobFilter", "part-*").parquet(path)
+    read
+    val (before, jobs) = countJobs(read)
+    assert(jobs == 0 && before.columns.toSeq == sample(1).columns.toSeq)
+    val first = new java.io.File(path).listFiles().filter(_.getName.startsWith("part-")).minBy(_.getPath)
+    new java.io.File(first.getParent, s".${first.getName}.crc").delete()
+    Files.copy(Paths.get(partFile(s"$dir/narrow")), first.toPath, StandardCopyOption.REPLACE_EXISTING)
+    val (after, again) = countJobs(read)
+    assert(again >= 1 && after.columns.toSeq == Seq("id", "txt"),
+      s"a rewritten first part file: ${after.columns.toSeq}, $again jobs")
   }
 
   test("a file overwritten in place with a different schema is read with its new schema") {

@@ -8,18 +8,20 @@ import org.apache.spark.sql.functions._
 import graft.operators.Ann
 import graft.plans.WalkCache
 
-/** The walk's serving cache ([[graft.plans.WalkCache]]) against the
-  * uncached walk. A search over plain parquet reads of the index, edges
-  * and entries goes through the session's cache; the same reads behind a
+/** The serving cache ([[graft.plans.WalkCache]]) against the uncached
+  * searches. A search over plain parquet reads of the index, edges and
+  * entries goes through the session's cache; the same reads behind a
   * `select("*")` are not plain and bypass it, so every call collects and
-  * builds afresh. After each change to each of the three directories —
-  * an appended, rewritten, touched and deleted file — the cached search
-  * must give the uncached one's (qid, cid, raw sim bits, rn), compiled
-  * and interpreted, on the IVF and the LSH face and after `nswInsert`.
-  * Plus: an append that links an edge the earlier graph could not, an
-  * append that repeats an id (which throws), the jobs and rows an
-  * append and a repeat cost, the byte bound, one value per read set and
-  * one cache per session.
+  * builds afresh (the walk) or scans the index in a job (`ivfSearch`).
+  * After each change to each of the three directories — an appended,
+  * rewritten, touched and deleted file — the cached search must give
+  * the uncached one's (qid, cid, raw sim bits, rn), compiled and
+  * interpreted, on the walk's IVF and LSH faces, after `nswInsert`, and
+  * for `ivfSearch` over the held IVF rows after each change to the
+  * index. Plus: an append that links an edge the earlier graph could
+  * not, an append that repeats an id (which throws), the jobs and rows
+  * an append and a repeat cost, the IVF indexes that are never held,
+  * the byte bound, one value per read set and one cache per session.
   */
 class WalkCacheSpec extends SparkSpec {
   import spark.implicits._
@@ -73,7 +75,7 @@ class WalkCacheSpec extends SparkSpec {
 
   /** Index rows (vec_id, ve, cluster, label) of `face` over `vecs`. */
   private def indexOf(face: Face, vecs: DataFrame): DataFrame = (face match {
-    case Ivf => Ann.ivfEncode(vecs, cents)
+    case Ivf | Scan => Ann.ivfEncode(vecs, cents)
     case Lsh => Ann.nswLshIndex(vecs, nBits)
   }).join(vecs.select("vec_id", "label"), "vec_id")
 
@@ -107,6 +109,12 @@ class WalkCacheSpec extends SparkSpec {
     def search(d: Dirs, read: String => DataFrame, qs: DataFrame): DataFrame =
       Ann.nswSearchLsh(read(d.edges), read(d.index), read(d.entries), qs, k = 6, nBits = nBits,
         hops = 3)
+  }
+
+  /** `ivfSearch` over the IVF layout's index: no walk. */
+  private object Scan extends Face {
+    def search(d: Dirs, read: String => DataFrame, qs: DataFrame): DataFrame =
+      Ann.ivfSearch(cents, read(d.index), qs, k = 6, nprobe = 3, excludeSelf = false)
   }
 
   private def answers(df: DataFrame): Seq[(Long, Long, Option[Long], Int)] =
@@ -180,6 +188,38 @@ class WalkCacheSpec extends SparkSpec {
     }
   }
 
+  for (change <- Seq("append", "rewrite", "touch", "delete")) {
+    test(s"IVF search: after a $change of the index, the held rows answer as the scan") {
+      val d = copyOf(ivfBase, s"scan_$change")
+      same(Scan, d)
+      mutate(Scan, d, "index", change)
+      val after = same(Scan, d)
+      val (again, jobs) = countJobs(answers(Scan.search(d, cached, queries)))
+      assert(again == after && jobs == 0, s"a repeat ran $jobs jobs")
+    }
+  }
+
+  test("IVF search: a bigint cluster, a filtered index and an index over the bound are scanned") {
+    val d = copyOf(ivfBase, "scan_bypass")
+    val wide = new Dirs(tmp("scan_bigint"))
+    write(cached(d.index).withColumn("cluster", col("cluster").cast("long")), wide.index)
+    val filtered = (p: String) => cached(p).filter(col("label") % 3 =!= 0)
+    for ((what, dirs, read) <- Seq(("a bigint cluster", wide, cached _),
+                                   ("a filtered index", d, filtered))) {
+      assert(WalkCache.ivfRows(read(dirs.index)).isEmpty, what)
+      val want = answers(Scan.search(dirs, (p: String) => read(p).select("*"), queries))
+      val (got, jobs) = countJobs(answers(Scan.search(dirs, read, queries)))
+      assert(got == want && got.nonEmpty, what)
+      assert(jobs == 1, s"$what: the search ran $jobs jobs, want the one scan")
+    }
+    val index = cached(d.index)
+    val bound = index.queryExecution.analyzed.stats.sizeInBytes.toLong
+    assert(WalkCache.ivfRows(index, new WalkCache.Cache(bound - 1)).isEmpty)
+    val cache = new WalkCache.Cache(WalkCache.MaxBytes)
+    assert(countJobs(WalkCache.ivfRows(index, cache).map(_.size))._2 == 1)
+    assert(countJobs(WalkCache.ivfRows(index, cache).map(_.size)) == ((Some(index.count().toInt), 0)))
+  }
+
   test("LSH face after nswInsert appends a batch and rewrites the edges") {
     val d = copyOf(lshBase, "insert")
     same(Lsh, d)
@@ -238,19 +278,10 @@ class WalkCacheSpec extends SparkSpec {
     same(Ivf, d)
     val add = indexOf(Ivf, near(col("vec_id") % 9 === 1, 9000000L)).localCheckpoint()
     val n = add.count()
-    write(add.coalesce(1), d.index, "append")
-    // the changed directory's first read infers its schema (SchemaPin): a
-    // job of the read, not of the search
-    cached(d.index)
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
-    }
-    spark.sparkContext.addSparkListener(l)
-    val (_, jobs) = try countJobs(Ivf.search(d, cached, queries).collect())
-      finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs == 1 && read.get == n, s"$jobs jobs read ${read.get} rows, want 1 job of $n")
+    // after the first data file: the read keeps its pinned schema (SchemaPin)
+    appendFile(add, d.index, "part-99999-appended.parquet")
+    val (_, jobs, read) = countRead(Ivf.search(d, cached, queries).collect())
+    assert(jobs == 1 && read == n, s"$jobs jobs read $read rows, want 1 job of $n")
     val (_, again) = countJobs(Ivf.search(d, cached, queries).collect())
     assert(again == 0, s"a repeat ran $again jobs")
     same(Ivf, d)
